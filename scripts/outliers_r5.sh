@@ -4,7 +4,7 @@
 # Protocol: the queries-only subset runner (no build/latency sections),
 # reps >= 3 (min-of-reps), TWO gated runs; each run accepted only if
 # mid-run co-tenant CPU < 1.0 cores by the same busy-jiffy ledger as
-# scaling_r4.sh. Verdict rule: a row is NOISE if both runs land within
+# scaling_cpu_gated.sh. Verdict rule: a row is NOISE if both runs land within
 # 20% of each other and at its r1/r2-class value; otherwise it needs a
 # profiled explanation.
 set -u

@@ -1,7 +1,8 @@
 #!/bin/bash
-# Round-4 scaling harness (VERDICT r3 §wrong 4): the r3 pre-leg loadavg
-# gate could not see co-tenant bursts that started MID-leg (accepted
-# pairs spread 0.20-1.06). This version gates each leg on directly
+# Scaling harness gated on measured co-tenant CPU: interleaved
+# local[8]/local[32] BuildProfile legs on one corpus, efficiency =
+# throughput(32) / (4 x throughput(8)). A pre-leg loadavg gate cannot see
+# co-tenant bursts that start MID-leg, so each leg is gated on directly
 # measured CO-TENANT CPU during the leg:
 #
 #   other_cpu = (Δbusy jiffies from /proc/stat)/CLK_TCK − our child's
@@ -15,15 +16,18 @@
 # Legs run interleaved A/B A/B ... (8-core, 32-core alternating) so a
 # slow drift hits both sides equally; the summary reports per-leg
 # medians and efficiency-of-medians = medT8/(4·medT32) over ACCEPTED
-# legs only, plus the accepted-pair spread.
+# legs only, plus the accepted-pair spread. The summary's label is
+# $OUT's basename without `scaling_` and `.jsonl`: the round-4 run used
+# OUT=BENCH/scaling_r4.jsonl (4.8M docs), the round-5 run
+# OUT=BENCH/scaling_r5.jsonl (9.6M docs).
 set -u
-OUT=${OUT:-/root/repo/BENCH/scaling_r4.jsonl}
 DOCS=${DOCS:-600000}
 PAIRS=${PAIRS:-3}
 GATE=${GATE:-4}          # pre-leg 1-min loadavg gate (cheap first filter)
 OTHERGATE=${OTHERGATE:-1.0}  # max co-tenant cores averaged over the leg
 TRIALS=${TRIALS:-2}
-cd /root/repo
+cd "$(dirname "$0")/.."
+OUT=${OUT:-BENCH/scaling.jsonl}
 mkdir -p /dev/shm/spark-local "$(dirname "$OUT")"
 HZ=$(getconf CLK_TCK)
 gt() { awk -v a="$1" -v b="$2" 'BEGIN{exit !(a>b)}'; }
@@ -88,7 +92,7 @@ if [ ${#effs[@]} -gt 0 ]; then
   lo=$(printf '%s\n' "${effs[@]}" | sort -n | head -1)
   hi=$(printf '%s\n' "${effs[@]}" | sort -n | tail -1)
   spread=$(awk -v a="$lo" -v b="$hi" 'BEGIN{printf "%.3f", b-a}')
-  echo "{\"summary\":\"r4\",\"pairs\":${#effs[@]},\"median_t8_ms\":$m8,\"median_t32_ms\":$m32,\"efficiency_of_medians\":$meff,\"pair_spread\":$spread,\"gate\":\"preload<$GATE, other_cores<$OTHERGATE mid-leg\"}" >> "$OUT"
+  echo "{\"summary\":\"$(basename "$OUT" .jsonl | sed 's/^scaling_//')\",\"pairs\":${#effs[@]},\"median_t8_ms\":$m8,\"median_t32_ms\":$m32,\"efficiency_of_medians\":$meff,\"pair_spread\":$spread,\"gate\":\"preload<$GATE, other_cores<$OTHERGATE mid-leg\"}" >> "$OUT"
 fi
 rm -rf /dev/shm/spark-local
 echo DONE >> "$OUT"

@@ -61,8 +61,10 @@ object Dedup {
       .filter($"jac" >= tau)
       .select($"doc_a", $"doc_b", $"jac")
       // snapshot the pair-sized result, release the cached shingle
-      // table now (ContextCleaner frees the checkpoint blocks when the
-      // frame is dropped — no reliance on CacheManager LRU)
+      // table now (no reliance on CacheManager LRU). Without a checkpoint
+      // dir this is a localCheckpoint, whose blocks the ContextCleaner
+      // frees when the frame is dropped; with one it is a reliable
+      // checkpoint, whose files stay in that dir after the frame is gone
       .cutLineage()
     sh.unpersist()
     out
@@ -91,14 +93,7 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val sh = shingles(docs, n).toDF("doc_id", "shingle").cache()
-    val dfT = sh.groupBy($"shingle").agg(count(lit(1)).as("df"))
-    val wDoc = Window.partitionBy($"doc_id")
-    val prefix = sh.join(dfT, "shingle")
-      .withColumn("rn", row_number().over(
-        wDoc.orderBy($"df".asc, $"shingle".asc)))
-      .withColumn("sz", count(lit(1)).over(wDoc))
-      .filter($"rn" <= $"sz" - ceil($"sz" * tau) + 1)
-      .select($"doc_id", $"shingle")
+    val prefix = prefixShingles(sh, tau)
     val cand = prefix.as("x").join(prefix.as("y"), "shingle")
       .filter($"x.doc_id" < $"y.doc_id")
       .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
@@ -114,7 +109,8 @@ object Dedup {
       .withColumn("jac", $"i" / ($"na" + $"nb" - $"i"))
       .filter($"jac" >= tau)
       .select($"doc_a", $"doc_b", $"jac")
-      // snapshot + release the cached shingle table (see jaccardPairs)
+      // snapshot + release the cached shingle table (see jaccardPairs
+      // for where the snapshot lives and what frees it)
       .cutLineage()
     sh.unpersist()
     out
@@ -145,14 +141,7 @@ object Dedup {
     val spark = docs.sparkSession
     import spark.implicits._
     val sh = shingles(docs, n).toDF("doc_id", "shingle").cache()
-    val dfT = sh.groupBy($"shingle").agg(count(lit(1)).as("df"))
-    val wDoc = Window.partitionBy($"doc_id")
-    val prefix = sh.join(dfT, "shingle")
-      .withColumn("rn", row_number().over(
-        wDoc.orderBy($"df".asc, $"shingle".asc)))
-      .withColumn("sz", count(lit(1)).over(wDoc))
-      .filter($"rn" <= $"sz" - ceil($"sz" * tau) + 1)
-      .select($"doc_id".as("doc_sub"), $"shingle")
+    val prefix = prefixShingles(sh, tau).withColumnRenamed("doc_id", "doc_sub")
     val cand = prefix.join(sh.toDF("doc_sup", "shingle"), "shingle")
       .filter($"doc_sub" =!= $"doc_sup")
       .select($"doc_sub", $"doc_sup").distinct()
@@ -166,10 +155,33 @@ object Dedup {
       .withColumn("containment", $"i" / $"nsub")
       .filter($"containment" >= tau)
       .select($"doc_sub", $"doc_sup", $"containment")
-      // snapshot + release the cached shingle table (see jaccardPairs)
+      // snapshot + release the cached shingle table (see jaccardPairs
+      // for where the snapshot lives and what frees it)
       .cutLineage()
     sh.unpersist()
     out
+  }
+
+  /** Each doc's prefix shingles under the global rarest-first (df asc,
+    * then shingle) order: the first |s| − c + 1 of its |s| shingles, where
+    * c is the least overlap the callers' verification can accept. That
+    * verification tests `i / |s| >= tau` (or a Jaccard ratio it bounds)
+    * in Double, so c is found by that same test rather than by
+    * `ceil(|s|·tau)`, which rounds up past an accepted overlap: at
+    * tau = 0.55 and |s| = 100, `100 * 0.55` is 55.00000000000001 and the
+    * ceiling is 56, yet 55 / 100 >= 0.55 holds. */
+  private def prefixShingles(sh: DataFrame, tau: Double): DataFrame = {
+    val dfT = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
+    val wDoc = Window.partitionBy(col("doc_id"))
+    val sz = col("sz")
+    val c = ceil(sz * tau)
+    val need = when((c - 1) / sz >= tau, c - 1).otherwise(c)
+    sh.join(dfT, "shingle")
+      .withColumn("rn", row_number().over(
+        wDoc.orderBy(col("df").asc, col("shingle").asc)))
+      .withColumn("sz", count(lit(1)).over(wDoc))
+      .filter(col("rn") <= sz - need + 1)
+      .select(col("doc_id"), col("shingle"))
   }
 
   @inline private def hash32(s: String, seed: Int): Int =

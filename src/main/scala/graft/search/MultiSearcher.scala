@@ -1,7 +1,6 @@
 package graft.search
 
 import org.apache.spark.sql.{Dataset, SparkSession}
-import org.apache.spark.sql.functions._
 
 import graft.build.Segment
 import graft.model._
@@ -15,7 +14,7 @@ import graft.model._
   * own termId space, so idf maps are keyed per segment). Because stored
   * block maxima were computed under per-segment stats, they are NOT valid
   * bounds under global stats — this path therefore always uses the
-  * exhaustive per-bucket walk (pruned = false); compact with
+  * exhaustive per-bucket walk (OrWalk.Exhaustive); compact with
   * SegmentMerger to get WAND pruning back. Results are rank-identical to
   * querying the merged segment (proven in SegmentLifecycleSpec).
   */
@@ -25,18 +24,7 @@ final class MultiSearcher(spark: SparkSession, segments: Seq[Segment]) {
   require(segments.nonEmpty)
   private val searchers = segments.map(s => new Searcher(spark, s))
 
-  /** Combined corpus stats: N = Σ, avgdl = Σ tokens / N. Each segment's
-    * avgdl * N recovers its token total exactly only up to FP division,
-    * so recompute from docLens for exactness. */
-  private lazy val (numDocs: Long, avgdl: Double) = {
-    val totals = segments.map { s =>
-      s.docs.agg(count(lit(1)), coalesce(sum($"docLen".cast("long")), lit(0L)))
-        .as[(Long, Long)].head()
-    }
-    val n = totals.map(_._1).sum
-    val tok = totals.map(_._2).sum
-    (n, if (n == 0) 1.0 else tok.toDouble / n)
-  }
+  private lazy val (numDocs: Long, avgdl: Double) = QueryPlan.globalStats(segments)
 
   def hits(kind: String, text: String, k: Int, qid: Long = 0L): Dataset[Hit] =
     hitsInternal(kind, text, k, qid, None)
@@ -65,146 +53,20 @@ final class MultiSearcher(spark: SparkSession, segments: Seq[Segment]) {
                   deleted: => Dataset[Long], qid: Long = 0L): Dataset[Hit] =
     hitsInternal(kind, text, k, qid, Some((tag, () => deleted)))
 
+  /** Each segment resolves the kind against ITS OWN dictionary (PREFIX/
+    * REGEX/BOOL patterns expand per segment; termId spaces differ); a BOOL
+    * compiles over each segment's own slot layout, a term or phrase member
+    * missing there being constant-false — correct, since it truly does
+    * not occur in that segment's docs. */
   private def hitsInternal(kind: String, text: String, k: Int, qid: Long,
                            tomb: Option[(String, () => Dataset[Long])],
                            fielded: Option[(String, String)] = None): Dataset[Hit] = {
-    if (kind == "BOOL") return boolHitsInternal(text, k, qid, tomb, fielded)
-    val terms = QueryParser.termsFor(kind, text)
-    if (terms.isEmpty) return spark.emptyDataset[Hit]
-    // positional requirements surface HERE, not as a deep executor
-    // require inside a walk lambda
-    if (kind == "PHRASE" || kind == "NEAR" || kind == "ONEAR")
-      require(segments.forall(_.params.positional),
-        s"$kind queries need positional segments (BuildParams.positional)")
-    val distinctTerms = terms.distinct
-    // PREFIX/REGEX expand against each segment's own dictionary (term →
-    // termId spaces differ per segment); everything else looks up the
-    // literal terms
-    val perSeg: Seq[Array[DictEntry]] = kind match {
-      case "PREFIX" => searchers.map(_.dictLookupPrefix(terms.head))
-      case "REGEX" | "WILD" => // WILD arrives glob→regex-translated
-        searchers.map(_.dictLookupRegex(terms.head))
-      case "FUZZY" => searchers.map(
-        _.dictLookupFuzzy(terms.head, QueryParser.fuzzyDist(text)))
-      case "STEM" => searchers.map(_.dictLookupStem(terms.head))
-      case _ => searchers.map(_.dictLookup(distinctTerms))
-    }
-    // global df per term string
-    val dfByTerm: Map[String, Long] = perSeg.flatten
-      .groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    val needAll = kind == "AND" || kind == "PHRASE" || kind == "NEAR" ||
-      kind == "ONEAR"
-    if (dfByTerm.isEmpty || (needAll && dfByTerm.size < distinctTerms.length))
-      return spark.emptyDataset[Hit]
-    // sign convention (all tiers): > 0 NEAR/w, < 0 BEFORE/w, 0 phrase
-    val nearWin =
-      if (kind == "NEAR") QueryParser.nearWindow(text)
-      else if (kind == "ONEAR") -QueryParser.orderedWindow(text)
-      else 0
-    val n = numDocs
-    val scored = searchers.zip(perSeg).collect {
-      // a segment can only answer AND/PHRASE/NEAR if it knows every term;
-      // docId ranges are disjoint, so per-segment evaluation is exact
-      case (searcher, entries) if entries.nonEmpty &&
-          !(needAll && entries.length < distinctTerms.length) =>
-        val idfByTid = entries
-          .map(e => e.termId -> BM25.idf(n, dfByTerm(e.term))).toMap
-        val phraseSlots: Array[Long] = kind match {
-          case "PHRASE" | "ONEAR" => // ONEAR: QUERY order is the constraint
-            val byTerm = entries.map(e => e.term -> e.termId).toMap
-            terms.map(byTerm)
-          case "NEAR" => entries.map(_.termId)
-          case _ => null
-        }
-        searcher.scoredRaw(entries.map(_.termId), idfByTid, avgdl,
-          conjunctive = kind == "AND", k, pruned = false, entries.length,
-          phraseSlots = phraseSlots, nearWindow = nearWin,
-          acceptB = fielded.map { case (f, v) => searcher.docFilter(f, v) }.orNull,
-          rejectB = tomb.map { case (tag, d) =>
-            searcher.tombstoneFilter(tag, d()) }.orNull,
-          boostByTid = Searcher.toTidBoosts(entries, QueryParser.boosts(kind, text)))
-    }
-    if (scored.isEmpty) return spark.emptyDataset[Hit]
-    val all = scored.reduce(_ union _)
-    searchers.head.rankTopK(all.toDF("docId", "score"), k, qid)
-  }
-
-  /** Nested boolean queries across segments. Before this branch existed
-    * a BOOL query silently degraded to disjunctive BM25 here. Each
-    * segment compiles the predicate over ITS OWN slot layout (termId
-    * spaces differ); a term or phrase member missing from a segment's
-    * dictionary is constant-false there — correct, since the term truly
-    * does not occur in that segment's docs. The pure-negative guard is
-    * GLOBAL (all query terms known), so every match contains at least
-    * one positive query term and lives in some segment's walked union.
-    * Scores use global statistics like every other kind here. */
-  private def boolHitsInternal(text: String, k: Int, qid: Long,
-                               tomb: Option[(String, () => Dataset[Long])],
-                               fielded: Option[(String, String)] = None): Dataset[Hit] = {
-    val ast = BoolQuery.parse(text)
-    val termArr = BoolQuery.terms(ast)
-    if (termArr.isEmpty && BoolQuery.patterns(ast).isEmpty)
-      return spark.emptyDataset[Hit]
-    val atoms = BoolQuery.posAtoms(ast)
-    if (atoms.nonEmpty)
-      require(segments.forall(_.params.positional),
-        "phrase/NEAR atoms in a boolean query need positional segments (BuildParams.positional)")
-    val pats = BoolQuery.patterns(ast)
-    // each segment's entries: fixed terms ∪ ITS OWN pattern expansions
-    // (a term matching the pattern in any segment is found by every
-    // segment that has it — expansion is deterministic by vocabulary,
-    // so the global df sums stay exact)
-    val perSeg = searchers.map { s =>
-      (s.dictLookup(termArr) ++ pats.flatMap(p =>
-        if (p.isRegex) s.dictLookupRegex(p.raw)
-        else s.dictLookupPrefix(p.raw)))
-        .distinctBy(_.termId).sortBy(_.termId)
-    }
-    val dfByTerm: Map[String, Long] = perSeg.flatten
-      .groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    if (dfByTerm.isEmpty ||
-        !BoolQuery.satisfiable(ast, dfByTerm.keySet))
-      return spark.emptyDataset[Hit]
-    val globalSlots = termArr.zipWithIndex.toMap
-    val phraseSlotG = atoms.zipWithIndex.toMap
-    require(!BoolQuery.matchesEmpty(ast, globalSlots, termArr.length,
-        phraseSlotG, termArr.length),
-      s"pure-negative boolean query '$text' matches a corpus-sized " +
-        "complement; add a positive requirement (a AND NOT x)")
-    val n = numDocs
-    val scored = searchers.zip(perSeg).collect {
-      case (searcher, entries) if entries.nonEmpty &&
-          BoolQuery.satisfiable(ast, entries.map(_.term).toSet) =>
-        val idfByTid = entries
-          .map(e => e.termId -> BM25.idf(n, dfByTerm(e.term))).toMap
-        val slotByTerm = entries.zipWithIndex.map { case (e, i) => e.term -> i }.toMap
-        val phraseSlot = atoms.zipWithIndex.toMap
-        val patternSlots = pats.map { p =>
-          val es = if (p.isRegex) searcher.dictLookupRegex(p.raw)
-                   else searcher.dictLookupPrefix(p.raw)
-          p -> es.flatMap(e => slotByTerm.get(e.term))
-        }.toMap
-        val eval = BoolQuery.compile(ast, slotByTerm, phraseSlot,
-          entries.length, patternSlots)
-        val defs: Array[Array[Int]] =
-          if (atoms.isEmpty) null
-          else atoms.map { case (ts, _) =>
-            ts.map(t => slotByTerm.getOrElse(t, -1)).toArray }
-        val wins: Array[Int] = if (atoms.isEmpty) null else atoms.map(_._2)
-        // pattern-leaf boosts apply to THIS segment's own expansion —
-        // same per-segment derivation as the slot layout above
-        val boostByTid = Searcher.toTidBoosts(entries,
-          Searcher.boolTermBoosts(ast, pats.map { p =>
-            p -> (if (p.isRegex) searcher.dictLookupRegex(p.raw)
-                  else searcher.dictLookupPrefix(p.raw))
-          }.toMap))
-        searcher.scoredRaw(entries.map(_.termId), idfByTid, avgdl,
-          conjunctive = false, k, pruned = false, entries.length,
-          boolEval = eval, boolPhrases = defs, boolWins = wins,
-          acceptB = fielded.map { case (f, v) => searcher.docFilter(f, v) }.orNull,
-          rejectB = tomb.map { case (tag, d) =>
-            searcher.tombstoneFilter(tag, d()) }.orNull,
-          boostByTid = boostByTid)
+    val plans = QueryPlan.lowerGlobal(kind, text, k, numDocs, avgdl, segments,
+      searchers.map(_.entriesFor(kind, text)), searchers.map(s => s.expand _))
+    val scored = searchers.zip(plans).collect { case (searcher, Some(plan)) =>
+      searcher.scoredRaw(plan,
+        fielded.map { case (f, v) => searcher.docFilter(f, v) }.orNull,
+        tomb.map { case (tag, d) => searcher.tombstoneFilter(tag, d()) }.orNull)
     }
     if (scored.isEmpty) return spark.emptyDataset[Hit]
     val all = scored.reduce(_ union _)

@@ -507,7 +507,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
   def predFieldedHits(kind: String, text: String, k: Int, tag: String,
                       pred: org.apache.spark.sql.Column,
                       qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true,
+    hitsImpl(kind, text, k, qid,
       acceptB = docFilterWhere(tag, pred))
 
   /** Per-bucket bitset blocks over an arbitrary docId set — the shared
@@ -516,21 +516,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * (the resident-doclens regime; cogroup distribution of the blocks is
     * the stated 100 TB path, like doclens). */
   private def bitsetBlocks(ids: Dataset[Long])
-      : org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]] = {
-    val bs = segment.params.bucketSize
-    val blocks = ids
-      .groupByKey(d => (d / bs).toInt)
-      .mapGroups { (bucket, it) =>
-        val bits = new Array[Long](((bs + 63) / 64).toInt)
-        it.foreach { d =>
-          val off = (d - bucket.toLong * bs).toInt
-          bits(off >> 6) |= 1L << (off & 63)
-        }
-        (bucket, bits)
-      }
-      .collect().toMap
-    spark.sparkContext.broadcast(blocks)
-  }
+      : org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]] =
+    spark.sparkContext.broadcast(ServingSearcher.idBitsets(segment, ids))
 
   /** Tombstone bitsets (LSM live deletes): built once per tag and probed
     * inside every walk as a REJECT filter — a deleted doc is skipped
@@ -553,7 +540,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * then rank like AND; PREFIX expands against the dictionary and
     * ranks like OR. */
   def hits(kind: String, text: String, k: Int, qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true)
+    hitsImpl(kind, text, k, qid)
 
   /** search_after pagination: the next k hits STRICTLY after the cursor
     * `(afterScore, afterDocId)` in (score desc, docId asc) order — page
@@ -563,14 +550,14 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * where `hits(offset + k)` would buffer the whole prefix. */
   def hitsAfter(kind: String, text: String, k: Int, afterScore: Double,
                 afterDocId: Long, qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true,
+    hitsImpl(kind, text, k, qid,
       after = Wand.Scored(afterDocId, afterScore))
 
   /** Fielded query + search_after cursor — filters and paging compose. */
   def fieldedHitsAfter(kind: String, text: String, k: Int, field: String,
                        value: String, afterScore: Double, afterDocId: Long,
                        qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true,
+    hitsImpl(kind, text, k, qid,
       acceptB = docFilter(field, value),
       after = Wand.Scored(afterDocId, afterScore))
 
@@ -581,14 +568,14 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * separate filter pass or join runs. */
   def fieldedHits(kind: String, text: String, k: Int, field: String,
                   value: String, qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true,
+    hitsImpl(kind, text, k, qid,
       acceptB = docFilter(field, value))
 
   /** Fielded + scoped combined: docId-range view AND docmap filter. */
   def scopedFieldedHits(kind: String, text: String, k: Int, lo: Long,
                         hi: Long, field: String, value: String,
                         qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true, lo = lo, hi = hi,
+    hitsImpl(kind, text, k, qid, lo = lo, hi = hi,
       acceptB = docFilter(field, value))
 
   /** Top-k with a tombstone set excluded — live deletes before the next
@@ -598,14 +585,14 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * live-delete bitset resident exactly like this). */
   def deletedHits(kind: String, text: String, k: Int, tag: String,
                   deleted: => Dataset[Long], qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true,
+    hitsImpl(kind, text, k, qid,
       rejectB = tombstoneFilter(tag, deleted))
 
   /** Fielded query with tombstones excluded — filters compose. */
   def fieldedDeletedHits(kind: String, text: String, k: Int, field: String,
                          value: String, tag: String,
                          deleted: => Dataset[Long], qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true,
+    hitsImpl(kind, text, k, qid,
       acceptB = docFilter(field, value),
       rejectB = tombstoneFilter(tag, deleted))
 
@@ -615,11 +602,11 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * for bound-shape comparisons. Non-OR kinds fall back to their
     * ordinary walks. */
   def hitsMaxScore(kind: String, text: String, k: Int, qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true, maxscore = true)
+    hitsImpl(kind, text, k, qid, QueryPlan.OrWalk.MaxScore)
 
   /** Exhaustive (unpruned) evaluation — correctness oracle for WAND. */
   def hitsExhaustive(kind: String, text: String, k: Int, qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = false)
+    hitsImpl(kind, text, k, qid, QueryPlan.OrWalk.Exhaustive)
 
   /** Query relaxation (the zero-hit recovery ladder of e-commerce /
     * enterprise search; Lucene's minimum_should_match family): a
@@ -673,17 +660,13 @@ final class Searcher(spark: SparkSession, segment: Segment,
     val entries = dictLookup(QueryParser.termsFor("OR", text).distinct)
     if (entries.isEmpty || entries.length < minMatch)
       return spark.emptyDataset[Hit]
-    val idfByTid: Map[Long, Double] =
-      entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
     val eval: Array[Boolean] => Boolean = p => {
       var c = 0
       var i = 0
       while (i < p.length) { if (p(i)) c += 1; i += 1 }
       c >= minMatch
     }
-    rankTopK(scoredRaw(entries.map(_.termId), idfByTid, stats.avgDocLen,
-      conjunctive = false, k, pruned = false, entries.length, boolEval = eval)
-      .toDF("docId", "score"), k, qid)
+    run(Some(planOf(entries, k, QueryPlan.Bool(eval, null, null))), qid)
   }
 
   /** Disjunction-max query (the Lucene DisjunctionMaxQuery surface —
@@ -701,13 +684,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
   def disMaxHits(text: String, tie: Double, k: Int, qid: Long = 0L): Dataset[Hit] = {
     require(tie >= 0.0 && tie <= 1.0, s"tie must be in [0, 1], got $tie")
     val entries = dictLookup(QueryParser.termsFor("OR", text).distinct)
-    if (entries.isEmpty) return spark.emptyDataset[Hit]
-    val idfByTid: Map[Long, Double] =
-      entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    rankTopK(scoredRaw(entries.map(_.termId), idfByTid, stats.avgDocLen,
-      conjunctive = false, k, pruned = false, entries.length,
-      dismaxTie = tie)
-      .toDF("docId", "score"), k, qid)
+    if (entries.isEmpty) spark.emptyDataset[Hit]
+    else run(Some(planOf(entries, k, QueryPlan.DisMax(tie))), qid)
   }
 
   /** Filters aggregation (the ES `filters` agg): exact match counts for
@@ -869,22 +847,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * union walk (LM scores have no stored per-list bound — block maxima
     * are BM25 impacts, so WAND soundly cannot prune here); termId
     * pushdown + bucket pruning still bound the scan. */
-  def lmdHits(text: String, mu: Double, k: Int, qid: Long = 0L): Dataset[Hit] = {
-    require(mu > 0.0, s"Dirichlet mu must be positive, got $mu")
-    val entries = dictLookup(QueryParser.termsFor("FREE", text).distinct)
-    if (entries.isEmpty) return spark.emptyDataset[Hit]
-    val total = totalCf.toDouble
-    val pByTid: Map[Long, Double] =
-      entries.map(e => e.termId -> e.cf / total).toMap
-    // idf values are unused by the LMD combiner; pass them anyway so the
-    // cursor constructor stays uniform
-    val idfByTid: Map[Long, Double] =
-      entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    rankTopK(scoredRaw(entries.map(_.termId), idfByTid, stats.avgDocLen,
-      conjunctive = false, k, pruned = false, entries.length,
-      lmdMu = mu, lmdP = pByTid)
-      .toDF("docId", "score"), k, qid)
-  }
+  def lmdHits(text: String, mu: Double, k: Int, qid: Long = 0L): Dataset[Hit] =
+    run(QueryPlan.lmd(segment, dictLookup, text, mu, k, totalCf), qid)
 
   /** Span-first query (Lucene SpanFirstQuery): top-k docs where every
     * query term occurs within the first `n` tokens of the filtered
@@ -894,17 +858,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * bucket pruning, the position check reads only the aligned doc's
     * already-decoded occurrence list; scoring is standard BM25 over the
     * distinct terms (filter-doesn't-rescale). */
-  def spanFirstHits(text: String, n: Int, k: Int, qid: Long = 0L): Dataset[Hit] = {
-    require(n >= 1, s"span-first bound must be >= 1, got $n")
-    require(segment.params.positional,
-      "span-first queries need a positional index (BuildParams.positional)")
-    val terms = QueryParser.termsFor("FREE", text)
-    val entries = entriesFor("FREE", text)
-    if (entries.isEmpty || entries.length < terms.distinct.length)
-      return spark.emptyDataset[Hit]
-    scored(entries, conjunctive = true, k, qid, pruned = true,
-      phraseSlots = entries.map(_.termId), firstLimit = n)
-  }
+  def spanFirstHits(text: String, n: Int, k: Int, qid: Long = 0L): Dataset[Hit] =
+    run(QueryPlan.spanFirst(segment, dictLookup, text, n, k), qid)
 
   /** Span-not query (the Lucene SpanNotQuery surface, single-term
     * include/exclude): top-k BM25 over documents where `incText`'s term
@@ -919,31 +874,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * walk (include-driven, exclude skip-scanned, two-pointer position
     * merge). */
   def spanNotHits(incText: String, excText: String, window: Int, k: Int,
-                  qid: Long = 0L): Dataset[Hit] = {
-    require(window >= 0, s"span-not window must be >= 0, got $window")
-    require(segment.params.positional,
-      "span-not queries need a positional index (BuildParams.positional)")
-    val incTerms = QueryParser.termsFor("FREE", incText).distinct
-    val excTerms = QueryParser.termsFor("FREE", excText).distinct
-    require(incTerms.length == 1,
-      s"span-not include must be a single term, got '$incText'")
-    require(excTerms.length == 1,
-      s"span-not exclude must be a single term, got '$excText'")
-    require(incTerms.head != excTerms.head,
-      "span-not include and exclude must differ")
-    val incE = dictLookup(incTerms)
-    if (incE.isEmpty) return spark.emptyDataset[Hit]
-    val excE = dictLookup(excTerms)
-    val idfByTid: Map[Long, Double] =
-      (incE ++ excE).map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    if (excE.isEmpty)
-      return scored(incE, conjunctive = false, k, qid, pruned = true)
-    val tids = (incE.map(_.termId) ++ excE.map(_.termId)).sorted
-    rankTopK(scoredRaw(tids, idfByTid, stats.avgDocLen,
-      conjunctive = false, k, pruned = false, nTerms = 1,
-      exclTid = excE.head.termId, exclWin = window)
-      .toDF("docId", "score"), k, qid)
-  }
+                  qid: Long = 0L): Dataset[Hit] =
+    run(QueryPlan.spanNot(segment, dictLookup, incText, excText, window, k), qid)
 
   /** Intervals query (the Lucene/ES `intervals` algebra: `ordered`
     * source with `max_gaps`, optionally wrapped in `not_containing` a
@@ -961,33 +893,9 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * query terms (the filter-doesn't-rescale rule — the filter term
     * never scores). */
   def intervalsHits(text: String, maxGaps: Int, notText: String, k: Int,
-                    qid: Long = 0L): Dataset[Hit] = {
-    require(maxGaps >= 0, s"max_gaps must be >= 0, got $maxGaps")
-    require(segment.params.positional,
-      "intervals queries need a positional index (BuildParams.positional)")
-    val terms = QueryParser.termsFor("FREE", text)
-    require(terms.length >= 2,
-      s"intervals need >= 2 ordered terms, got '$text'")
-    val entries = dictLookup(terms.distinct)
-    if (entries.length < terms.distinct.length)
-      return spark.emptyDataset[Hit]
-    val notTerms = QueryParser.termsFor("FREE", notText).distinct
-    require(notTerms.length <= 1,
-      s"not_containing must be empty or a single term, got '$notText'")
-    require(notTerms.isEmpty || !terms.contains(notTerms.head),
-      "not_containing term must differ from the ordered query terms")
-    val notE = dictLookup(notTerms)
-    val byTerm = entries.map(e => e.term -> e.termId).toMap
-    val idfByTid: Map[Long, Double] =
-      (entries ++ notE).map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val tids = (entries.map(_.termId) ++ notE.map(_.termId)).distinct.sorted
-    rankTopK(scoredRaw(tids, idfByTid, stats.avgDocLen,
-      conjunctive = true, k, pruned = false, nTerms = entries.length,
-      phraseSlots = terms.map(byTerm),
-      gapsLimit = maxGaps,
-      containTid = notE.headOption.map(_.termId).getOrElse(-1L))
-      .toDF("docId", "score"), k, qid)
-  }
+                    qid: Long = 0L): Dataset[Hit] =
+    run(QueryPlan.intervals(segment, dictLookup, text, maxGaps, notText,
+      containing = false, k), qid)
 
   /** Intervals query wrapped in `containing` (the dual of
     * [[intervalsHits]]'s `not_containing` — the other filter of the
@@ -1002,35 +910,9 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * Scoring: BM25 over the distinct ordered terms; the filter term
     * never scores (filter-doesn't-rescale). */
   def intervalsContainingHits(text: String, maxGaps: Int, containText: String,
-                              k: Int, qid: Long = 0L): Dataset[Hit] = {
-    require(maxGaps >= 0, s"max_gaps must be >= 0, got $maxGaps")
-    require(segment.params.positional,
-      "intervals queries need a positional index (BuildParams.positional)")
-    val terms = QueryParser.termsFor("FREE", text)
-    require(terms.length >= 2,
-      s"intervals need >= 2 ordered terms, got '$text'")
-    val entries = dictLookup(terms.distinct)
-    if (entries.length < terms.distinct.length)
-      return spark.emptyDataset[Hit]
-    val containTerms = QueryParser.termsFor("FREE", containText).distinct
-    require(containTerms.length == 1,
-      s"containing must be a single term, got '$containText'")
-    require(!terms.contains(containTerms.head),
-      "containing term must differ from the ordered query terms")
-    val contE = dictLookup(containTerms)
-    if (contE.isEmpty) return spark.emptyDataset[Hit] // nothing to contain
-    val byTerm = entries.map(e => e.term -> e.termId).toMap
-    val idfByTid: Map[Long, Double] =
-      (entries ++ contE).map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val tids = (entries.map(_.termId) ++ contE.map(_.termId)).distinct.sorted
-    rankTopK(scoredRaw(tids, idfByTid, stats.avgDocLen,
-      conjunctive = true, k, pruned = false, nTerms = entries.length,
-      phraseSlots = terms.map(byTerm),
-      gapsLimit = maxGaps,
-      containTid = contE.head.termId,
-      containMode = true)
-      .toDF("docId", "score"), k, qid)
-  }
+                              k: Int, qid: Long = 0L): Dataset[Hit] =
+    run(QueryPlan.intervals(segment, dictLookup, text, maxGaps, containText,
+      containing = true, k), qid)
 
   /** Intervals query with `any_of` slot alternatives (the Lucene/ES
     * `intervals` algebra: an `ordered` source whose slots are `any_of`
@@ -1047,34 +929,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * every present distinct alternative term (whichever variant
     * matched); the filter term never scores. */
   def intervalsAnyHits(text: String, maxGaps: Int, notText: String, k: Int,
-                       qid: Long = 0L): Dataset[Hit] = {
-    require(maxGaps >= 0, s"max_gaps must be >= 0, got $maxGaps")
-    require(segment.params.positional,
-      "intervals queries need a positional index (BuildParams.positional)")
-    val slots: Array[Array[String]] = QueryParser.intervalsAnySlots(text)
-    require(slots.length >= 2,
-      s"intervals need >= 2 ordered slots, got '$text'")
-    val allAlts = slots.flatten.distinct
-    val entries = dictLookup(allAlts)
-    val byTerm = entries.map(e => e.term -> e.termId).toMap
-    val slotTids = slots.map(_.flatMap(byTerm.get))
-    if (slotTids.exists(_.isEmpty)) return spark.emptyDataset[Hit]
-    val notTerms = QueryParser.termsFor("FREE", notText).distinct
-    require(notTerms.length <= 1,
-      s"not_containing must be empty or a single term, got '$notText'")
-    require(notTerms.isEmpty || !allAlts.contains(notTerms.head),
-      "not_containing term must differ from the slot alternatives")
-    val notE = dictLookup(notTerms)
-    val idfByTid: Map[Long, Double] =
-      (entries ++ notE).map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val tids = (entries.map(_.termId) ++ notE.map(_.termId)).distinct.sorted
-    rankTopK(scoredRaw(tids, idfByTid, stats.avgDocLen,
-      conjunctive = true, k, pruned = false, nTerms = slots.length,
-      gapsLimit = maxGaps,
-      containTid = notE.headOption.map(_.termId).getOrElse(-1L),
-      slotAltTids = slotTids)
-      .toDF("docId", "score"), k, qid)
-  }
+                       qid: Long = 0L): Dataset[Hit] =
+    run(QueryPlan.intervalsAny(segment, dictLookup, text, maxGaps, notText, k), qid)
 
   /** Match-phrase-prefix (the Elasticsearch `match_phrase_prefix` /
     * Lucene MultiPhraseQuery surface — "search-as-you-type" over a
@@ -1105,7 +961,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
       if (fixed.isEmpty) BoolQuery.Term(e.term): BoolQuery.Expr
       else BoolQuery.Phrase(fixed :+ e.term): BoolQuery.Expr
     }.toList)
-    boolHitsAst(ast, text, k, qid)
+    run(boolPlan(ast, text, k), qid)
   }
 
   /** Common-terms query (the Lucene CommonTermsQuery surface — the
@@ -1130,8 +986,6 @@ final class Searcher(spark: SparkSession, segment: Segment,
     if (entries.isEmpty) return spark.emptyDataset[Hit]
     val cutoff = maxDfFrac * stats.numDocs
     val required: Array[Boolean] = entries.map(_.df < cutoff)
-    val idfByTid: Map[Long, Double] =
-      entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
     val eval: Array[Boolean] => Boolean =
       if (!required.exists(identity)) { p =>
         var any = false
@@ -1144,9 +998,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
         while (i < p.length) { if (required(i) && !p(i)) ok = false; i += 1 }
         ok
       }
-    rankTopK(scoredRaw(entries.map(_.termId), idfByTid, stats.avgDocLen,
-      conjunctive = false, k, pruned = false, entries.length, boolEval = eval)
-      .toDF("docId", "score"), k, qid)
+    run(Some(planOf(entries, k, QueryPlan.Bool(eval, null, null))), qid)
   }
 
   /** The query's full match set as (docId) rows under the kind's own
@@ -1184,74 +1036,28 @@ final class Searcher(spark: SparkSession, segment: Segment,
       "batchHits qids must be unique")
     val allowed = Set("FREE", "OR", "AND", "PREFIX", "REGEX", "WILD",
       "FUZZY", "STEM")
-    // per-query plan: ascending termIds, idf, boost, conjunctive flag
-    val plans: Array[(Long, Array[Long], Map[Long, Double], Map[Long, Double], Boolean, Int)] =
+    val plans: Array[(Long, QueryPlan)] =
       queries.iterator.flatMap { case (qid, kind, text) =>
         require(allowed.contains(kind),
           s"batchHits supports ${allowed.mkString("/")}, got $kind")
-        val terms = QueryParser.termsFor(kind, text)
-        val entries = entriesFor(kind, text)
-        val conj = kind == "AND"
-        if (entries.isEmpty || (conj && entries.length < terms.distinct.length))
-          None // unsatisfiable: contributes no rows, like hits()
-        else {
-          val idf = entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-          val boosts = Searcher.toTidBoosts(entries, QueryParser.boosts(kind, text))
-          Some((qid, entries.map(_.termId), idf,
-            if (boosts == null) Map.empty[Long, Double] else boosts,
-            conj, entries.length))
-        }
+        // unsatisfiable: contributes no rows, like hits()
+        lower(kind, text, k).map(qid -> _)
       }.toArray
     if (plans.isEmpty) return spark.emptyDataset[Hit]
-    val unionTids = plans.flatMap(_._2).distinct.sorted
+    val unionTids = plans.flatMap(_._2.tids).distinct.sorted
     val pls = segment.postings
       .filter($"termId".isin(unionTids.map(Long.box): _*)).as[PostingList]
-    // locals only — the Searcher itself must not be captured
-    val positional = segment.params.positional
-    val avgdl = stats.avgDocLen
-    val kk = k
-    val plansL = plans
 
-    def walk(plIt: Iterator[PostingList], firstDocId: Long,
+    def walk(bucket: Int, plIt: Iterator[PostingList], firstDocId: Long,
              lens: Array[Int]): Iterator[(Long, Long, Double)] = {
-      val plByTid = plIt.map(pl => pl.termId -> pl).toMap
-      plansL.iterator.flatMap { case (qid, tids, idf, boosts, conj, nTerms) =>
-        val present = tids.flatMap(plByTid.get)
-        if (present.isEmpty || (conj && present.length < nTerms))
-          Iterator.empty
-        else {
-          val cursors = present.map(pl =>
-            new Wand.TermCursor(pl.termId, idf(pl.termId), pl, positional,
-              0L, Long.MaxValue, boosts.getOrElse(pl.termId, 1.0)))
-          val res =
-            if (conj) Wand.topKAnd(cursors, lens, firstDocId, avgdl, kk, null, null)
-            else Wand.topK(cursors, lens, firstDocId, avgdl, kk, null, null)
-          res.iterator.map(s => (qid, s.docId, s.score))
-        }
+      val lists = plIt.toArray
+      plans.iterator.flatMap { case (qid, plan) =>
+        Wand.eval(plan, lists, firstDocId, lens, null)
+          .iterator.map(s => (qid, s.docId, s.score))
       }
     }
 
-    val raw = doclenResident match {
-      case Some(bc) =>
-        pls.groupByKey(_.bucket).flatMapGroups { (bucket, plIt) =>
-          bc.value.get(bucket) match {
-            case Some((first, lens)) => walk(plIt, first, lens)
-            case None => Iterator.empty
-          }
-        }
-      case None =>
-        val dlb = segment.doclens
-          .join(broadcast(pls.select($"bucket").distinct()), Seq("bucket"), "left_semi")
-          .as[DocLenBlock]
-        pls.groupByKey(_.bucket).cogroup(dlb.groupByKey(_.bucket)) {
-          (_, plIt, dlIt) =>
-            if (!dlIt.hasNext || !plIt.hasNext) Iterator.empty
-            else {
-              val dl = dlIt.next()
-              walk(plIt, dl.firstDocId, dl.lens)
-            }
-        }
-    }
+    val raw = perBucket(pls)(walk)
     raw.toDF("qid", "docId", "score")
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -1268,164 +1074,55 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * every cursor (block skips, no filter pass). */
   def scopedHits(kind: String, text: String, k: Int, lo: Long, hi: Long,
                  qid: Long = 0L): Dataset[Hit] =
-    hitsImpl(kind, text, k, qid, pruned = true, lo = lo, hi = hi)
+    hitsImpl(kind, text, k, qid, lo = lo, hi = hi)
 
   private type AcceptB = org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]]
 
   private def hitsImpl(kind: String, text: String, k: Int, qid: Long,
-                       pruned: Boolean, lo: Long = 0L,
-                       hi: Long = Long.MaxValue,
-                       acceptB: AcceptB = null,
-                       rejectB: AcceptB = null,
-                       after: Wand.Scored = null,
-                       maxscore: Boolean = false): Dataset[Hit] = {
-    if (kind == "BOOL")
-      return boolHits(text, k, qid, lo, hi, acceptB, rejectB, after)
-    val terms = QueryParser.termsFor(kind, text)
-    val entries = entriesFor(kind, text) // ONE expansion dispatch, every caller
-    val needAll = kind == "AND" || kind == "PHRASE" || kind == "NEAR" ||
-      kind == "ONEAR"
-    if (entries.isEmpty || (needAll && entries.length < terms.distinct.length))
-      return spark.emptyDataset[Hit] // AND/PHRASE/NEAR with an unknown term ⇒ ∅
-    val boostByTid = Searcher.toTidBoosts(entries, QueryParser.boosts(kind, text))
-    kind match {
-      case "PHRASE" =>
-        require(segment.params.positional,
-          "phrase queries need a positional index (BuildParams.positional)")
-        val byTerm = entries.map(e => e.term -> e).toMap
-        val slots = terms.map(t => byTerm(t).termId)
-        scored(entries, conjunctive = true, k, qid, pruned, phraseSlots = slots,
-          lo = lo, hi = hi, acceptB = acceptB, rejectB = rejectB, after = after)
-      case "NEAR" =>
-        require(segment.params.positional,
-          "proximity queries need a positional index (BuildParams.positional)")
-        scored(entries, conjunctive = true, k, qid, pruned,
-          phraseSlots = entries.map(_.termId),
-          nearWindow = QueryParser.nearWindow(text), lo = lo, hi = hi,
-          acceptB = acceptB, rejectB = rejectB, after = after)
-      case "ONEAR" =>
-        require(segment.params.positional,
-          "proximity queries need a positional index (BuildParams.positional)")
-        // slots in QUERY order (the ordering IS the constraint); the
-        // negative window carries orderedness through scoredRaw
-        val byTerm = entries.map(e => e.term -> e.termId).toMap
-        scored(entries, conjunctive = true, k, qid, pruned,
-          phraseSlots = terms.map(byTerm),
-          nearWindow = -QueryParser.orderedWindow(text), lo = lo, hi = hi,
-          acceptB = acceptB, rejectB = rejectB, after = after)
-      case _ =>
-        scored(entries, conjunctive = kind == "AND", k, qid, pruned,
-          lo = lo, hi = hi, acceptB = acceptB, rejectB = rejectB, after = after,
-          boostByTid = boostByTid, maxscore = maxscore)
-    }
-  }
-
-  private def scored(entries: Array[DictEntry], conjunctive: Boolean, k: Int,
-                     qid: Long, pruned: Boolean,
-                     phraseSlots: Array[Long] = null,
-                     nearWindow: Int = 0, lo: Long = 0L,
-                     hi: Long = Long.MaxValue,
-                     acceptB: AcceptB = null,
-                     rejectB: AcceptB = null,
-                     after: Wand.Scored = null,
-                     boostByTid: Map[Long, Double] = null,
-                     firstLimit: Int = 0,
-                     maxscore: Boolean = false): Dataset[Hit] = {
-    val idfByTid: Map[Long, Double] =
-      entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    rankTopK(scoredRaw(entries.map(_.termId), idfByTid, stats.avgDocLen,
-      conjunctive, k, pruned, entries.length, maxscore, phraseSlots, nearWindow, lo, hi,
-      acceptB = acceptB, rejectB = rejectB, after = after,
-      boostByTid = boostByTid, firstLimit = firstLimit)
-      .toDF("docId", "score"), k, qid)
-  }
-
-  /** Nested boolean query (kind BOOL): parse parens/precedence, look up
-    * the expression's distinct terms, compile the presence predicate
-    * over ascending-termId slots, and run the document-at-a-time walk.
-    * Unsatisfiable expressions (an AND branch naming an out-of-vocabulary
-    * term with no OR escape) short-circuit to ∅ without a job. */
-  private def boolHits(text: String, k: Int, qid: Long,
-                       lo: Long, hi: Long,
-                       acceptB: AcceptB = null,
-                       rejectB: AcceptB = null,
+                       or: QueryPlan.OrWalk = QueryPlan.OrWalk.Wand,
+                       lo: Long = 0L, hi: Long = Long.MaxValue,
+                       acceptB: AcceptB = null, rejectB: AcceptB = null,
                        after: Wand.Scored = null): Dataset[Hit] =
-    boolHitsAst(BoolQuery.parse(text), text, k, qid, lo, hi,
-      acceptB, rejectB, after)
+    run(lower(kind, text, k, or).map(_.copy(lo = lo, hi = hi, after = after)),
+      qid, acceptB, rejectB)
 
-  /** [[boolHits]] over a pre-built AST — shared by the text parser path
-    * and surfaces that synthesize boolean expressions directly (e.g.
-    * [[phrasePrefixHits]]). */
-  private def boolHitsAst(ast: BoolQuery.Expr, text: String, k: Int,
-                          qid: Long, lo: Long = 0L,
-                          hi: Long = Long.MaxValue,
-                          acceptB: AcceptB = null,
-                          rejectB: AcceptB = null,
-                          after: Wand.Scored = null): Dataset[Hit] = {
-    boolPlan(ast) match {
-      case None => spark.emptyDataset[Hit]
-      case Some(plan) =>
-        require(!plan.matchesEmpty,
-          s"pure-negative boolean query '$text' matches a corpus-sized " +
-            "complement; add a positive requirement (a AND NOT x)")
-        val entries = plan.entries
-        val idfByTid: Map[Long, Double] =
-          entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-        val boostByTid = Searcher.toTidBoosts(entries,
-          Searcher.boolTermBoosts(ast, plan.patEntries))
-        rankTopK(scoredRaw(entries.map(_.termId), idfByTid, stats.avgDocLen,
-          conjunctive = false, k, pruned = false, entries.length,
-          boolEval = plan.eval, boolPhrases = plan.phraseDefs,
-          boolWins = plan.phraseWins,
-          lo = lo, hi = hi, acceptB = acceptB, rejectB = rejectB,
-          after = after, boostByTid = boostByTid)
-          .toDF("docId", "score"), k, qid)
-    }
+  /** A query of a parsed kind lowered over this segment under its own
+    * statistics; None = provably empty. */
+  private def lower(kind: String, text: String, k: Int,
+                    or: QueryPlan.OrWalk = QueryPlan.OrWalk.Wand): Option[QueryPlan] = {
+    val entries = entriesFor(kind, text) // ONE expansion dispatch, every caller
+    QueryPlan.lower(kind, text, entries, QueryPlan.idf(entries, stats.numDocs),
+      stats.avgDocLen, k, segment.params.positional, expand, or)
   }
 
-  /** The compiled evaluation plan of a boolean expression over THIS
-    * segment's vocabulary: resolved entries (fixed terms ∪ pattern
-    * expansions, ascending termId), the presence predicate, and the
-    * positional-atom slot layout. None = provably empty (unsatisfiable
-    * under this vocabulary) without running a job. */
-  private case class BoolPlan(entries: Array[DictEntry],
-                              patEntries: Map[BoolQuery.Pattern, Array[DictEntry]],
-                              eval: Array[Boolean] => Boolean,
-                              phraseDefs: Array[Array[Int]],
-                              phraseWins: Array[Int],
-                              matchesEmpty: Boolean)
-
-  private def boolPlan(ast: BoolQuery.Expr): Option[BoolPlan] = {
-    val terms = BoolQuery.terms(ast)
-    val pats = BoolQuery.patterns(ast)
-    // fixed-term lookups ∪ per-pattern dictionary expansions (the
-    // PREFIX/REGEX-kind machinery as leaves), deduped, ascending termId
-    val patEntries: Map[BoolQuery.Pattern, Array[DictEntry]] = pats.map(p =>
-      p -> (if (p.isRegex) dictLookupRegex(p.raw)
-            else dictLookupPrefix(p.raw))).toMap
-    val entries = (dictLookup(terms) ++ patEntries.valuesIterator.flatten)
-      .distinctBy(_.termId).sortBy(_.termId)
-    if (entries.isEmpty ||
-        !BoolQuery.satisfiable(ast, entries.map(_.term).toSet))
-      return None
-    val atoms = BoolQuery.posAtoms(ast)
-    if (atoms.nonEmpty)
-      require(segment.params.positional,
-        "phrase/NEAR atoms in a boolean query need a positional index (BuildParams.positional)")
-    val slotByTerm = entries.zipWithIndex.map { case (e, i) => e.term -> i }.toMap
-    val phraseSlot = atoms.zipWithIndex.toMap
-    val patternSlots = patEntries.map { case (p, es) =>
-      p -> es.map(e => slotByTerm(e.term)) }
-    val eval = BoolQuery.compile(ast, slotByTerm, phraseSlot, entries.length,
-      patternSlots)
-    val phraseDefs: Array[Array[Int]] =
-      if (atoms.isEmpty) null
-      else atoms.map { case (ts, _) => ts.map(t => slotByTerm.getOrElse(t, -1)).toArray }
-    val phraseWins: Array[Int] = if (atoms.isEmpty) null else atoms.map(_._2)
-    Some(BoolPlan(entries, patEntries, eval, phraseDefs, phraseWins,
-      BoolQuery.matchesEmpty(ast, slotByTerm, entries.length, phraseSlot,
-        entries.length, patternSlots)))
+  /** A boolean expression (parsed, or synthesized as by
+    * [[phrasePrefixHits]]) lowered over this segment; None = unsatisfiable
+    * under this vocabulary. */
+  private def boolPlan(ast: BoolQuery.Expr, text: String, k: Int): Option[QueryPlan] = {
+    val entries = QueryPlan.boolEntries(ast, dictLookup, expand)
+    QueryPlan.bool(ast, text, entries, QueryPlan.idf(entries, stats.numDocs),
+      stats.avgDocLen, k, segment.params.positional, expand)
   }
+
+  /** A per-bucket k that keeps a bucket's whole match set: a bucket
+    * holds ≤ bucketSize docs. */
+  private def bucketK: Int = math.min(segment.params.bucketSize, Int.MaxValue.toLong).toInt
+
+  /** A plan over `entries` under this segment's statistics, no boosts. */
+  private def planOf(entries: Array[DictEntry], k: Int,
+                     shape: QueryPlan.Shape): QueryPlan =
+    QueryPlan.of(entries, QueryPlan.idf(entries, stats.numDocs), stats.avgDocLen,
+      k, segment.params.positional, shape)
+
+  private def run(plan: Option[QueryPlan], qid: Long, acceptB: AcceptB = null,
+                  rejectB: AcceptB = null): Dataset[Hit] =
+    plan.fold(spark.emptyDataset[Hit])(p =>
+      rankTopK(scoredRaw(p, acceptB, rejectB).toDF("docId", "score"), p.k, qid))
+
+  /** A boolean prefix/regex leaf expanded against this segment's
+    * dictionary (the PREFIX/REGEX-kind machinery). */
+  private[search] def expand(p: BoolQuery.Pattern): Array[DictEntry] =
+    if (p.isRegex) dictLookupRegex(p.raw) else dictLookupPrefix(p.raw)
 
   /** Doc-length arrays up to this many documents stay resident
     * (broadcast once per searcher) — the Lucene-style serving posture: a
@@ -1440,200 +1137,43 @@ final class Searcher(spark: SparkSession, segment: Segment,
         segment.doclens.collect().map(b => b.bucket -> (b.firstDocId, b.lens)).toMap))
     else None
 
-  /** Per-bucket walk emitting unranked (docId, score) — the building
-    * block shared with MultiSearcher, which supplies GLOBAL (cross-
-    * segment) idf/avgdl instead of this segment's own. */
-  private[search] def scoredRaw(tids: Array[Long], idfByTid: Map[Long, Double],
-                                avgdl: Double, conjunctive: Boolean, k: Int,
-                                pruned: Boolean, nTerms: Int,
-                                maxscore: Boolean = false,
-                                phraseSlots: Array[Long] = null,
-                                nearWindow: Int = 0, lo: Long = 0L,
-                                hi: Long = Long.MaxValue,
-                                boolEval: Array[Boolean] => Boolean = null,
-                                boolPhrases: Array[Array[Int]] = null,
-                                boolWins: Array[Int] = null,
-                                acceptB: AcceptB = null,
-                                rejectB: AcceptB = null,
-                                after: Wand.Scored = null,
-                                boostByTid: Map[Long, Double] = null,
-                                dismaxTie: Double = Double.NaN,
-                                firstLimit: Int = 0,
-                                lmdMu: Double = Double.NaN,
-                                lmdP: Map[Long, Double] = null,
-                                exclTid: Long = -1L,
-                                exclWin: Int = 0,
-                                gapsLimit: Int = -1,
-                                containTid: Long = -1L,
-                                slotAltTids: Array[Array[Long]] = null,
-                                containMode: Boolean = false)
-      : Dataset[(Long, Double)] = {
-    // query-time term weights: scale each cursor's effective idf AND its
-    // stored block-max bounds (TermCursor.boost) — absent/1.0 = neutral
-    val bo: Long => Double =
-      if (boostByTid == null) null
-      else tid => boostByTid.getOrElse(tid, 1.0)
-    val scoped = lo > 0L || hi != Long.MaxValue
-    val pls0 = segment.postings.filter($"termId".isin(tids.toSeq: _*))
-    // scoped search prunes whole buckets before any decode. Bounds stay
-    // in Long: an open-ended scope (hi = Long.MaxValue) would overflow
-    // ((hi-1)/bs).toInt to a negative bucket and silently drop everything.
+  /** Per-bucket walk emitting unranked (docId, score): the plan's lists
+    * grouped by bucket, each bucket walked by Wand.eval — the building
+    * block shared with MultiSearcher, whose plans carry GLOBAL (cross-
+    * segment) statistics instead of this segment's own. */
+  private[search] def scoredRaw(plan: QueryPlan, acceptB: AcceptB = null,
+                                rejectB: AcceptB = null): Dataset[(Long, Double)] = {
+    val pls0 = segment.postings.filter($"termId".isin(plan.tids.toSeq: _*))
+    // scoped search prunes whole buckets before any decode; the bounds
+    // stay Int so the filter literals match the partition column (a cast
+    // would defeat pruning)
     val bs = segment.params.bucketSize
-    // clamp to Int AFTER the Long division so the filter literals stay
-    // Int (bucket is the partition column — a cast would defeat pruning)
-    val loBucket = math.min(lo / bs, Int.MaxValue.toLong).toInt
-    val hiBucket = math.min((hi - 1) / bs, Int.MaxValue.toLong).toInt
-    val pls = (if (scoped)
+    val (loBucket, hiBucket) = plan.bucketRange(bs)
+    val pls = (if (plan.scoped)
       pls0.filter($"bucket" >= loBucket && $"bucket" <= hiBucket)
     else pls0).as[PostingList]
-    val positional = segment.params.positional
 
     def walk(bucket: Int, plIt: Iterator[PostingList], firstDocId: Long,
              lens: Array[Int]): Iterator[(Long, Double)] = {
-      // fielded filter: resolve this bucket's bitset once; a bucket with
-      // no matching docs skips its walk (and decode) entirely
-      val acceptPos: Long => Boolean =
-        if (acceptB == null) null
-        else acceptB.value.get(bucket) match {
-          case None => return Iterator.empty
-          case Some(bits) =>
-            val base = bucket.toLong * bs
-            d => { val off = (d - base).toInt; (bits(off >> 6) & (1L << (off & 63))) != 0L }
-        }
-      // tombstones: a bucket with no deletions probes nothing
-      val reject: Long => Boolean =
-        if (rejectB == null) null
-        else rejectB.value.get(bucket) match {
-          case None => null
-          case Some(bits) =>
-            val base = bucket.toLong * bs
-            d => { val off = (d - base).toInt; (bits(off >> 6) & (1L << (off & 63))) != 0L }
-        }
-      val accept: Long => Boolean = (acceptPos, reject) match {
-        case (null, null) => null
-        case (a, null) => a
-        case (null, r) => d => !r(d)
-        case (a, r) => d => a(d) && !r(d)
-      }
-      val plArr = plIt.toArray
-      def cursors = plArr.map { pl =>
-        new Wand.TermCursor(pl.termId, idfByTid(pl.termId), pl, positional, lo, hi,
-          if (bo == null) 1.0 else bo(pl.termId))
-      }
-      val res =
-        if (boolEval != null) {
-          // slots aligned to the GLOBAL ascending-termId order `tids`;
-          // a slot with no list in this bucket stays null (never present)
-          val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-          val slots = tids.map(tid => plByTid.get(tid)
-            .map(pl => new Wand.TermCursor(tid, idfByTid(tid), pl, positional,
-              lo, hi, if (bo == null) 1.0 else bo(tid)))
-            .orNull)
-          Wand.topKBool(slots, lens, firstDocId, avgdl, k, boolEval, accept,
-            after, boolPhrases, boolWins)
-        } else if (gapsLimit >= 0 && slotAltTids != null) {
-          // intervals any_of: each ordered slot carries alternative
-          // termIds; an alternative absent from the bucket just drops
-          // out of its slot, a slot with NO alternative in the bucket
-          // kills the bucket (ordered conjunction of disjunctions). One
-          // cursor per distinct termId, shared across slots.
-          val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-          val curByTid = collection.mutable.Map.empty[Long, Wand.TermCursor]
-          def cursorFor(tid: Long): Option[Wand.TermCursor] =
-            curByTid.get(tid).orElse(plByTid.get(tid).map { pl =>
-              val c = new Wand.TermCursor(tid, idfByTid(tid), pl, positional,
-                lo, hi, if (bo == null) 1.0 else bo(tid))
-              curByTid(tid) = c
-              c
-            })
-          val slotCs = slotAltTids.map(_.flatMap(tid => cursorFor(tid)))
-          if (slotCs.exists(_.isEmpty)) Array.empty[Wand.Scored]
-          else {
-            val not =
-              if (containTid >= 0L)
-                plByTid.get(containTid)
-                  .map(pl => new Wand.TermCursor(containTid, 0.0, pl,
-                    positional, lo, hi))
-                  .orNull
-              else null
-            Wand.topKIntervalsAny(slotCs, lens, firstDocId, avgdl, k,
-              gapsLimit, not, accept, after)
-          }
-        } else if (gapsLimit >= 0 && phraseSlots != null) {
-          // intervals: ordered slots in QUERY order; the not_containing
-          // list is OPTIONAL per bucket (a doc without it is unfiltered)
-          val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-          if (phraseSlots.distinct.exists(tid => !plByTid.contains(tid)))
-            Array.empty[Wand.Scored]
-          else {
-            val slots = phraseSlots.map(tid =>
-              new Wand.TermCursor(tid, idfByTid(tid), plByTid(tid), positional,
-                lo, hi, if (bo == null) 1.0 else bo(tid)))
-            val not =
-              if (containTid >= 0L)
-                plByTid.get(containTid)
-                  .map(pl => new Wand.TermCursor(containTid, 0.0, pl,
-                    positional, lo, hi))
-                  .orNull
-              else null
-            Wand.topKIntervals(slots, lens, firstDocId, avgdl, k, gapsLimit,
-              not, accept, after, mustContain = containMode)
-          }
-        } else if (exclTid >= 0L) {
-          // span-not: the exclude list is OPTIONAL per bucket (a bucket
-          // without it matches on the include term alone); the include
-          // list is required
-          val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-          val incTid = tids.find(_ != exclTid).get
-          plByTid.get(incTid) match {
-            case None => Array.empty[Wand.Scored]
-            case Some(ipl) =>
-              val inc = new Wand.TermCursor(incTid, idfByTid(incTid), ipl,
-                positional, lo, hi, if (bo == null) 1.0 else bo(incTid))
-              val exc = plByTid.get(exclTid)
-                .map(pl => new Wand.TermCursor(exclTid, 0.0, pl, positional,
-                  lo, hi))
-                .orNull
-              Wand.topKSpanNot(inc, exc, lens, firstDocId, avgdl, k,
-                exclWin, exclWin, accept, after)
-          }
-        } else if (phraseSlots != null) {
-          // one independent cursor per phrase/near slot (duplicates included)
-          val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-          if (plByTid.size < nTerms) Array.empty[Wand.Scored]
-          else {
-            val slots = phraseSlots.map(tid =>
-              new Wand.TermCursor(tid, idfByTid(tid), plByTid(tid), positional,
-                lo, hi, if (bo == null) 1.0 else bo(tid)))
-            // nearWindow sign convention (every tier): > 0 unordered
-            // NEAR/w, < 0 ordered BEFORE/w (window = −nearWindow, slots
-            // in QUERY order), 0 phrase; firstLimit > 0 = span-first
-            if (firstLimit > 0)
-              Wand.topKSpanFirst(slots, lens, firstDocId, avgdl, k, firstLimit, accept, after)
-            else if (nearWindow > 0)
-              Wand.topKNear(slots, lens, firstDocId, avgdl, k, nearWindow, accept, after)
-            else if (nearWindow < 0)
-              Wand.topKONear(slots, lens, firstDocId, avgdl, k, -nearWindow, accept, after)
-            else Wand.topKPhrase(slots, lens, firstDocId, avgdl, k, accept, after)
-          }
-        } else if (conjunctive) {
-          // a bucket missing any query term cannot intersect
-          if (plArr.length < nTerms) Array.empty[Wand.Scored]
-          else Wand.topKAnd(cursors, lens, firstDocId, avgdl, k, accept, after)
-        } else if (!lmdMu.isNaN)
-          Wand.topKLmd(cursors, lens, firstDocId, k, lmdMu, lmdP, accept, after)
-        else if (!dismaxTie.isNaN)
-          Wand.topKDisMax(cursors, lens, firstDocId, avgdl, k, dismaxTie, accept, after)
-        else if (pruned && maxscore)
-          Wand.topKMaxScore(cursors, lens, firstDocId, avgdl, k, accept, after)
-        else if (pruned) Wand.topK(cursors, lens, firstDocId, avgdl, k, accept, after)
-        else Wand.topKOrExhaustive(cursors, lens, firstDocId, avgdl, k, accept, after)
-      res.iterator.map(s => (s.docId, s.score))
+      // a bucket with no accepted doc skips its walk (and decode) entirely
+      val accept = Wand.bucketFilter(bucket, bs,
+        if (acceptB == null) null else acceptB.value,
+        if (rejectB == null) null else rejectB.value)
+      if (accept eq Wand.RejectAll) Iterator.empty
+      else Wand.eval(plan, plIt.toArray, firstDocId, lens, accept)
+        .iterator.map(s => (s.docId, s.score))
     }
+    perBucket(pls)(walk)
+  }
 
+  /** Runs `walk` once per touched bucket with that bucket's posting lists
+    * and doc lengths. Resident mode: one scan + one tiny shuffle of ≤|q|
+    * rows per bucket. Cogroup mode: doclens arrive co-partitioned, pruned
+    * to the touched buckets by a lazy broadcast semi-join. */
+  private def perBucket[T: org.apache.spark.sql.Encoder](pls: Dataset[PostingList])(
+      walk: (Int, Iterator[PostingList], Long, Array[Int]) => Iterator[T]): Dataset[T] =
     doclenResident match {
       case Some(bc) =>
-        // resident mode: one scan + one tiny shuffle of ≤|q| rows/bucket
         pls.groupByKey(_.bucket).flatMapGroups { (bucket, plIt) =>
           bc.value.get(bucket) match {
             case Some((first, lens)) => walk(bucket, plIt, first, lens)
@@ -1641,8 +1181,6 @@ final class Searcher(spark: SparkSession, segment: Segment,
           }
         }
       case None =>
-        // cogroup mode: doclens arrive co-partitioned, pruned to the
-        // query's touched buckets by a lazy broadcast semi-join
         val dlb = segment.doclens
           .join(broadcast(pls.select($"bucket").distinct()), Seq("bucket"), "left_semi")
           .as[DocLenBlock]
@@ -1655,7 +1193,6 @@ final class Searcher(spark: SparkSession, segment: Segment,
             }
         }
     }
-  }
 
   /** Global top-k + dense rank. orderBy+limit plans as
     * TakeOrderedAndProject (per-partition partial top-k, driver merge);
@@ -1739,9 +1276,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
       case "REGEX" | "WILD" => dictLookupRegex(terms.head)
       case "FUZZY" => dictLookupFuzzy(terms.head, QueryParser.fuzzyDist(text))
       case "STEM" => dictLookupStem(terms.head)
-      case "BOOL" =>
-        boolPlan(BoolQuery.parse(text)).map(_.entries)
-          .getOrElse(Array.empty[DictEntry])
+      case "BOOL" => QueryPlan.boolEntries(BoolQuery.parse(text), dictLookup, expand)
       case _ => dictLookup(terms.distinct)
     }
   }
@@ -1821,18 +1356,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
       // ONEAR walk with k = bucketSize (the boolMatchSet trick: every
       // bucket holds ≤ bucketSize docs, so per-bucket "top-k" is the
       // complete match set) and scores discarded
-      require(segment.params.positional,
-        "proximity queries need a positional index (BuildParams.positional)")
-      val ts = QueryParser.termsFor(kind, text)
-      val entries = dictLookup(ts.distinct)
-      if (entries.length < ts.length) return None
-      val idfByTid = entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-      val byTerm = entries.map(e => e.term -> e.termId).toMap
-      return Some(scoredRaw(entries.map(_.termId), idfByTid, stats.avgDocLen,
-        conjunctive = true, k = segment.params.bucketSize.toInt,
-        pruned = false, entries.length, phraseSlots = ts.map(byTerm),
-        nearWindow = -QueryParser.orderedWindow(text))
-        .toDF("docId", "score").select($"docId"))
+      return lower(kind, text, bucketK).map(p =>
+        scoredRaw(p).toDF("docId", "score").select($"docId"))
     }
     val terms = QueryParser.termsFor(kind, text)
     val entries = entriesFor(kind, text) // ONE expansion dispatch, every caller
@@ -1881,20 +1406,10 @@ final class Searcher(spark: SparkSession, segment: Segment,
         }
       case _ => BoolQuery.parse(text)
     }
-    boolPlan(ast).map { plan =>
-      require(!plan.matchesEmpty,
-        s"pure-negative boolean query '$text' matches a corpus-sized " +
-          "complement; add a positive requirement (a AND NOT x)")
-      val entries = plan.entries
-      // scores are discarded: idf 0 keeps the walk's heap insertion-only
-      val zeroIdf: Map[Long, Double] = entries.map(_.termId -> 0.0).toMap
-      val k = math.min(segment.params.bucketSize, Int.MaxValue.toLong).toInt
-      scoredRaw(entries.map(_.termId), zeroIdf, stats.avgDocLen,
-        conjunctive = false, k, pruned = false, entries.length,
-        boolEval = plan.eval, boolPhrases = plan.phraseDefs,
-        boolWins = plan.phraseWins)
-        .map(_._1).toDF("docId")
-    }
+    // scores are discarded: idf 0 keeps the walk's heap insertion-only
+    boolPlan(ast, text, bucketK).map(p =>
+      scoredRaw(p.copy(idf = p.idf.map { case (t, _) => t -> 0.0 }))
+        .map(_._1).toDF("docId"))
   }
 
   def facets(kind: String, text: String, facetCol: String): DataFrame =
@@ -1942,20 +1457,12 @@ final class Searcher(spark: SparkSession, segment: Segment,
       case other => throw new IllegalArgumentException(
         s"matchCountCapped supports FREE/OR/AND/BOOL, got $other")
     }
-    boolPlan(ast) match {
+    boolPlan(ast, text, 1) match {
       case None => 0L
       case Some(plan) =>
-        require(!plan.matchesEmpty,
-          s"pure-negative boolean query '$text' matches a corpus-sized " +
-            "complement; add a positive requirement (a AND NOT x)")
+        val QueryPlan.Bool(eval, defs, wins) = plan.shape
+        val tids = plan.slots
         val positional = segment.params.positional
-        if (plan.phraseDefs != null)
-          require(positional,
-            "positional atoms need a positional index (BuildParams.positional)")
-        val tids = plan.entries.map(_.termId)
-        val eval = plan.eval
-        val defs = plan.phraseDefs
-        val wins = plan.phraseWins
         val capL = cap
         val total = segment.postings
           .filter($"termId".isin(tids.toSeq: _*)).as[PostingList]
@@ -2069,11 +1576,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
         s"${Searcher.CollapseRepoLimit} — shard the collapse by repo range")
     val los = bounds.map(_._1)
     val bc = spark.sparkContext.broadcast(los)
-    val idfByTid: Map[Long, Double] =
-      entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val best = scoredRaw(entries.map(_.termId), idfByTid, stats.avgDocLen,
-      conjunctive = kind == "AND", k = segment.params.bucketSize.toInt,
-      pruned = false, entries.length)
+    val best = scoredRaw(planOf(entries, bucketK,
+      if (kind == "AND") QueryPlan.And else QueryPlan.Or(QueryPlan.OrWalk.Exhaustive)))
       .mapPartitions { it =>
         val l = bc.value
         it.map { case (docId, score) =>
@@ -2138,12 +1642,9 @@ final class Searcher(spark: SparkSession, segment: Segment,
         s"${Searcher.CollapseRepoLimit} — shard by repo range")
     val los = bounds.map(_._1)
     val bc = spark.sparkContext.broadcast(los)
-    val idfByTid: Map[Long, Double] =
-      entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
     val mode = scoreMode
-    val perParent = scoredRaw(entries.map(_.termId), idfByTid, stats.avgDocLen,
-      conjunctive = kind == "AND", k = segment.params.bucketSize.toInt,
-      pruned = false, entries.length)
+    val perParent = scoredRaw(planOf(entries, bucketK,
+      if (kind == "AND") QueryPlan.And else QueryPlan.Or(QueryPlan.OrWalk.Exhaustive)))
       .mapPartitions { it =>
         val l = bc.value
         it.map { case (docId, score) =>
@@ -2214,33 +1715,6 @@ object Searcher {
     * relational/oracle rounding. */
   private[graft] def round6(x: Double): Double =
     BigDecimal.valueOf(x).setScale(6, BigDecimal.RoundingMode.HALF_UP).toDouble
-
-  /** term-string weights → termId weights over the query's resolved
-    * entries; null when no term deviates from 1.0 (the common case —
-    * walks skip all weight lookups). */
-  private[search] def toTidBoosts(entries: Array[DictEntry],
-                                  m: Map[String, Double]): Map[Long, Double] =
-    if (m.isEmpty) null
-    else {
-      val b = entries.flatMap(e => m.get(e.term).map(e.termId -> _)).toMap
-      if (b.isEmpty) null else b
-    }
-
-  /** Effective per-term weights of a boolean query: the grammar's fixed-
-    * term maxima combined with each boosted Pattern leaf's weight applied
-    * to ITS per-segment expansion (max across mentions, unboosted = 1.0). */
-  private[search] def boolTermBoosts(ast: BoolQuery.Expr,
-                                     patEntries: Map[BoolQuery.Pattern, Array[DictEntry]])
-      : Map[String, Double] = {
-    val (tm, pm) = BoolQuery.boostMaps(ast)
-    if (pm.isEmpty) return tm
-    val eff = scala.collection.mutable.Map.empty[String, Double] ++ tm
-    patEntries.foreach { case (p, es) =>
-      val w = pm.getOrElse(p, 1.0)
-      es.foreach(e => eff(e.term) = math.max(eff.getOrElse(e.term, 1.0), w))
-    }
-    eff.filter(_._2 != 1.0).toMap
-  }
 
   /** Plain Levenshtein distance (unit insert/delete/substitute — the
     * same metric as DuckDB's `levenshtein`, keeping the suggest oracle

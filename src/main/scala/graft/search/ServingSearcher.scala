@@ -1,7 +1,5 @@
 package graft.search
 
-import scala.collection.mutable
-
 import org.apache.spark.HashPartitioner
 import org.apache.spark.rdd.RDD
 import org.apache.spark.sql.SparkSession
@@ -102,7 +100,7 @@ final class ServingSearcher(spark: SparkSession, segment: Segment) {
     if (toks.isEmpty) return Array.empty
     require(toks.length <= 8,
       s"phrase suggestions are for short queries (got ${toks.length} tokens)")
-    val total = dictCache.valuesIterator.map(_.cf).sum.toDouble
+    val total = totalCf.toDouble
     val v = stats.numTerms.toDouble
     def lnP(cf: Long): Double =
       math.log(lambda * cf / total + (1.0 - lambda) / v)
@@ -138,142 +136,40 @@ final class ServingSearcher(spark: SparkSession, segment: Segment) {
     * Searcher.lmdHits (LmdSpec): the pluggable-similarity surface with
     * p_t from the RESIDENT dictionary's exact Σcf, exhaustive-by-design
     * union walk (LM scores have no stored per-list bound). */
-  def lmdHits(text: String, mu: Double, k: Int, qid: Long = 0L): Array[Hit] = {
-    require(mu > 0.0, s"Dirichlet mu must be positive, got $mu")
-    val terms = QueryParser.termsFor("FREE", text).distinct
-    val entries = terms.flatMap(dictCache.get).sortBy(_.termId)
-    if (entries.isEmpty) return Array.empty
-    val total = dictCache.valuesIterator.map(_.cf).sum.toDouble
-    val pByTid: Map[Long, Double] =
-      entries.map(e => e.termId -> (e.cf / total)).toMap
-    val idfByTid = entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val all = rawScored("FREE", text, terms, entries, idfByTid,
-      stats.avgDocLen, k, pruned = false, lmdMu = mu, lmdP = pByTid)
-    ServingSearcher.rankMerge(all, k, qid)
-  }
+  def lmdHits(text: String, mu: Double, k: Int, qid: Long = 0L): Array[Hit] =
+    run(QueryPlan.lmd(segment, lookup, text, mu, k, totalCf), qid)
 
   /** Span-first at serving latency — bit-identical to
     * Searcher.spanFirstHits (SpanFirstSpec). */
-  def spanFirstHits(text: String, n: Int, k: Int, qid: Long = 0L): Array[Hit] = {
-    require(n >= 1, s"span-first bound must be >= 1, got $n")
-    require(positional, "span-first queries need a positional index")
-    val terms = QueryParser.termsFor("FREE", text)
-    val entries = entriesFor("FREE", terms)
-    if (entries.isEmpty || entries.length < terms.distinct.length)
-      return Array.empty
-    val idfByTid = entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val all = rawScored("SPANFIRST", text, terms, entries, idfByTid,
-      stats.avgDocLen, k, firstLimit = n)
-    ServingSearcher.rankMerge(all, k, qid)
-  }
+  def spanFirstHits(text: String, n: Int, k: Int, qid: Long = 0L): Array[Hit] =
+    run(QueryPlan.spanFirst(segment, lookup, text, n, k), qid)
 
   /** Span-not at serving latency — bit-identical to
     * Searcher.spanNotHits (SpanNotSpec). */
   def spanNotHits(incText: String, excText: String, window: Int, k: Int,
-                  qid: Long = 0L): Array[Hit] = {
-    require(window >= 0, s"span-not window must be >= 0, got $window")
-    require(positional, "span-not queries need a positional index")
-    val incTerms = QueryParser.termsFor("FREE", incText).distinct
-    val excTerms = QueryParser.termsFor("FREE", excText).distinct
-    require(incTerms.length == 1,
-      s"span-not include must be a single term, got '$incText'")
-    require(excTerms.length == 1,
-      s"span-not exclude must be a single term, got '$excText'")
-    require(incTerms.head != excTerms.head,
-      "span-not include and exclude must differ")
-    val incE = entriesFor("FREE", incTerms)
-    if (incE.isEmpty) return Array.empty
-    val excE = entriesFor("FREE", excTerms)
-    if (excE.isEmpty) return hits("FREE", incText, k, qid)
-    val entries = (incE ++ excE).sortBy(_.termId)
-    val idfByTid = entries.map(e =>
-      e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val all = rawScored("FREE", incText, incTerms, entries, idfByTid,
-      stats.avgDocLen, k, pruned = false,
-      exclTid = excE.head.termId, exclWin = window)
-    ServingSearcher.rankMerge(all, k, qid)
-  }
+                  qid: Long = 0L): Array[Hit] =
+    run(QueryPlan.spanNot(segment, lookup, incText, excText, window, k), qid)
 
   /** Intervals at serving latency — bit-identical to
     * Searcher.intervalsHits (IntervalsSpec): ordered terms within a gap
     * budget, optionally not_containing a filter term. */
   def intervalsHits(text: String, maxGaps: Int, notText: String, k: Int,
-                    qid: Long = 0L): Array[Hit] = {
-    require(maxGaps >= 0, s"max_gaps must be >= 0, got $maxGaps")
-    require(positional, "intervals queries need a positional index")
-    val terms = QueryParser.termsFor("FREE", text)
-    require(terms.length >= 2,
-      s"intervals need >= 2 ordered terms, got '$text'")
-    val entries = entriesFor("FREE", terms)
-    if (entries.length < terms.distinct.length) return Array.empty
-    val notTerms = QueryParser.termsFor("FREE", notText).distinct
-    require(notTerms.length <= 1,
-      s"not_containing must be empty or a single term, got '$notText'")
-    require(notTerms.isEmpty || !terms.contains(notTerms.head),
-      "not_containing term must differ from the ordered query terms")
-    val notE = entriesFor("FREE", notTerms)
-    val all = (entries ++ notE).distinctBy(_.termId).sortBy(_.termId)
-    val idfByTid = all.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val scoredAll = rawScored("INTERVALS", text, terms, all, idfByTid,
-      stats.avgDocLen, k, pruned = false, gapsLimit = maxGaps,
-      containTid = notE.headOption.map(_.termId).getOrElse(-1L))
-    ServingSearcher.rankMerge(scoredAll, k, qid)
-  }
+                    qid: Long = 0L): Array[Hit] =
+    run(QueryPlan.intervals(segment, lookup, text, maxGaps, notText,
+      containing = false, k), qid)
 
   /** Intervals `containing` at serving latency — bit-identical to
     * Searcher.intervalsContainingHits (IntervalsSpec). */
   def intervalsContainingHits(text: String, maxGaps: Int, containText: String,
-                              k: Int, qid: Long = 0L): Array[Hit] = {
-    require(maxGaps >= 0, s"max_gaps must be >= 0, got $maxGaps")
-    require(positional, "intervals queries need a positional index")
-    val terms = QueryParser.termsFor("FREE", text)
-    require(terms.length >= 2,
-      s"intervals need >= 2 ordered terms, got '$text'")
-    val entries = entriesFor("FREE", terms)
-    if (entries.length < terms.distinct.length) return Array.empty
-    val containTerms = QueryParser.termsFor("FREE", containText).distinct
-    require(containTerms.length == 1,
-      s"containing must be a single term, got '$containText'")
-    require(!terms.contains(containTerms.head),
-      "containing term must differ from the ordered query terms")
-    val contE = entriesFor("FREE", containTerms)
-    if (contE.isEmpty) return Array.empty // nothing to contain
-    val all = (entries ++ contE).distinctBy(_.termId).sortBy(_.termId)
-    val idfByTid = all.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val scoredAll = rawScored("INTERVALS", text, terms, all, idfByTid,
-      stats.avgDocLen, k, pruned = false, gapsLimit = maxGaps,
-      containTid = contE.head.termId, containMode = true)
-    ServingSearcher.rankMerge(scoredAll, k, qid)
-  }
+                              k: Int, qid: Long = 0L): Array[Hit] =
+    run(QueryPlan.intervals(segment, lookup, text, maxGaps, containText,
+      containing = true, k), qid)
 
   /** Intervals `any_of` at serving latency — bit-identical to
     * Searcher.intervalsAnyHits (IntervalsSpec). */
   def intervalsAnyHits(text: String, maxGaps: Int, notText: String, k: Int,
-                       qid: Long = 0L): Array[Hit] = {
-    require(maxGaps >= 0, s"max_gaps must be >= 0, got $maxGaps")
-    require(positional, "intervals queries need a positional index")
-    val slots = QueryParser.intervalsAnySlots(text)
-    require(slots.length >= 2,
-      s"intervals need >= 2 ordered slots, got '$text'")
-    val allAlts = slots.flatten.distinct
-    val entries = entriesFor("FREE", allAlts)
-    val byTerm = entries.map(e => e.term -> e.termId).toMap
-    val slotTids = slots.map(_.flatMap(byTerm.get))
-    if (slotTids.exists(_.isEmpty)) return Array.empty
-    val notTerms = QueryParser.termsFor("FREE", notText).distinct
-    require(notTerms.length <= 1,
-      s"not_containing must be empty or a single term, got '$notText'")
-    require(notTerms.isEmpty || !allAlts.contains(notTerms.head),
-      "not_containing term must differ from the slot alternatives")
-    val notE = entriesFor("FREE", notTerms)
-    val all = (entries ++ notE).distinctBy(_.termId).sortBy(_.termId)
-    val idfByTid = all.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val scoredAll = rawScored("INTERVALS_ANY", text, allAlts, all, idfByTid,
-      stats.avgDocLen, k, pruned = false, gapsLimit = maxGaps,
-      containTid = notE.headOption.map(_.termId).getOrElse(-1L),
-      slotAltTids = slotTids)
-    ServingSearcher.rankMerge(scoredAll, k, qid)
-  }
+                       qid: Long = 0L): Array[Hit] =
+    run(QueryPlan.intervalsAny(segment, lookup, text, maxGaps, notText, k), qid)
 
   /** search_after pagination at serving latency — same cursor contract
     * and bit-identical pages as Searcher.hitsAfter (PageSpec). */
@@ -318,206 +214,84 @@ final class ServingSearcher(spark: SparkSession, segment: Segment) {
     tombstoneCache.getOrElseUpdate(tag,
       sc.broadcast(ServingSearcher.idBitsets(segment, deleted)))
 
+  private type Bits = org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]]
+
   private def hitsImpl(kind: String, text: String, k: Int, qid: Long,
-                       lo: Long, hi: Long,
-                       acceptB: org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]] = null,
-                       rejectB: org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]] = null,
-                       after: Wand.Scored = null)
+                       lo: Long, hi: Long, acceptB: Bits = null,
+                       rejectB: Bits = null, after: Wand.Scored = null)
       : Array[Hit] = {
+    val entries = entriesFor(kind, text)
+    run(QueryPlan.lower(kind, text, entries, QueryPlan.idf(entries, stats.numDocs),
+      stats.avgDocLen, k, positional, expand)
+      .map(_.copy(lo = lo, hi = hi, after = after)), qid, acceptB, rejectB)
+  }
+
+  private def run(plan: Option[QueryPlan], qid: Long, acceptB: Bits = null,
+                  rejectB: Bits = null): Array[Hit] =
+    plan.fold(Array.empty[Hit])(p =>
+      ServingSearcher.rankMerge(rawScored(p, acceptB, rejectB), p.k, qid))
+
+  private lazy val totalCf: Long = dictCache.valuesIterator.map(_.cf).sum
+
+  /** Distinct terms resolved against the resident dictionary. */
+  private def lookup(terms: Array[String]): Array[DictEntry] =
+    terms.flatMap(dictCache.get).sortBy(_.termId)
+
+  /** A boolean prefix/regex leaf expanded against the resident dictionary. */
+  private[search] def expand(p: BoolQuery.Pattern): Array[DictEntry] = {
+    val matches: String => Boolean =
+      if (p.isRegex) { val re = java.util.regex.Pattern.compile(p.raw); re.matcher(_).matches() }
+      else if (p.raw.isEmpty) _ => false // `*` alone: no expansion
+      else _.startsWith(p.raw)
+    dictCache.valuesIterator.filter(e => matches(e.term))
+      .toArray.sortBy(_.termId).take(Searcher.MaxExpansion)
+  }
+
+  /** The dictionary entries a query's kind matches against, under this
+    * segment's own vocabulary — the same expansion rules as
+    * Searcher.entriesFor (the shared fuzzy/stem cores, one cap), shared
+    * with the multi-segment tier, which re-derives GLOBAL idf from them. */
+  private[search] def entriesFor(kind: String, text: String): Array[DictEntry] = {
     val terms = QueryParser.termsFor(kind, text)
-    val entries =
-      if (kind == "BOOL") boolEntries(text)
-      else if (kind == "FUZZY") fuzzyEntries(terms.head, QueryParser.fuzzyDist(text))
-      else if (kind == "STEM") stemEntries(terms.head)
-      else entriesFor(kind, terms)
-    val needAll = kind == "AND" || kind == "PHRASE" || kind == "NEAR" ||
-      kind == "ONEAR"
-    if (entries.isEmpty || (needAll && entries.length < terms.distinct.length))
-      return Array.empty
-    val idfByTid = entries.map(e => e.termId -> BM25.idf(stats.numDocs, e.df)).toMap
-    val all = rawScored(kind, text, terms, entries, idfByTid, stats.avgDocLen,
-      k, lo, hi, pruned = true, acceptB = acceptB, rejectB = rejectB,
-      after = after)
-    ServingSearcher.rankMerge(all, k, qid)
-  }
-
-  /** Boolean-query entries: fixed-term lookups ∪ per-pattern dictionary
-    * expansions (prefix/regex leaves), deduped, ascending termId —
-    * mirrors Searcher.boolHits' entry derivation over the resident
-    * dictionary. */
-  private[search] def boolEntries(text: String): Array[DictEntry] = {
-    val ast = BoolQuery.parse(text)
-    val fixed = BoolQuery.terms(ast).flatMap(dictCache.get)
-    val expanded = BoolQuery.patterns(ast).flatMap(p =>
-      if (p.isRegex) entriesFor("REGEX", Array(p.raw))
-      else entriesFor("PREFIX", Array(p.raw)))
-    (fixed ++ expanded).distinctBy(_.termId).sortBy(_.termId)
-  }
-
-  /** Fuzzy expansion over the resident dictionary — the SAME shared
-    * core (band + banded DP + deterministic cap) as the relational
-    * tier, so bit-parity cannot drift through a second copy. */
-  private[search] def fuzzyEntries(word: String, maxDist: Int): Array[DictEntry] =
-    Searcher.fuzzyExpand(dictCache.valuesIterator, word, maxDist)
-
-  /** Stemmed expansion over the resident dictionary — the SAME shared
-    * core as the relational tier (Stem.expand), so bit-parity cannot
-    * drift through a second copy. */
-  private[search] def stemEntries(word: String): Array[DictEntry] =
-    Stem.expand(dictCache.valuesIterator, word)
-
-  /** Dictionary resolution for a query's terms under this segment's own
-    * vocabulary — shared with the multi-segment tier, which re-derives
-    * GLOBAL idf from these per-segment entries. */
-  private[search] def entriesFor(kind: String, terms: Array[String]): Array[DictEntry] =
     kind match {
-      case "PREFIX" =>
-        if (terms.head.isEmpty) Array.empty[DictEntry] // `*` alone: no expansion
-        else dictCache.valuesIterator.filter(_.term.startsWith(terms.head))
-          .toArray.sortBy(_.termId).take(Searcher.MaxExpansion)
-      case "REGEX" | "WILD" => // WILD arrives glob→regex-translated
-        val re = java.util.regex.Pattern.compile(terms.head)
-        dictCache.valuesIterator.filter(e => re.matcher(e.term).matches())
-          .toArray.sortBy(_.termId).take(Searcher.MaxExpansion)
-      case _ => terms.distinct.flatMap(dictCache.get).sortBy(_.termId)
+      case "PREFIX" => expand(BoolQuery.Pattern(terms.head, isRegex = false))
+      // WILD arrives glob→regex-translated
+      case "REGEX" | "WILD" => expand(BoolQuery.Pattern(terms.head, isRegex = true))
+      case "FUZZY" =>
+        Searcher.fuzzyExpand(dictCache.valuesIterator, terms.head, QueryParser.fuzzyDist(text))
+      case "STEM" => Stem.expand(dictCache.valuesIterator, terms.head)
+      case "BOOL" => QueryPlan.boolEntries(BoolQuery.parse(text), lookup, expand)
+      case _ => lookup(terms.distinct)
     }
+  }
 
-  /** One serving job over this segment's resident partitions with
-    * CALLER-SUPPLIED statistics (idf map + avgdl): unranked per-bucket
-    * candidates. `pruned = false` forces the exhaustive disjunctive walk
-    * — required when the stats are global (multi-segment): stored block
-    * maxima were computed under per-segment stats and are not valid WAND
-    * bounds under different idf values. */
-  private[search] def rawScored(kind: String, text: String,
-                                terms: Array[String], entries: Array[DictEntry],
-                                idfByTid: Map[Long, Double], avgdl: Double,
-                                k: Int, lo: Long = 0L, hi: Long = Long.MaxValue,
-                                pruned: Boolean = true,
-                                acceptB: org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]] = null,
-                                rejectB: org.apache.spark.broadcast.Broadcast[Map[Int, Array[Long]]] = null,
-                                after: Wand.Scored = null,
-                                firstLimit: Int = 0,
-                                lmdMu: Double = Double.NaN,
-                                lmdP: Map[Long, Double] = null,
-                                exclTid: Long = -1L,
-                                exclWin: Int = 0,
-                                gapsLimit: Int = -1,
-                                containTid: Long = -1L,
-                                slotAltTids: Array[Array[Long]] = null,
-                                containMode: Boolean = false)
-      : Array[Wand.Scored] = {
-    // nested boolean: compile the presence predicate over the entries'
-    // ascending-termId slot order (same contract as Searcher.boolHits);
-    // phrase/NEAR atoms extend the vector with positional slots
-    var boolPhrases: Array[Array[Int]] = null
-    var boolWins: Array[Int] = null
-    val boolEval: Array[Boolean] => Boolean =
-      if (kind != "BOOL") null
-      else {
-        val ast = BoolQuery.parse(text)
-        if (!BoolQuery.satisfiable(ast, entries.map(_.term).toSet))
-          return Array.empty
-        val atoms = BoolQuery.posAtoms(ast)
-        if (atoms.nonEmpty)
-          require(positional,
-            "phrase/NEAR atoms in a boolean query need a positional index")
-        val slot = entries.zipWithIndex.map { case (e, i) => e.term -> i }.toMap
-        val phraseSlot = atoms.zipWithIndex.toMap
-        // pattern expansions resolve against the resident dictionary —
-        // deterministic, so slots re-derive identically to boolEntries
-        val patternSlots = BoolQuery.patterns(ast).map { p =>
-          val es = if (p.isRegex) entriesFor("REGEX", Array(p.raw))
-                   else entriesFor("PREFIX", Array(p.raw))
-          p -> es.flatMap(e => slot.get(e.term))
-        }.toMap
-        require(!BoolQuery.matchesEmpty(ast, slot, entries.length,
-            phraseSlot, entries.length, patternSlots),
-          s"pure-negative boolean query '$text' matches a corpus-sized " +
-            "complement; add a positive requirement (a AND NOT x)")
-        if (atoms.nonEmpty) {
-          boolPhrases = atoms.map { case (ts, _) =>
-            ts.map(t => slot.getOrElse(t, -1)).toArray }
-          boolWins = atoms.map(_._2)
-        }
-        BoolQuery.compile(ast, slot, phraseSlot, entries.length, patternSlots)
-      }
-    val phraseSlots: Array[Long] = kind match {
-      case "PHRASE" =>
-        require(positional, "phrase queries need a positional index")
-        val byTerm = entries.map(e => e.term -> e.termId).toMap
-        terms.map(byTerm)
-      case "NEAR" =>
-        require(positional, "proximity queries need a positional index")
-        entries.map(_.termId)
-      case "ONEAR" =>
-        require(positional, "proximity queries need a positional index")
-        val byTerm = entries.map(e => e.term -> e.termId).toMap
-        terms.map(byTerm) // QUERY order — the ordering IS the constraint
-      case "SPANFIRST" =>
-        require(positional, "span-first queries need a positional index")
-        entries.map(_.termId)
-      case "INTERVALS" =>
-        require(positional, "intervals queries need a positional index")
-        // QUERY order over the query terms only — the filter term rides
-        // in `entries` for stats/fetch but never becomes a slot
-        val byTerm = entries.map(e => e.term -> e.termId).toMap
-        terms.map(byTerm)
-      case _ => null
-    }
-    // sign convention (all tiers): > 0 NEAR/w, < 0 BEFORE/w, 0 phrase
-    val nearWindow =
-      if (kind == "NEAR") QueryParser.nearWindow(text)
-      else if (kind == "ONEAR") -QueryParser.orderedWindow(text)
-      else 0
-    val conjunctive = kind == "AND"
-    // query-time term weights (`merge^2`): fixed-term boosts from the
-    // query text; BOOL pattern-leaf boosts apply to this segment's own
-    // expansion (same per-segment derivation as the slot layout above)
-    val boostByTid: Map[Long, Double] = {
-      val m =
-        if (kind == "BOOL") {
-          val ast = BoolQuery.parse(text)
-          Searcher.boolTermBoosts(ast, BoolQuery.patterns(ast).map { p =>
-            p -> (if (p.isRegex) entriesFor("REGEX", Array(p.raw))
-                  else entriesFor("PREFIX", Array(p.raw)))
-          }.toMap)
-        } else QueryParser.boosts(kind, text)
-      Searcher.toTidBoosts(entries, m)
-    }
-    val tids = entries.map(_.termId)
-    val nTerms = entries.length
+  /** One serving job over this segment's resident partitions: per
+    * partition, the plan's lists grouped by bucket, each bucket walked
+    * by Wand.eval; unranked per-bucket candidates come back. The closure
+    * captures only locals. */
+  private[search] def rawScored(plan: QueryPlan, acceptB: Bits = null,
+                                rejectB: Bits = null): Array[Wand.Scored] = {
     val dlB = doclensB
-    val pos = positional
-    val kk = k
-    val nw = nearWindow
-    val rlo = lo
-    val rhi = hi
     val bs = segment.params.bucketSize
-    val pr = pruned
-    val ab = acceptB
-    val rb = rejectB
-    val aft = after
-    val bp = boolPhrases
-    val bw = boolWins
-    val bst = boostByTid
-    val fl = firstLimit
-    val lmu = lmdMu
-    val lp = lmdP
-    val xt = exclTid
-    val xw = exclWin
-    val gl = gapsLimit
-    val ct = containTid
-    val sat = slotAltTids
-    val cm = containMode
-    val perPart: Array[Array[Wand.Scored]] = sc.runJob(parts,
-      (it: Iterator[Map[Long, Array[PostingList]]]) =>
-        if (!it.hasNext) Array.empty[Wand.Scored]
-        else ServingSearcher.walkPartition(it.next(), tids, idfByTid, dlB.value,
-          avgdl, conjunctive, phraseSlots, nw, nTerms, kk, pos, rlo, rhi, bs,
-          boolEval, pr, if (ab == null) null else ab.value,
-          if (rb == null) null else rb.value, aft, bp, bw, bst, fl, lmu, lp,
-          xt, xw, gl, ct, sat, cm))
-    perPart.flatten
+    val (loBucket, hiBucket) = plan.bucketRange(bs)
+    val tids = plan.tids
+    sc.runJob(parts, (it: Iterator[Map[Long, Array[PostingList]]]) =>
+      if (!it.hasNext) Array.empty[Wand.Scored]
+      else {
+        val idx = it.next()
+        val acceptBits = if (acceptB == null) null else acceptB.value
+        val rejectBits = if (rejectB == null) null else rejectB.value
+        tids.flatMap(t => idx.getOrElse(t, Array.empty[PostingList]))
+          .filter(pl => !plan.scoped || (pl.bucket >= loBucket && pl.bucket <= hiBucket))
+          .groupBy(_.bucket).iterator.flatMap { case (bucket, lists) =>
+            val accept = Wand.bucketFilter(bucket, bs, acceptBits, rejectBits)
+            dlB.value.get(bucket) match {
+              case Some((first, lens)) if !(accept eq Wand.RejectAll) =>
+                Wand.eval(plan, lists, first, lens, accept)
+              case _ => Array.empty[Wand.Scored]
+            }
+          }.toArray
+      }).flatten
   }
 }
 
@@ -527,7 +301,7 @@ final class ServingSearcher(spark: SparkSession, segment: Segment) {
   * avgdl combine across segments, per-term df sums across the segment
   * dictionaries, and — because stored block maxima are not valid bounds
   * under global stats — every segment walks exhaustively
-  * (pruned = false). docId ranges are disjoint by construction
+  * (OrWalk.Exhaustive). docId ranges are disjoint by construction
   * (StreamIndexer's high-watermark base), so per-segment candidates
   * merge by (score desc, docId). Bit-identity to MultiSearcher's
   * relational merge-on-read path is proven in ServingSpec.
@@ -536,19 +310,7 @@ final class MultiServingSearcher(spark: SparkSession, segments: Seq[Segment]) {
   require(segments.nonEmpty)
   private val servers = segments.map(new ServingSearcher(spark, _))
 
-  /** Combined corpus stats — recomputed from docLens for exactness
-    * (same derivation as MultiSearcher). */
-  private val (numDocs: Long, avgdl: Double) = {
-    import org.apache.spark.sql.functions._
-    import spark.implicits._
-    val totals = segments.map { s =>
-      s.docs.agg(count(lit(1)), coalesce(sum($"docLen".cast("long")), lit(0L)))
-        .as[(Long, Long)].head()
-    }
-    val n = totals.map(_._1).sum
-    val tok = totals.map(_._2).sum
-    (n, if (n == 0) 1.0 else tok.toDouble / n)
-  }
+  private val (numDocs: Long, avgdl: Double) = QueryPlan.globalStats(segments)
 
   def close(): Unit = servers.foreach(_.close())
 
@@ -576,36 +338,14 @@ final class MultiServingSearcher(spark: SparkSession, segments: Seq[Segment]) {
                        tomb: Option[(String, () => org.apache.spark.sql.Dataset[Long])],
                        fielded: Option[(String, String)] = None)
       : Array[Hit] = {
-    val terms = QueryParser.termsFor(kind, text)
-    if (terms.isEmpty) return Array.empty
-    if (kind == "PHRASE" || kind == "NEAR" || kind == "ONEAR")
-      require(segments.forall(_.params.positional),
-        s"$kind queries need positional segments (BuildParams.positional)")
-    val distinctTerms = terms.distinct
-    val perSeg =
-      if (kind == "BOOL") servers.map(_.boolEntries(text))
-      else if (kind == "FUZZY") servers.map(
-        _.fuzzyEntries(terms.head, QueryParser.fuzzyDist(text)))
-      else if (kind == "STEM") servers.map(_.stemEntries(terms.head))
-      else servers.map(_.entriesFor(kind, terms))
-    val dfByTerm: Map[String, Long] = perSeg.flatten
-      .groupBy(_.term).map { case (t, es) => t -> es.map(_.df).sum }
-    val needAll = kind == "AND" || kind == "PHRASE" || kind == "NEAR" ||
-      kind == "ONEAR"
-    if (dfByTerm.isEmpty || (needAll && dfByTerm.size < distinctTerms.length))
-      return Array.empty
-    val n = numDocs
-    val all = servers.zip(perSeg).flatMap { case (srv, entries) =>
-      if (entries.isEmpty || (needAll && entries.length < distinctTerms.length))
-        Array.empty[Wand.Scored]
-      else {
-        val idfByTid = entries
-          .map(e => e.termId -> BM25.idf(n, dfByTerm(e.term))).toMap
-        srv.rawScored(kind, text, terms, entries, idfByTid, avgdl, k,
-          pruned = false,
-          acceptB = fielded.map { case (f, v) => srv.docFilterB(f, v) }.orNull,
-          rejectB = tomb.map { case (tag, d) => srv.tombstoneB(tag, d()) }.orNull)
-      }
+    val plans = QueryPlan.lowerGlobal(kind, text, k, numDocs, avgdl, segments,
+      servers.map(_.entriesFor(kind, text)), servers.map(s => s.expand _))
+    val all = servers.zip(plans).flatMap {
+      case (srv, Some(plan)) =>
+        srv.rawScored(plan,
+          fielded.map { case (f, v) => srv.docFilterB(f, v) }.orNull,
+          tomb.map { case (tag, d) => srv.tombstoneB(tag, d()) }.orNull)
+      case _ => Array.empty[Wand.Scored]
     }.toArray
     ServingSearcher.rankMerge(all, k, qid)
   }
@@ -616,10 +356,6 @@ object ServingSearcher {
   final val MaxResidentTerms: Long = 1L << 22
   /** Resident doc-length bound — matches Searcher.DoclenResidentLimit. */
   final val MaxResidentDocs: Long = 16L << 20
-
-  /** Sentinel accept function: this bucket has no docs passing the
-    * filter — skip its walk entirely. */
-  private[search] val RejectAll: Long => Boolean = _ => false
 
   /** Per-bucket docId bitsets for a docmap field predicate, built
     * executor-side and collected as ≤ bucketSize/8-byte blocks (driver
@@ -662,182 +398,4 @@ object ServingSearcher {
       Ordering.by[Wand.Scored, (Double, Long)](s => (-s.score, s.docId)))
     all.take(k).zipWithIndex.map { case (s, i) => Hit(qid, i + 1, s.docId, s.score) }
   }
-
-  /** Static per-partition walk — captures nothing, safe to ship in the
-    * runJob closure. Same per-bucket Wand walks as Searcher.scoredRaw. */
-  private[search] def walkPartition(
-      idx: Map[Long, Array[PostingList]], tids: Array[Long],
-      idfByTid: Map[Long, Double], doclens: Map[Int, (Long, Array[Int])],
-      avgdl: Double, conjunctive: Boolean, phraseSlots: Array[Long],
-      nearWindow: Int, nTerms: Int, k: Int, positional: Boolean,
-      lo: Long = 0L, hi: Long = Long.MaxValue,
-      bucketSize: Long = Long.MaxValue,
-      boolEval: Array[Boolean] => Boolean = null,
-      pruned: Boolean = true,
-      acceptBits: Map[Int, Array[Long]] = null,
-      rejectBits: Map[Int, Array[Long]] = null,
-      after: Wand.Scored = null,
-      boolPhrases: Array[Array[Int]] = null,
-      boolWins: Array[Int] = null,
-      boostByTid: Map[Long, Double] = null,
-      firstLimit: Int = 0,
-      lmdMu: Double = Double.NaN,
-      lmdP: Map[Long, Double] = null,
-      exclTid: Long = -1L,
-      exclWin: Int = 0,
-      gapsLimit: Int = -1,
-      containTid: Long = -1L,
-      slotAltTids: Array[Array[Long]] = null,
-      containMode: Boolean = false): Array[Wand.Scored] = {
-    @inline def bo(tid: Long): Double =
-      if (boostByTid == null) 1.0 else boostByTid.getOrElse(tid, 1.0)
-    val scoped = lo > 0L || hi != Long.MaxValue
-    val lists0 = tids.flatMap(t => idx.getOrElse(t, Array.empty[PostingList]))
-    // bucket bounds computed in Long then clamped: an open-ended scope
-    // (hi = Long.MaxValue) must not overflow to a negative Int bound
-    val loBucket = math.min(lo / bucketSize, Int.MaxValue.toLong).toInt
-    val hiBucket = math.min((hi - 1) / bucketSize, Int.MaxValue.toLong).toInt
-    val lists = if (!scoped) lists0 else lists0.filter(pl =>
-      pl.bucket >= loBucket && pl.bucket <= hiBucket)
-    if (lists.isEmpty) return Array.empty
-    lists.groupBy(_.bucket).iterator.flatMap { case (bucket, plArr) =>
-      // fielded filter: a bucket with no matching docs walks nothing
-      val acceptPos: Long => Boolean =
-        if (acceptBits == null) null
-        else acceptBits.get(bucket) match {
-          case None => ServingSearcher.RejectAll
-          case Some(bits) =>
-            val base = bucket.toLong * bucketSize
-            d => { val off = (d - base).toInt; (bits(off >> 6) & (1L << (off & 63))) != 0L }
-        }
-      // tombstones: a bucket with no deletions probes nothing
-      val reject: Long => Boolean =
-        if (rejectBits == null) null
-        else rejectBits.get(bucket) match {
-          case None => null
-          case Some(bits) =>
-            val base = bucket.toLong * bucketSize
-            d => { val off = (d - base).toInt; (bits(off >> 6) & (1L << (off & 63))) != 0L }
-        }
-      val accept: Long => Boolean = (acceptPos, reject) match {
-        case (null, null) => null
-        case (a, null) => a
-        case (null, r) => d => !r(d)
-        case (a, r) => if (a eq ServingSearcher.RejectAll) a
-          else d => a(d) && !r(d)
-      }
-      if (accept eq ServingSearcher.RejectAll) Iterator.empty
-      else doclens.get(bucket) match {
-        case None => Iterator.empty
-        case Some((firstDocId, lens)) =>
-          val res =
-            if (boolEval != null) {
-              val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-              val slots = tids.map(tid => plByTid.get(tid)
-                .map(pl => new Wand.TermCursor(tid, idfByTid(tid), pl, positional,
-                  lo, hi, bo(tid)))
-                .orNull)
-              Wand.topKBool(slots, lens, firstDocId, avgdl, k, boolEval, accept,
-                after, boolPhrases, boolWins)
-            } else if (exclTid >= 0L) {
-              // span-not: exclude list OPTIONAL per bucket (same contract
-              // as Searcher.scoredRaw's branch)
-              val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-              val incTid = tids.find(_ != exclTid).get
-              plByTid.get(incTid) match {
-                case None => Array.empty[Wand.Scored]
-                case Some(ipl) =>
-                  val inc = new Wand.TermCursor(incTid, idfByTid(incTid), ipl,
-                    positional, lo, hi, bo(incTid))
-                  val exc = plByTid.get(exclTid)
-                    .map(pl => new Wand.TermCursor(exclTid, 0.0, pl,
-                      positional, lo, hi))
-                    .orNull
-                  Wand.topKSpanNot(inc, exc, lens, firstDocId, avgdl, k,
-                    exclWin, exclWin, accept, after)
-              }
-            } else if (gapsLimit >= 0 && slotAltTids != null) {
-              // intervals any_of: one cursor per distinct termId shared
-              // across slots; a slot with no alternative in the bucket
-              // kills the bucket (same contract as Searcher.scoredRaw)
-              val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-              val curByTid = mutable.Map.empty[Long, Wand.TermCursor]
-              def cursorFor(tid: Long): Option[Wand.TermCursor] =
-                curByTid.get(tid).orElse(plByTid.get(tid).map { pl =>
-                  val c = new Wand.TermCursor(tid, idfByTid(tid), pl,
-                    positional, lo, hi, bo(tid))
-                  curByTid(tid) = c
-                  c
-                })
-              val slotCs = slotAltTids.map(_.flatMap(tid => cursorFor(tid)))
-              if (slotCs.exists(_.isEmpty)) Array.empty[Wand.Scored]
-              else {
-                val not =
-                  if (containTid >= 0L)
-                    plByTid.get(containTid)
-                      .map(pl => new Wand.TermCursor(containTid, 0.0, pl,
-                        positional, lo, hi))
-                      .orNull
-                  else null
-                Wand.topKIntervalsAny(slotCs, lens, firstDocId, avgdl, k,
-                  gapsLimit, not, accept, after)
-              }
-            } else if (gapsLimit >= 0 && phraseSlots != null) {
-              // intervals: ordered slots in QUERY order; not_containing
-              // list OPTIONAL per bucket (same contract as
-              // Searcher.scoredRaw's branch)
-              val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-              if (phraseSlots.distinct.exists(tid => !plByTid.contains(tid)))
-                Array.empty[Wand.Scored]
-              else {
-                val slots = phraseSlots.map(tid =>
-                  new Wand.TermCursor(tid, idfByTid(tid), plByTid(tid),
-                    positional, lo, hi, bo(tid)))
-                val not =
-                  if (containTid >= 0L)
-                    plByTid.get(containTid)
-                      .map(pl => new Wand.TermCursor(containTid, 0.0, pl,
-                        positional, lo, hi))
-                      .orNull
-                  else null
-                Wand.topKIntervals(slots, lens, firstDocId, avgdl, k,
-                  gapsLimit, not, accept, after, mustContain = containMode)
-              }
-            } else if (phraseSlots != null) {
-              val plByTid = plArr.map(pl => pl.termId -> pl).toMap
-              if (plByTid.size < nTerms) Array.empty[Wand.Scored]
-              else {
-                val slots = phraseSlots.map(tid =>
-                  new Wand.TermCursor(tid, idfByTid(tid), plByTid(tid), positional,
-                    lo, hi, bo(tid)))
-                if (firstLimit > 0)
-                  Wand.topKSpanFirst(slots, lens, firstDocId, avgdl, k, firstLimit, accept, after)
-                else if (nearWindow > 0)
-                  Wand.topKNear(slots, lens, firstDocId, avgdl, k, nearWindow, accept, after)
-                else if (nearWindow < 0)
-                  Wand.topKONear(slots, lens, firstDocId, avgdl, k, -nearWindow, accept, after)
-                else Wand.topKPhrase(slots, lens, firstDocId, avgdl, k, accept, after)
-              }
-            } else if (conjunctive) {
-              if (plArr.length < nTerms) Array.empty[Wand.Scored]
-              else Wand.topKAnd(cursors(plArr, idfByTid, positional, lo, hi, boostByTid), lens, firstDocId, avgdl, k, accept, after)
-            } else if (!lmdMu.isNaN)
-              Wand.topKLmd(cursors(plArr, idfByTid, positional, lo, hi, boostByTid), lens, firstDocId, k, lmdMu, lmdP, accept, after)
-            else if (pruned)
-              Wand.topK(cursors(plArr, idfByTid, positional, lo, hi, boostByTid), lens, firstDocId, avgdl, k, accept, after)
-            else
-              // multi-segment global stats: stored block maxima are not
-              // valid bounds — exhaustive walk, same as MultiSearcher
-              Wand.topKOrExhaustive(cursors(plArr, idfByTid, positional, lo, hi, boostByTid), lens, firstDocId, avgdl, k, accept, after)
-          res.iterator
-      }
-    }.toArray
-  }
-
-  private def cursors(plArr: Array[PostingList], idfByTid: Map[Long, Double],
-                      positional: Boolean, lo: Long, hi: Long,
-                      boostByTid: Map[Long, Double] = null): Array[Wand.TermCursor] =
-    plArr.map(pl => new Wand.TermCursor(pl.termId, idfByTid(pl.termId), pl,
-      positional, lo, hi,
-      if (boostByTid == null) 1.0 else boostByTid.getOrElse(pl.termId, 1.0)))
 }

@@ -112,6 +112,92 @@ object Wand {
       heap.dequeueAll.toArray.sortBy(s => (-s.score, s.docId))
   }
 
+  /** Runs `plan`'s walk over one bucket: `lists` are the bucket's posting
+    * lists of the plan's termIds (any subset, any order), `lens` its doc
+    * lengths from `firstDocId`, `accept` the bucket's doc filter (null =
+    * none; see [[bucketFilter]]). The one kernel dispatch every tier
+    * calls. Cursors are built in slot order, one per slot (a repeated
+    * phrase term walks its own cursor); a walk that needs every slot
+    * returns nothing for a bucket missing one. */
+  private[search] def eval(plan: QueryPlan, lists: Array[PostingList],
+                           firstDocId: Long, lens: Array[Int],
+                           accept: Long => Boolean): Array[Scored] = {
+    import QueryPlan._
+    val byTid = lists.map(pl => pl.termId -> pl).toMap
+    def cursor(tid: Long) = new TermCursor(tid, plan.idf(tid), byTid(tid),
+      plan.positional, plan.lo, plan.hi, plan.boostOf(tid))
+    // filter terms constrain matching only: they never score
+    def filter(tid: Option[Long]) = tid.flatMap(byTid.get).map(pl =>
+      new TermCursor(pl.termId, 0.0, pl, plan.positional, plan.lo, plan.hi)).orNull
+    def present = plan.slots.filter(byTid.contains).map(cursor)
+    def allSlots(walk: Array[TermCursor] => Array[Scored]): Array[Scored] =
+      if (plan.slots.forall(byTid.contains)) walk(plan.slots.map(cursor))
+      else Array.empty
+    val (avgdl, k, after) = (plan.avgdl, plan.k, plan.after)
+    plan.shape match {
+      case Or(OrWalk.Wand) => Wand.topK(present, lens, firstDocId, avgdl, k, accept, after)
+      case Or(OrWalk.MaxScore) =>
+        Wand.topKMaxScore(present, lens, firstDocId, avgdl, k, accept, after)
+      case Or(OrWalk.Exhaustive) =>
+        Wand.topKOrExhaustive(present, lens, firstDocId, avgdl, k, accept, after)
+      case Lmd(mu, p) => Wand.topKLmd(present, lens, firstDocId, k, mu, p, accept, after)
+      case DisMax(tie) => Wand.topKDisMax(present, lens, firstDocId, avgdl, k, tie, accept, after)
+      case Bool(pred, defs, wins) =>
+        // a slot with no list in this bucket stays null (never present)
+        val slots = plan.slots.map(t => if (byTid.contains(t)) cursor(t) else null)
+        Wand.topKBool(slots, lens, firstDocId, avgdl, k, pred, accept, after, defs, wins)
+      case SpanNot(exc, w) =>
+        // the include list is required, the exclude list optional
+        if (!byTid.contains(plan.slots(0))) Array.empty
+        else Wand.topKSpanNot(cursor(plan.slots(0)), filter(Some(exc)), lens,
+          firstDocId, avgdl, k, w, w, accept, after)
+      case IntervalsAny(alts, gaps, f) =>
+        // one cursor per distinct termId, shared across slots; a slot
+        // with no alternative in this bucket kills the bucket
+        val shared = mutable.Map.empty[Long, TermCursor]
+        val slotCs = alts.map(_.filter(byTid.contains)
+          .map(t => shared.getOrElseUpdate(t, cursor(t))))
+        if (slotCs.exists(_.isEmpty)) Array.empty
+        else Wand.topKIntervalsAny(slotCs, lens, firstDocId, avgdl, k, gaps,
+          filter(f), accept, after)
+      case And => allSlots(Wand.topKAnd(_, lens, firstDocId, avgdl, k, accept, after))
+      case Phrase => allSlots(Wand.topKPhrase(_, lens, firstDocId, avgdl, k, accept, after))
+      case Near(w) => allSlots(Wand.topKNear(_, lens, firstDocId, avgdl, k, w, accept, after))
+      case Ordered(w) =>
+        allSlots(Wand.topKONear(_, lens, firstDocId, avgdl, k, w, accept, after))
+      case SpanFirst(n) =>
+        allSlots(Wand.topKSpanFirst(_, lens, firstDocId, avgdl, k, n, accept, after))
+      case Intervals(gaps, f, containing) =>
+        allSlots(Wand.topKIntervals(_, lens, firstDocId, avgdl, k, gaps, filter(f),
+          accept, after, mustContain = containing))
+    }
+  }
+
+  /** Sentinel doc filter: the bucket has no accepted doc — skip its walk. */
+  private[search] val RejectAll: Long => Boolean = _ => false
+
+  /** One bucket's doc filter from per-bucket docId bitsets: `acceptBits`
+    * (fielded filter; a bucket without a bitset accepts nothing) and
+    * `rejectBits` (tombstones; a bucket without one rejects nothing).
+    * null = no filter; [[RejectAll]] = skip the bucket. */
+  private[search] def bucketFilter(bucket: Int, bucketSize: Long,
+                                   acceptBits: Map[Int, Array[Long]],
+                                   rejectBits: Map[Int, Array[Long]]): Long => Boolean = {
+    val base = bucket.toLong * bucketSize
+    def probe(bits: Array[Long]): Long => Boolean =
+      d => { val off = (d - base).toInt; (bits(off >> 6) & (1L << (off & 63))) != 0L }
+    val acc =
+      if (acceptBits == null) null
+      else acceptBits.get(bucket) match {
+        case None => return RejectAll
+        case Some(bits) => probe(bits)
+      }
+    val rej = if (rejectBits == null) null else rejectBits.get(bucket).map(probe).orNull
+    if (rej == null) acc
+    else if (acc == null) d => !rej(d)
+    else d => acc(d) && !rej(d)
+  }
+
   /** Block-max WAND top-k over one bucket's postings. `lens(d - firstDocId)`
     * is the doc length. Emits up to k (docId, score), ordered. */
   def topK(terms: Array[TermCursor], lens: Array[Int], firstDocId: Long,

@@ -30,6 +30,10 @@ class MultiServingSpec extends SparkSpec {
     val multi = new MultiSearcher(spark, segs)
     val serving = new MultiServingSearcher(spark, segs)
     val terms = segA.dict.orderBy(desc("cf")).limit(3).collect().map(_.term)
+    // a phrase that occurs: the first two tokens of a corpus file
+    val phrase = graft.tokenize.Tokenizer.tokenize(
+      Synthesizer.tiny(spark).head().content).take(2).mkString(" ")
+    val t0 = terms(0)
     val queries = Seq(
       ("FREE", terms.mkString(" ")),
       ("AND", terms.take(2).mkString(" AND ")),
@@ -38,6 +42,11 @@ class MultiServingSpec extends SparkSpec {
       ("NEAR", s"${terms(0)} NEAR/5 ${terms(1)}"),
       ("ONEAR", s"${terms(0)} BEFORE/5 ${terms(1)}"),
       ("PREFIX", terms(0).take(2) + "*"),
+      ("PHRASE", "\"" + phrase + "\""),
+      ("FUZZY", t0.dropRight(1) + "q~1"),
+      ("STEM", s"stem:${t0}s"),
+      ("REGEX", s"re:${t0.take(2)}.*"),
+      ("WILD", s"${t0.take(1)}*${t0.takeRight(1)}"),
       ("FREE", "zzznotaterm"))
     var nonEmpty = 0
     queries.foreach { case (kind, text) =>

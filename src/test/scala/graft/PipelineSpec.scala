@@ -30,6 +30,18 @@ class PipelineSpec extends SparkSpec {
     (base ++ dups ++ exact).toDF("doc_id", "text")
   }
 
+  /** Two docs whose overlap sits exactly on tau = 0.55: doc A is 102
+    * distinct words (100 shingles), doc B is A's last 57 words (55
+    * shingles, all shared), so J = 55/100 and C(A→B) = 55/100. In Double,
+    * 100 * 0.55 rounds up past 55, so a `ceil(|s|·tau)` prefix is one
+    * shingle short and holds none of the shared ones. */
+  lazy val thresholdFixture: DataFrame = {
+    import spark.implicits._
+    val a = (0 until 102).map(i => f"fx$i%03d")
+    Seq((300L, a.mkString(" ")), (301L, a.takeRight(57).mkString(" ")))
+      .toDF("doc_id", "text")
+  }
+
   test("exact dedup finds the planted exact duplicate") {
     val groups = Dedup.exactDups(docs).collect()
     assert(groups.length == 1)
@@ -39,13 +51,18 @@ class PipelineSpec extends SparkSpec {
   test("prefix-filtered jaccard join == the quadratic form at several " +
     "taus; prefix candidates prune vs all-pairs") {
     import spark.implicits._
-    for (tau <- Seq(0.3, 0.5, 0.8)) {
-      val full = Dedup.jaccardPairs(docs, 3, tau)
+    val withFixture = docs.union(thresholdFixture)
+    for (tau <- Seq(0.3, 0.5, 0.55, 0.8)) {
+      val full = Dedup.jaccardPairs(withFixture, 3, tau)
         .as[(Long, Long, Double)].collect().toSet
-      val pref = Dedup.jaccardPairsPrefix(docs, 3, tau)
+      val pref = Dedup.jaccardPairsPrefix(withFixture, 3, tau)
         .as[(Long, Long, Double)].collect().toSet
       assert(pref == full, s"tau=$tau")
     }
+    // J(A, B) = 55/100 sits exactly on tau = 0.55
+    assert(Dedup.jaccardPairsPrefix(thresholdFixture, 3, 0.55)
+      .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSeq ==
+      Seq((300L, 301L)))
     // pruning sanity: for a corpus of distinct docs sharing one common
     // stopword-ish shingle, the prefix join must not generate the
     // all-pairs candidate set of the naive inverted join
@@ -321,6 +338,19 @@ class PipelineSpec extends SparkSpec {
     // the point of the operator)
     val j = graft.pipeline.Dedup.jaccardPairs(local, 3, tau).count()
     assert(j == 0L)
+    // the threshold fixture: C(A→B) = 55/100 sits exactly on tau = 0.55
+    val fixTexts = thresholdFixture.as[(Long, String)].collect().toMap
+    val fix = fixTexts.map { case (id, t) => id -> sh(t) }
+    val fixWant = (for {
+      (a, sa) <- fix.toSeq; (b, sb) <- fix.toSeq
+      if a != b && sa.nonEmpty
+      c = (sa & sb).size.toDouble / sa.size
+      if c >= 0.55
+    } yield (a, b, c)).sortBy(p => (p._1, p._2))
+    val fixGot = graft.pipeline.Dedup.containmentPairs(thresholdFixture, 3, 0.55)
+      .as[(Long, Long, Double)].collect().toSeq.sortBy(p => (p._1, p._2))
+    assert(fixGot == fixWant)
+    assert(fixWant.map(p => (p._1, p._2)) == Seq((300L, 301L), (301L, 300L)))
     // corpus-scale sanity: prefix-filtered == exhaustive on sf0.001
     val docs = graft.api.DocsIndex.documents(spark, "/root/testdata/sf0.001")
     val fast = graft.pipeline.Dedup.containmentPairs(docs, 3, 0.8)
