@@ -89,18 +89,22 @@ object DocIds {
     @inline def sameKey(a: CorpusRow, b: CorpusRow): Boolean =
       a.repo == b.repo && a.path == b.path && a.commit == b.commit
 
-    val counts: Map[Int, Long] = sorted
-      .mapPartitions { it =>
-        var n = 0L
-        var prev: CorpusRow = null
-        while (it.hasNext) {
-          val r = it.next()
-          if (prev == null || !sameKey(prev, r)) n += 1
-          prev = r
+    // the range sample and the shuffle run inside this count's jobs
+    val counts: Map[Int, Long] = JobDescription.described(spark.sparkContext,
+        "graft: docId range sort + count") {
+      sorted
+        .mapPartitions { it =>
+          var n = 0L
+          var prev: CorpusRow = null
+          while (it.hasNext) {
+            val r = it.next()
+            if (prev == null || !sameKey(prev, r)) n += 1
+            prev = r
+          }
+          Iterator.single((TaskContext.getPartitionId(), n))
         }
-        Iterator.single((TaskContext.getPartitionId(), n))
-      }
-      .collect().toMap
+        .collect().toMap
+    }
     val numParts = sorted.rdd.getNumPartitions
     val offsets = new Array[Long](numParts)
     var acc = 0L

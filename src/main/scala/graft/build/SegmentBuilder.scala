@@ -4,6 +4,7 @@ import scala.collection.mutable
 import scala.concurrent.{Await, ExecutionContext, Future}
 import scala.concurrent.duration.Duration
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
@@ -31,13 +32,14 @@ final case class BuildParams(
       * queries at ~1.5-2x posting bytes; scoring walks skip position
       * bytes without decoding them. */
     positional: Boolean = false,
-    /** Pack sorted posting RUNS map-side and shuffle compressed bytes
-      * (~5 B/posting) instead of posting rows (~40 B/posting) — the
-      * classic local-index-then-merge build. Requires per-partition
-      * ascending docIds (true for fresh builds from numbered rows) and a
-      * driver-resident dictionary; falls back to the row shuffle
-      * otherwise. Off switches every encode to the row path (test
-      * cross-check). */
+    /** Tokenize straight into map-side packed posting RUNS keyed by
+      * term, and cache and shuffle only their compressed bytes
+      * (~5 B/posting) instead of per-(doc, term) rows — the classic
+      * local-index-then-merge build. Requires per-partition ascending
+      * docIds (true for numbered rows) and a dictionary of at most
+      * DictBroadcastLimit terms; a larger one falls back to the row
+      * path. Off switches fresh builds to the row path (test
+      * cross-check); merges always take it. */
     mapSideRuns: Boolean = true)
 
 /** The built index for one segment — all artifacts as typed Datasets.
@@ -77,36 +79,43 @@ final case class BuildReport(
   *
   * Shuffle budget (explicit, per the north rule):
   *   1. repartitionByRange(repo,path,commit) — deterministic docIds (P4/P5)
-  *   2. groupBy(term) — dictionary df/cf (I1) [tf itself needs NO shuffle:
-  *      per-doc tf is computed inside the tokenize flatMap, since one
-  *      document's tokens live in one row]
-  *   3. tf ⋈ dict on term — resolved DRIVER-SIDE (binary search against
-  *      the broadcast term array) on the run path, so the tf side never
-  *      shuffles on term; the row fallback broadcast-joins when the dict
-  *      is small, else sort-merge
-  *   4. posting encode — two plans:
-  *      a. RUN path (default, fresh builds): each input partition packs
-  *         its per-(bucket,term) postings into delta+VByte RUNS in one
-  *         narrow pass (docIds are ascending within a partition — ids
-  *         are sort ranks, so NO sort is needed anywhere), then ONLY the
-  *         packed bytes (~5 B/posting incl. doc length) shuffle,
-  *         grouped by (bucket,term), and concatenate + re-pack — the
-  *         classic local-index/merge build (e.g. Zobel & Moffat ACM
-  *         CS'06 §5). ~8x less shuffle volume than posting rows, and
-  *         hot terms need no salting: a term's ≤numPartitions runs ARE
-  *         its partial aggregation.
-  *      b. ROW fallback (merges, non-broadcastable dicts):
-  *         repartition(bucket,termId[,salt]) + sortWithinPartitions —
-  *         posting runs (I3/I4); hot terms (df > saltThreshold) take
-  *         the salted two-stage path: partial runs per salt, k-way
-  *         merged per term.
-  *      Both plans produce byte-identical artifacts (asserted in
-  *      IndexBuildSpec): the run path re-packs from the same full
-  *      arrays with impacts recomputed by the same IEEE expression.
+  *   2. RUN path (default, fresh builds): one narrow pass per id
+  *      partition tokenizes each row and appends it straight to a
+  *      per-(bucket, term) delta+VByte RUN keyed by the term string; each
+  *      run also carries its posting count `n` (the partition's df share)
+  *      and `cf` (Σtf). DocIds ascend within a partition (ids are sort
+  *      ranks), so NO sort is needed and the pass flushes a bucket's runs
+  *      when the bucket changes — memory is bounded by one bucket's runs.
+  *      Only the runs are cached (~5 B/posting incl. doc length); no
+  *      per-(doc, term) row is ever materialized. Then:
+  *      a. groupBy(term) over the runs sums n/cf — the dictionary (I1),
+  *         dense termIds by range sort; totalTokens = Σcf falls out of
+  *         the job that materializes the runs;
+  *      b. groupByKey(bucket, term) shuffles ONLY the packed run bytes;
+  *         each group resolves its termId once (binary search against
+  *         the broadcast term array), concatenates its runs (disjoint
+  *         ascending docId ranges), recomputes impacts and re-packs — the
+  *         classic local-index/merge build (e.g. Zobel & Moffat ACM CS'06
+  *         §5). Hot terms need no salting: a term's ≤numPartitions runs
+  *         per bucket ARE its partial aggregation.
+  *   3. ROW path (mapSideRuns = false, a dictionary over
+  *      DictBroadcastLimit, merges/compactions via encodePostings): per-doc
+  *      (docId, term, tf, dl[, pos]) rows, groupBy(term) for the
+  *      dictionary, tf⋈dict on term (broadcast below DictBroadcastLimit,
+  *      else sort-merge), then repartition(bucket,termId[,salt]) +
+  *      sortWithinPartitions — posting runs (I3/I4); hot terms
+  *      (df > saltThreshold) take the salted two-stage path: partial runs
+  *      per salt, k-way merged per term.
+  *   4. docs: sha256 + token count in one narrow map over the numbered
+  *      rows; groupByKey(bucket) builds the doc-length blocks.
+  *   Both posting plans produce byte-identical artifacts (asserted in
+  *   IndexBuildSpec): the run path re-packs from the same full arrays
+  *   with impacts recomputed by the same IEEE expression.
   */
-/** One daemon thread for the build's concurrent side-track: enough to
-  * overlap the docs/doclens jobs with the dict/postings jobs without
-  * unbounded thread growth under chunked/streaming builds. */
+/** Side-track pool of the build: the docs/doclens jobs run here, beside
+  * the dict/postings jobs. A cached pool: one thread per build in flight
+  * (concurrent chunked/streaming builds each get one), and a thread idle
+  * for 60 s exits. */
 private object BuildPool {
   val ec: ExecutionContext = ExecutionContext.fromExecutorService(
     java.util.concurrent.Executors.newCachedThreadPool(r => {
@@ -116,12 +125,25 @@ private object BuildPool {
     }))
 }
 
+/** Spark job descriptions (what `tools/BuildProfile` and the Spark UI
+  * print per job). Descriptions are thread-local; `described` restores
+  * the caller's own afterwards. */
+private[graft] object JobDescription {
+  private val Key = "spark.job.description"
+  def described[T](sc: SparkContext, desc: String)(body: => T): T = {
+    val prev = sc.getLocalProperty(Key)
+    sc.setJobDescription(desc)
+    try body finally sc.setJobDescription(prev)
+  }
+}
+
 object SegmentBuilder {
 
-  /** One map-side packed posting run: a partition's postings for one
-    * (bucket, term), delta+VByte bytes of (gap, tf, dl[, positions]).
-    * The ONLY thing the run path shuffles. */
-  final case class Run(bucket: Int, termId: Long, n: Int, bytes: Array[Byte])
+  /** One map-side posting run, keyed by the term string: a partition's
+    * postings of one (bucket, term), delta+VByte bytes of
+    * (gap, tf, dl[, positions]); `n` postings, `cf` = Σtf. The only
+    * per-posting data the run path caches and shuffles. */
+  final case class TermRun(bucket: Int, term: String, n: Int, cf: Long, bytes: Array[Byte])
 
   /** Build-time intermediate: one posting before encoding. */
   final case class PRow(bucket: Int, termId: Long, docId: Long, tf: Int, impact: Double)
@@ -150,7 +172,10 @@ object SegmentBuilder {
   /** Build one segment from already-numbered rows. Chunked/resumed builds
     * pass a docId-range slice of a globally numbered corpus here — ids
     * derive from global sort position, never task scheduling, so a
-    * resumed chunk reproduces byte-identical artifacts (SURVEY §2.6 R3). */
+    * resumed chunk reproduces byte-identical artifacts (SURVEY §2.6 R3).
+    * `numbered` must hold ascending docIds within each partition (true
+    * of DocIds.assign's output and of any filter over it) for the run
+    * path; the RunBuilder's require rejects anything else. */
   def buildFromNumbered(spark: SparkSession, numbered: Dataset[NumberedRow],
                         ranges: Array[PartRange], snapshotId: Long,
                         inputFiles: Array[String], params: BuildParams)
@@ -158,84 +183,59 @@ object SegmentBuilder {
     import spark.implicits._
     val t0 = System.nanoTime()
     val sc = spark.sparkContext
-
-    // ── P6/P7/P8 fused: tokenize → per-doc tf + docLen, zero shuffle ──
-    // (positional builds additionally carry each term's occurrence
-    // indices — one document's tokens still live in one input row, so
-    // positions also need NO extra shuffle)
-    val tf: DataFrame = (if (params.positional) {
-      numbered.flatMap { r =>
-        val toks = Tokenizer.tokenize(r.content)
-        val occ = new mutable.HashMap[String, mutable.ArrayBuilder.ofInt]()
-        var i = 0
-        while (i < toks.length) {
-          occ.getOrElseUpdate(toks(i), new mutable.ArrayBuilder.ofInt) += i
-          i += 1
-        }
-        val dl = toks.length
-        occ.iterator.map { case (t, b) =>
-          val ps = b.result()
-          TermFreqPos(r.docId, t, ps.length, dl, ps)
-        }
-      }.toDF()
-    } else {
-      numbered.flatMap { r =>
-        val toks = Tokenizer.tokenize(r.content)
-        val counts = new mutable.HashMap[String, Int]()
-        var i = 0
-        while (i < toks.length) {
-          counts.update(toks(i), counts.getOrElse(toks(i), 0) + 1)
-          i += 1
-        }
-        val dl = toks.length
-        counts.iterator.map { case (t, c) => TermFreq(r.docId, t, c, dl) }
-      }.toDF()
-    }).persist(StorageLevel.MEMORY_AND_DISK)
-
-    // global stats — numDocs is already known exactly from the id ranges
-    // (no job), and Σ docLen ≡ Σ tf, so totalTokens falls out of the same
-    // narrow scan that materializes the tf cache: no docs-side shuffle or
-    // join sits on the critical path before the dictionary can start.
-    // avgdl stays sum(docLen)/N, the definition the DuckDB oracle
-    // reproduces exactly (SURVEY §5.5).
+    val callerDesc = sc.getLocalProperty("spark.job.description")
     val numDocs = ranges.map(_.count).sum
-    sc.setJobDescription("graft: tf materialize + totalTokens")
-    val totalTokens = tf.agg(coalesce(sum($"tf".cast("long")), lit(0L)))
-      .as[Long].head()
-    val avgdl = if (numDocs == 0) 1.0 else totalTokens.toDouble / numDocs
 
-    // ── DocMap: sha256 invariant + docLen (docs with zero tokens keep 0)
-    val docLenByDoc = tf.groupBy($"docId").agg(max($"dl").as("docLen"))
+    // ── DocMap: sha256 invariant + docLen, one narrow map (zero-token
+    // docs get 0); independent of the term side, so its jobs run on their
+    // own thread and interleave with the dictionary/encode jobs — the
+    // driver-side job gaps are corpus-size-invariant, and overlapping
+    // them is what moves the N→4N scaling efficiency. (Concurrent actions
+    // on one SparkSession are supported; job descriptions are
+    // thread-local.)
+    val tokenCount = udf((content: String) => Tokenizer.tokenize(content).length)
     val docs = numbered
       .select($"docId", $"repo", $"path", $"commit", $"lang",
-        sha2($"content", 256).as("sha256"))
-      .join(docLenByDoc, Seq("docId"), "left")
-      .na.fill(0, Seq("docLen"))
-      .select($"docId", $"repo", $"path", $"commit", $"lang", $"sha256",
-        $"docLen".cast("int").as("docLen"))
+        sha2($"content", 256).as("sha256"), tokenCount($"content").as("docLen"))
       .as[Doc]
       .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // The docs → doclen-blocks track is independent of the dict →
-    // postings track once tf is cached: run it on its own thread so its
-    // jobs interleave with the dictionary/encode jobs instead of
-    // serializing after them. This attacks the Amdahl term directly —
-    // the driver-side job gaps are corpus-size-invariant, so overlapping
-    // them is what moves the N→4N scaling efficiency, not peak
-    // throughput. (Concurrent actions on one SparkSession are supported;
-    // job descriptions are thread-local.)
     val docsTrack: Future[Dataset[DocLenBlock]] = Future {
-      sc.setJobDescription("graft: docs materialize + doclen blocks")
-      val doclens = doclenBlocks(docs, params.bucketSize)
-        .persist(StorageLevel.MEMORY_AND_DISK)
-      doclens.count()
-      doclens
+      JobDescription.described(sc, "graft: docs materialize + doclen blocks") {
+        val doclens = doclenBlocks(docs, params.bucketSize)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+        doclens.count()
+        doclens
+      }
     }(BuildPool.ec)
+
+    // ── P6/P7/P8 + I1 input: term runs (default) or tf rows ───────────
+    // totalTokens: Σ docLen ≡ Σ tf ≡ Σ cf, taken in the same narrow scan
+    // that materializes the cache, so no docs-side job sits on the
+    // critical path before the dictionary can start. numDocs is already
+    // known exactly from the id ranges. avgdl stays sum(docLen)/N, the
+    // definition the DuckDB oracle reproduces exactly (SURVEY §5.5).
+    val runs: Dataset[TermRun] =
+      if (params.mapSideRuns)
+        termRuns(numbered, params.bucketSize, params.positional)
+          .persist(StorageLevel.MEMORY_AND_DISK)
+      else null
+    var tf: DataFrame = null
+    val (termStats, totalTokens) = if (runs != null) {
+      sc.setJobDescription("graft: tokenize + term runs materialize + totalTokens")
+      (runs.select($"term", $"n", $"cf"),
+        runs.agg(coalesce(sum($"cf"), lit(0L))).as[Long].head())
+    } else {
+      tf = tfRows(numbered, params.positional).persist(StorageLevel.MEMORY_AND_DISK)
+      sc.setJobDescription("graft: tf materialize + totalTokens")
+      (tf.select($"term", lit(1).as("n"), $"tf".as("cf")),
+        tf.agg(coalesce(sum($"tf".cast("long")), lit(0L))).as[Long].head())
+    }
+    val avgdl = if (numDocs == 0) 1.0 else totalTokens.toDouble / numDocs
 
     // ── I1: dictionary with dense termIds in term sort order ──────────
     sc.setJobDescription("graft: dictionary agg + dense termIds")
-    val dictAgg = tf.groupBy($"term")
-      .agg(count(lit(1)).as("df"), sum($"tf").as("cf"))
+    val dictAgg = termStats.groupBy($"term")
+      .agg(sum($"n").as("df"), sum($"cf").as("cf"))
       .repartitionByRange(params.numPartitions, $"term")
       .sortWithinPartitions($"term")
       .as[(String, Long, Long)]
@@ -245,22 +245,32 @@ object SegmentBuilder {
     val dict = dict0.persist(StorageLevel.MEMORY_AND_DISK)
     val numTerms = dictRanges.map(_.count).sum // free: no extra count job
 
-    // ── I3/I4/I5/I6: encode (shared with the log-structured merge) ────
+    // ── I3/I4/I5/I6: encode ───────────────────────────────────────────
     sc.setJobDescription("graft: posting encode + stats agg")
-    // partitionSorted: tf flows narrowly from the range-sorted numbered
-    // corpus, so docIds ascend within every partition — run path eligible.
-    val postings = encodePostings(spark, tf.toDF(), dict, numDocs, avgdl, params,
-      numTermsHint = numTerms, partitionSorted = true)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val encoded =
+      if (runs != null && numTerms <= DictBroadcastLimit)
+        mergeTermRuns(spark, runs, dict, numDocs, avgdl, params)
+      else {
+        // row path; a dictionary too large to broadcast re-derives the tf
+        // rows the run pass never materialized
+        if (tf == null) {
+          runs.unpersist()
+          tf = tfRows(numbered, params.positional).persist(StorageLevel.MEMORY_AND_DISK)
+        }
+        encodePostings(spark, tf, dict, numDocs, avgdl, params, numTermsHint = numTerms)
+      }
+    val postings = encoded.persist(StorageLevel.MEMORY_AND_DISK)
     val (numPostings, bytesCompressed) = postings
       .agg(coalesce(sum($"numDocs".cast("long")), lit(0L)),
         coalesce(sum(length($"bytes").cast("long")), lit(0L)))
       .as[(Long, Long)].head()
 
     val doclens = Await.result(docsTrack, Duration.Inf)
-    sc.setJobDescription(null)
+    sc.setJobDescription(callerDesc)
 
-    freeDictSort(); tf.unpersist()
+    freeDictSort()
+    if (runs != null) runs.unpersist()
+    if (tf != null) tf.unpersist()
 
     val buildMillis = (System.nanoTime() - t0) / 1000000
     val metaRows = ranges.map(r => SegmentMeta(params.segId, snapshotId,
@@ -275,31 +285,66 @@ object SegmentBuilder {
     (Segment(docs, dict, postings, doclens, stats, meta, params), report)
   }
 
-  /** (docId, term, tf, dl) rows + dictionary → packed posting lists: the
-    * I3 (cold, single shuffle) / I4 (hot, salted two-stage) split.
-    * `tfDf` needs columns (docId, term, tf, dl). Shared by the fresh
-    * build and SegmentMerger's re-encode. */
-  /** Vocabularies below this broadcast in the tf⋈dict join (shuffle 3 of
-    * EP1 collapses to a map-side hash join — the tf side, the largest
-    * dataset of the build, then never shuffles on term). A 100 TB-scale
-    * vocabulary exceeds this and falls back to sort-merge. */
+  /** One document's token count and its distinct terms as
+    * (term, tf, occurrence indices over the filtered token stream —
+    * ascending, length tf — or null unless positional). One document's
+    * tokens live in one row, so per-doc tf needs no (doc, term) shuffle. */
+  private def docTerms(content: String, positional: Boolean)
+      : (Int, Iterator[(String, Int, Array[Int])]) = {
+    val toks = Tokenizer.tokenize(content)
+    var i = 0
+    val terms = if (positional) {
+      val occ = new mutable.HashMap[String, mutable.ArrayBuilder.ofInt]()
+      while (i < toks.length) {
+        occ.getOrElseUpdate(toks(i), new mutable.ArrayBuilder.ofInt) += i
+        i += 1
+      }
+      occ.iterator.map { case (t, b) => val ps = b.result(); (t, ps.length, ps) }
+    } else {
+      val counts = new mutable.HashMap[String, Int]()
+      while (i < toks.length) {
+        counts.update(toks(i), counts.getOrElse(toks(i), 0) + 1)
+        i += 1
+      }
+      counts.iterator.map { case (t, c) => (t, c, null: Array[Int]) }
+    }
+    (toks.length, terms)
+  }
+
+  /** The row path's per-(doc, term) rows, (docId, term, tf, dl[, pos]). */
+  private def tfRows(numbered: Dataset[NumberedRow], positional: Boolean): DataFrame = {
+    import numbered.sparkSession.implicits._
+    if (positional)
+      numbered.flatMap { r =>
+        val (dl, terms) = docTerms(r.content, positional = true)
+        terms.map { case (t, tf, ps) => TermFreqPos(r.docId, t, tf, dl, ps) }
+      }.toDF()
+    else
+      numbered.flatMap { r =>
+        val (dl, terms) = docTerms(r.content, positional = false)
+        terms.map { case (t, tf, _) => TermFreq(r.docId, t, tf, dl) }
+      }.toDF()
+  }
+
+  /** Vocabularies below this broadcast: the run path resolves termIds
+    * against the broadcast term array, and the row path's tf⋈dict join
+    * collapses to a map-side hash join (the tf side, the largest dataset
+    * of a row build, then never shuffles on term). A 100 TB-scale
+    * vocabulary exceeds this and takes the row path's sort-merge join. */
   val DictBroadcastLimit: Long = 4L << 20
 
-  /** `partitionSorted`: caller guarantees docIds are ascending within
-    * every partition of `tfDf` (true for fresh builds — tf rows flow
-    * narrowly from the range-sorted numbered corpus) — enables the
-    * map-side run path. Merges/re-encodes pass false (their tf rows
-    * come through joins) and take the row shuffle. */
+  /** The row path: (docId, term, tf, dl[, pos]) rows + dictionary →
+    * packed posting lists, the I3 (cold, single shuffle) / I4 (hot,
+    * salted two-stage) split. `tfDf` needs columns (docId, term, tf, dl)
+    * (+ pos for positional params) in any row order. Shared by the fresh
+    * build's row path and SegmentMerger's/Compaction's re-encode. */
   def encodePostings(spark: SparkSession, tfDf: DataFrame,
                      dict: Dataset[DictEntry], numDocs: Long, avgdl: Double,
-                     params: BuildParams, numTermsHint: Long = -1L,
-                     partitionSorted: Boolean = false): Dataset[PostingList] = {
+                     params: BuildParams, numTermsHint: Long = -1L): Dataset[PostingList] = {
     import spark.implicits._
     val bucketSize = params.bucketSize
     val dictSlim = dict.select($"termId", $"term", $"df")
     val numTerms = if (numTermsHint >= 0) numTermsHint else dict.count()
-    if (partitionSorted && params.mapSideRuns && numTerms <= DictBroadcastLimit)
-      return encodePostingsRuns(spark, tfDf, dict, numDocs, avgdl, params)
     val dictSide =
       if (numTerms <= DictBroadcastLimit) broadcast(dictSlim) else dictSlim
     // impact computed as native Column arithmetic — stays inside
@@ -369,10 +414,11 @@ object SegmentBuilder {
   }
 
   /** Growable VByte stream for one map-side run. Appends must be in
-    * strictly ascending docId order (the partitionSorted contract). */
+    * strictly ascending docId order (ascending ids within a partition). */
   private final class RunBuilder {
     private var prev = -1L
     var n = 0
+    var cf = 0L
     private var buf = new Array[Byte](48)
     private var pos = 0
     @inline private def ensure(extra: Int): Unit =
@@ -396,21 +442,52 @@ object SegmentBuilder {
       }
       prev = docId
       n += 1
+      cf += tf
     }
     def bytes(): Array[Byte] = java.util.Arrays.copyOf(buf, pos)
   }
 
-  /** The run path: one narrow pass packs per-(bucket,term) runs, only
-    * packed bytes shuffle, the reduce concatenates runs (disjoint
-    * ascending docId ranges — partitions hold contiguous id ranges),
-    * recomputes impacts with the SAME IEEE expression as the row path's
-    * codegen column, and packs the final list. Term→(termId, df)
-    * resolves by binary search against the broadcast term array — dense
-    * termIds are assigned in term sort order (I1), so the termId IS the
-    * array index. */
-  private def encodePostingsRuns(spark: SparkSession, tfDf: DataFrame,
-                                 dict: Dataset[DictEntry], numDocs: Long,
-                                 avgdl: Double, params: BuildParams): Dataset[PostingList] = {
+  /** The run pass over one id partition: tokenize each row and append
+    * its per-doc (tf, dl[, positions]) to its bucket's per-term
+    * RunBuilder. DocIds ascend within a partition, so a bucket is done
+    * when the next row's bucket differs: its runs are emitted then and
+    * only one bucket's runs are ever held. */
+  private def termRuns(numbered: Dataset[NumberedRow], bucketSize: Long,
+                       positional: Boolean): Dataset[TermRun] = {
+    import numbered.sparkSession.implicits._
+    numbered.mapPartitions { rows =>
+      val in = rows.buffered
+      var lastDoc = -1L
+      new Iterator[Iterator[TermRun]] {
+        override def hasNext: Boolean = in.hasNext
+        override def next(): Iterator[TermRun] = {
+          val bucket = (in.head.docId / bucketSize).toInt
+          val open = new mutable.HashMap[String, RunBuilder]()
+          while (in.hasNext && in.head.docId / bucketSize == bucket) {
+            val r = in.next()
+            require(r.docId > lastDoc,
+              s"run path requires ascending docIds per partition: ${r.docId} after $lastDoc")
+            lastDoc = r.docId
+            val (dl, terms) = docTerms(r.content, positional)
+            terms.foreach { case (t, tf, ps) =>
+              open.getOrElseUpdate(t, new RunBuilder).add(r.docId, tf, dl, ps)
+            }
+          }
+          open.iterator.map { case (t, b) => TermRun(bucket, t, b.n, b.cf, b.bytes()) }
+        }
+      }.flatten
+    }
+  }
+
+  /** The run path's encode: only packed run bytes shuffle, grouped by
+    * (bucket, term); each group resolves its termId and df ONCE by binary
+    * search against the broadcast term array — dense termIds are assigned
+    * in term sort order (I1), so the termId IS the array index — then
+    * mergeRunBytes concatenates, recomputes impacts with the SAME IEEE
+    * expression as the row path's codegen column, and packs the list. */
+  private def mergeTermRuns(spark: SparkSession, runs: Dataset[TermRun],
+                            dict: Dataset[DictEntry], numDocs: Long,
+                            avgdl: Double, params: BuildParams): Dataset[PostingList] = {
     import spark.implicits._
     val entries = dict.select($"termId", $"term", $"df")
       .as[(Long, String, Long)].collect().sortBy(_._1)
@@ -419,51 +496,22 @@ object SegmentBuilder {
       require(i == 0 || entries(i - 1)._2 < entries(i)._2,
         "dict terms not in sort order — run path requires I1 term-ordered ids")
     }
-    val terms: Array[String] = entries.map(_._2)
-    val dfs: Array[Long] = entries.map(_._3)
-    val bcTerms = spark.sparkContext.broadcast(terms)
-    val bcDfs = spark.sparkContext.broadcast(dfs)
-    val bucketSize = params.bucketSize
+    val bcTerms = spark.sparkContext.broadcast(entries.map(_._2))
+    val bcDfs = spark.sparkContext.broadcast(entries.map(_._3))
     val positional = params.positional
-
-    def runsOf(rows: Iterator[(Long, String, Int, Int, Array[Int])]): Iterator[Run] = {
-      val ts = bcTerms.value
-      val acc = new mutable.LongMap[RunBuilder]()
-      rows.foreach { case (docId, term, tf, dl, ps) =>
+    runs.groupByKey(r => (r.bucket, r.term))
+      .mapGroups { (key: (Int, String), it: Iterator[TermRun]) =>
         val tid = java.util.Arrays.binarySearch(
-          ts.asInstanceOf[Array[AnyRef]], term)
-        require(tid >= 0, s"term not in dictionary: '$term'")
-        val bucket = (docId / bucketSize).toInt
-        val key = (bucket.toLong << 41) | tid.toLong
-        acc.getOrElseUpdate(key, new RunBuilder)
-          .add(docId, tf, dl, if (positional) ps else null)
-      }
-      acc.iterator.map { case (key, b) =>
-        Run((key >>> 41).toInt, key & ((1L << 41) - 1), b.n, b.bytes())
-      }
-    }
-
-    val runs: Dataset[Run] =
-      if (positional)
-        tfDf.select($"docId", $"term", $"tf", $"dl", $"pos")
-          .as[(Long, String, Int, Int, Array[Int])]
-          .mapPartitions(runsOf)
-      else
-        tfDf.select($"docId", $"term", $"tf", $"dl")
-          .as[(Long, String, Int, Int)]
-          .mapPartitions(it => runsOf(it.map(r => (r._1, r._2, r._3, r._4, null))))
-
-    runs.groupByKey(r => (r.bucket, r.termId))
-      .mapGroups { (key: (Int, Long), it: Iterator[Run]) =>
-        mergeRunBytes(key._1, key._2, it, bcDfs.value(key._2.toInt),
-          numDocs, avgdl, positional)
+          bcTerms.value.asInstanceOf[Array[AnyRef]], key._2)
+        require(tid >= 0, s"term not in dictionary: '${key._2}'")
+        mergeRunBytes(key._1, tid.toLong, it, bcDfs.value(tid), numDocs, avgdl, positional)
       }
   }
 
   /** Decode a (bucket,term)'s runs — sorted by first docId, ranges must
     * be disjoint — into full arrays, recompute impacts, pack once. The
     * output is byte-identical to the row path's pack of the same list. */
-  private def mergeRunBytes(bucket: Int, termId: Long, runsIt: Iterator[Run],
+  private def mergeRunBytes(bucket: Int, termId: Long, runsIt: Iterator[TermRun],
                             df: Long, numDocs: Long, avgdl: Double,
                             positional: Boolean): PostingList = {
     import graft.codec.VByte

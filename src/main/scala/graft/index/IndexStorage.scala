@@ -7,7 +7,7 @@ import scala.jdk.CollectionConverters._
 import org.apache.spark.sql.{Encoders, SparkSession}
 import org.apache.spark.sql.functions._
 
-import graft.build.{BuildParams, Segment}
+import graft.build.{BuildParams, JobDescription, Segment}
 import graft.model._
 
 /** On-disk segment layout + atomic commit protocol — SURVEY §2.1 S3/S4,
@@ -43,14 +43,17 @@ object IndexStorage {
     if (Files.exists(tmp)) deleteRec(tmp)
     Files.createDirectories(tmp)
 
-    segment.docs.write.parquet(tmp.resolve("docs").toString)
-    segment.dict.write.parquet(tmp.resolve("dict").toString)
-    segment.postings
+    val sc = segment.docs.sparkSession.sparkContext
+    def described(artifact: String)(write: => Unit): Unit =
+      JobDescription.described(sc, s"graft: write $artifact")(write)
+    described("docs")(segment.docs.write.parquet(tmp.resolve("docs").toString))
+    described("dict")(segment.dict.write.parquet(tmp.resolve("dict").toString))
+    described("postings")(segment.postings
       .sortWithinPartitions(col("bucket"), col("termId"))
       .write.partitionBy("bucket")
-      .parquet(tmp.resolve("postings").toString)
-    segment.doclens.write.parquet(tmp.resolve("doclens").toString)
-    segment.meta.write.parquet(tmp.resolve("meta").toString)
+      .parquet(tmp.resolve("postings").toString))
+    described("doclens")(segment.doclens.write.parquet(tmp.resolve("doclens").toString))
+    described("meta")(segment.meta.write.parquet(tmp.resolve("meta").toString))
 
     val st = segment.stats
     val p = segment.params

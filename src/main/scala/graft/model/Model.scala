@@ -38,16 +38,19 @@ final case class Doc(
     sha256: String,
     docLen: Int)
 
-/** Per-(doc, term) frequency, with the doc's length denormalized on so
-  * BM25 impacts are computable without another join (SURVEY §3 EP1 —
-  * computing tf inside the tokenize flatMap removes the (docId,term)
-  * shuffle entirely: one document's tokens live in one row). */
+/** Row-path build intermediate (SegmentBuilder's `mapSideRuns = false`
+  * builds, dictionaries over `DictBroadcastLimit`; the default run path
+  * never materializes it): per-(doc, term) frequency, with the doc's
+  * length denormalized on so BM25 impacts are computable without another
+  * join (SURVEY §3 EP1 — computing tf inside the tokenize flatMap removes
+  * the (docId,term) shuffle entirely: one document's tokens live in one
+  * row). */
 final case class TermFreq(docId: Long, term: String, tf: Int, dl: Int)
 
-/** Positional build intermediate: TermFreq + the term's occurrence
-  * indices over the document's filtered token stream (ascending,
-  * length == tf). Kept as a separate shape so non-positional builds —
-  * the throughput benchmark path — carry no per-row array slot. */
+/** Row-path positional build intermediate: TermFreq + the term's
+  * occurrence indices over the document's filtered token stream
+  * (ascending, length == tf). Kept as a separate shape so non-positional
+  * row builds carry no per-row array slot. */
 final case class TermFreqPos(docId: Long, term: String, tf: Int, dl: Int,
                              pos: Array[Int])
 

@@ -1,13 +1,19 @@
 package graft.tools
 
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart}
+import java.util.concurrent.ConcurrentHashMap
+import java.util.concurrent.atomic.AtomicLong
+
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobEnd, SparkListenerJobStart,
+  SparkListenerTaskEnd}
 import org.apache.spark.sql.SparkSession
 
 import graft.build.{BuildParams, SegmentBuilder}
 import graft.corpus.{DatasetCorpusSource, Synthesizer}
 
-/** Ad-hoc build profiler: per-Spark-job wall clock for one segment build
-  * over the synthetic corpus. Not part of the driver contract. */
+/** Ad-hoc build profiler: per-Spark-job wall clock, summed task CPU and
+  * shuffle-write bytes for one segment build over the synthetic corpus
+  * (wall time alone hides a job whose tasks burn CPU on several cores).
+  * Not part of the driver contract. */
 object BuildProfile {
   def main(args: Array[String]): Unit = {
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
@@ -19,7 +25,12 @@ object BuildProfile {
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
 
-    val jobs = new java.util.concurrent.ConcurrentHashMap[Int, (String, Long)]()
+    val jobs = new ConcurrentHashMap[Int, (String, Long)]()
+    // per job: summed task CPU ns and shuffle-write bytes, filed through
+    // the stage → job map taken at job start
+    val stageJob = new ConcurrentHashMap[Int, Int]()
+    val jobCpuNs = new ConcurrentHashMap[Int, AtomicLong]()
+    val jobShuffleBytes = new ConcurrentHashMap[Int, AtomicLong]()
     // Serial decomposition: wall time NOT covered by any running job is
     // driver-side serial (codegen compile, plan analysis, collects'
     // driver half, scheduling gaps) — the Amdahl term of the scaling
@@ -34,15 +45,26 @@ object BuildProfile {
           val idleSince = lastIdle.get()
           if (idleSince >= 0) gapNanos.addAndGet((s.time - idleSince) * 1000000L)
         }
+        s.stageIds.foreach(st => stageJob.put(st, s.jobId))
+        jobCpuNs.put(s.jobId, new AtomicLong(0L))
+        jobShuffleBytes.put(s.jobId, new AtomicLong(0L))
         jobs.put(s.jobId, (Option(s.properties)
           .flatMap(p => Option(p.getProperty("spark.job.description")))
           .orElse(Option(s.properties).flatMap(p => Option(p.getProperty("callSite.short"))))
           .getOrElse("?"), s.time))
       }
+      override def onTaskEnd(t: SparkListenerTaskEnd): Unit =
+        if (t.taskMetrics != null) Option(stageJob.get(t.stageId)).foreach { job =>
+          jobCpuNs.get(job).addAndGet(t.taskMetrics.executorCpuTime)
+          jobShuffleBytes.get(job).addAndGet(t.taskMetrics.shuffleWriteMetrics.bytesWritten)
+        }
       override def onJobEnd(e: SparkListenerJobEnd): Unit = {
         if (running.decrementAndGet() == 0) lastIdle.set(e.time)
         val (desc, t0) = jobs.getOrDefault(e.jobId, ("?", e.time))
-        println(f"[job ${e.jobId}%3d] ${(e.time - t0) / 1000.0}%7.2fs  $desc")
+        val cpuMs = Option(jobCpuNs.get(e.jobId)).map(_.get / 1e6).getOrElse(0.0)
+        val shuffle = Option(jobShuffleBytes.get(e.jobId)).map(_.get).getOrElse(0L)
+        println(f"[job ${e.jobId}%3d] ${(e.time - t0) / 1000.0}%7.2fs  " +
+          f"cpu=$cpuMs%9.0fms  shuffleWrite=$shuffle%12dB  $desc")
       }
     })
 

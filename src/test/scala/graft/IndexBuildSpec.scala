@@ -164,6 +164,43 @@ class IndexBuildSpec extends SparkSpec {
     segRuns.unpersist(); segRow.unpersist()
   }
 
+  test("run build equals the row build across many bucket flushes and zero-token docs") {
+    import spark.implicits._
+    // paths sort in i order, so docId == i; bucketSize 8 puts docs 16 and
+    // 40 (zero-token) and 8, 24, ... (with tokens) on a bucket's first id
+    val bucketSize = 8L
+    val zeroToken = Set(16L, 40L) ++ (0L until 150L).filter(_ % 11 == 5)
+    val vocab = Seq("alpha", "beta", "gamma", "parseHttp", "XMLReader", "request2", "hot")
+    val corpus = (0 until 150).map { i =>
+      val content =
+        if (!zeroToken(i.toLong)) (0 until 3 + i % 7).map(j => vocab((i * 3 + j * j) % vocab.size))
+          .mkString(" ") + s" uniq$i hot"
+        else if (i % 2 == 0) "--- !!! ;; {}"
+        else "123 4567 89 x"
+      CorpusRow("r", f"src/f$i%04d.scala", "c1", "scala", content)
+    }.toDS()
+    def doclens(s: Segment): Seq[(Int, Long, Seq[Int])] =
+      s.doclens.collect().map(b => (b.bucket, b.firstDocId, b.lens.toSeq)).sortBy(_._1).toSeq
+    for (positional <- Seq(false, true)) {
+      val p = BuildParams(numPartitions = 4, bucketSize = bucketSize, positional = positional)
+      val (runSeg, runRep) = SegmentBuilder.build(spark, DatasetCorpusSource(corpus), p)
+      val (rowSeg, rowRep) = SegmentBuilder.build(spark, DatasetCorpusSource(corpus),
+        p.copy(mapSideRuns = false))
+      val parts = runSeg.meta.collect().filter(_.partId >= 0)
+      assert(parts.length == 4 && parts.forall { m =>
+        (m.firstDocId + m.numDocs - 1) / bucketSize - m.firstDocId / bucketSize + 1 >= 3
+      }, s"every id partition must span >= 3 buckets: ${parts.map(m => (m.firstDocId, m.numDocs)).toSeq}")
+      assert(fingerprint(runSeg) == fingerprint(rowSeg), s"positional=$positional")
+      assert(runSeg.dict.collect().sortBy(_.termId).toSeq == rowSeg.dict.collect().sortBy(_.termId).toSeq)
+      assert(runSeg.docs.collect().sortBy(_.docId).toSeq == rowSeg.docs.collect().sortBy(_.docId).toSeq)
+      assert(doclens(runSeg) == doclens(rowSeg))
+      assert(runRep.totalTokens == rowRep.totalTokens && runRep.numPostings == rowRep.numPostings)
+      val zeroLen = runSeg.docs.filter($"docLen" === 0).select($"docId").as[Long].collect().toSet
+      assert(zeroLen == zeroToken, s"positional=$positional")
+      runSeg.unpersist(); rowSeg.unpersist()
+    }
+  }
+
   test("duplicate corpus rows dedup inside the id-assignment sort (no extra shuffle)") {
     import spark.implicits._
     val base = Synthesizer.tiny(spark)
