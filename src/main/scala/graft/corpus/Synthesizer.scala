@@ -18,7 +18,7 @@ import graft.model.CorpusRow
   * No external data; the word pool is built from a fixed 2k-root
   * vocabulary expanded into camelCase/snake_case compounds (exercises the
   * code-aware splitting of graft.tokenize.Tokenizer), drawn Zipf-ish so
-  * hot terms exist (exercises salted skew handling, SURVEY §2.3 I4).
+  * hot terms exist (exercises hot-term posting groups, SURVEY §2.3 I10).
   */
 object Synthesizer extends Serializable {
 

@@ -5,11 +5,9 @@ import java.nio.file.{Files, Path, Paths, StandardCopyOption}
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.build.{BuildParams, BuildReport, DocIds, Segment, SegmentBuilder}
-import graft.model._
+import graft.build.{BuildParams, BuildReport, Segment, SegmentBuilder}
 
 /** Size-tiered compaction over a stored multi-segment index — the LSM
   * background-maintenance loop (the policy family of Lucene's
@@ -253,89 +251,26 @@ object Compaction {
     groups.result()
   }
 
-  /** N-way log-structured merge — the group generalization of
-    * SegmentMerger.merge (which stays the proven 2-way cogroup path).
-    * One pass instead of a pairwise fold: a fold of k segments re-decodes
-    * and re-encodes every posting k−1 times; here the k decoded tf-row
-    * streams union into ONE dictionary rebuild and ONE encode under the
-    * merged global statistics. Requires pairwise-disjoint docId ranges
-    * (chunk and stream segments, by construction). Byte-identity to the
-    * from-scratch single-segment build is proven in CompactionSpec. */
+  /** N-way log-structured merge in one pass: a pairwise fold of k
+    * segments would re-decode and re-encode every posting k−1 times;
+    * here each segment's posting lists become term runs over its own
+    * docs and go through ONE dictionary rebuild and ONE encode under the
+    * merged global statistics (`SegmentMerger.rewrite`). Requires
+    * pairwise-disjoint docId ranges (chunk and stream segments, by
+    * construction). Byte-identity to the from-scratch single-segment
+    * build is proven in CompactionSpec. */
   def mergeAll(spark: SparkSession, segs: Seq[Segment],
                params: BuildParams): (Segment, BuildReport) = {
-    import spark.implicits._
     require(segs.nonEmpty)
-    val t0 = System.nanoTime()
-    segs.foreach { s =>
-      require(s.params.bucketSize == params.bucketSize,
-        "mergeAll requires a uniform bucketSize")
-      require(s.params.positional == params.positional,
-        "mergeAll requires uniform positional codec version")
-    }
-
     val docs = segs.map(_.docs).reduce(_ unionByName _)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (numDocs, totalTokens) = docs
-      .agg(count(lit(1)), coalesce(sum($"docLen".cast("long")), lit(0L)))
-      .as[(Long, Long)].head()
-    val avgdl = if (numDocs == 0) 1.0 else totalTokens.toDouble / numDocs
-
-    // merged dictionary: df/cf sum across segments (union + one agg —
-    // the N-way form of mergeDicts' 2-way cogroup), dense termIds
-    // reassigned in term sort order (I1 invariant)
-    val dictAgg = segs.map(_.dict.select($"term", $"df", $"cf"))
-      .reduce(_ unionByName _)
-      .groupBy($"term")
-      .agg(sum($"df").as("df"), sum($"cf").as("cf"))
-      .repartitionByRange(params.numPartitions, $"term")
-      .sortWithinPartitions($"term")
-      .as[(String, Long, Long)]
-    val (dict0, dictRanges, freeDictSort) = DocIds.denseIds(dictAgg) { (id, r) =>
-      DictEntry(id, r._1, r._2, r._3)
+    SegmentMerger.rewrite(spark, segs, docs,
+      segs.map(_.meta).reduce(_ unionByName _), params) {
+      val doclens = SegmentBuilder.doclenBlocks(docs, params.bucketSize)
+        .persist(StorageLevel.MEMORY_AND_DISK)
+      doclens.count()
+      doclens
     }
-    val dict = dict0.persist(StorageLevel.MEMORY_AND_DISK)
-    val numTerms = dictRanges.map(_.count).sum
-
-    // every segment's postings decode to (docId, term, tf, dl[, pos])
-    // through its OWN dict/docs, then re-encode once under merged stats
-    val tfAll = segs.map(tfRows(spark, _, params.positional))
-      .reduce(_ unionByName _)
-    val postings = SegmentBuilder
-      .encodePostings(spark, tfAll, dict, numDocs, avgdl, params,
-        numTermsHint = numTerms)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (numPostings, bytesCompressed) = postings
-      .agg(coalesce(sum($"numDocs".cast("long")), lit(0L)),
-        coalesce(sum(length($"bytes").cast("long")), lit(0L)))
-      .as[(Long, Long)].head()
-    freeDictSort()
-
-    val doclens = SegmentBuilder.doclenBlocks(docs, params.bucketSize)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    doclens.count()
-
-    val buildMillis = (System.nanoTime() - t0) / 1000000
-    val meta = segs.map(_.meta).reduce(_ unionByName _)
-      .withColumn("segId", lit(params.segId)).as[SegmentMeta]
-    val stats = CorpusStats(numDocs, avgdl, numTerms, numPostings)
-    val report = BuildReport(numDocs, numTerms, numPostings, totalTokens,
-      bytesCompressed, buildMillis)
-    (Segment(docs, dict, postings, doclens, stats, meta, params), report)
-  }
-
-  private def tfRows(spark: SparkSession, s: Segment, positional: Boolean) = {
-    import spark.implicits._
-    val decoded =
-      if (positional)
-        graft.search.ExactScorer.decodedPostingsPos(spark, s)
-          .toDF("termId", "docId", "tf", "pos")
-      else graft.search.ExactScorer.decodedPostings(spark, s)
-        .toDF("termId", "docId", "tf")
-    val posCols = if (positional) Seq($"pos") else Nil
-    decoded
-      .join(s.dict.select($"termId", $"term"), "termId")
-      .join(s.docs.select($"docId", $"docLen".as("dl")), "docId")
-      .select((Seq($"docId", $"term", $"tf", $"dl") ++ posCols): _*)
   }
 
   /** One compaction round under the crash protocol above. New segIds are

@@ -70,8 +70,7 @@ object IndexStorage {
       s"""{"numDocs":${st.numDocs},"avgDocLen":${st.avgDocLen},""" +
         s""""numTerms":${st.numTerms},"numPostings":${st.numPostings},""" +
         s""""bucketSize":${p.bucketSize},"segId":${p.segId},""" +
-        s""""numPartitions":${p.numPartitions},"saltThreshold":${p.saltThreshold},""" +
-        s""""numSalts":${p.numSalts},"docIdHwm":$hwm,""" +
+        s""""numPartitions":${p.numPartitions},"docIdHwm":$hwm,""" +
         s""""positional":${if (p.positional) 1 else 0}}""")
     // the old directory (if replacing — compaction) is removed only now,
     // AFTER every dataset materialized into tmp: the replacement segment
@@ -119,8 +118,6 @@ object IndexStorage {
     val params = BuildParams(
       numPartitions = num("numPartitions").toInt,
       bucketSize = num("bucketSize").toLong,
-      saltThreshold = num("saltThreshold").toLong,
-      numSalts = num("numSalts").toInt,
       segId = num("segId").toLong,
       positional = numOpt("positional", Some("0")).toInt == 1)
     Segment(

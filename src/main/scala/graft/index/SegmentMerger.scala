@@ -4,114 +4,109 @@ import org.apache.spark.sql.{Dataset, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.storage.StorageLevel
 
-import graft.build.{BuildParams, DocIds, Segment, SegmentBuilder}
+import graft.build.{BuildParams, BuildReport, Segment, SegmentBuilder}
+import graft.build.SegmentBuilder.{RunBuilder, TermRun}
+import graft.codec.PostingCodec
 import graft.model._
-import graft.search.ExactScorer
 
-/** Log-structured segment merge — SURVEY §2.3 I7, north-rule operator
-  * "log-structured segment merge expressed in Catalyst (sort-merge
-  * cogroup on term)".
+/** Log-structured segment rewrite — SURVEY §2.3 I7: merges
+  * (`Compaction.mergeAll`) and tombstone purges.
   *
   * Segments hold disjoint, ordered docId ranges (ChunkedIndexer), but a
-  * merged index needs GLOBAL statistics: df, idf, and avgdl all change,
-  * and the per-posting impacts baked into the block-max metadata with
-  * them. A merge therefore re-scores: the per-segment dictionaries are
-  * combined with a sort-merge cogroup on term (df/cf add), termIds are
-  * re-assigned densely over the merged vocabulary, and postings are
-  * decoded to (docId, term, tf, dl) rows and re-encoded through the
-  * builder's salted shuffle with the merged stats — the same rewrite an
-  * LSM compaction performs. Queries over a merged segment then prune
-  * with exactly-valid block maxima; for un-merged multi-segment reads use
-  * the exhaustive (unpruned) path, whose scores the stale bounds cannot
-  * corrupt.
+  * rewritten index needs GLOBAL statistics: df, idf, and avgdl all
+  * change, and the per-posting impacts baked into the block-max metadata
+  * with them. A rewrite therefore re-scores: every stored posting list
+  * becomes a term run over the live documents (`segmentRuns`), and the
+  * runs go through the builder's one posting writer
+  * (`SegmentBuilder.encodeRuns`) — the dictionary is rebuilt from them,
+  * termIds re-assigned densely over the surviving vocabulary, and every
+  * list re-packed under the new stats. Queries over a rewritten segment
+  * then prune with exactly-valid block maxima; for un-merged
+  * multi-segment reads use the exhaustive (unpruned) path, whose scores
+  * the stale bounds cannot corrupt.
   */
 object SegmentMerger {
 
-  /** Sort-merge cogroup of two dictionaries on term (df/cf summed).
-    * KeyValueGroupedDataset.cogroup plans as a Catalyst CoGroup over two
-    * sort-merged children. termIds re-assigned densely afterwards. */
-  def mergeDicts(spark: SparkSession, a: Dataset[DictEntry], b: Dataset[DictEntry],
-                 numPartitions: Int): Dataset[DictEntry] = {
+  /** Every stored posting list of `segs` as a term run over the `live`
+    * docs. A list is already the sorted run of one (bucket, term): it is
+    * joined to its own segment's dictionary on termId (one row per
+    * list), cogrouped by bucket with the live docs' (docId, docLen),
+    * decoded, and its live postings re-appended to a RunBuilder. A list
+    * with no live posting left emits no run, so a dead term drops out of
+    * the rebuilt dictionary. */
+  private def segmentRuns(spark: SparkSession, segs: Seq[Segment], live: Dataset[Doc],
+                          params: BuildParams): Dataset[TermRun] = {
     import spark.implicits._
-    val merged = a.groupByKey(_.term).cogroup(b.groupByKey(_.term)) { (term, xa, xb) =>
-      var df = 0L; var cf = 0L
-      xa.foreach { e => df += e.df; cf += e.cf }
-      xb.foreach { e => df += e.df; cf += e.cf }
-      Iterator.single((term, df, cf))
-    }
-    val sorted = merged.repartitionByRange(numPartitions, $"_1")
-      .sortWithinPartitions($"_1")
-    val (dict, _, free) = DocIds.denseIds(sorted) { (id, r) =>
-      DictEntry(id, r._1, r._2, r._3)
-    }
-    val out = dict.persist(StorageLevel.MEMORY_AND_DISK)
-    out.count()
-    free()
-    out
+    val bucketSize = params.bucketSize
+    val positional = params.positional
+    val lists = segs.map { s =>
+      SegmentBuilder.joinDict(s.postings.toDF(),
+        s.dict.select($"termId", $"term"), s.stats.numTerms, "termId")
+        .select($"term", struct($"bucket", $"termId", $"numDocs", $"lastDocIds",
+          $"maxImpacts", $"offsets", $"bytes").as("list"))
+    }.reduce(_ unionByName _).as[(String, PostingList)]
+    val lens = live.select($"docId", $"docLen").as[(Long, Int)]
+    lists.groupByKey(_._2.bucket)
+      .cogroup(lens.groupByKey(d => (d._1 / bucketSize).toInt)) { (bucket, ls, ds) =>
+        val docs = ds.toArray
+        if (docs.isEmpty) Iterator.empty[TermRun]
+        else {
+          // dl(docId - first), -1 where the doc is not live; ≤ bucketSize
+          val first = docs.iterator.map(_._1).min
+          val dl = Array.fill((docs.iterator.map(_._1).max - first + 1).toInt)(-1)
+          docs.foreach { case (id, len) => dl((id - first).toInt) = len }
+          ls.flatMap { case (term, pl) =>
+            val c = new PostingCodec.Cursor(pl.numDocs, pl.lastDocIds,
+              pl.maxImpacts, pl.offsets, pl.bytes, positional)
+            val run = new RunBuilder
+            var i = 0
+            while (i < pl.numDocs) {
+              val off = c.docId - first
+              if (off >= 0 && off < dl.length && dl(off.toInt) >= 0)
+                run.add(c.docId, c.tf, dl(off.toInt), if (positional) c.positions() else null)
+              c.next()
+              i += 1
+            }
+            if (run.n == 0) None else Some(TermRun(bucket, term, run.n, run.cf, run.bytes()))
+          }
+        }
+      }
   }
 
-  /** Merge two segments with disjoint docId ranges into one. */
-  def merge(spark: SparkSession, a: Segment, b: Segment,
-            params: BuildParams): (Segment, graft.build.BuildReport) = {
+  /** Rewrite `segs` down to the (persisted) `docs`: their postings
+    * re-encoded under the statistics of `docs`, with `doclens` computed
+    * once the postings are written and `meta` re-stamped with
+    * params.segId. */
+  private[index] def rewrite(spark: SparkSession, segs: Seq[Segment],
+                             docs: Dataset[Doc], meta: Dataset[SegmentMeta],
+                             params: BuildParams)
+                            (doclens: => Dataset[DocLenBlock]): (Segment, BuildReport) = {
     import spark.implicits._
     val t0 = System.nanoTime()
-    require(a.params.bucketSize == params.bucketSize &&
-      b.params.bucketSize == params.bucketSize,
-      "merge requires a uniform bucketSize")
-    require(a.params.positional == params.positional &&
-      b.params.positional == params.positional,
-      "merge requires uniform positional codec version")
-
-    val docs = a.docs.unionByName(b.docs).persist(StorageLevel.MEMORY_AND_DISK)
+    segs.foreach { s =>
+      require(s.params.bucketSize == params.bucketSize,
+        "segment rewrites require a uniform bucketSize")
+      require(s.params.positional == params.positional,
+        "segment rewrites require a uniform positional codec version")
+    }
     val (numDocs, totalTokens) = docs
       .agg(count(lit(1)), coalesce(sum($"docLen".cast("long")), lit(0L)))
       .as[(Long, Long)].head()
     val avgdl = if (numDocs == 0) 1.0 else totalTokens.toDouble / numDocs
-
-    val dict = mergeDicts(spark, a.dict, b.dict, params.numPartitions)
-    val numTerms = dict.count()
-
-    // decode each side's postings back to (docId, term, tf, dl) rows and
-    // re-encode under the merged dict/stats (term strings resolved via
-    // each side's own dictionary; dl via each side's docs)
-    def tfRows(s: Segment) = {
-      val decoded =
-        if (params.positional)
-          ExactScorer.decodedPostingsPos(spark, s).toDF("termId", "docId", "tf", "pos")
-        else ExactScorer.decodedPostings(spark, s).toDF("termId", "docId", "tf")
-      val posCols = if (params.positional) Seq($"pos") else Nil
-      decoded
-        .join(s.dict.select($"termId", $"term"), "termId")
-        .join(s.docs.select($"docId", $"docLen".as("dl")), "docId")
-        .select((Seq($"docId", $"term", $"tf", $"dl") ++ posCols): _*)
-    }
-    val tfAll = tfRows(a).unionByName(tfRows(b))
-    val postings = SegmentBuilder
-      .encodePostings(spark, tfAll, dict, numDocs, avgdl, params)
+    val runs = segmentRuns(spark, segs, docs, params)
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (numPostings, bytesCompressed) = postings
-      .agg(coalesce(sum($"numDocs".cast("long")), lit(0L)),
-        coalesce(sum(length($"bytes").cast("long")), lit(0L)))
-      .as[(Long, Long)].head()
-
-    val doclens = SegmentBuilder.doclenBlocks(docs, params.bucketSize)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    doclens.count()
-
+    val enc = SegmentBuilder.encodeRuns(spark, runs, numDocs, avgdl, params)
+    runs.unpersist()
+    val blocks = doclens
     val buildMillis = (System.nanoTime() - t0) / 1000000
-    val meta = a.meta.unionByName(b.meta)
-      .withColumn("segId", lit(params.segId)).as[SegmentMeta]
-    val stats = CorpusStats(numDocs, avgdl, numTerms, numPostings)
-    val report = graft.build.BuildReport(numDocs, numTerms, numPostings,
-      totalTokens, bytesCompressed, buildMillis)
-    (Segment(docs, dict, postings, doclens, stats, meta, params), report)
+    enc.segment(docs, blocks,
+      meta.withColumn("segId", lit(params.segId)).as[SegmentMeta],
+      numDocs, avgdl, totalTokens, params, buildMillis)
   }
 
   /** Compaction-time tombstone PURGE — the other half of LSM deletes
     * (query-time filtering is Searcher.deletedHits). Rewrites one
-    * segment without the deleted documents: postings are decoded,
-    * inner-joined to the surviving docmap (which both filters deletes
-    * and supplies doc lengths), and re-encoded under RECOMPUTED global
+    * segment without the deleted documents under RECOMPUTED global
     * statistics (df/cf per term, N, avgdl — and with them every baked
     * impact and block maximum); terms whose postings all died drop out
     * of the dictionary and termIds re-densify in term order (I1
@@ -121,68 +116,15 @@ object SegmentMerger {
     * in a full rebuild, not per compaction).
     *
     * Scale shape: one anti-join of the docmap against the delete set
-    * (broadcast when small — the common case), one decode→join→encode
-    * pass over the postings; no driver collect of anything corpus-sized. */
+    * (broadcast when small — the common case), then the rewrite's
+    * per-bucket cogroup of posting lists with the surviving doc lengths;
+    * no driver collect of anything corpus-sized. */
   def purge(spark: SparkSession, s: Segment, deleted: Dataset[Long],
-            params: BuildParams): (Segment, graft.build.BuildReport) = {
+            params: BuildParams): (Segment, BuildReport) = {
     import spark.implicits._
-    val t0 = System.nanoTime()
-    require(s.params.bucketSize == params.bucketSize,
-      "purge requires the segment's bucketSize")
-    require(s.params.positional == params.positional,
-      "purge requires the segment's positional codec version")
-
-    val del = deleted.toDF("docId")
-    val docs = s.docs.join(del, Seq("docId"), "left_anti").as[Doc]
+    val docs = s.docs.join(deleted.toDF("docId"), Seq("docId"), "left_anti").as[Doc]
       .persist(StorageLevel.MEMORY_AND_DISK)
-    val (numDocs, totalTokens) = docs
-      .agg(count(lit(1)), coalesce(sum($"docLen".cast("long")), lit(0L)))
-      .as[(Long, Long)].head()
-    val avgdl = if (numDocs == 0) 1.0 else totalTokens.toDouble / numDocs
-
-    // surviving (docId, term, tf, dl[, pos]) rows: the inner join with
-    // the surviving docmap IS the delete filter (and the dl source)
-    val decoded =
-      if (params.positional)
-        ExactScorer.decodedPostingsPos(spark, s).toDF("termId", "docId", "tf", "pos")
-      else ExactScorer.decodedPostings(spark, s).toDF("termId", "docId", "tf")
-    val posCols = if (params.positional) Seq($"pos") else Nil
-    val tfAll = decoded
-      .join(s.dict.select($"termId", $"term"), "termId")
-      .join(docs.select($"docId", $"docLen".as("dl")), "docId")
-      .select((Seq($"docId", $"term", $"tf", $"dl") ++ posCols): _*)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-
-    // post-purge dictionary: df/cf recomputed from survivors, dead terms
-    // dropped, dense termIds reassigned in term sort order
-    val grouped = tfAll.groupBy($"term")
-      .agg(count(lit(1)).cast("long").as("df"), sum($"tf".cast("long")).as("cf"))
-      .as[(String, Long, Long)]
-    val sorted = grouped.repartitionByRange(params.numPartitions, $"term")
-      .sortWithinPartitions($"term")
-    val (dict0, _, free) = DocIds.denseIds(sorted) { (id, r) =>
-      DictEntry(id, r._1, r._2, r._3)
-    }
-    val dict = dict0.persist(StorageLevel.MEMORY_AND_DISK)
-    val numTerms = dict.count()
-    free()
-
-    val postings = SegmentBuilder
-      .encodePostings(spark, tfAll, dict, numDocs, avgdl, params,
-        numTermsHint = numTerms)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val (numPostings, bytesCompressed) = postings
-      .agg(coalesce(sum($"numDocs".cast("long")), lit(0L)),
-        coalesce(sum(length($"bytes").cast("long")), lit(0L)))
-      .as[(Long, Long)].head()
-    tfAll.unpersist()
-
-    val buildMillis = (System.nanoTime() - t0) / 1000000
-    val meta = s.meta.withColumn("segId", lit(params.segId)).as[SegmentMeta]
-    val stats = CorpusStats(numDocs, avgdl, numTerms, numPostings)
-    val report = graft.build.BuildReport(numDocs, numTerms, numPostings,
-      totalTokens, bytesCompressed, buildMillis)
-    (Segment(docs, dict, postings, s.doclens, stats, meta, params), report)
+    rewrite(spark, Seq(s), docs, s.meta, params)(s.doclens)
   }
 
   /** Apply the index's persisted tombstone log to one committed segment

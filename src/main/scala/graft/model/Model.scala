@@ -38,32 +38,8 @@ final case class Doc(
     sha256: String,
     docLen: Int)
 
-/** Row-path build intermediate (SegmentBuilder's `mapSideRuns = false`
-  * builds, dictionaries over `DictBroadcastLimit`; the default run path
-  * never materializes it): per-(doc, term) frequency, with the doc's
-  * length denormalized on so BM25 impacts are computable without another
-  * join (SURVEY §3 EP1 — computing tf inside the tokenize flatMap removes
-  * the (docId,term) shuffle entirely: one document's tokens live in one
-  * row). */
-final case class TermFreq(docId: Long, term: String, tf: Int, dl: Int)
-
-/** Row-path positional build intermediate: TermFreq + the term's
-  * occurrence indices over the document's filtered token stream
-  * (ascending, length == tf). Kept as a separate shape so non-positional
-  * row builds carry no per-row array slot. */
-final case class TermFreqPos(docId: Long, term: String, tf: Int, dl: Int,
-                             pos: Array[Int])
-
 /** Dictionary entry; termIds dense, assigned in term sort order. */
 final case class DictEntry(termId: Long, term: String, df: Long, cf: Long)
-
-/** Pre-encode posting row (build-time intermediate). */
-final case class Posting(
-    bucket: Int,
-    termId: Long,
-    docId: Long,
-    tf: Int,
-    impact: Double)
 
 /** Block-compressed posting list for one (bucket, termId) —
   * delta+VByte payload in `bytes`, parallel block arrays = block-max

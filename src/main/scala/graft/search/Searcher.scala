@@ -731,12 +731,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
             .map(pl => new Wand.TermCursor(tid, 0.0, pl, positional))
             .orNull)
           if (conj && slots.exists(_ == null)) (name, 0L)
-          else {
-            val eval: Array[Boolean] => Boolean =
-              if (conj) p => { var i = 0; while (i < p.length && p(i)) i += 1; i == p.length }
-              else p => { var i = 0; while (i < p.length && !p(i)) i += 1; i < p.length }
-            (name, Wand.countMatches(slots, eval, Long.MaxValue))
-          }
+          else (name, Wand.countMatches(slots, p => Searcher.present(p, conj), Long.MaxValue))
         }
       }
     }
@@ -810,11 +805,6 @@ final class Searcher(spark: SparkSession, segment: Segment,
 
     def walk(plIt: Iterator[PostingList]): Iterator[(String, Long)] = {
       val plByTid = plIt.map(pl => pl.termId -> pl).toMap
-      def part(p: Array[Boolean], conj: Boolean, pos: Array[Int]): Boolean = {
-        var i = 0
-        if (conj) { while (i < pos.length && p(pos(i))) i += 1; i == pos.length }
-        else { while (i < pos.length && !p(pos(i))) i += 1; i < pos.length }
-      }
       plansL.iterator.map { case (key, tids, ca, pa, cb, pb) =>
         val slots = tids.map(tid => plByTid.get(tid)
           .map(pl => new Wand.TermCursor(tid, 0.0, pl, positional))
@@ -825,8 +815,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
         if (missing(ca, pa) || (pb != null && missing(cb, pb))) (key, 0L)
         else {
           val eval: Array[Boolean] => Boolean =
-            if (pb == null) p => part(p, ca, pa)
-            else p => part(p, ca, pa) && part(p, cb, pb)
+            if (pb == null) p => Searcher.present(p, ca, pa)
+            else p => Searcher.present(p, ca, pa) && Searcher.present(p, cb, pb)
           (key, Wand.countMatches(slots, eval, Long.MaxValue))
         }
       }
@@ -1519,12 +1509,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
         val slots = tids.map(tid => plByTid.get(tid)
           .map(pl => new Wand.TermCursor(tid, 0.0, pl, positional)).orNull)
         if (conj && slots.exists(_ == null)) Iterator.empty[Long]
-        else {
-          val eval: Array[Boolean] => Boolean =
-            if (conj) p => { var i = 0; while (i < p.length && p(i)) i += 1; i == p.length }
-            else p => { var i = 0; while (i < p.length && !p(i)) i += 1; i < p.length }
-          Wand.firstK(slots, eval, kL).iterator
-        }
+        else Wand.firstK(slots, p => Searcher.present(p, conj), kL).iterator
       }
       .toDF("docId")
       .orderBy($"docId".asc).limit(k)
@@ -1687,6 +1672,16 @@ final class Searcher(spark: SparkSession, segment: Segment,
 }
 
 object Searcher {
+  /** The counting walks' presence test: all (`conj`) or any of the slots
+    * at `idx` — every slot when `idx` is null — matched the candidate. */
+  private[search] def present(p: Array[Boolean], conj: Boolean, idx: Array[Int] = null): Boolean = {
+    val n = if (idx == null) p.length else idx.length
+    @inline def at(i: Int): Boolean = p(if (idx == null) i else idx(i))
+    var i = 0
+    if (conj) { while (i < n && at(i)) i += 1; i == n }
+    else { while (i < n && !at(i)) i += 1; i < n }
+  }
+
   /** Deterministic dictionary-expansion cap shared by every expansion
     * kind (prefix/regex/fuzzy) and every tier — ONE constant, so the
     * serving tier's bit-parity with the relational tier cannot drift
@@ -1762,25 +1757,6 @@ object ExactScorer {
       val out = new Array[(Long, Long, Int)](pl.numDocs)
       var i = 0
       while (i < pl.numDocs) { out(i) = (pl.termId, c.docId, c.tf); c.next(); i += 1 }
-      out.toSeq
-    }
-  }
-
-  /** Decode positional posting lists back to (termId, docId, tf,
-    * positions) rows — the merge path for positional segments. */
-  def decodedPostingsPos(spark: SparkSession, segment: Segment)
-      : Dataset[(Long, Long, Int, Array[Int])] = {
-    import spark.implicits._
-    require(segment.params.positional, "segment is not positional")
-    segment.postings.as[PostingList].flatMap { pl =>
-      val c = new graft.codec.PostingCodec.Cursor(
-        pl.numDocs, pl.lastDocIds, pl.maxImpacts, pl.offsets, pl.bytes,
-        positional = true)
-      val out = new Array[(Long, Long, Int, Array[Int])](pl.numDocs)
-      var i = 0
-      while (i < pl.numDocs) {
-        out(i) = (pl.termId, c.docId, c.tf, c.positions()); c.next(); i += 1
-      }
       out.toSeq
     }
   }

@@ -128,6 +128,24 @@ class DeleteSpec extends SparkSpec {
     purged.unpersist()
   }
 
+  test("positional purge postings equal the reference index over the survivors") {
+    import spark.implicits._
+    val dels = deletedSet
+    val (purged, _) = SegmentMerger.purge(spark, seg, deletedDs, seg.params)
+    // survivors keep their docIds: the reference indexes them at those ids
+    val survivors = seg.docs.join(Synthesizer.corpus(spark, 400L), Seq("repo", "path", "commit"))
+      .select($"docId", $"content").as[(Long, String)].collect().toSeq
+      .filterNot(r => dels(r._1))
+    val ref = new ReferenceIndex(survivors, seg.params.bucketSize, positional = true)
+    def fingerprint(pls: Seq[graft.model.PostingList]) =
+      pls.map(pl => (pl.bucket, pl.termId, pl.numDocs, pl.lastDocIds.toSeq,
+        pl.maxImpacts.toSeq, pl.offsets.toSeq, pl.bytes.toSeq)).sortBy(r => (r._1, r._2))
+    assert(fingerprint(purged.postings.collect().toSeq) == fingerprint(ref.postings))
+    assert(purged.dict.collect().sortBy(_.termId).toSeq == ref.dict)
+    assert(purged.stats.numDocs == ref.numDocs && purged.stats.avgDocLen == ref.avgdl)
+    purged.unpersist()
+  }
+
   test("serving tier deleted hits are bit-identical to the relational path") {
     val serving = new graft.search.ServingSearcher(spark, seg)
     val terms = seg.dict.orderBy(desc("df")).limit(2).collect().map(_.term)

@@ -9,8 +9,9 @@ import graft.search.{ExactScorer, Searcher}
 import graft.tokenize.Tokenizer
 
 /** End-to-end single-segment build + query — SURVEY §5.2/§5.3:
-  * invariants, rank-identity of the WAND path vs the exact scorer, salted
-  * vs unsalted equivalence, determinism across parallelism. */
+  * invariants, rank-identity of the WAND path vs the exact scorer,
+  * byte-identity to a driver-side reference index, determinism across
+  * parallelism. */
 class IndexBuildSpec extends SparkSpec {
 
   // small bucketSize so the tiny corpus spans several buckets
@@ -129,75 +130,86 @@ class IndexBuildSpec extends SparkSpec {
     assert(got == want)
   }
 
-  private def fingerprint(s: Segment): Seq[(Int, Long, Int, String, Seq[Float])] = {
-    import spark.implicits._
-    s.postings.map(pl => (pl.bucket, pl.termId, pl.numDocs,
+  private def fingerprint(pls: Seq[PostingList]): Seq[(Int, Long, Int, String, Seq[Float])] =
+    pls.map(pl => (pl.bucket, pl.termId, pl.numDocs,
       java.util.Base64.getEncoder.encodeToString(
         java.security.MessageDigest.getInstance("SHA-256").digest(pl.bytes)),
       pl.maxImpacts.toSeq))
-      .collect().sortBy(r => (r._1, r._2)).toSeq
+      .sortBy(r => (r._1, r._2))
+
+  private def fingerprint(s: Segment): Seq[(Int, Long, Int, String, Seq[Float])] =
+    fingerprint(s.postings.collect().toSeq)
+
+  /** The reference index over the tiny corpus, numbered by key order. */
+  private def tinyReference(positional: Boolean): ReferenceIndex = {
+    val rows = ReferenceIndex.numbered(Synthesizer.tiny(spark).collect().toSeq)
+    new ReferenceIndex(rows.map { case (id, r) => (id, r.content) }, params.bucketSize, positional)
   }
 
-  test("salted row build (all terms hot) is byte-identical to the run build") {
-    val corpus = Synthesizer.tiny(spark)
-    val (segSalted, _) = SegmentBuilder.build(spark, DatasetCorpusSource(corpus),
-      params.copy(saltThreshold = 2, numSalts = 4, mapSideRuns = false))
-    assert(fingerprint(segSalted) == fingerprint(seg))
-    segSalted.unpersist()
+  test("run build is byte-identical to the reference index (incl. block maxima)") {
+    assert(fingerprint(seg) == fingerprint(tinyReference(positional = false).postings))
   }
 
-  test("cold row build is byte-identical to the run build (incl. block maxima)") {
-    val corpus = Synthesizer.tiny(spark)
-    val (segRow, _) = SegmentBuilder.build(spark, DatasetCorpusSource(corpus),
-      params.copy(mapSideRuns = false))
-    assert(fingerprint(segRow) == fingerprint(seg))
-    segRow.unpersist()
-  }
-
-  test("positional run build is byte-identical to the positional row build") {
+  test("positional run build is byte-identical to the positional reference index") {
     val corpus = Synthesizer.tiny(spark)
     val (segRuns, _) = SegmentBuilder.build(spark, DatasetCorpusSource(corpus),
       params.copy(positional = true))
-    val (segRow, _) = SegmentBuilder.build(spark, DatasetCorpusSource(corpus),
-      params.copy(positional = true, mapSideRuns = false))
-    assert(fingerprint(segRuns) == fingerprint(segRow))
-    segRuns.unpersist(); segRow.unpersist()
+    assert(fingerprint(segRuns) == fingerprint(tinyReference(positional = true).postings))
+    segRuns.unpersist()
   }
 
-  test("run build equals the row build across many bucket flushes and zero-token docs") {
+  test("run build equals the reference index over many flushes and zero-token docs") {
     import spark.implicits._
     // paths sort in i order, so docId == i; bucketSize 8 puts docs 16 and
     // 40 (zero-token) and 8, 24, ... (with tokens) on a bucket's first id
     val bucketSize = 8L
     val zeroToken = Set(16L, 40L) ++ (0L until 150L).filter(_ % 11 == 5)
     val vocab = Seq("alpha", "beta", "gamma", "parseHttp", "XMLReader", "request2", "hot")
-    val corpus = (0 until 150).map { i =>
+    val rows = (0 until 150).map { i =>
       val content =
         if (!zeroToken(i.toLong)) (0 until 3 + i % 7).map(j => vocab((i * 3 + j * j) % vocab.size))
           .mkString(" ") + s" uniq$i hot"
         else if (i % 2 == 0) "--- !!! ;; {}"
         else "123 4567 89 x"
       CorpusRow("r", f"src/f$i%04d.scala", "c1", "scala", content)
-    }.toDS()
-    def doclens(s: Segment): Seq[(Int, Long, Seq[Int])] =
-      s.doclens.collect().map(b => (b.bucket, b.firstDocId, b.lens.toSeq)).sortBy(_._1).toSeq
+    }
+    val corpus = rows.toDS()
+    def doclens(blocks: Seq[DocLenBlock]): Seq[(Int, Long, Seq[Int])] =
+      blocks.map(b => (b.bucket, b.firstDocId, b.lens.toSeq)).sortBy(_._1)
     for (positional <- Seq(false, true)) {
       val p = BuildParams(numPartitions = 4, bucketSize = bucketSize, positional = positional)
       val (runSeg, runRep) = SegmentBuilder.build(spark, DatasetCorpusSource(corpus), p)
-      val (rowSeg, rowRep) = SegmentBuilder.build(spark, DatasetCorpusSource(corpus),
-        p.copy(mapSideRuns = false))
+      val ref = new ReferenceIndex(rows.indices.map(i => (i.toLong, rows(i).content)),
+        bucketSize, positional)
       val parts = runSeg.meta.collect().filter(_.partId >= 0)
       assert(parts.length == 4 && parts.forall { m =>
         (m.firstDocId + m.numDocs - 1) / bucketSize - m.firstDocId / bucketSize + 1 >= 3
       }, s"every id partition must span >= 3 buckets: ${parts.map(m => (m.firstDocId, m.numDocs)).toSeq}")
-      assert(fingerprint(runSeg) == fingerprint(rowSeg), s"positional=$positional")
-      assert(runSeg.dict.collect().sortBy(_.termId).toSeq == rowSeg.dict.collect().sortBy(_.termId).toSeq)
-      assert(runSeg.docs.collect().sortBy(_.docId).toSeq == rowSeg.docs.collect().sortBy(_.docId).toSeq)
-      assert(doclens(runSeg) == doclens(rowSeg))
-      assert(runRep.totalTokens == rowRep.totalTokens && runRep.numPostings == rowRep.numPostings)
+      assert(fingerprint(runSeg) == fingerprint(ref.postings), s"positional=$positional")
+      assert(runSeg.dict.collect().sortBy(_.termId).toSeq == ref.dict)
+      assert(runSeg.docs.collect().sortBy(_.docId).toSeq ==
+        rows.indices.map(i => ReferenceIndex.doc(i.toLong, rows(i), ref.docLens(i.toLong))))
+      assert(doclens(runSeg.doclens.collect().toSeq) == doclens(ref.doclens))
+      assert(runRep.totalTokens == ref.totalTokens && runRep.numPostings == ref.numPostings)
       val zeroLen = runSeg.docs.filter($"docLen" === 0).select($"docId").as[Long].collect().toSet
       assert(zeroLen == zeroToken, s"positional=$positional")
-      runSeg.unpersist(); rowSeg.unpersist()
+      runSeg.unpersist()
+    }
+  }
+
+  test("a key missing from the dictionary fails the dictionary join loudly") {
+    import spark.implicits._
+    val dict = Seq(("alpha", 0L), ("beta", 1L)).toDF("term", "termId")
+    val rows = Seq(("alpha", 7), ("gamma", 8)).toDF("term", "n")
+    // broadcast (small vocabulary) and sort-merge (numTerms above the limit)
+    for (numTerms <- Seq(2L, SegmentBuilder.DictBroadcastLimit + 1)) {
+      val joined = SegmentBuilder.joinDict(rows, dict, numTerms, "term")
+      val err = intercept[Exception](joined.collect())
+      assert(Iterator.iterate[Throwable](err)(_.getCause).takeWhile(_ != null)
+        .exists(e => String.valueOf(e.getMessage).contains("term not in dictionary: 'gamma'")),
+        s"numTerms=$numTerms: $err")
+      assert(SegmentBuilder.joinDict(rows.filter($"term" === "alpha"), dict, numTerms, "term")
+        .select($"termId").as[Long].collect().toSeq == Seq(0L))
     }
   }
 

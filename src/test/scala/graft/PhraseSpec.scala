@@ -2,7 +2,7 @@ package graft
 
 import graft.build.{BuildParams, SegmentBuilder}
 import graft.corpus.{DatasetCorpusSource, Synthesizer}
-import graft.index.SegmentMerger
+import graft.index.Compaction
 import graft.model.BM25
 import graft.search.{QueryParser, Searcher}
 import graft.tokenize.Tokenizer
@@ -200,7 +200,7 @@ class PhraseSpec extends SparkSpec {
         numbered.filter(r => r.docId >= half),
         Array(graft.build.PartRange(1, half, 300L - half)), 0L, Array.empty,
         params.copy(segId = 1))
-      val (merged, _) = SegmentMerger.merge(spark, segA, segB, params.copy(segId = 2))
+      val (merged, _) = Compaction.mergeAll(spark, Seq(segA, segB), params.copy(segId = 2))
       val phrase = presentPhrases.head
       val text = "\"" + phrase.mkString(" ") + "\""
       val fromMerged = new Searcher(spark, merged).hits("PHRASE", text, 1000)

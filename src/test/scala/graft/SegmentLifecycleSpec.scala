@@ -6,7 +6,7 @@ import org.apache.spark.sql.functions._
 
 import graft.build.{BuildParams, Segment, SegmentBuilder}
 import graft.corpus.{DatasetCorpusSource, Synthesizer}
-import graft.index.{ChunkedIndexer, IndexStorage, SegmentMerger}
+import graft.index.{ChunkedIndexer, Compaction, IndexStorage}
 import graft.search.Searcher
 
 /** Storage round-trip, chunked resume, and log-structured merge —
@@ -44,6 +44,20 @@ class SegmentLifecycleSpec extends SparkSpec {
     assert(a == b && a.nonEmpty)
   }
 
+  test("a stats.json with the legacy salting keys still reads") {
+    val dir = Files.createTempDirectory("graft-legacy").toString
+    val seg = IndexStorage.write(full, dir)
+    val stats = seg.resolve("stats.json")
+    val json = Files.readString(stats)
+    assert(!json.contains("saltThreshold") && !json.contains("numSalts"))
+    Files.writeString(stats, json.replace(""""docIdHwm":""",
+      """"saltThreshold":1048576,"numSalts":16,"docIdHwm":"""))
+    val loaded = IndexStorage.read(spark, seg.toString)
+    assert(loaded.stats == full.stats)
+    assert(loaded.params == full.params)
+    assert(fingerprint(loaded) == fingerprint(full))
+  }
+
   test("chunked build resumes: only missing chunks rebuilt, artifacts byte-identical") {
     val dir = Files.createTempDirectory("graft-chunked").toString
     val src = DatasetCorpusSource(Synthesizer.tiny(spark))
@@ -72,7 +86,7 @@ class SegmentLifecycleSpec extends SparkSpec {
     assert(dirs.size == 2)
     val segA = IndexStorage.read(spark, dirs(0))
     val segB = IndexStorage.read(spark, dirs(1))
-    val (merged, _) = SegmentMerger.merge(spark, segA, segB,
+    val (merged, _) = Compaction.mergeAll(spark, Seq(segA, segB),
       params.copy(bucketSize = 100, segId = 99))
 
     val mono = SegmentBuilder.build(spark, src, params.copy(bucketSize = 100))._1
