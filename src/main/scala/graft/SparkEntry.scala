@@ -278,7 +278,8 @@ object SparkEntry {
     * stream (exactly the engine's position space), consecutive-position
     * self-joins select the phrase docs, then the standard BM25 CTEs
     * score the phrase's distinct terms — identical to the engine's
-    * phrase scoring contract (Wand.topKPhrase). */
+    * phrase scoring contract (Wand's conjunction walk: BM25 over the
+    * distinct terms). */
   private def phraseSql(terms: Seq[String], k: Int): String = {
     val joins = (1 until terms.length).map(i =>
       s"JOIN tokp a$i ON a$i.doc_id = a0.doc_id AND a$i.pos = a0.pos + $i").mkString("\n  ")
@@ -345,7 +346,7 @@ object SparkEntry {
   /** Nested-boolean twin: presence pivot per candidate term, the WHERE
     * clause mirrors the query's paren/precedence structure, and matching
     * docs score standard BM25 over their PRESENT candidate terms —
-    * exactly Wand.topKBool's contract. */
+    * exactly the contract of Wand's union walk under a BOOL plan. */
   private def boolSql(terms: Seq[String], whereClause: String, k: Int): String = {
     val inList = terms.map(t => s"'$t'").mkString(", ")
     val pivots = terms.map(t =>

@@ -1466,8 +1466,9 @@ object DocsIndex {
     * (repo, path, commit) range sort then IS the static-field sort).
     * Sorted-by-signal queries early-terminate: the first k matches of
     * a docId-ordered walk are the answer, and postings past the k-th
-    * match are never decoded (Searcher.earlyHits / Wand.firstK). Built
-    * once per sfDir; Bench bills it as `sorted_build`. */
+    * match are never decoded (Searcher.earlyHits / Wand.firstK, the
+    * union walk's first-k mode). Built once per sfDir; Bench bills it
+    * as `sorted_build`. */
   private val sortedIdxCache = TrieMap.empty[String, (Segment, Searcher)]
 
   private def sortedIndex(spark: SparkSession, sfDir: String): (Segment, Searcher) =

@@ -680,7 +680,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
     *
     * Same execution regime as [[msmHits]]: exhaustive document-at-a-time
     * walk per bucket with termId pushdown + bucket pruning; only the
-    * per-doc combiner differs (Wand.topKDisMax). */
+    * per-doc combiner differs (Wand's union walk under `DisMax`). */
   def disMaxHits(text: String, tie: Double, k: Int, qid: Long = 0L): Dataset[Hit] = {
     require(tie >= 0.0 && tie <= 1.0, s"tie must be in [0, 1], got $tie")
     val entries = dictLookup(QueryParser.termsFor("OR", text).distinct)
@@ -704,7 +704,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
     require(queries.map(_._1).distinct.size == queries.size,
       "filter names must be unique")
     val allowed = Set("FREE", "OR", "AND", "PREFIX", "REGEX", "WILD")
-    val plans: Array[(String, Array[Long], Boolean, Int)] =
+    val plans: Array[(String, Array[Long], Boolean)] =
       queries.iterator.map { case (name, kind, text) =>
         require(allowed.contains(kind),
           s"matchCountsBatch supports ${allowed.mkString("/")}, got $kind")
@@ -712,8 +712,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
         val entries = entriesFor(kind, text)
         val conj = kind == "AND"
         if (entries.isEmpty || (conj && entries.length < terms.distinct.length))
-          (name, Array.empty[Long], conj, terms.distinct.length)
-        else (name, entries.map(_.termId).sorted, conj, entries.length)
+          (name, Array.empty[Long], conj)
+        else (name, entries.map(_.termId).sorted, conj)
       }.toArray
     val unionTids = plans.flatMap(_._2).distinct.sorted
     if (unionTids.isEmpty) return plans.map(p => p._1 -> 0L).toMap
@@ -724,15 +724,11 @@ final class Searcher(spark: SparkSession, segment: Segment,
 
     def walk(plIt: Iterator[PostingList]): Iterator[(String, Long)] = {
       val plByTid = plIt.map(pl => pl.termId -> pl).toMap
-      plansL.iterator.map { case (name, tids, conj, nTerms) =>
-        if (tids.isEmpty) (name, 0L)
-        else {
-          val slots = tids.map(tid => plByTid.get(tid)
-            .map(pl => new Wand.TermCursor(tid, 0.0, pl, positional))
-            .orNull)
-          if (conj && slots.exists(_ == null)) (name, 0L)
-          else (name, Wand.countMatches(slots, p => Searcher.present(p, conj), Long.MaxValue))
-        }
+      plansL.iterator.map { case (name, tids, conj) =>
+        val slots =
+          if (tids.isEmpty) null else Searcher.countSlots(plByTid, tids, positional, (conj, null))
+        if (slots == null) (name, 0L)
+        else (name, Wand.countMatches(slots, p => Searcher.present(p, conj), Long.MaxValue))
       }
     }
     pls.groupByKey(_.bucket)
@@ -806,13 +802,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
     def walk(plIt: Iterator[PostingList]): Iterator[(String, Long)] = {
       val plByTid = plIt.map(pl => pl.termId -> pl).toMap
       plansL.iterator.map { case (key, tids, ca, pa, cb, pb) =>
-        val slots = tids.map(tid => plByTid.get(tid)
-          .map(pl => new Wand.TermCursor(tid, 0.0, pl, positional))
-          .orNull)
-        // a conjunctive part with a bucket-missing term matches nothing
-        def missing(conj: Boolean, pos: Array[Int]): Boolean =
-          conj && pos.exists(x => slots(x) == null)
-        if (missing(ca, pa) || (pb != null && missing(cb, pb))) (key, 0L)
+        val slots = Searcher.countSlots(plByTid, tids, positional, (ca, pa), (cb, pb))
+        if (slots == null) (key, 0L)
         else {
           val eval: Array[Boolean] => Boolean =
             if (pb == null) p => Searcher.present(p, ca, pa)
@@ -860,9 +851,9 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * out-of-vocabulary EXCLUDE degenerates to the plain term query (by
     * definition nothing is ever excluded); an OOV INCLUDE is empty.
     * Scoring is BM25 of the include term only (the NEAR/PHRASE
-    * filter-doesn't-rescale rule) — see [[Wand.topKSpanNot]] for the
-    * walk (include-driven, exclude skip-scanned, two-pointer position
-    * merge). */
+    * filter-doesn't-rescale rule) — Wand's conjunction walk over the
+    * one include slot, the exclude skip-scanned to each include doc and
+    * checked by a two-pointer position merge. */
   def spanNotHits(incText: String, excText: String, window: Int, k: Int,
                   qid: Long = 0L): Dataset[Hit] =
     run(QueryPlan.spanNot(segment, dictLookup, incText, excText, window, k), qid)
@@ -876,7 +867,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * Matching rule (pinned, shared with the SQL twin): a doc matches
     * iff some start occurrence's GREEDY ordered chain fits the gap
     * budget and avoids the filter; greedy is optimal for both criteria
-    * so the existential is exact ([[Wand.intervalsMatch]]). An
+    * so the existential is exact (Wand.intervalsMatch). An
     * out-of-vocabulary filter term degenerates to the unfiltered
     * intervals query (nothing can be contained); any OOV query term ⇒
     * empty (ordered conjunction). Scoring: BM25 over the distinct
@@ -913,11 +904,12 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * per-slot MERGED alternative position lists fits the gap budget and
     * avoids the filter term — greedy stays exact because a slot's
     * eligible positions are still one ascending list
-    * ([[Wand.topKIntervalsAny]]). Out-of-vocabulary alternatives drop
-    * from their slot; a slot with NO in-vocabulary alternative ⇒ empty
-    * (ordered conjunction). Scoring is the BOOL contract: BM25 over
-    * every present distinct alternative term (whichever variant
-    * matched); the filter term never scores. */
+    * (Wand's conjunction walk over slots of alternative cursors, a
+    * cursor shared by the slots it appears in). Out-of-vocabulary
+    * alternatives drop from their slot; a slot with NO in-vocabulary
+    * alternative ⇒ empty (ordered conjunction). Scoring is the BOOL
+    * contract: BM25 over every present distinct alternative term
+    * (whichever variant matched); the filter term never scores. */
   def intervalsAnyHits(text: String, maxGaps: Int, notText: String, k: Int,
                        qid: Long = 0L): Dataset[Hit] =
     run(QueryPlan.intervalsAny(segment, dictLookup, text, maxGaps, notText, k), qid)
@@ -1377,7 +1369,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
   /** Full match set of a BOOL/PHRASE/NEAR query via the compiled
     * presence walk. PHRASE/NEAR normalize into the boolean grammar's
     * positional atoms (one Phrase/Near node), so all three kinds share
-    * one evaluator. The walk runs topKBool with k = bucketSize — every
+    * one evaluator. The union walk runs with k = bucketSize — every
     * bucket holds ≤ bucketSize docs, so the per-bucket "top-k" IS the
     * bucket's complete match set (scores computed but discarded). */
   private def boolMatchSet(kind: String, text: String): Option[DataFrame] = {
@@ -1458,9 +1450,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
           .filter($"termId".isin(tids.toSeq: _*)).as[PostingList]
           .groupByKey(_.bucket)
           .mapGroups { (_, plIt) =>
-            val plByTid = plIt.map(pl => pl.termId -> pl).toMap
-            val slots = tids.map(tid => plByTid.get(tid)
-              .map(pl => new Wand.TermCursor(tid, 0.0, pl, positional)).orNull)
+            val slots = Searcher.countSlots(plIt.map(pl => pl.termId -> pl).toMap,
+              tids, positional)
             Wand.countMatches(slots, eval, capL, defs, wins)
           }
           .toDF("c").agg(coalesce(sum($"c"), lit(0L))).as[Long].head()
@@ -1505,10 +1496,9 @@ final class Searcher(spark: SparkSession, segment: Segment,
       .filter($"termId".isin(tids.map(Long.box): _*)).as[PostingList]
     pls.groupByKey(_.bucket)
       .flatMapGroups { (_, plIt) =>
-        val plByTid = plIt.map(pl => pl.termId -> pl).toMap
-        val slots = tids.map(tid => plByTid.get(tid)
-          .map(pl => new Wand.TermCursor(tid, 0.0, pl, positional)).orNull)
-        if (conj && slots.exists(_ == null)) Iterator.empty[Long]
+        val slots = Searcher.countSlots(plIt.map(pl => pl.termId -> pl).toMap,
+          tids, positional, (conj, null))
+        if (slots == null) Iterator.empty[Long]
         else Wand.firstK(slots, p => Searcher.present(p, conj), kL).iterator
       }
       .toDF("docId")
@@ -1672,6 +1662,21 @@ final class Searcher(spark: SparkSession, segment: Segment,
 }
 
 object Searcher {
+  /** One bucket's slots for a counting walk over `tids`: an unscored
+    * cursor per termId, null where the bucket has no list. Null instead
+    * when a conjunctive part — `(true, slot indices)`, null indices =
+    * every slot — misses a slot: the walk matches nothing here. */
+  private[search] def countSlots(plByTid: Map[Long, PostingList], tids: Array[Long],
+                                 positional: Boolean,
+                                 parts: (Boolean, Array[Int])*): Array[Wand.TermCursor] = {
+    def missing(idx: Array[Int]): Boolean =
+      if (idx == null) tids.exists(t => !plByTid.contains(t))
+      else idx.exists(x => !plByTid.contains(tids(x)))
+    if (parts.exists { case (conj, idx) => conj && missing(idx) }) null
+    else tids.map(tid => plByTid.get(tid)
+      .map(pl => new Wand.TermCursor(tid, 0.0, pl, positional)).orNull)
+  }
+
   /** The counting walks' presence test: all (`conj`) or any of the slots
     * at `idx` — every slot when `idx` is null — matched the candidate. */
   private[search] def present(p: Array[Boolean], conj: Boolean, idx: Array[Int] = null): Boolean = {

@@ -5,13 +5,24 @@ import scala.collection.mutable
 import graft.codec.PostingCodec
 import graft.model.{BM25, PostingList}
 
-/** Block-max WAND top-k walk over one bucket — SURVEY.md §2.4 Q7.
+/** The per-bucket walks of every query kind — SURVEY.md §2.4. Four walks
+  * carry them all, and [[eval]] maps each [[QueryPlan.Shape]] onto one:
   *
-  * Algorithm per Broder et al., CIKM'03 (WAND) with block-max skipping per
-  * Ding & Suel, SIGIR'11. Inherently an iterator+heap walk with
-  * data-dependent skipping — not relational, so it runs inside a typed
-  * `mapGroups`/`cogroup` lambda (SURVEY §4.2); everything here is pure
-  * Scala with zero Spark deps, unit-testable without a session.
+  *  - [[topK]]: block-max WAND (Broder et al., CIKM'03, with block-max
+  *    skipping per Ding & Suel, SIGIR'11), the default disjunctive top-k;
+  *  - [[topKMaxScore]]: MaxScore, the independently pruned disjunction;
+  *  - `conjunction`: a galloping intersection over slots of alternative
+  *    cursors with a per-document match predicate (AND, PHRASE, NEAR,
+  *    BEFORE, span-first, span-not, intervals and their `any_of` form);
+  *  - `union`: document-at-a-time over the union of the lists with a
+  *    presence predicate, scored by a per-document combiner (exhaustive
+  *    OR, BOOL, dis-max, LM-Dirichlet) or stopped by a rule (first-k,
+  *    capped count).
+  *
+  * Iterator+heap walks with data-dependent skipping are not relational,
+  * so they run inside a typed `mapGroups`/`cogroup` lambda (SURVEY §4.2);
+  * everything here is pure Scala with zero Spark deps, unit-testable
+  * without a session.
   *
   * Determinism contract (rank-identity, SURVEY §2.4): scored docIds are
   * strictly ascending during the walk; per-doc accumulation iterates
@@ -116,9 +127,12 @@ object Wand {
     * lists of the plan's termIds (any subset, any order), `lens` its doc
     * lengths from `firstDocId`, `accept` the bucket's doc filter (null =
     * none; see [[bucketFilter]]). The one kernel dispatch every tier
-    * calls. Cursors are built in slot order, one per slot (a repeated
-    * phrase term walks its own cursor); a walk that needs every slot
-    * returns nothing for a bucket missing one. */
+    * calls. Conjunctive shapes build one cursor per slot (a repeated
+    * phrase term walks its own cursor) and return nothing for a bucket
+    * missing a slot; the position checks decode only the aligned doc's
+    * occurrence lists, and a filter term (span-not's
+    * exclude, the intervals filter) is optional per bucket, skip-scanned
+    * to the aligned doc, and never scores (filter-doesn't-rescale). */
   private[search] def eval(plan: QueryPlan, lists: Array[PostingList],
                            firstDocId: Long, lens: Array[Int],
                            accept: Long => Boolean): Array[Scored] = {
@@ -126,50 +140,65 @@ object Wand {
     val byTid = lists.map(pl => pl.termId -> pl).toMap
     def cursor(tid: Long) = new TermCursor(tid, plan.idf(tid), byTid(tid),
       plan.positional, plan.lo, plan.hi, plan.boostOf(tid))
-    // filter terms constrain matching only: they never score
     def filter(tid: Option[Long]) = tid.flatMap(byTid.get).map(pl =>
       new TermCursor(pl.termId, 0.0, pl, plan.positional, plan.lo, plan.hi)).orNull
     def present = plan.slots.filter(byTid.contains).map(cursor)
-    def allSlots(walk: Array[TermCursor] => Array[Scored]): Array[Scored] =
-      if (plan.slots.forall(byTid.contains)) walk(plan.slots.map(cursor))
-      else Array.empty
     val (avgdl, k, after) = (plan.avgdl, plan.k, plan.after)
+    def conj(slots: Array[Array[TermCursor]])(matches: Long => Boolean) =
+      conjunction(slots, lens, firstDocId, avgdl, k, accept, after)(matches)
+    def all(matches: Array[Array[TermCursor]] => Long => Boolean): Array[Scored] =
+      if (!plan.slots.forall(byTid.contains)) Array.empty
+      else { val slots = plan.slots.map(t => Array(cursor(t))); conj(slots)(matches(slots)) }
+    def scored(slots: Array[TermCursor], pred: Array[Boolean] => Boolean,
+               defs: Array[Array[Int]], wins: Array[Int], combine: Shape) =
+      unionTopK(slots, lens, firstDocId, avgdl, k, accept, after, pred, defs, wins, combine)
     plan.shape match {
-      case Or(OrWalk.Wand) => Wand.topK(present, lens, firstDocId, avgdl, k, accept, after)
+      case Or(OrWalk.Wand) => topK(present, lens, firstDocId, avgdl, k, accept, after)
       case Or(OrWalk.MaxScore) =>
-        Wand.topKMaxScore(present, lens, firstDocId, avgdl, k, accept, after)
-      case Or(OrWalk.Exhaustive) =>
-        Wand.topKOrExhaustive(present, lens, firstDocId, avgdl, k, accept, after)
-      case Lmd(mu, p) => Wand.topKLmd(present, lens, firstDocId, k, mu, p, accept, after)
-      case DisMax(tie) => Wand.topKDisMax(present, lens, firstDocId, avgdl, k, tie, accept, after)
-      case Bool(pred, defs, wins) =>
+        topKMaxScore(present, lens, firstDocId, avgdl, k, accept, after)
+      case s @ (Or(OrWalk.Exhaustive) | Lmd(_, _) | DisMax(_)) =>
+        scored(present.sortBy(_.termId), AnyPresent, null, null, s)
+      case s @ Bool(pred, defs, wins) =>
         // a slot with no list in this bucket stays null (never present)
-        val slots = plan.slots.map(t => if (byTid.contains(t)) cursor(t) else null)
-        Wand.topKBool(slots, lens, firstDocId, avgdl, k, pred, accept, after, defs, wins)
+        scored(plan.slots.map(t => if (byTid.contains(t)) cursor(t) else null),
+          pred, defs, wins, s)
+      case And => all(_ => _ => true)
+      // ∃ p: p+i ∈ positions(slot i) for every i
+      case Phrase => all(s => _ => stairMatch(s.length, s(_)(0).positions()))
+      // one occurrence of every term inside a w-token window
+      case Near(w) => all(s => d => minSpan(s.map(positionsAt(_, d))) <= w)
+      // the same, picking strictly increasing positions in query order
+      case Ordered(w) => all(s => d => orderedSpan(s.map(positionsAt(_, d))) <= w)
+      // every term within the first n tokens (positions ascend)
+      case SpanFirst(n) => all(s => _ => s.forall(_(0).positions()(0) < n))
+      // some include occurrence with no exclude within w tokens of it
       case SpanNot(exc, w) =>
-        // the include list is required, the exclude list optional
-        if (!byTid.contains(plan.slots(0))) Array.empty
-        else Wand.topKSpanNot(cursor(plan.slots(0)), filter(Some(exc)), lens,
-          firstDocId, avgdl, k, w, w, accept, after)
+        val not = filter(Some(exc))
+        all(s => d => {
+          val qs = filterPositions(not, d)
+          qs == null || spaced(s(0)(0).positions(), qs, w)
+        })
+      case Intervals(gaps, f, containing) =>
+        val not = filter(f)
+        // containing: a bucket without the filter term has no match
+        if (containing && (not == null || not.exhausted)) Array.empty
+        else all(s => d => {
+          val notPos = filterPositions(not, d)
+          (!containing || notPos != null) &&
+            intervalsMatch(s.map(positionsAt(_, d)), notPos, gaps, containing)
+        })
       case IntervalsAny(alts, gaps, f) =>
         // one cursor per distinct termId, shared across slots; a slot
         // with no alternative in this bucket kills the bucket
         val shared = mutable.Map.empty[Long, TermCursor]
-        val slotCs = alts.map(_.filter(byTid.contains)
+        val slots = alts.map(_.filter(byTid.contains)
           .map(t => shared.getOrElseUpdate(t, cursor(t))))
-        if (slotCs.exists(_.isEmpty)) Array.empty
-        else Wand.topKIntervalsAny(slotCs, lens, firstDocId, avgdl, k, gaps,
-          filter(f), accept, after)
-      case And => allSlots(Wand.topKAnd(_, lens, firstDocId, avgdl, k, accept, after))
-      case Phrase => allSlots(Wand.topKPhrase(_, lens, firstDocId, avgdl, k, accept, after))
-      case Near(w) => allSlots(Wand.topKNear(_, lens, firstDocId, avgdl, k, w, accept, after))
-      case Ordered(w) =>
-        allSlots(Wand.topKONear(_, lens, firstDocId, avgdl, k, w, accept, after))
-      case SpanFirst(n) =>
-        allSlots(Wand.topKSpanFirst(_, lens, firstDocId, avgdl, k, n, accept, after))
-      case Intervals(gaps, f, containing) =>
-        allSlots(Wand.topKIntervals(_, lens, firstDocId, avgdl, k, gaps, filter(f),
-          accept, after, mustContain = containing))
+        if (slots.exists(_.isEmpty)) Array.empty
+        else {
+          val not = filter(f)
+          conj(slots)(d =>
+            intervalsMatch(slots.map(positionsAt(_, d)), filterPositions(not, d), gaps))
+        }
     }
   }
 
@@ -384,373 +413,86 @@ object Wand {
     live.filter(!_.exhausted).sortBy(_.docId)
   }
 
-  /** Conjunctive (AND) evaluation: k-way galloping intersection, exact
-    * scoring of every intersecting doc — SURVEY §2.4 Q4. */
+  /** Conjunctive (AND) top-k: the conjunction walk with no position check. */
   def topKAnd(terms: Array[TermCursor], lens: Array[Int], firstDocId: Long,
               avgdl: Double, k: Int,
               accept: Long => Boolean = null,
-              after: Scored = null): Array[Scored] = {
-    if (terms.isEmpty || terms.exists(_.exhausted)) return Array.empty
-    val topk = new TopK(k, after)
-    val byTermId = terms.sortBy(_.termId)
-    var target = terms.map(_.docId).max
-    var done = false
-    while (!done) {
-      // drive all cursors to target (galloping via nextGeq's block skips)
-      var aligned = true
-      var i = 0
-      while (i < terms.length && !done) {
-        terms(i).nextGeq(target)
-        if (terms(i).exhausted) done = true
-        else if (terms(i).docId > target) { target = terms(i).docId; aligned = false }
-        i += 1
-      }
-      if (!done && aligned) {
-        val dl = lens((target - firstDocId).toInt)
-        var score = 0.0
-        var j = 0
-        while (j < byTermId.length) {
-          score += BM25.impact(byTermId(j).idf, byTermId(j).tf, dl, avgdl)
-          j += 1
-        }
-        if (accept == null || accept(target)) topk.offer(target, score)
-        target += 1
-      }
-    }
-    topk.result()
-  }
+              after: Scored = null): Array[Scored] =
+    conjunction(terms.map(Array(_)), lens, firstDocId, avgdl, k, accept, after)(_ => true)
 
-  /** Phrase evaluation over positional postings — SURVEY §2.4 extension
-    * (codec v2). `slots` holds ONE cursor per phrase position, in phrase
-    * order (a repeated term gets an independent cursor over the same
-    * list). Docs are aligned with the same galloping intersection as
-    * AND; an aligned doc matches iff some start position p has
-    * slot i's positions containing p+i for every i (consecutive terms in
-    * the filtered token stream). Matching docs score standard BM25 over
-    * the phrase's DISTINCT terms — identical to the AND score, so the
-    * SQL twin can score relationally. */
-  def topKPhrase(slots: Array[TermCursor], lens: Array[Int], firstDocId: Long,
-                 avgdl: Double, k: Int,
-                 accept: Long => Boolean = null,
-                 after: Scored = null): Array[Scored] = {
-    if (slots.isEmpty || slots.exists(_.exhausted)) return Array.empty
-    val topk = new TopK(k, after)
-    // distinct-term cursors in ascending termId order — deterministic sum
-    val distinctSlots: Array[TermCursor] = {
-      val seen = mutable.Set.empty[Long]
-      slots.filter(c => seen.add(c.termId)).sortBy(_.termId)
-    }
-    var target = slots.map(_.docId).max
-    var done = false
-    while (!done) {
-      var aligned = true
-      var i = 0
-      while (i < slots.length && !done) {
-        slots(i).nextGeq(target)
-        if (slots(i).exhausted) done = true
-        else if (slots(i).docId > target) { target = slots(i).docId; aligned = false }
-        i += 1
-      }
-      if (!done && aligned) {
-        if ((accept == null || accept(target)) && phraseMatches(slots)) {
-          val dl = lens((target - firstDocId).toInt)
-          var score = 0.0
-          var j = 0
-          while (j < distinctSlots.length) {
-            score += BM25.impact(distinctSlots(j).idf, distinctSlots(j).tf, dl, avgdl)
-            j += 1
-          }
-          topk.offer(target, score)
-        }
-        target += 1
-      }
-    }
-    topk.result()
-  }
-
-  /** Proximity (NEAR/w) evaluation over positional postings: docs where
-    * one occurrence of EVERY distinct term fits inside a w-token window
-    * (minimal span ≤ w). Docs align via the same galloping intersection
-    * as AND; matches score standard BM25 over the distinct terms. */
-  def topKNear(terms: Array[TermCursor], lens: Array[Int], firstDocId: Long,
-               avgdl: Double, k: Int, window: Int,
-               accept: Long => Boolean = null,
-               after: Scored = null): Array[Scored] = {
-    if (terms.isEmpty || terms.exists(_.exhausted)) return Array.empty
-    val topk = new TopK(k, after)
-    val byTermId = terms.sortBy(_.termId)
-    var target = terms.map(_.docId).max
-    var done = false
-    while (!done) {
-      var aligned = true
-      var i = 0
-      while (i < terms.length && !done) {
-        terms(i).nextGeq(target)
-        if (terms(i).exhausted) done = true
-        else if (terms(i).docId > target) { target = terms(i).docId; aligned = false }
-        i += 1
-      }
-      if (!done && aligned) {
-        if ((accept == null || accept(target)) &&
-            minSpan(byTermId.map(_.positions())) <= window) {
-          val dl = lens((target - firstDocId).toInt)
-          var score = 0.0
-          var j = 0
-          while (j < byTermId.length) {
-            score += BM25.impact(byTermId(j).idf, byTermId(j).tf, dl, avgdl)
-            j += 1
-          }
-          topk.offer(target, score)
-        }
-        target += 1
-      }
-    }
-    topk.result()
-  }
-
-  /** Span-first evaluation (Lucene SpanFirstQuery over term spans — "the
-    * term appears near the start of the doc", the title/header heuristic
-    * when no field boundaries exist): docs where EVERY distinct slot
-    * term has an occurrence within the first `n` tokens of the filtered
-    * token stream (ascending positions ⇒ positions()(0) is the first
-    * occurrence; 0-based first < n ⇔ 1-based first ≤ n). Alignment is
-    * the same galloping conjunction as NEAR; matches score standard
-    * BM25 over the distinct terms (filter-doesn't-rescale). */
-  def topKSpanFirst(slots: Array[TermCursor], lens: Array[Int],
-                    firstDocId: Long, avgdl: Double, k: Int, n: Int,
-                    accept: Long => Boolean = null,
-                    after: Scored = null): Array[Scored] = {
-    if (slots.isEmpty || slots.exists(_.exhausted)) return Array.empty
-    val topk = new TopK(k, after)
-    val byTermId = slots.sortBy(_.termId)
-    var target = slots.map(_.docId).max
-    var done = false
-    while (!done) {
-      var aligned = true
-      var i = 0
-      while (i < slots.length && !done) {
-        slots(i).nextGeq(target)
-        if (slots(i).exhausted) done = true
-        else if (slots(i).docId > target) { target = slots(i).docId; aligned = false }
-        i += 1
-      }
-      if (!done && aligned) {
-        if ((accept == null || accept(target)) &&
-            byTermId.forall(_.positions()(0) < n)) {
-          val dl = lens((target - firstDocId).toInt)
-          var score = 0.0
-          var j = 0
-          while (j < byTermId.length) {
-            score += BM25.impact(byTermId(j).idf, byTermId(j).tf, dl, avgdl)
-            j += 1
-          }
-          topk.offer(target, score)
-        }
-        target += 1
-      }
-    }
-    topk.result()
-  }
-
-  /** Span-not (Lucene SpanNotQuery, single-term include/exclude form):
-    * a document matches when the INCLUDE term has at least one
-    * occurrence with NO exclude-term occurrence within `pre` tokens
-    * before / `post` tokens after it. Unlike every conjunctive walk the
-    * exclude cursor is OPTIONAL — a document (or whole bucket) without
-    * the exclude term matches on the include term alone, so the walk is
-    * driven by the include cursor; the exclude cursor only ever
-    * advances via nextGeq to the include's current doc (skip-scan, no
-    * decode of non-aligned docs). The per-doc check is a two-pointer
-    * merge over the two sorted position arrays, O(|P|+|Q|). Scoring is
-    * BM25 of the include term only — the NEAR/PHRASE
-    * filter-doesn't-rescale rule. */
-  def topKSpanNot(inc: TermCursor, exc: TermCursor, lens: Array[Int],
-                  firstDocId: Long, avgdl: Double, k: Int, pre: Int,
-                  post: Int, accept: Long => Boolean = null,
-                  after: Scored = null): Array[Scored] = {
-    if (inc == null || inc.exhausted) return Array.empty
-    val topk = new TopK(k, after)
-    while (!inc.exhausted) {
-      val d = inc.docId
-      if (accept == null || accept(d)) {
-        var hasFree = true
-        if (exc != null && !exc.exhausted) {
-          exc.nextGeq(d)
-          if (!exc.exhausted && exc.docId == d) {
-            val ps = inc.positions()
-            val qs = exc.positions()
-            hasFree = false
-            var i = 0
-            var j = 0
-            while (i < ps.length && !hasFree) {
-              val lo = ps(i) - pre
-              val hi = ps(i) + post
-              while (j < qs.length && qs(j) < lo) j += 1
-              if (j >= qs.length || qs(j) > hi) hasFree = true
-              i += 1
-            }
-          }
-        }
-        if (hasFree) {
-          val dl = lens((d - firstDocId).toInt)
-          topk.offer(d, BM25.impact(inc.idf, inc.tf, dl, avgdl))
-        }
-      }
-      inc.nextGeq(d + 1)
-    }
-    topk.result()
-  }
-
-  /** Ordered proximity (`a BEFORE/w b …`, kind ONEAR): conjunction walk
-    * like [[topKNear]], but the span must pick strictly INCREASING
-    * positions in QUERY order (`slots` arrive in query order, not termId
-    * order). Scoring is unchanged: BM25 over the distinct terms — the
-    * same filter-doesn't-rescale rule as NEAR/PHRASE. */
-  def topKONear(slots: Array[TermCursor], lens: Array[Int], firstDocId: Long,
-                avgdl: Double, k: Int, window: Int,
-                accept: Long => Boolean = null,
-                after: Scored = null): Array[Scored] = {
-    if (slots.isEmpty || slots.exists(_.exhausted)) return Array.empty
-    val topk = new TopK(k, after)
-    val byTermId = slots.sortBy(_.termId)
-    var target = slots.map(_.docId).max
-    var done = false
-    while (!done) {
-      var aligned = true
-      var i = 0
-      while (i < slots.length && !done) {
-        slots(i).nextGeq(target)
-        if (slots(i).exhausted) done = true
-        else if (slots(i).docId > target) { target = slots(i).docId; aligned = false }
-        i += 1
-      }
-      if (!done && aligned) {
-        if ((accept == null || accept(target)) &&
-            orderedSpan(slots.map(_.positions())) <= window) {
-          val dl = lens((target - firstDocId).toInt)
-          var score = 0.0
-          var j = 0
-          while (j < byTermId.length) {
-            score += BM25.impact(byTermId(j).idf, byTermId(j).tf, dl, avgdl)
-            j += 1
-          }
-          topk.offer(target, score)
-        }
-        target += 1
-      }
-    }
-    topk.result()
-  }
-
-  /** Intervals query (the Lucene/ES `intervals` algebra: an `ordered`
-    * source with `max_gaps`, optionally wrapped in `not_containing`):
-    * docs align via the same galloping conjunction as ONEAR over the
-    * ordered slots; an aligned doc matches iff some start occurrence's
-    * GREEDY ordered chain has ≤ maxGaps non-matching tokens inside the
-    * interval AND (when a filter cursor is given) contains no filter
-    * occurrence — see [[intervalsMatch]] for why greedy decides the
-    * existential exactly. The filter cursor is OPTIONAL per bucket
-    * (skip-scanned like span-not's exclude; a doc without it is
-    * unfiltered). Scoring is BM25 over the distinct slot terms — the
-    * NEAR/PHRASE filter-doesn't-rescale rule; the filter term never
-    * scores. */
-  def topKIntervals(slots: Array[TermCursor], lens: Array[Int],
-                    firstDocId: Long, avgdl: Double, k: Int, maxGaps: Int,
-                    not: TermCursor,
-                    accept: Long => Boolean = null,
-                    after: Scored = null,
-                    mustContain: Boolean = false): Array[Scored] = {
-    if (slots.isEmpty || slots.exists(_.exhausted)) return Array.empty
-    // `containing` mode: a doc without the filter term can never match
-    // (some greedy interval must CONTAIN a filter occurrence), so the
-    // filter cursor is REQUIRED, not optional
-    if (mustContain && (not == null || not.exhausted)) return Array.empty
-    val topk = new TopK(k, after)
-    val distinctSlots: Array[TermCursor] = {
-      val seen = mutable.Set.empty[Long]
-      slots.filter(c => seen.add(c.termId)).sortBy(_.termId)
-    }
-    var target = slots.map(_.docId).max
-    var done = false
-    while (!done) {
-      var aligned = true
-      var i = 0
-      while (i < slots.length && !done) {
-        slots(i).nextGeq(target)
-        if (slots(i).exhausted) done = true
-        else if (slots(i).docId > target) { target = slots(i).docId; aligned = false }
-        i += 1
-      }
-      if (!done && aligned) {
-        if (accept == null || accept(target)) {
-          var notPos: Array[Int] = null
-          if (not != null && !not.exhausted) {
-            not.nextGeq(target)
-            if (!not.exhausted && not.docId == target) notPos = not.positions()
-          }
-          val matched =
-            if (mustContain)
-              notPos != null &&
-                intervalsMatch(slots.map(_.positions()), notPos, maxGaps,
-                  mustContain = true)
-            else intervalsMatch(slots.map(_.positions()), notPos, maxGaps)
-          if (matched) {
-            val dl = lens((target - firstDocId).toInt)
-            var score = 0.0
-            var j = 0
-            while (j < distinctSlots.length) {
-              score += BM25.impact(distinctSlots(j).idf, distinctSlots(j).tf, dl, avgdl)
-              j += 1
-            }
-            topk.offer(target, score)
-          }
-        }
-        target += 1
-      }
-    }
-    topk.result()
-  }
-
-  /** Intervals query with per-slot term ALTERNATIVES (the Lucene/ES
-    * `intervals` algebra's `any_of` combinator under an `ordered`
-    * source): slot i matches at any position of ANY of its alternative
-    * terms, and the ordered chain + gap budget + optional
-    * `not_containing` filter evaluate over the per-slot MERGED position
-    * lists. Greedy stays exact: [[intervalsMatch]] only assumes each
-    * slot's eligible positions form one ascending list, and the union
-    * of a slot's alternative position lists is exactly that (two terms
-    * can never share a token position). Doc alignment is a conjunction
-    * of per-slot disjunctions: a slot's cursor block advances together
-    * and the slot's docId is the min over its live cursors. Scoring is
-    * the BOOL contract (topKBool): BM25 over every PRESENT distinct
-    * alternative term, accumulated in ascending termId order; the
-    * filter term never scores. */
-  def topKIntervalsAny(slotAlts: Array[Array[TermCursor]], lens: Array[Int],
-                       firstDocId: Long, avgdl: Double, k: Int, maxGaps: Int,
-                       not: TermCursor,
+  /** Exhaustive disjunctive top-k (no pruning): the union walk under the
+    * BM25 sum. The safe path for multi-segment reads, where stored block
+    * maxima are not valid bounds (SURVEY §2.3 I7 note), and the in-bucket
+    * oracle of [[topK]] and [[topKMaxScore]]. */
+  def topKOrExhaustive(terms: Array[TermCursor], lens: Array[Int],
+                       firstDocId: Long, avgdl: Double, k: Int,
                        accept: Long => Boolean = null,
-                       after: Scored = null): Array[Scored] = {
-    if (slotAlts.isEmpty ||
-        slotAlts.exists(sa => sa.isEmpty || sa.forall(_.exhausted)))
-      return Array.empty
+                       after: Scored = null): Array[Scored] =
+    unionTopK(terms.sortBy(_.termId), lens, firstDocId, avgdl, k, accept, after,
+      AnyPresent, null, null, QueryPlan.Or(QueryPlan.OrWalk.Exhaustive))
+
+  /** First `k` matching docIds in docId order, then STOP — the
+    * early-termination consumer of index-time sorting (Lucene
+    * `IndexSorting` / ES `index.sort`): over an index whose docIds were
+    * assigned in a chosen static-field order, the first k matches of a
+    * docId-ordered walk ARE the top-k by that sort, and every posting
+    * past the k-th match is never decoded. The union walk with no doc
+    * lengths and no scoring. */
+  def firstK(slots: Array[TermCursor], eval: Array[Boolean] => Boolean,
+             k: Int): Array[Long] = {
+    require(k >= 1, s"firstK needs k >= 1, got $k")
+    // grow lazily: k is an upper bound, not a size hint (callers may
+    // pass a huge cap to mean "the whole match set")
+    val out = new mutable.ArrayBuffer[Long](math.min(k, 64))
+    union(slots, eval, null, null, null, k) { d => out += d; () }
+    out.toArray
+  }
+
+  /** Capped presence count over one bucket — the early-termination
+    * primitive behind `terminate_after` / `track_total_hits: N`: the
+    * union walk (positional atoms included) with no doc lengths and no
+    * scoring, stopped as soon as `cap` matches are seen, so per-bucket
+    * work is bounded by the cap, not by the match-set size. */
+  def countMatches(slots: Array[TermCursor],
+                   eval: Array[Boolean] => Boolean, cap: Long,
+                   defs: Array[Array[Int]] = null,
+                   wins: Array[Int] = null): Long =
+    union(slots, eval, defs, wins, null, cap)(_ => ())
+
+  /** The union predicate of the disjunctive shapes: every candidate doc
+    * is some slot's current doc, so it always matches. */
+  private val AnyPresent: Array[Boolean] => Boolean = _ => true
+
+  /** Galloping conjunction over `slots`, each a set of ALTERNATIVE
+    * cursors (one for a plain slot; an `any_of` slot's alternatives, a
+    * cursor possibly shared with another slot). A slot sits on the min
+    * docId over its live cursors; every slot is driven to the running
+    * target by nextGeq's block skips until all agree. An aligned doc
+    * that passes `accept` and `matches` scores BM25 over the distinct
+    * termIds on it, summed in ascending termId order — so a repeated
+    * phrase term scores once, and an `any_of` doc scores every present
+    * alternative (the BOOL contract). */
+  private def conjunction(slots: Array[Array[TermCursor]], lens: Array[Int],
+                          firstDocId: Long, avgdl: Double, k: Int,
+                          accept: Long => Boolean, after: Scored)
+                         (matches: Long => Boolean): Array[Scored] = {
+    if (slots.isEmpty || slots.exists(_.forall(_.exhausted))) return Array.empty
     val topk = new TopK(k, after)
-    // one scoring cursor per distinct termId (a term repeated across
-    // slots shares its slot instance — same postings, same state)
-    val scoreCursors: Array[TermCursor] = {
+    val scoring: Array[TermCursor] = {
       val seen = mutable.Set.empty[Long]
-      slotAlts.flatten.filter(c => seen.add(c.termId)).sortBy(_.termId)
+      slots.flatten.filter(c => seen.add(c.termId)).sortBy(_.termId)
     }
-    var target = slotAlts.map(_.filterNot(_.exhausted).map(_.docId).min).max
+    var target = slots.map(_.filterNot(_.exhausted).map(_.docId).min).max
     var done = false
     while (!done) {
       var aligned = true
       var i = 0
-      while (i < slotAlts.length && !done) {
-        val sa = slotAlts(i)
+      while (i < slots.length && !done) {
+        val alts = slots(i)
         var slotDoc = Long.MaxValue
         var j = 0
-        while (j < sa.length) {
-          val c = sa(j)
+        while (j < alts.length) {
+          val c = alts(j)
           if (!c.exhausted) {
             c.nextGeq(target)
             if (!c.exhausted && c.docId < slotDoc) slotDoc = c.docId
@@ -762,40 +504,164 @@ object Wand {
         i += 1
       }
       if (!done && aligned) {
-        if (accept == null || accept(target)) {
-          var notPos: Array[Int] = null
-          if (not != null && !not.exhausted) {
-            not.nextGeq(target)
-            if (!not.exhausted && not.docId == target) notPos = not.positions()
+        if ((accept == null || accept(target)) && matches(target)) {
+          val dl = lens((target - firstDocId).toInt)
+          var score = 0.0
+          var j = 0
+          while (j < scoring.length) {
+            val c = scoring(j)
+            if (!c.exhausted && c.docId == target)
+              score += BM25.impact(c.idf, c.tf, dl, avgdl)
+            j += 1
           }
-          val lists = slotAlts.map { sa =>
-            val present = sa.filter(c => !c.exhausted && c.docId == target)
-            if (present.length == 1) present(0).positions()
-            else {
-              // merge the alternatives' ascending lists (disjoint by
-              // construction — one token holds one term)
-              val merged = Array.concat(present.map(_.positions()): _*)
-              java.util.Arrays.sort(merged)
-              merged
-            }
-          }
-          if (intervalsMatch(lists, notPos, maxGaps)) {
-            val dl = lens((target - firstDocId).toInt)
-            var score = 0.0
-            var j = 0
-            while (j < scoreCursors.length) {
-              val c = scoreCursors(j)
-              if (!c.exhausted && c.docId == target)
-                score += BM25.impact(c.idf, c.tf, dl, avgdl)
-              j += 1
-            }
-            topk.offer(target, score)
-          }
+          topk.offer(target, score)
         }
         target += 1
       }
     }
     topk.result()
+  }
+
+  /** Document-at-a-time over the union of `slots`, indexed by slot
+    * (ascending termId); a null slot has no list in this bucket and is
+    * never present. Each candidate doc (the min docId over the live
+    * cursors) gets a presence vector, extended by the positional atoms
+    * `defs` (slot indices; a -1 slot never matches) with `wins` (0 the
+    * consecutive-position staircase of a phrase, w ≥ 1 the minimal-span
+    * sweep of NEAR, w ≤ −1 the ordered sweep with window −w of BEFORE).
+    * A doc that passes `accept` and `eval` goes to `hit` while every
+    * cursor on it still sits there; the walk stops after `limit` hits
+    * and returns their number. */
+  private def union(slots: Array[TermCursor], eval: Array[Boolean] => Boolean,
+                    defs: Array[Array[Int]], wins: Array[Int],
+                    accept: Long => Boolean, limit: Long)
+                   (hit: Long => Unit): Long = {
+    val n = slots.length
+    val nAtoms = if (defs == null) 0 else defs.length
+    val present = new Array[Boolean](n + nAtoms)
+    // atom positions, read per candidate (atoms need a positional segment)
+    val posArrs = if (nAtoms == 0) null else new Array[Array[Int]](n)
+    var hits = 0L
+    var d = Long.MaxValue
+    var i = 0
+    while (i < n) {
+      val c = slots(i)
+      if (c != null && !c.exhausted && c.docId < d) d = c.docId
+      i += 1
+    }
+    while (d != Long.MaxValue && hits < limit) {
+      i = 0
+      while (i < n) {
+        val c = slots(i)
+        present(i) = c != null && !c.exhausted && c.docId == d
+        if (present(i) && posArrs != null) posArrs(i) = c.positions()
+        i += 1
+      }
+      var j = 0
+      while (j < nAtoms) {
+        val defn = defs(j)
+        val win = wins(j)
+        present(n + j) = defn.nonEmpty && defn.forall(x => x >= 0 && present(x)) && (
+          if (win == 0) stairMatch(defn.length, x => posArrs(defn(x)))
+          else if (win < 0) orderedSpan(defn.map(posArrs)) <= -win
+          else minSpan(defn.map(posArrs)) <= win)
+        j += 1
+      }
+      if ((accept == null || accept(d)) && eval(present)) { hit(d); hits += 1 }
+      // step the cursors on d and find the next candidate in one pass
+      d = Long.MaxValue
+      i = 0
+      while (i < n) {
+        val c = slots(i)
+        if (present(i)) c.next()
+        if (c != null && !c.exhausted && c.docId < d) d = c.docId
+        i += 1
+      }
+    }
+    hits
+  }
+
+  /** [[union]] top-k. A matched doc scores over its present slots in slot
+    * order (ascending termId) by `combine`:
+    *  - the BM25 sum for every other shape (OR, BOOL);
+    *  - `DisMax(tie)` (Lucene DisjunctionMaxQuery): the best single BM25
+    *    contribution plus `tie` times the rest — tie = 0 is the pure max,
+    *    tie = 1 the plain sum;
+    *  - `Lmd(mu, p)` (Zhai & Lafferty SIGIR'01, Lucene
+    *    LMDirichletSimilarity): Σ_t max(0, ln(1 + tf/(μ·p_t)) +
+    *    ln(μ/(dl+μ))) with p_t = cf_t/|C|; a doc whose every term clamps
+    *    to zero is dropped. An LM score has no stored per-list bound
+    *    (block maxima are BM25 impacts), hence this unpruned walk. */
+  private def unionTopK(slots: Array[TermCursor], lens: Array[Int],
+                        firstDocId: Long, avgdl: Double, k: Int,
+                        accept: Long => Boolean, after: Scored,
+                        eval: Array[Boolean] => Boolean, defs: Array[Array[Int]],
+                        wins: Array[Int], combine: QueryPlan.Shape): Array[Scored] = {
+    val topk = new TopK(k, after)
+    val disMax = combine match { case c: QueryPlan.DisMax => c; case _ => null }
+    val lmd = combine match { case c: QueryPlan.Lmd => c; case _ => null }
+    union(slots, eval, defs, wins, accept, Long.MaxValue) { d =>
+      val dl = lens((d - firstDocId).toInt)
+      val dlTerm = if (lmd == null) 0.0 else math.log(lmd.mu / (dl + lmd.mu))
+      var sum = 0.0
+      var best = 0.0
+      var i = 0
+      while (i < slots.length) {
+        val c = slots(i)
+        if (c != null && !c.exhausted && c.docId == d) {
+          if (lmd == null) {
+            val s = BM25.impact(c.idf, c.tf, dl, avgdl)
+            sum += s
+            if (s > best) best = s
+          } else {
+            val s = math.log(1.0 + c.tf / (lmd.mu * lmd.p(c.termId))) + dlTerm
+            if (s > 0.0) sum += s
+          }
+        }
+        i += 1
+      }
+      if (disMax != null) topk.offer(d, best + disMax.tie * (sum - best))
+      else if (lmd == null || sum > 0.0) topk.offer(d, sum)
+    }
+    topk.result()
+  }
+
+  /** A slot's positions on the aligned doc `d`: its one cursor's, or the
+    * merged ascending positions of every alternative on `d` (disjoint by
+    * construction — one token holds one term), so the greedy position
+    * checks stay exact over `any_of` slots. */
+  private def positionsAt(alts: Array[TermCursor], d: Long): Array[Int] =
+    if (alts.length == 1) alts(0).positions()
+    else {
+      val on = alts.filter(c => !c.exhausted && c.docId == d)
+      if (on.length == 1) on(0).positions()
+      else {
+        val merged = Array.concat(on.map(_.positions()): _*)
+        java.util.Arrays.sort(merged)
+        merged
+      }
+    }
+
+  /** The filter term's positions on `d`, or null when the doc (or the
+    * bucket: `f` null) has none; `f` only ever skips forward to `d`. */
+  private def filterPositions(f: TermCursor, d: Long): Array[Int] =
+    if (f == null || f.exhausted) null
+    else {
+      f.nextGeq(d)
+      if (!f.exhausted && f.docId == d) f.positions() else null
+    }
+
+  /** ∃ p ∈ ps with no q ∈ qs inside [p − w, p + w] — a two-pointer merge
+    * over the two ascending lists, O(|ps| + |qs|). */
+  private def spaced(ps: Array[Int], qs: Array[Int], w: Int): Boolean = {
+    var j = 0
+    var i = 0
+    while (i < ps.length) {
+      while (j < qs.length && qs(j) < ps(i) - w) j += 1
+      if (j >= qs.length || qs(j) > ps(i) + w) return true
+      i += 1
+    }
+    false
   }
 
   /** ∃ start s ∈ lists(0) whose GREEDY ordered chain (smallest next
@@ -890,14 +756,15 @@ object Wand {
     best
   }
 
-  /** ∃ p: p+i ∈ positions(slot i) for all i — intersect the stair-cased
-    * position lists left to right (all lists ascending, so each step is
-    * a linear merge bounded by the shortest list). */
-  private def phraseMatches(slots: Array[TermCursor]): Boolean = {
-    var cand = slots(0).positions()
+  /** ∃ p: p+i ∈ pos(i) for every i < n — intersects the stair-cased
+    * ascending position lists left to right, each step a linear merge
+    * bounded by the shorter list; no later list is read once no start
+    * survives. */
+  private def stairMatch(n: Int, pos: Int => Array[Int]): Boolean = {
+    var cand = pos(0)
     var i = 1
-    while (i < slots.length && cand.nonEmpty) {
-      val ps = slots(i).positions()
+    while (i < n && cand.nonEmpty) {
+      val ps = pos(i)
       val out = mutable.ArrayBuilder.make[Int]
       var a = 0; var b = 0
       while (a < cand.length && b < ps.length) {
@@ -910,307 +777,5 @@ object Wand {
       i += 1
     }
     cand.nonEmpty
-  }
-
-  /** Nested-boolean evaluation: document-at-a-time over the union of the
-    * query's posting lists. `slots` is indexed by the GLOBAL distinct-term
-    * slot order (ascending termId); entries may be null when this bucket
-    * has no list for that slot (the term is simply absent here). For each
-    * candidate doc the presence vector is evaluated by `eval` (compiled
-    * from the BoolQuery AST); matching docs score standard BM25 over
-    * their PRESENT query terms — ascending-termId accumulation, so
-    * `a AND b` through this walk is bit-identical to topKAnd. */
-  def topKBool(slots: Array[TermCursor], lens: Array[Int], firstDocId: Long,
-               avgdl: Double, k: Int,
-               eval: Array[Boolean] => Boolean,
-               accept: Long => Boolean = null,
-               after: Scored = null,
-               phraseDefs: Array[Array[Int]] = null,
-               phraseWins: Array[Int] = null): Array[Scored] = {
-    val topk = new TopK(k, after)
-    val n = slots.length
-    val nPhrases = if (phraseDefs == null) 0 else phraseDefs.length
-    val present = new Array[Boolean](n + nPhrases)
-    // phrase atoms: slot position arrays captured BEFORE cursors advance
-    // (positional cursors only — callers require a positional segment)
-    val posArrs = if (nPhrases == 0) null else new Array[Array[Int]](n)
-    var anyLive = slots.exists(c => c != null && !c.exhausted)
-    while (anyLive) {
-      var d = Long.MaxValue
-      var i = 0
-      while (i < n) {
-        val c = slots(i)
-        if (c != null && !c.exhausted && c.docId < d) d = c.docId
-        i += 1
-      }
-      java.util.Arrays.fill(present, false)
-      val dl = lens((d - firstDocId).toInt)
-      var score = 0.0
-      i = 0
-      anyLive = false
-      while (i < n) {
-        val c = slots(i)
-        if (c != null && !c.exhausted) {
-          if (c.docId == d) {
-            present(i) = true
-            if (posArrs != null) posArrs(i) = c.positions()
-            // slots are ascending-termId: deterministic Double sum order
-            score += BM25.impact(c.idf, c.tf, dl, avgdl)
-            c.next()
-          }
-          if (!c.exhausted) anyLive = true
-        }
-        i += 1
-      }
-      // positional slots extend the presence vector: window 0 = the
-      // consecutive-position staircase (phrase), window w ≥ 1 = the
-      // minimal-span sweep over distinct-term positions (NEAR), window
-      // w ≤ −1 = the ordered sweep with window −w (BEFORE); a def
-      // with a missing (-1) slot can never match
-      var j = 0
-      while (j < nPhrases) {
-        val defn = phraseDefs(j)
-        val win = if (phraseWins == null) 0 else phraseWins(j)
-        var ok = defn.length > 0
-        var x = 0
-        while (ok && x < defn.length) { ok = defn(x) >= 0 && present(defn(x)); x += 1 }
-        present(n + j) = ok && (
-          if (win == 0) stairMatch(posArrs, defn)
-          else if (win < 0) orderedSpan(defn.map(posArrs)) <= -win
-          else minSpan(defn.map(posArrs)) <= win)
-        j += 1
-      }
-      if ((accept == null || accept(d)) && eval(present)) topk.offer(d, score)
-    }
-    topk.result()
-  }
-
-  /** ∃ p: p+i ∈ posArrs(defn(i)) for all i — [[phraseMatches]] over
-    * pre-captured position arrays addressed by slot index. */
-  private def stairMatch(posArrs: Array[Array[Int]], defn: Array[Int]): Boolean = {
-    var cand = posArrs(defn(0))
-    var i = 1
-    while (i < defn.length && cand.nonEmpty) {
-      val ps = posArrs(defn(i))
-      val out = mutable.ArrayBuilder.make[Int]
-      var a = 0; var b = 0
-      while (a < cand.length && b < ps.length) {
-        val want = cand(a) + i
-        if (ps(b) == want) { out += cand(a); a += 1; b += 1 }
-        else if (ps(b) < want) b += 1
-        else a += 1
-      }
-      cand = out.result()
-      i += 1
-    }
-    cand.nonEmpty
-  }
-
-  /** Exhaustive disjunctive evaluation (no pruning) — the safe path for
-    * multi-segment reads where stored block maxima are not valid bounds
-    * (SURVEY §2.3 I7 note); also the in-bucket oracle for WAND tests. */
-  def topKOrExhaustive(terms: Array[TermCursor], lens: Array[Int],
-                       firstDocId: Long, avgdl: Double, k: Int,
-                       accept: Long => Boolean = null,
-                       after: Scored = null): Array[Scored] = {
-    val topk = new TopK(k, after)
-    val byTermId = terms.sortBy(_.termId)
-    var live = byTermId.filter(!_.exhausted)
-    while (live.nonEmpty) {
-      var d = Long.MaxValue
-      var i = 0
-      while (i < live.length) { if (live(i).docId < d) d = live(i).docId; i += 1 }
-      val dl = lens((d - firstDocId).toInt)
-      var score = 0.0
-      i = 0
-      while (i < live.length) {
-        if (live(i).docId == d) { score += BM25.impact(live(i).idf, live(i).tf, dl, avgdl); live(i).next() }
-        i += 1
-      }
-      if (accept == null || accept(d)) topk.offer(d, score)
-      live = live.filter(!_.exhausted)
-    }
-    topk.result()
-  }
-
-  /** LM-Dirichlet scoring walk (Zhai & Lafferty SIGIR'01; the exact
-    * Lucene LMDirichletSimilarity formulation, which is the pluggable
-    * non-BM25 similarity every Lucene/ES deployment can switch to):
-    * per matched term, s_t(d) = max(0, ln(1 + tf/(μ·p_t)) +
-    * ln(μ/(dl+μ))) with p_t = cf_t/|C| (the collection unigram LM),
-    * doc score = Σ_t s_t(d); docs whose every contribution clamps to
-    * zero are dropped (Lucene's per-term 0-clamp). An LM score has no
-    * per-list upper bound stored in the index (block maxima are BM25
-    * impacts), so this walk is document-at-a-time exhaustive over the
-    * union — the same plan shape as [[topKOrExhaustive]], same termId
-    * pushdown + bucket pruning upstream. */
-  def topKLmd(terms: Array[TermCursor], lens: Array[Int], firstDocId: Long,
-              k: Int, mu: Double, pByTid: Long => Double,
-              accept: Long => Boolean = null,
-              after: Scored = null): Array[Scored] = {
-    val topk = new TopK(k, after)
-    val byTermId = terms.sortBy(_.termId)
-    var live = byTermId.filter(!_.exhausted)
-    while (live.nonEmpty) {
-      var d = Long.MaxValue
-      var i = 0
-      while (i < live.length) { if (live(i).docId < d) d = live(i).docId; i += 1 }
-      val dl = lens((d - firstDocId).toInt)
-      val dlTerm = math.log(mu / (dl + mu))
-      var score = 0.0
-      i = 0
-      while (i < live.length) {
-        if (live(i).docId == d) {
-          val s = math.log(1.0 +
-            live(i).tf / (mu * pByTid(live(i).termId))) + dlTerm
-          if (s > 0.0) score += s
-          live(i).next()
-        }
-        i += 1
-      }
-      if (score > 0.0 && (accept == null || accept(d))) topk.offer(d, score)
-      live = live.filter(!_.exhausted)
-    }
-    topk.result()
-  }
-
-  /** First `k` matching docIds in docId order, then STOP — the
-    * early-termination consumer of index-time sorting (Lucene
-    * `IndexSorting` / ES `index.sort`): over an index whose docIds were
-    * assigned in a chosen static-field order, the first k matches of a
-    * docId-ordered walk ARE the top-k by that sort, and every posting
-    * past the k-th match is never decoded. Same document-at-a-time
-    * frontier as [[countMatches]]; no doc lengths, no scoring. */
-  def firstK(slots: Array[TermCursor], eval: Array[Boolean] => Boolean,
-             k: Int): Array[Long] = {
-    require(k >= 1, s"firstK needs k >= 1, got $k")
-    val n = slots.length
-    val present = new Array[Boolean](n)
-    // grow lazily: k is an upper bound, not a size hint (callers may
-    // pass a huge cap to mean "the whole match set")
-    val out = new scala.collection.mutable.ArrayBuffer[Long](math.min(k, 64))
-    var found = 0
-    var anyLive = slots.exists(c => c != null && !c.exhausted)
-    while (anyLive && found < k) {
-      var d = Long.MaxValue
-      var i = 0
-      while (i < n) {
-        val c = slots(i)
-        if (c != null && !c.exhausted && c.docId < d) d = c.docId
-        i += 1
-      }
-      java.util.Arrays.fill(present, false)
-      i = 0
-      anyLive = false
-      while (i < n) {
-        val c = slots(i)
-        if (c != null && !c.exhausted) {
-          if (c.docId == d) { present(i) = true; c.next() }
-          if (!c.exhausted) anyLive = true
-        }
-        i += 1
-      }
-      if (eval(present)) { out += d; found += 1 }
-    }
-    out.toArray
-  }
-
-  /** Capped presence count over one bucket — the early-termination
-    * primitive behind `terminate_after` / `track_total_hits: N`. Same
-    * document-at-a-time union walk and presence vector as [[topKBool]]
-    * (positional atoms included) but with NO doc lengths and NO scoring,
-    * and the walk RETURNS as soon as `cap` matches are seen — per-bucket
-    * work is bounded by the cap, not by the match-set size. */
-  def countMatches(slots: Array[TermCursor],
-                   eval: Array[Boolean] => Boolean, cap: Long,
-                   phraseDefs: Array[Array[Int]] = null,
-                   phraseWins: Array[Int] = null): Long = {
-    val n = slots.length
-    val nPhrases = if (phraseDefs == null) 0 else phraseDefs.length
-    val present = new Array[Boolean](n + nPhrases)
-    val posArrs = if (nPhrases == 0) null else new Array[Array[Int]](n)
-    var count = 0L
-    var anyLive = slots.exists(c => c != null && !c.exhausted)
-    while (anyLive && count < cap) {
-      var d = Long.MaxValue
-      var i = 0
-      while (i < n) {
-        val c = slots(i)
-        if (c != null && !c.exhausted && c.docId < d) d = c.docId
-        i += 1
-      }
-      java.util.Arrays.fill(present, false)
-      i = 0
-      anyLive = false
-      while (i < n) {
-        val c = slots(i)
-        if (c != null && !c.exhausted) {
-          if (c.docId == d) {
-            present(i) = true
-            if (posArrs != null) posArrs(i) = c.positions()
-            c.next()
-          }
-          if (!c.exhausted) anyLive = true
-        }
-        i += 1
-      }
-      var j = 0
-      while (j < nPhrases) {
-        val defn = phraseDefs(j)
-        val win = if (phraseWins == null) 0 else phraseWins(j)
-        var ok = defn.length > 0
-        var x = 0
-        while (ok && x < defn.length) { ok = defn(x) >= 0 && present(defn(x)); x += 1 }
-        present(n + j) = ok && (
-          if (win == 0) stairMatch(posArrs, defn)
-          else if (win < 0) orderedSpan(defn.map(posArrs)) <= -win
-          else minSpan(defn.map(posArrs)) <= win)
-        j += 1
-      }
-      if (eval(present)) count += 1
-    }
-    count
-  }
-
-  /** Disjunction-max evaluation (the Lucene DisjunctionMaxQuery
-    * combiner): per-doc score = best single-term BM25 contribution plus
-    * `tie` times the sum of the remaining contributions — tie = 0 is the
-    * pure max ("best field" reading), tie = 1 degrades to the plain
-    * disjunctive sum. Exhaustive document-at-a-time walk (same shape as
-    * [[topKOrExhaustive]]); for tie ≤ 1 the dis-max score is bounded by
-    * the plain sum, so the stored block maxima WOULD remain sound
-    * bounds, but the combiner is cheap enough that the exhaustive walk
-    * (the msm / common-terms regime) keeps this path simple.
-    *
-    * Determinism: contributions accumulate in ascending termId order
-    * (`terms` pre-sorted below); max is order-independent. */
-  def topKDisMax(terms: Array[TermCursor], lens: Array[Int],
-                 firstDocId: Long, avgdl: Double, k: Int, tie: Double,
-                 accept: Long => Boolean = null,
-                 after: Scored = null): Array[Scored] = {
-    val topk = new TopK(k, after)
-    val byTermId = terms.sortBy(_.termId)
-    var live = byTermId.filter(!_.exhausted)
-    while (live.nonEmpty) {
-      var d = Long.MaxValue
-      var i = 0
-      while (i < live.length) { if (live(i).docId < d) d = live(i).docId; i += 1 }
-      val dl = lens((d - firstDocId).toInt)
-      var sum = 0.0
-      var best = 0.0
-      i = 0
-      while (i < live.length) {
-        if (live(i).docId == d) {
-          val c = BM25.impact(live(i).idf, live(i).tf, dl, avgdl)
-          sum += c
-          if (c > best) best = c
-          live(i).next()
-        }
-        i += 1
-      }
-      if (accept == null || accept(d)) topk.offer(d, best + tie * (sum - best))
-      live = live.filter(!_.exhausted)
-    }
-    topk.result()
   }
 }

@@ -235,8 +235,6 @@ class IntervalsSpec extends SparkSpec {
 
   test("any_of intervals == all-chains brute force over merged alternatives") {
     val Seq(a, b, c) = pickTriple
-    val slots = Seq(Seq(a, c), Seq(b)) // (a OR c) then b
-    val q = s"$a|$c $b"
     val n = seg.stats.numDocs.toInt
     // the BOOL scoring contract: every present alternative term scores —
     // exactly the exhaustive OR walk's per-doc score
@@ -244,7 +242,12 @@ class IntervalsSpec extends SparkSpec {
     val filterTerm = toksByDoc.values.flatMap(_.distinct)
       .find(t => !Seq(a, b, c).contains(t) && toksByDoc.values.exists(ts =>
         ts.contains(t) && ts.contains(a))).get
-    for (g <- Seq(0, 1, 3, 8, 1000); not <- Seq(None, Some(filterTerm))) {
+    // (a OR c) then b; then (a OR c) then (b OR c), where c is an
+    // alternative of both slots and walks one cursor shared by them
+    val inputs = Seq(Seq(Seq(a, c), Seq(b)), Seq(Seq(a, c), Seq(b, c)))
+    for (slots <- inputs; g <- Seq(0, 1, 3, 8, 1000);
+         not <- Seq(None, Some(filterTerm))) {
+      val q = slots.map(_.mkString("|")).mkString(" ")
       val want = {
         val ok = toksByDoc.collect {
           case (d, toks) if bruteMatchAny(toks, slots, g, not) => d
@@ -255,7 +258,7 @@ class IntervalsSpec extends SparkSpec {
       }
       val got = searcher.intervalsAnyHits(q, g, not.getOrElse(""), 10)
         .collect().map(h => (h.docId, h.score)).toSeq
-      assert(got == want, s"g=$g not=$not")
+      assert(got == want, s"q=$q g=$g not=$not")
     }
   }
 

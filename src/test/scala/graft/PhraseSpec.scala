@@ -46,8 +46,19 @@ class PhraseSpec extends SparkSpec {
       .filter(_.length >= 2)
   }
 
+  /** A phrase from a real document whose first term comes back (`x y x`):
+    * two slot cursors walk one posting list, and the term scores once. */
+  lazy val repeatedPhrase: Array[String] = {
+    val found = corpus.iterator.map(r => Tokenizer.tokenize(r.content))
+      .flatMap(t => (0 until t.length - 2).iterator
+        .filter(i => t(i) == t(i + 2) && t(i) != t(i + 1)).map(i => t.slice(i, i + 3)))
+      .nextOption()
+    assert(found.nonEmpty, "the corpus must hold an x y x token run")
+    found.get
+  }
+
   test("phrase hits == brute-force consecutive-token scan, scores are BM25 over distinct terms") {
-    presentPhrases.foreach { phrase =>
+    (presentPhrases :+ repeatedPhrase).foreach { phrase =>
       val text = "\"" + phrase.mkString(" ") + "\""
       val hits = searcher.hits("PHRASE", text, 1000).collect()
       val got = hits.map(h => keyOf(h.docId)).toSet
