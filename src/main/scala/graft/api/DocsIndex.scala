@@ -151,8 +151,8 @@ object DocsIndex {
 
   /** Field-sorted results (the ES `sort` surface): the query's match
     * set ordered by a docmap field instead of BM25 — "newest first" /
-    * "longest first" result views. Matching uses the kind's presence
-    * walk (pushdown-filtered, docId-only decode, no scoring); the sort
+    * "longest first" result views. Matching uses the kind's unscored
+    * walk (termId pushdown, no scoring, no doc lengths); the sort
     * is a top-k over match-set-sized rows — Catalyst plans
     * TakeOrderedAndProject (per-partition partial top-k + driver
     * merge), never a full sort. Tie-break doc_id asc. */
@@ -181,7 +181,7 @@ object DocsIndex {
     * ES histogram-agg shape, the numeric sibling of facets): matching
     * docs bucketed by docLen in `width`-token bins, one count per
     * non-empty bin. The match set comes from the kind's own presence
-    * walk (Searcher.matchDocIds — pushdown-filtered, docId-only decode);
+    * walk (Searcher.matchDocIds — termId pushdown, unscored walk);
     * the docmap join + hash agg touch match-set-sized data only. */
   def lenHistogram(spark: SparkSession, sfDir: String, kind: String,
                    text: String, width: Int): DataFrame = {
@@ -207,7 +207,7 @@ object DocsIndex {
     * `extended_stats` agg over a numeric field, here docLen): count,
     * min, max, sum, mean, population variance, population std-dev.
     * The match set comes from the kind's presence walk
-    * (Searcher.matchDocIds — pushdown-filtered, docId-only decode); the
+    * (Searcher.matchDocIds — termId pushdown, unscored walk); the
     * docmap join + the single-row agg touch match-set-sized data only,
     * and the agg itself is partial+final (one row leaves each task).
     * Cross-engine determinism: sums are EXACT Longs (docLen and its
@@ -294,8 +294,8 @@ object DocsIndex {
     * the script metric avg_len = len_sum / n_docs is ONE IEEE division
     * of two exact Longs (no Σ-of-doubles drift), rounded by the
     * explicit 6-dp half-up rule; the selector keeps buckets with
-    * n_docs ≥ `minDocs`. Match set from the presence walk (pushdown,
-    * docId-only decode); one partial+final hash agg keyed by lang —
+    * n_docs ≥ `minDocs`. Match set from the unscored walk (termId
+    * pushdown); one partial+final hash agg keyed by lang —
     * bucket-table-sized output. */
   def langBucketScript(spark: SparkSession, sfDir: String, kind: String,
                        text: String, minDocs: Long): DataFrame = {
@@ -376,7 +376,7 @@ object DocsIndex {
     * bound (the X30/X61 argument): the positive walk stays WAND-pruned
     * and only the top-`window` rows pay the demotion. The negative
     * membership probe is the negative query's own presence walk
-    * (termId pushdown, docId-only decode) filtered to the ≤window
+    * (termId pushdown, unscored walk) filtered to the ≤window
     * candidate ids — match-set-sized at worst, window-sized out. */
   def boostingRankedHits(spark: SparkSession, sfDir: String, posKind: String,
                          posText: String, negKind: String, negText: String,
@@ -502,7 +502,7 @@ object DocsIndex {
     * md5-portable hash family every curation twin already uses — so the
     * ordering is fully determined by (seed, doc_id) and identical across
     * engines, cluster sizes, and runs. Match set from the kind's
-    * presence walk (pushdown-filtered docId-only decode); the hash +
+    * unscored walk (termId pushdown); the hash +
     * TakeOrderedAndProject top-k touch match-set-sized data only, all
     * inside whole-stage codegen (built-in md5/conv, no UDF). */
   def randomScoredHits(spark: SparkSession, sfDir: String, kind: String,
@@ -588,7 +588,7 @@ object DocsIndex {
     * random_score hash family (md5-portable 15-hex prefix of
     * "seed:doc_id", ascending, doc_id tiebreak), so the sample is
     * reproducible and seed-sensitive. Scale: match set from the kind's
-    * presence walk (pushdown, docId-only decode); per-lang capping is
+    * unscored walk (termId pushdown); per-lang capping is
     * the EXACT TWO-STAGE top-k (partition-local partial winners, then a
     * per-lang final merge) — the lang-keyed shuffle moves ≤ P·|langs|·m
     * rows, never the match set. */
@@ -1466,8 +1466,8 @@ object DocsIndex {
     * (repo, path, commit) range sort then IS the static-field sort).
     * Sorted-by-signal queries early-terminate: the first k matches of
     * a docId-ordered walk are the answer, and postings past the k-th
-    * match are never decoded (Searcher.earlyHits / Wand.firstK, the
-    * union walk's first-k mode). Built once per sfDir; Bench bills it
+    * match are never decoded (Searcher.earlyHits: each bucket's unscored
+    * walk stops at k). Built once per sfDir; Bench bills it
     * as `sorted_build`. */
   private val sortedIdxCache = TrieMap.empty[String, (Segment, Searcher)]
 

@@ -691,8 +691,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
   /** Filters aggregation (the ES `filters` agg): exact match counts for
     * N named queries in ONE job over ONE union-pushdown postings scan —
     * the msearch batching argument (X38) applied to counting: each
-    * touched bucket is visited once and every query's presence walk
-    * runs against the bucket's already-decoded lists, versus N
+    * touched bucket is visited once and every query's unscored walk
+    * runs against the bucket's already-fetched lists, versus N
     * independent count jobs each paying its own scan and scheduling.
     * Supported kinds: FREE/OR (any term), AND (all terms); pattern
     * kinds count through their dictionary expansions like everywhere
@@ -703,40 +703,9 @@ final class Searcher(spark: SparkSession, segment: Segment,
     require(queries.nonEmpty, "matchCountsBatch needs at least one filter")
     require(queries.map(_._1).distinct.size == queries.size,
       "filter names must be unique")
-    val allowed = Set("FREE", "OR", "AND", "PREFIX", "REGEX", "WILD")
-    val plans: Array[(String, Array[Long], Boolean)] =
-      queries.iterator.map { case (name, kind, text) =>
-        require(allowed.contains(kind),
-          s"matchCountsBatch supports ${allowed.mkString("/")}, got $kind")
-        val terms = QueryParser.termsFor(kind, text)
-        val entries = entriesFor(kind, text)
-        val conj = kind == "AND"
-        if (entries.isEmpty || (conj && entries.length < terms.distinct.length))
-          (name, Array.empty[Long], conj)
-        else (name, entries.map(_.termId).sorted, conj)
-      }.toArray
-    val unionTids = plans.flatMap(_._2).distinct.sorted
-    if (unionTids.isEmpty) return plans.map(p => p._1 -> 0L).toMap
-    val pls = segment.postings
-      .filter($"termId".isin(unionTids.map(Long.box): _*)).as[PostingList]
-    val positional = segment.params.positional
-    val plansL = plans
-
-    def walk(plIt: Iterator[PostingList]): Iterator[(String, Long)] = {
-      val plByTid = plIt.map(pl => pl.termId -> pl).toMap
-      plansL.iterator.map { case (name, tids, conj) =>
-        val slots =
-          if (tids.isEmpty) null else Searcher.countSlots(plByTid, tids, positional, (conj, null))
-        if (slots == null) (name, 0L)
-        else (name, Wand.countMatches(slots, p => Searcher.present(p, conj), Long.MaxValue))
-      }
-    }
-    pls.groupByKey(_.bucket)
-      .flatMapGroups((_, plIt) => walk(plIt))
-      .toDF("name", "cnt")
-      .groupBy($"name").agg(sum($"cnt").as("cnt"))
-      .as[(String, Long)].collect().toMap ++
-      plans.filter(_._2.isEmpty).map(p => p._1 -> 0L).toMap
+    countAll(queries.map { case (name, kind, text) =>
+      name -> countPlan("matchCountsBatch", kind, text)
+    })
   }
 
   /** Adjacency-matrix aggregation (the ES `adjacency_matrix` agg):
@@ -745,10 +714,10 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * order (the ES bucket-key convention). Same execution regime as
     * [[matchCountsBatch]] — ONE union-pushdown postings scan for the
     * whole matrix, each touched bucket visited once; an intersection
-    * key walks the UNION of its two filters' lists with a composed
-    * predicate (A-part AND B-part over per-filter presence masks), so
-    * the N + N(N-1)/2 counts cost one scan, never N² jobs. Output is
-    * (key × bucket)-sized Longs — query-set-sized, never
+    * key is a BOOL plan over the UNION of its two filters' slots with a
+    * composed predicate (A-part AND B-part over per-filter presence
+    * masks), so the N + N(N-1)/2 counts cost one scan, never N² jobs.
+    * Output is (key × bucket)-sized Longs — query-set-sized, never
     * match-set-sized. Zero counts (incl. OOV/dead filters and their
     * pairs) are reported explicitly, not omitted as ES does — a count
     * contract wants a deterministic row set. */
@@ -759,65 +728,42 @@ final class Searcher(spark: SparkSession, segment: Segment,
       "filter names must be unique")
     require(filters.forall(f => !f._1.contains("&")),
       "filter names must not contain '&' (the intersection-key separator)")
-    val allowed = Set("FREE", "OR", "AND", "PREFIX", "REGEX", "WILD")
-    // per filter: distinct sorted tids, conjunctive?, matches-nothing?
-    val base = filters.map { case (name, kind, text) =>
-      require(allowed.contains(kind),
-        s"adjacencyCounts supports ${allowed.mkString("/")}, got $kind")
-      val terms = QueryParser.termsFor(kind, text)
-      val entries = entriesFor(kind, text)
-      val conj = kind == "AND"
-      val dead = entries.isEmpty ||
-        (conj && entries.length < terms.distinct.length)
-      (name, entries.map(_.termId).distinct.sorted, conj, dead)
-    }.sortBy(_._1).toArray
-    def positions(union: Array[Long], in: Array[Long]): Array[Int] =
-      in.map(t => java.util.Arrays.binarySearch(union, t))
-    // countable plans: live singles + live pairs; masks index union tids
-    val plans = scala.collection.mutable.ArrayBuffer
-      .empty[(String, Array[Long], Boolean, Array[Int], Boolean, Array[Int])]
-    val zeros = scala.collection.mutable.ArrayBuffer.empty[String]
-    base.foreach { case (name, tids, conj, dead) =>
-      if (dead) zeros += name
-      else plans += ((name, tids, conj, tids.indices.toArray, false, null))
+    val base = filters.sortBy(_._1).map { case (name, kind, text) =>
+      name -> countPlan("adjacencyCounts", kind, text)
     }
-    for (i <- base.indices; j <- (i + 1) until base.length) {
-      val (na, ta, ca, da) = base(i)
-      val (nb, tb, cb, db) = base(j)
-      val key = s"$na&$nb"
-      if (da || db) zeros += key
-      else {
-        val union = (ta ++ tb).distinct.sorted
-        plans += ((key, union, ca, positions(union, ta),
-          cb, positions(union, tb)))
-      }
-    }
-    if (plans.isEmpty) return zeros.map(_ -> 0L).toMap
-    val unionTids = plans.toArray.flatMap(_._2).distinct.sorted
-    val pls = segment.postings
-      .filter($"termId".isin(unionTids.map(Long.box): _*)).as[PostingList]
-    val positional = segment.params.positional
-    val plansL = plans.toArray
+    val pairs = for (i <- base.indices; j <- (i + 1) until base.length)
+      yield s"${base(i)._1}&${base(j)._1}" ->
+        base(i)._2.flatMap(a => base(j)._2.map(b => both(a, b)))
+    countAll(base ++ pairs)
+  }
 
-    def walk(plIt: Iterator[PostingList]): Iterator[(String, Long)] = {
-      val plByTid = plIt.map(pl => pl.termId -> pl).toMap
-      plansL.iterator.map { case (key, tids, ca, pa, cb, pb) =>
-        val slots = Searcher.countSlots(plByTid, tids, positional, (ca, pa), (cb, pb))
-        if (slots == null) (key, 0L)
-        else {
-          val eval: Array[Boolean] => Boolean =
-            if (pb == null) p => Searcher.present(p, ca, pa)
-            else p => Searcher.present(p, ca, pa) && Searcher.present(p, cb, pb)
-          (key, Wand.countMatches(slots, eval, Long.MaxValue))
-        }
-      }
-    }
-    pls.groupByKey(_.bucket)
-      .flatMapGroups((_, plIt) => walk(plIt))
-      .toDF("name", "cnt")
-      .groupBy($"name").agg(sum($"cnt").as("cnt"))
-      .as[(String, Long)].collect().toMap ++
-      zeros.map(_ -> 0L).toMap
+  /** The plan of a counting or first-k surface (`what`): the kind
+    * checked, then lowered; None = matches nothing. */
+  private def countPlan(what: String, kind: String, text: String): Option[QueryPlan] = {
+    val kinds = Seq("FREE", "OR", "AND", "PREFIX", "REGEX", "WILD")
+    require(kinds.contains(kind), s"$what supports ${kinds.mkString("/")}, got $kind")
+    lower(kind, text, 0)
+  }
+
+  /** Exact counts of named plans in one job; a None plan counts zero. */
+  private def countAll(named: Seq[(String, Option[QueryPlan])])
+      : Map[String, Long] = {
+    val live = named.collect { case (name, Some(p)) => name -> p }
+    named.map(_._1 -> 0L).toMap ++
+      live.map(_._1).zip(matchCounts(live.map(_._2).toArray, Long.MaxValue))
+  }
+
+  /** The plan matching what both `a` and `b` match: a BOOL plan over the
+    * union of their slots whose predicate is all (AND) or any of each
+    * one's slots. */
+  private def both(a: QueryPlan, b: QueryPlan): QueryPlan = {
+    val slots = (a.slots ++ b.slots).distinct.sorted
+    def part(p: QueryPlan) =
+      (p.shape == QueryPlan.And, p.slots.map(java.util.Arrays.binarySearch(slots, _)))
+    val (ca, pa) = part(a)
+    val (cb, pb) = part(b)
+    a.copy(slots = slots, idf = a.idf ++ b.idf, boost = null, shape = QueryPlan.Bool(
+      p => Searcher.present(p, ca, pa) && Searcher.present(p, cb, pb), null, null))
   }
 
   /** LM-Dirichlet retrieval (Zhai & Lafferty SIGIR'01; Lucene
@@ -987,7 +933,7 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * semantics — the FOREGROUND set for aggregations that need more than
     * facet counts (significant terms). None = provably empty. */
   def matchDocIds(kind: String, text: String): Option[DataFrame] =
-    matchSet(kind, text)
+    lower(kind, text, 0).map(matchIds(_, Long.MaxValue).toDF("docId"))
 
   /** Batched multi-query execution ("msearch" — the offline query-log
     * shape: replay an eval set, mine hard negatives for 10k training
@@ -1026,20 +972,13 @@ final class Searcher(spark: SparkSession, segment: Segment,
         lower(kind, text, k).map(qid -> _)
       }.toArray
     if (plans.isEmpty) return spark.emptyDataset[Hit]
-    val unionTids = plans.flatMap(_._2.tids).distinct.sorted
-    val pls = segment.postings
-      .filter($"termId".isin(unionTids.map(Long.box): _*)).as[PostingList]
-
-    def walk(bucket: Int, plIt: Iterator[PostingList], firstDocId: Long,
-             lens: Array[Int]): Iterator[(Long, Long, Double)] = {
+    val raw = perBucket(fetch(plans.map(_._2))) { (_, plIt, firstDocId, lens) =>
       val lists = plIt.toArray
       plans.iterator.flatMap { case (qid, plan) =>
         Wand.eval(plan, lists, firstDocId, lens, null)
           .iterator.map(s => (qid, s.docId, s.score))
       }
     }
-
-    val raw = perBucket(pls)(walk)
     raw.toDF("qid", "docId", "score")
       .withColumn("rank", row_number().over(
         org.apache.spark.sql.expressions.Window
@@ -1125,18 +1064,8 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * segment) statistics instead of this segment's own. */
   private[search] def scoredRaw(plan: QueryPlan, acceptB: AcceptB = null,
                                 rejectB: AcceptB = null): Dataset[(Long, Double)] = {
-    val pls0 = segment.postings.filter($"termId".isin(plan.tids.toSeq: _*))
-    // scoped search prunes whole buckets before any decode; the bounds
-    // stay Int so the filter literals match the partition column (a cast
-    // would defeat pruning)
     val bs = segment.params.bucketSize
-    val (loBucket, hiBucket) = plan.bucketRange(bs)
-    val pls = (if (plan.scoped)
-      pls0.filter($"bucket" >= loBucket && $"bucket" <= hiBucket)
-    else pls0).as[PostingList]
-
-    def walk(bucket: Int, plIt: Iterator[PostingList], firstDocId: Long,
-             lens: Array[Int]): Iterator[(Long, Double)] = {
+    perBucket(fetch(Seq(plan))) { (bucket, plIt, firstDocId, lens) =>
       // a bucket with no accepted doc skips its walk (and decode) entirely
       val accept = Wand.bucketFilter(bucket, bs,
         if (acceptB == null) null else acceptB.value,
@@ -1145,16 +1074,58 @@ final class Searcher(spark: SparkSession, segment: Segment,
       else Wand.eval(plan, plIt.toArray, firstDocId, lens, accept)
         .iterator.map(s => (s.docId, s.score))
     }
-    perBucket(pls)(walk)
+  }
+
+  /** Each touched bucket's matches of `plan` in docId order, at most
+    * `limit` per bucket: the unscored walk, which reads no doc lengths. */
+  private def matchIds(plan: QueryPlan, limit: Long): Dataset[Long] =
+    perBucket(fetch(Seq(plan)), lens = false) { (_, plIt, _, _) =>
+      val out = new scala.collection.mutable.ArrayBuilder.ofLong
+      Wand.matches(plan, plIt.toArray, null, limit)(out += _)
+      out.result().iterator
+    }
+
+  /** Every plan's match count in one job over their shared fetch, each
+    * bucket's walk stopped after `limit` matches: one Long per plan leaves
+    * a bucket, never a docId, and the per-partition sums fold into the
+    * driver's without a second shuffle. */
+  private def matchCounts(plans: Array[QueryPlan], limit: Long): Array[Long] = {
+    val n = plans.length
+    if (n == 0) return Array.empty
+    perBucket(fetch(plans), lens = false) { (_, plIt, _, _) =>
+      val lists = plIt.toArray
+      Iterator(plans.map(Wand.matches(_, lists, null, limit)(_ => ())))
+    }.rdd.fold(new Array[Long](n)) { (sums, counts) =>
+      var i = 0
+      while (i < n) { sums(i) += counts(i); i += 1 }
+      sums
+    }
+  }
+
+  /** The postings the plans' walks read — the one postings fetch of
+    * every query walk: termId pushdown over the union of their termIds
+    * and, when every plan is scoped, bucket pruning to the scopes' hull
+    * before any decode. The bounds stay Int so the filter literals match
+    * the partition column (a cast would defeat pruning). */
+  private def fetch(plans: Seq[QueryPlan]): Dataset[PostingList] = {
+    val pls = segment.postings
+      .filter($"termId".isin(plans.flatMap(_.tids).distinct.sorted: _*))
+    val ranges = plans.map(_.bucketRange(segment.params.bucketSize))
+    (if (plans.forall(_.scoped))
+      pls.filter($"bucket" >= ranges.map(_._1).min && $"bucket" <= ranges.map(_._2).max)
+    else pls).as[PostingList]
   }
 
   /** Runs `walk` once per touched bucket with that bucket's posting lists
-    * and doc lengths. Resident mode: one scan + one tiny shuffle of ≤|q|
-    * rows per bucket. Cogroup mode: doclens arrive co-partitioned, pruned
-    * to the touched buckets by a lazy broadcast semi-join. */
-  private def perBucket[T: org.apache.spark.sql.Encoder](pls: Dataset[PostingList])(
+    * and doc lengths (`lens`; without them the walk gets null). Resident
+    * mode: one scan + one tiny shuffle of ≤|q| rows per bucket. Cogroup
+    * mode: doclens arrive co-partitioned, pruned to the touched buckets by
+    * a lazy broadcast semi-join. */
+  private def perBucket[T: org.apache.spark.sql.Encoder](pls: Dataset[PostingList],
+                                                         lens: Boolean = true)(
       walk: (Int, Iterator[PostingList], Long, Array[Int]) => Iterator[T]): Dataset[T] =
-    doclenResident match {
+    if (!lens) pls.groupByKey(_.bucket).flatMapGroups(walk(_, _, 0L, null))
+    else doclenResident match {
       case Some(bc) =>
         pls.groupByKey(_.bucket).flatMapGroups { (bucket, plIt) =>
           bc.value.get(bucket) match {
@@ -1201,42 +1172,55 @@ final class Searcher(spark: SparkSession, segment: Segment,
   /** Matched positions for highlighting/snippets: for each (docId in
     * `docIds`) × (query term in `entries`), the term's occurrence
     * positions in that document — decoded from the positional index
-    * (codec v2), which stores exactly this. The scan touches ONLY the
-    * query's termIds and the ≤k hit docs' buckets (both pushed down);
-    * inside each posting list the cursor GALLOPS to the target docIds —
-    * no full-list decode. Positions are 0-based indices over the
-    * filtered token stream (the index's position space).
+    * (codec v2), which stores exactly this. Positions are 0-based indices
+    * over the filtered token stream (the index's position space).
     *
     * Returns (docId, termId, pos) rows. */
   def matchedPositions(entries: Array[DictEntry], docIds: Array[Long])
       : Dataset[(Long, Long, Int)] = {
     require(segment.params.positional,
       "highlighting needs a positional index (BuildParams.positional)")
+    atDocs(entries, docIds)(_.positions())
+  }
+
+  /** Matched term frequencies for scoring explanations: for each
+    * (docId in `docIds`) × (query term in `entries`), the stored tf. Works
+    * on positional and non-positional segments alike (tf rides the v1
+    * stream).
+    *
+    * Returns (docId, termId, tf) rows. */
+  def matchedTfs(entries: Array[DictEntry], docIds: Array[Long])
+      : Dataset[(Long, Long, Int)] =
+    atDocs(entries, docIds)(c => Array(c.tf))
+
+  /** (docId, termId, value) rows of `entries`' lists at `docIds`, one per
+    * value `read` takes from the aligned posting. The scan touches ONLY
+    * the query's termIds and the target docs' buckets (both pushed down);
+    * inside each posting list the cursor GALLOPS to the target docIds —
+    * no full-list decode. */
+  private def atDocs(entries: Array[DictEntry], docIds: Array[Long])(
+      read: graft.codec.PostingCodec.Cursor => Array[Int]): Dataset[(Long, Long, Int)] = {
     if (entries.isEmpty || docIds.isEmpty)
       return spark.emptyDataset[(Long, Long, Int)]
     val bs = segment.params.bucketSize
+    val positional = segment.params.positional
     val byBucket: Map[Int, Array[Long]] =
       docIds.groupBy(d => (d / bs).toInt).map { case (b, ds) => b -> ds.sorted }
     val bcast = spark.sparkContext.broadcast(byBucket)
-    val tids = entries.map(_.termId)
-    val buckets = byBucket.keys.toSeq
     segment.postings
-      .filter($"termId".isin(tids.toSeq: _*) && $"bucket".isin(buckets: _*))
+      .filter($"termId".isin(entries.map(_.termId).toSeq: _*) &&
+        $"bucket".isin(byBucket.keys.toSeq: _*))
       .as[PostingList]
       .flatMap { pl =>
         val targets = bcast.value.getOrElse(pl.bucket, Array.empty[Long])
         val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
         val c = new graft.codec.PostingCodec.Cursor(
-          pl.numDocs, pl.lastDocIds, pl.maxImpacts, pl.offsets, pl.bytes,
-          positional = true)
+          pl.numDocs, pl.lastDocIds, pl.maxImpacts, pl.offsets, pl.bytes, positional)
         var i = 0
         while (i < targets.length && !c.exhausted) {
           c.nextGeq(targets(i))
-          if (!c.exhausted && c.docId == targets(i)) {
-            val ps = c.positions()
-            var j = 0
-            while (j < ps.length) { out += ((targets(i), pl.termId, ps(j))); j += 1 }
-          }
+          if (!c.exhausted && c.docId == targets(i))
+            read(c).foreach(v => out += ((targets(i), pl.termId, v)))
           i += 1
         }
         out
@@ -1263,45 +1247,6 @@ final class Searcher(spark: SparkSession, segment: Segment,
     }
   }
 
-  /** Matched term frequencies for scoring explanations: for each
-    * (docId in `docIds`) × (query term in `entries`), the stored tf —
-    * the same pushdown + galloping-cursor shape as [[matchedPositions]]
-    * (only the query's termIds and the ≤k hit docs' buckets are read,
-    * never a full-list decode), but works on positional and
-    * non-positional segments alike (tf rides the v1 stream).
-    *
-    * Returns (docId, termId, tf) rows. */
-  def matchedTfs(entries: Array[DictEntry], docIds: Array[Long])
-      : Dataset[(Long, Long, Int)] = {
-    if (entries.isEmpty || docIds.isEmpty)
-      return spark.emptyDataset[(Long, Long, Int)]
-    val bs = segment.params.bucketSize
-    val positional = segment.params.positional
-    val byBucket: Map[Int, Array[Long]] =
-      docIds.groupBy(d => (d / bs).toInt).map { case (b, ds) => b -> ds.sorted }
-    val bcast = spark.sparkContext.broadcast(byBucket)
-    val tids = entries.map(_.termId)
-    val buckets = byBucket.keys.toSeq
-    segment.postings
-      .filter($"termId".isin(tids.toSeq: _*) && $"bucket".isin(buckets: _*))
-      .as[PostingList]
-      .flatMap { pl =>
-        val targets = bcast.value.getOrElse(pl.bucket, Array.empty[Long])
-        val out = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-        val c = new graft.codec.PostingCodec.Cursor(
-          pl.numDocs, pl.lastDocIds, pl.maxImpacts, pl.offsets, pl.bytes,
-          positional = positional)
-        var i = 0
-        while (i < targets.length && !c.exhausted) {
-          c.nextGeq(targets(i))
-          if (!c.exhausted && c.docId == targets(i))
-            out += ((targets(i), pl.termId, c.tf))
-          i += 1
-        }
-        out
-      }
-  }
-
   /** Top-k hits WITH their matched positions — the snippet/highlight
     * surface every code-search UI needs. Uses the same expansion rules
     * as [[hits]] for the given kind. */
@@ -1318,84 +1263,13 @@ final class Searcher(spark: SparkSession, segment: Segment,
 
   /** Facet counts over ALL matching documents (not just top-k) — the
     * code-search sidebar: how many hits per lang / per repo. Matching =
-    * the kind's own semantics (OR: any term; AND: all terms). The doc
-    * set comes straight from the postings (termId pushdown, per-bucket
-    * distinct-ish aggregation), then one hash aggregation against the
-    * docmap — no scoring, no decode of positions, no top-k walk. */
-  /** The query's full matching docId set under the KIND'S OWN predicate:
-    * FREE/OR match any term, AND all terms, PREFIX/REGEX expand first —
-    * decoded per posting list with docIds only (tf/position bytes skipped
-    * by the cursor), no scoring walk. BOOL/PHRASE/NEAR route through the
-    * compiled boolean presence walk (positional atoms verified), so facet
-    * counts and match totals honor the full query semantics instead of
-    * silently degrading to any-term. None = provably empty without a job.
-    * Shared by facets and matchCount. */
-  private def matchSet(kind: String, text: String): Option[DataFrame] = {
-    if (kind == "BOOL" || kind == "PHRASE" || kind == "NEAR")
-      return boolMatchSet(kind, text)
-    if (kind == "ONEAR") {
-      // ordered proximity isn't a boolean atom; its match set is the
-      // ONEAR walk with k = bucketSize (the boolMatchSet trick: every
-      // bucket holds ≤ bucketSize docs, so per-bucket "top-k" is the
-      // complete match set) and scores discarded
-      return lower(kind, text, bucketK).map(p =>
-        scoredRaw(p).toDF("docId", "score").select($"docId"))
-    }
-    val terms = QueryParser.termsFor(kind, text)
-    val entries = entriesFor(kind, text) // ONE expansion dispatch, every caller
-    val needAll = kind == "AND"
-    if (entries.isEmpty || (needAll && entries.length < terms.distinct.length))
-      return None
-    val tids = entries.map(_.termId)
-    val nTerms = entries.length
-    val positional = segment.params.positional
-    val matching = segment.postings
-      .filter($"termId".isin(tids.toSeq: _*)).as[PostingList]
-      .flatMap { pl =>
-        val c = new graft.codec.PostingCodec.Cursor(
-          pl.numDocs, pl.lastDocIds, pl.maxImpacts, pl.offsets, pl.bytes, positional)
-        val out = new Array[Long](pl.numDocs)
-        var i = 0
-        while (i < pl.numDocs) { out(i) = c.docId; c.next(); i += 1 }
-        out
-      }
-    Some(
-      if (needAll)
-        matching.groupByKey(identity).count()
-          .filter(_._2 == nTerms.toLong).map(_._1).toDF("docId")
-      else matching.distinct().toDF("docId"))
-  }
-
-  /** Full match set of a BOOL/PHRASE/NEAR query via the compiled
-    * presence walk. PHRASE/NEAR normalize into the boolean grammar's
-    * positional atoms (one Phrase/Near node), so all three kinds share
-    * one evaluator. The union walk runs with k = bucketSize — every
-    * bucket holds ≤ bucketSize docs, so the per-bucket "top-k" IS the
-    * bucket's complete match set (scores computed but discarded). */
-  private def boolMatchSet(kind: String, text: String): Option[DataFrame] = {
-    val ast: BoolQuery.Expr = kind match {
-      case "PHRASE" =>
-        QueryParser.termsFor("PHRASE", text).toList match {
-          case Nil => return None
-          case t :: Nil => BoolQuery.Term(t)
-          case ts => BoolQuery.Phrase(ts)
-        }
-      case "NEAR" =>
-        QueryParser.termsFor("NEAR", text).toList match {
-          case Nil => return None
-          case t :: Nil => BoolQuery.Term(t)
-          case ts => BoolQuery.Near(ts, QueryParser.nearWindow(text))
-        }
-      case _ => BoolQuery.parse(text)
-    }
-    // scores are discarded: idf 0 keeps the walk's heap insertion-only
-    boolPlan(ast, text, bucketK).map(p =>
-      scoredRaw(p.copy(idf = p.idf.map { case (t, _) => t -> 0.0 }))
-        .map(_._1).toDF("docId"))
-  }
-
+    * the kind's own semantics (OR: any term; AND: all terms; BOOL/PHRASE/
+    * NEAR/ONEAR with their positional checks). The doc set is the
+    * unscored walk's ([[matchDocIds]]: termId pushdown, one walk per
+    * bucket, no scoring, no doc lengths), then one hash aggregation
+    * against the docmap. */
   def facets(kind: String, text: String, facetCol: String): DataFrame =
-    matchSet(kind, text) match {
+    matchDocIds(kind, text) match {
       case None =>
         spark.emptyDataFrame
           .withColumn(facetCol, lit("")).withColumn("n_docs", lit(0L))
@@ -1406,57 +1280,43 @@ final class Searcher(spark: SparkSession, segment: Segment,
     }
 
   /** Total matching documents — the "about N results" surface every
-    * search UI shows. One distinct-count over the pushdown-filtered
-    * decoded docIds; no scoring walk, no docmap join. */
+    * search UI shows: each touched bucket's unscored walk counts its
+    * matches and only the per-bucket counts leave it — no docId shuffle,
+    * no scoring, no docmap join. */
   def matchCount(kind: String, text: String): Long =
-    matchSet(kind, text).map(_.count()).getOrElse(0L)
+    lower(kind, text, 0).fold(0L)(p => matchCounts(Array(p), Long.MaxValue).head)
 
   /** Total matching documents with a global cap — the Elasticsearch
     * `track_total_hits: N` / `terminate_after` surface ("more than N
     * results"). Returns min(true count, cap) EXACTLY: each bucket's
-    * presence walk stops as soon as it has counted `cap` matches, and
+    * unscored walk stops as soon as it has counted `cap` matches, and
     * min(Σ per-bucket capped counts, cap) = min(true count, cap) — if
     * any bucket hit its cap the sum already reached `cap`; otherwise
     * every bucket counted exactly. Early termination is genuine: work
-    * per bucket is bounded by the cap, not the match-set size.
-    *
-    * Cheaper than [[matchCount]] even when the cap never binds: the
-    * doc-at-a-time union walk dedupes in place, so there is no distinct
-    * shuffle and no doclens join — the only exchange carries one Long
-    * per touched bucket. Supports FREE/OR/AND and the full boolean
-    * grammar (positional atoms included on positional segments). */
+    * per bucket is bounded by the cap, not the match-set size. Supports
+    * FREE/OR/AND and the full boolean grammar (positional atoms included
+    * on positional segments). */
   def matchCountCapped(kind: String, text: String, cap: Long): Long = {
     require(cap >= 1L, s"cap must be >= 1, got $cap")
-    val ast: BoolQuery.Expr = kind match {
-      case "FREE" | "OR" | "AND" =>
-        QueryParser.termsFor(kind, text).distinct.toList match {
-          case Nil => return 0L
-          case t :: Nil => BoolQuery.Term(t)
-          case ts if kind == "AND" => BoolQuery.And(ts.map(BoolQuery.Term(_)))
-          case ts => BoolQuery.Or(ts.map(BoolQuery.Term(_)))
-        }
-      case "BOOL" => BoolQuery.parse(text)
-      case other => throw new IllegalArgumentException(
-        s"matchCountCapped supports FREE/OR/AND/BOOL, got $other")
-    }
-    boolPlan(ast, text, 1) match {
-      case None => 0L
-      case Some(plan) =>
-        val QueryPlan.Bool(eval, defs, wins) = plan.shape
-        val tids = plan.slots
-        val positional = segment.params.positional
-        val capL = cap
-        val total = segment.postings
-          .filter($"termId".isin(tids.toSeq: _*)).as[PostingList]
-          .groupByKey(_.bucket)
-          .mapGroups { (_, plIt) =>
-            val slots = Searcher.countSlots(plIt.map(pl => pl.termId -> pl).toMap,
-              tids, positional)
-            Wand.countMatches(slots, eval, capL, defs, wins)
-          }
-          .toDF("c").agg(coalesce(sum($"c"), lit(0L))).as[Long].head()
-        math.min(total, cap)
-    }
+    require(Set("FREE", "OR", "AND", "BOOL").contains(kind),
+      s"matchCountCapped supports FREE/OR/AND/BOOL, got $kind")
+    lower(kind, text, 0).fold(0L)(p => math.min(matchCounts(Array(p), cap).head, cap))
+  }
+
+  /** Early-terminated retrieval over a SORT-BUILT index (X165 — the
+    * consumer of Lucene `IndexSorting` / ES `index.sort`): the first
+    * `k` matching docIds in docId order. Built with docIds assigned in
+    * a chosen static-field order, first-k IS top-k by that sort — and
+    * each bucket's unscored walk STOPS after k matches, so per-bucket
+    * work is bounded by k, not the match-set size; postings past the
+    * k-th match are never decoded. Buckets run in parallel (each emits
+    * ≤k docIds); the global answer is the k smallest via
+    * TakeOrderedAndProject over ≤ k·buckets-touched rows. Kinds:
+    * FREE/OR (any term), AND (all terms), pattern kinds through their
+    * dictionary expansions. */
+  def earlyHits(kind: String, text: String, k: Int): DataFrame = {
+    require(k >= 1, s"earlyHits needs k >= 1, got $k")
+    firstMatches(countPlan("earlyHits", kind, text), k)
   }
 
   /** Constant-score query (Lucene ConstantScoreQuery / the Elasticsearch
@@ -1464,54 +1324,18 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * exactly `boost` — matching is pure filtering, so there is no BM25,
     * no doclens join, and no per-doc float work at all. Results are the
     * FIRST k matches in docId order (the only deterministic order when
-    * every score ties); the global top-k is a TakeOrderedAndProject over
-    * the per-bucket match sets. Supports every kind [[matchCount]]
-    * supports (FREE/OR/AND/PHRASE/NEAR/ONEAR/BOOL and pattern kinds). */
-  /** Early-terminated retrieval over a SORT-BUILT index (X165 — the
-    * consumer of Lucene `IndexSorting` / ES `index.sort`): the first
-    * `k` matching docIds in docId order. Built with docIds assigned in
-    * a chosen static-field order, first-k IS top-k by that sort — and
-    * each bucket's walk STOPS after k matches (Wand.firstK), so
-    * per-bucket work is bounded by k, not the match-set size; postings
-    * past the k-th match are never decoded. Buckets run in parallel
-    * (each emits ≤k docIds); the global answer is the k smallest via
-    * TakeOrderedAndProject over ≤ k·buckets-touched rows. Kinds:
-    * FREE/OR (any term), AND (all terms), pattern kinds through their
-    * dictionary expansions. */
-  def earlyHits(kind: String, text: String, k: Int): DataFrame = {
-    require(k >= 1, s"earlyHits needs k >= 1, got $k")
-    val allowed = Set("FREE", "OR", "AND", "PREFIX", "REGEX", "WILD")
-    require(allowed.contains(kind),
-      s"earlyHits supports ${allowed.mkString("/")}, got $kind")
-    import spark.implicits._
-    val terms = QueryParser.termsFor(kind, text)
-    val entries = entriesFor(kind, text)
-    val conj = kind == "AND"
-    if (entries.isEmpty || (conj && entries.length < terms.distinct.length))
-      return Seq.empty[Long].toDF("docId")
-    val tids = entries.map(_.termId).sorted
-    val positional = segment.params.positional
-    val kL = k
-    val pls = segment.postings
-      .filter($"termId".isin(tids.map(Long.box): _*)).as[PostingList]
-    pls.groupByKey(_.bucket)
-      .flatMapGroups { (_, plIt) =>
-        val slots = Searcher.countSlots(plIt.map(pl => pl.termId -> pl).toMap,
-          tids, positional, (conj, null))
-        if (slots == null) Iterator.empty[Long]
-        else Wand.firstK(slots, p => Searcher.present(p, conj), kL).iterator
-      }
-      .toDF("docId")
-      .orderBy($"docId".asc).limit(k)
-  }
-
+    * every score ties), found as [[earlyHits]] finds them. Supports every
+    * kind [[matchCount]] supports (FREE/OR/AND/PHRASE/NEAR/ONEAR/BOOL and
+    * pattern kinds). */
   def constHits(kind: String, text: String, boost: Double, k: Int): DataFrame =
-    matchSet(kind, text) match {
-      case None =>
-        import spark.implicits._
-        Seq.empty[(Long, Double)].toDF("docId", "score")
-      case Some(ds) =>
-        ds.orderBy($"docId".asc).limit(k).withColumn("score", lit(boost))
+    firstMatches(lower(kind, text, 0), k).withColumn("score", lit(boost))
+
+  /** The first `k` docIds `plan` matches, in docId order: per-bucket
+    * unscored walks stopped at k, then a global TakeOrderedAndProject. */
+  private def firstMatches(plan: Option[QueryPlan], k: Int): DataFrame =
+    plan match {
+      case None => Seq.empty[Long].toDF("docId")
+      case Some(p) => matchIds(p, k).toDF("docId").orderBy($"docId".asc).limit(k)
     }
 
   /** Result collapsing (the field-collapse / diversified-results surface:
@@ -1533,48 +1357,22 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * The repo-boundary collect is #repos driver rows (16 B each) —
     * guarded by [[CollapseRepoLimit]], the dict-cache residency regime.
     */
-  def collapsedHits(kind: String, text: String, kRepos: Int): DataFrame = {
-    import spark.implicits._
-    require(kind == "FREE" || kind == "OR" || kind == "AND",
-      s"collapse supports FREE/OR/AND, got $kind")
-    val empty = Seq.empty[(String, Long, Double)].toDF("repo", "docId", "score")
-    val terms = QueryParser.termsFor(kind, text).distinct
-    val entries = dictLookup(terms)
-    if (entries.isEmpty || (kind == "AND" && entries.length < terms.length))
-      return empty
-    val bounds: Array[(Long, String)] = segment.docs
-      .groupBy($"repo").agg(min($"docId").as("lo"))
-      .orderBy($"lo").select($"lo", $"repo")
-      .as[(Long, String)].collect()
-    require(bounds.length <= Searcher.CollapseRepoLimit,
-      s"collapse boundary array (${bounds.length} repos) exceeds " +
-        s"${Searcher.CollapseRepoLimit} — shard the collapse by repo range")
-    val los = bounds.map(_._1)
-    val bc = spark.sparkContext.broadcast(los)
-    val best = scoredRaw(planOf(entries, bucketK,
-      if (kind == "AND") QueryPlan.And else QueryPlan.Or(QueryPlan.OrWalk.Exhaustive)))
-      .mapPartitions { it =>
-        val l = bc.value
-        it.map { case (docId, score) =>
-          var a = 0; var b = l.length - 1
-          while (a < b) { // last boundary <= docId
-            val m = (a + b + 1) >>> 1
-            if (l(m) <= docId) a = m else b = m - 1
+  def collapsedHits(kind: String, text: String, kRepos: Int): DataFrame =
+    repoScored("collapse", kind, text) match {
+      case None => Seq.empty[(String, Long, Double)].toDF("repo", "docId", "score")
+      case Some((repos, scored)) =>
+        scored
+          .groupByKey(_._1)
+          .reduceGroups { (x, y) =>
+            if (x._3 > y._3) x
+            else if (x._3 < y._3) y
+            else if (x._2 < y._2) x else y
           }
-          (a, docId, Searcher.round6(score))
-        }
-      }
-      .groupByKey(_._1)
-      .reduceGroups { (x, y) =>
-        if (x._3 > y._3) x
-        else if (x._3 < y._3) y
-        else if (x._2 < y._2) x else y
-      }
-      .map { case (idx, (_, docId, score)) => (bounds(idx)._2, docId, score) }
-    best.toDF("repo", "docId", "score")
-      .orderBy($"score".desc, $"repo".asc)
-      .limit(kRepos)
-  }
+          .map { case (idx, (_, docId, score)) => (repos(idx), docId, score) }
+          .toDF("repo", "docId", "score")
+          .orderBy($"score".desc, $"repo".asc)
+          .limit(kRepos)
+    }
 
   /** Parent-child scored join (the Elasticsearch `has_child` query over
     * a join field / Lucene ToParentBlockJoinQuery): rank PARENTS (repos)
@@ -1596,29 +1394,61 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * X63/X86 exact-integer regime applied to scores. */
   def hasChildHits(kind: String, text: String, scoreMode: String,
                    minChildren: Int, kRepos: Int): DataFrame = {
-    import spark.implicits._
     require(Set("max", "sum", "avg")(scoreMode),
       s"score_mode must be max|sum|avg, got $scoreMode")
     require(minChildren >= 1, s"min_children must be >= 1, got $minChildren")
+    val mode = scoreMode
+    repoScored("has_child", kind, text) match {
+      case None => Seq.empty[(String, Long, Double)].toDF("repo", "n_children", "score")
+      case Some((repos, scored)) =>
+        scored
+          .map { case (idx, _, score) =>
+            val micros = Math.round(score * 1e6)
+            (idx, micros, 1L, micros)
+          }
+          .groupByKey(_._1)
+          .reduceGroups { (x, y) =>
+            (x._1, x._2 + y._2, x._3 + y._3, math.max(x._4, y._4))
+          }
+          .map { case (idx, (_, sm, n, mx)) =>
+            val score = mode match {
+              case "max" => mx / 1e6
+              case "sum" => sm / 1e6
+              case "avg" => math.floor(sm.toDouble / n + 0.5) / 1e6
+            }
+            (repos(idx), n, score)
+          }
+          .toDF("repo", "n_children", "score")
+          .filter($"n_children" >= minChildren)
+          .orderBy($"score".desc, $"repo".asc)
+          .limit(kRepos)
+    }
+  }
+
+  /** Every match of a FREE/OR/AND query as (repo index, docId, 6-dp
+    * rounded BM25), with the repo names by index; None = provably empty.
+    * The walk scores ALL matching docs (per-bucket k = bucketSize, so
+    * nothing escapes the bucket), and since repos are contiguous docId
+    * ranges (X7) each doc resolves to its repo by a binary search over
+    * the broadcast repo-boundary array. The boundary collect is #repos
+    * driver rows, guarded by [[Searcher.CollapseRepoLimit]]. */
+  private def repoScored(what: String, kind: String, text: String)
+      : Option[(Array[String], Dataset[(Int, Long, Double)])] = {
     require(kind == "FREE" || kind == "OR" || kind == "AND",
-      s"has_child supports FREE/OR/AND, got $kind")
-    val empty = Seq.empty[(String, Long, Double)]
-      .toDF("repo", "n_children", "score")
+      s"$what supports FREE/OR/AND, got $kind")
     val terms = QueryParser.termsFor(kind, text).distinct
     val entries = dictLookup(terms)
     if (entries.isEmpty || (kind == "AND" && entries.length < terms.length))
-      return empty
+      return None
     val bounds: Array[(Long, String)] = segment.docs
       .groupBy($"repo").agg(min($"docId").as("lo"))
       .orderBy($"lo").select($"lo", $"repo")
       .as[(Long, String)].collect()
     require(bounds.length <= Searcher.CollapseRepoLimit,
-      s"has_child boundary array (${bounds.length} repos) exceeds " +
-        s"${Searcher.CollapseRepoLimit} — shard by repo range")
-    val los = bounds.map(_._1)
-    val bc = spark.sparkContext.broadcast(los)
-    val mode = scoreMode
-    val perParent = scoredRaw(planOf(entries, bucketK,
+      s"$what boundary array (${bounds.length} repos) exceeds " +
+        s"${Searcher.CollapseRepoLimit} — shard the $what by repo range")
+    val bc = spark.sparkContext.broadcast(bounds.map(_._1))
+    val scored = scoredRaw(planOf(entries, bucketK,
       if (kind == "AND") QueryPlan.And else QueryPlan.Or(QueryPlan.OrWalk.Exhaustive)))
       .mapPartitions { it =>
         val l = bc.value
@@ -1628,26 +1458,10 @@ final class Searcher(spark: SparkSession, segment: Segment,
             val m = (a + b + 1) >>> 1
             if (l(m) <= docId) a = m else b = m - 1
           }
-          (a, Math.round(Searcher.round6(score) * 1e6), 1L,
-            Math.round(Searcher.round6(score) * 1e6))
+          (a, docId, Searcher.round6(score))
         }
       }
-      .groupByKey(_._1)
-      .reduceGroups { (x, y) =>
-        (x._1, x._2 + y._2, x._3 + y._3, math.max(x._4, y._4))
-      }
-      .map { case (idx, (_, sm, n, mx)) =>
-        val score = mode match {
-          case "max" => mx / 1e6
-          case "sum" => sm / 1e6
-          case "avg" => math.floor(sm.toDouble / n + 0.5) / 1e6
-        }
-        (bounds(idx)._2, n, score)
-      }
-    perParent.toDF("repo", "n_children", "score")
-      .filter($"n_children" >= minChildren)
-      .orderBy($"score".desc, $"repo".asc)
-      .limit(kRepos)
+    Some((bounds.map(_._2), scored))
   }
 
   /** Hits joined back to the doc map (SURVEY §2.4 Q9). The HITS side is
@@ -1662,29 +1476,12 @@ final class Searcher(spark: SparkSession, segment: Segment,
 }
 
 object Searcher {
-  /** One bucket's slots for a counting walk over `tids`: an unscored
-    * cursor per termId, null where the bucket has no list. Null instead
-    * when a conjunctive part — `(true, slot indices)`, null indices =
-    * every slot — misses a slot: the walk matches nothing here. */
-  private[search] def countSlots(plByTid: Map[Long, PostingList], tids: Array[Long],
-                                 positional: Boolean,
-                                 parts: (Boolean, Array[Int])*): Array[Wand.TermCursor] = {
-    def missing(idx: Array[Int]): Boolean =
-      if (idx == null) tids.exists(t => !plByTid.contains(t))
-      else idx.exists(x => !plByTid.contains(tids(x)))
-    if (parts.exists { case (conj, idx) => conj && missing(idx) }) null
-    else tids.map(tid => plByTid.get(tid)
-      .map(pl => new Wand.TermCursor(tid, 0.0, pl, positional)).orNull)
-  }
-
-  /** The counting walks' presence test: all (`conj`) or any of the slots
-    * at `idx` — every slot when `idx` is null — matched the candidate. */
-  private[search] def present(p: Array[Boolean], conj: Boolean, idx: Array[Int] = null): Boolean = {
-    val n = if (idx == null) p.length else idx.length
-    @inline def at(i: Int): Boolean = p(if (idx == null) i else idx(i))
+  /** An adjacency pair's presence test: all (`conj`) or any of the slots
+    * at `idx` matched the candidate. */
+  private[search] def present(p: Array[Boolean], conj: Boolean, idx: Array[Int]): Boolean = {
     var i = 0
-    if (conj) { while (i < n && at(i)) i += 1; i == n }
-    else { while (i < n && !at(i)) i += 1; i < n }
+    if (conj) { while (i < idx.length && p(idx(i))) i += 1; i == idx.length }
+    else { while (i < idx.length && !p(idx(i))) i += 1; i < idx.length }
   }
 
   /** Deterministic dictionary-expansion cap shared by every expansion

@@ -6,7 +6,10 @@ import graft.codec.PostingCodec
 import graft.model.{BM25, PostingList}
 
 /** The per-bucket walks of every query kind — SURVEY.md §2.4. Four walks
-  * carry them all, and [[eval]] maps each [[QueryPlan.Shape]] onto one:
+  * carry them all, and one mapping (`walk`) puts each [[QueryPlan.Shape]]
+  * onto one of them under one of two terminals: [[eval]] ranks the
+  * matches into a top-k, [[matches]] hands them out unscored up to a
+  * limit (match sets, counts, first-k). The walks:
   *
   *  - [[topK]]: block-max WAND (Broder et al., CIKM'03, with block-max
   *    skipping per Ding & Suel, SIGIR'11), the default disjunctive top-k;
@@ -15,9 +18,8 @@ import graft.model.{BM25, PostingList}
   *    cursors with a per-document match predicate (AND, PHRASE, NEAR,
   *    BEFORE, span-first, span-not, intervals and their `any_of` form);
   *  - `union`: document-at-a-time over the union of the lists with a
-  *    presence predicate, scored by a per-document combiner (exhaustive
-  *    OR, BOOL, dis-max, LM-Dirichlet) or stopped by a rule (first-k,
-  *    capped count).
+  *    presence predicate (exhaustive OR, BOOL, dis-max, LM-Dirichlet,
+  *    and every unscored OR).
   *
   * Iterator+heap walks with data-dependent skipping are not relational,
   * so they run inside a typed `mapGroups`/`cogroup` lambda (SURVEY §4.2);
@@ -123,19 +125,42 @@ object Wand {
       heap.dequeueAll.toArray.sortBy(s => (-s.score, s.docId))
   }
 
-  /** Runs `plan`'s walk over one bucket: `lists` are the bucket's posting
-    * lists of the plan's termIds (any subset, any order), `lens` its doc
-    * lengths from `firstDocId`, `accept` the bucket's doc filter (null =
-    * none; see [[bucketFilter]]). The one kernel dispatch every tier
-    * calls. Conjunctive shapes build one cursor per slot (a repeated
-    * phrase term walks its own cursor) and return nothing for a bucket
-    * missing a slot; the position checks decode only the aligned doc's
-    * occurrence lists, and a filter term (span-not's
-    * exclude, the intervals filter) is optional per bucket, skip-scanned
-    * to the aligned doc, and never scores (filter-doesn't-rescale). */
+  /** Runs `plan`'s walk over one bucket and returns its top-k: `lists`
+    * are the bucket's posting lists of the plan's termIds (any subset, any
+    * order), `lens` its doc lengths from `firstDocId`, `accept` the
+    * bucket's doc filter (null = none; see [[bucketFilter]]). The scored
+    * terminal of [[walk]], the one kernel dispatch every tier calls. */
   private[search] def eval(plan: QueryPlan, lists: Array[PostingList],
                            firstDocId: Long, lens: Array[Int],
                            accept: Long => Boolean): Array[Scored] = {
+    val top = new TopK(plan.k, plan.after)
+    walk(plan, lists, firstDocId, lens, accept, Long.MaxValue, top)(
+      ranker(top, lens, firstDocId, plan.avgdl, plan.shape))
+    top.result()
+  }
+
+  /** The unscored terminal of [[walk]]: hands each doc that matches
+    * `plan` over one bucket to `hit` in docId order, stops after `limit`
+    * matches and returns their number. No doc lengths are read and
+    * nothing is scored, so a match set, a (capped) count or the first k
+    * matches cost one walk bounded by the limit. */
+  private[search] def matches(plan: QueryPlan, lists: Array[PostingList],
+                              accept: Long => Boolean, limit: Long)
+                             (hit: Long => Unit): Long =
+    walk(plan, lists, 0L, null, accept, limit, null)((d, _) => hit(d))
+
+  /** The one shape→walk mapping. Conjunctive shapes build one cursor per
+    * slot (a repeated phrase term walks its own cursor) and match nothing
+    * in a bucket missing a slot; the position checks decode only the
+    * aligned doc's occurrence lists, and a filter term (span-not's
+    * exclude, the intervals filter) is optional per bucket, skip-scanned
+    * to the aligned doc, and never scores (filter-doesn't-rescale). Every
+    * other shape runs the union under the plan's predicate. `top` is the
+    * scored terminal's heap, which block-max WAND and MaxScore fill
+    * themselves; unscored (null), every OR runs the union. */
+  private def walk(plan: QueryPlan, lists: Array[PostingList], firstDocId: Long,
+                   lens: Array[Int], accept: Long => Boolean, limit: Long,
+                   top: TopK)(hit: OnMatch): Long = {
     import QueryPlan._
     val byTid = lists.map(pl => pl.termId -> pl).toMap
     def cursor(tid: Long) = new TermCursor(tid, plan.idf(tid), byTid(tid),
@@ -143,25 +168,23 @@ object Wand {
     def filter(tid: Option[Long]) = tid.flatMap(byTid.get).map(pl =>
       new TermCursor(pl.termId, 0.0, pl, plan.positional, plan.lo, plan.hi)).orNull
     def present = plan.slots.filter(byTid.contains).map(cursor)
-    val (avgdl, k, after) = (plan.avgdl, plan.k, plan.after)
     def conj(slots: Array[Array[TermCursor]])(matches: Long => Boolean) =
-      conjunction(slots, lens, firstDocId, avgdl, k, accept, after)(matches)
-    def all(matches: Array[Array[TermCursor]] => Long => Boolean): Array[Scored] =
-      if (!plan.slots.forall(byTid.contains)) Array.empty
+      conjunction(slots, accept, limit)(matches)(hit)
+    def all(matches: Array[Array[TermCursor]] => Long => Boolean): Long =
+      if (!plan.slots.forall(byTid.contains)) 0L
       else { val slots = plan.slots.map(t => Array(cursor(t))); conj(slots)(matches(slots)) }
-    def scored(slots: Array[TermCursor], pred: Array[Boolean] => Boolean,
-               defs: Array[Array[Int]], wins: Array[Int], combine: Shape) =
-      unionTopK(slots, lens, firstDocId, avgdl, k, accept, after, pred, defs, wins, combine)
+    def any(slots: Array[TermCursor], pred: Array[Boolean] => Boolean,
+            defs: Array[Array[Int]], wins: Array[Int]) =
+      union(slots, pred, defs, wins, accept, limit)(hit)
     plan.shape match {
-      case Or(OrWalk.Wand) => topK(present, lens, firstDocId, avgdl, k, accept, after)
-      case Or(OrWalk.MaxScore) =>
-        topKMaxScore(present, lens, firstDocId, avgdl, k, accept, after)
-      case s @ (Or(OrWalk.Exhaustive) | Lmd(_, _) | DisMax(_)) =>
-        scored(present.sortBy(_.termId), AnyPresent, null, null, s)
-      case s @ Bool(pred, defs, wins) =>
+      case Or(OrWalk.Wand) if top != null =>
+        wand(present, lens, firstDocId, plan.avgdl, top, accept); 0L
+      case Or(OrWalk.MaxScore) if top != null =>
+        maxScore(present, lens, firstDocId, plan.avgdl, top, accept); 0L
+      case Or(_) | Lmd(_, _) | DisMax(_) => any(present.sortBy(_.termId), AnyPresent, null, null)
+      case Bool(pred, defs, wins) =>
         // a slot with no list in this bucket stays null (never present)
-        scored(plan.slots.map(t => if (byTid.contains(t)) cursor(t) else null),
-          pred, defs, wins, s)
+        any(plan.slots.map(t => if (byTid.contains(t)) cursor(t) else null), pred, defs, wins)
       case And => all(_ => _ => true)
       // ∃ p: p+i ∈ positions(slot i) for every i
       case Phrase => all(s => _ => stairMatch(s.length, s(_)(0).positions()))
@@ -181,7 +204,7 @@ object Wand {
       case Intervals(gaps, f, containing) =>
         val not = filter(f)
         // containing: a bucket without the filter term has no match
-        if (containing && (not == null || not.exhausted)) Array.empty
+        if (containing && (not == null || not.exhausted)) 0L
         else all(s => d => {
           val notPos = filterPositions(not, d)
           (!containing || notPos != null) &&
@@ -193,12 +216,58 @@ object Wand {
         val shared = mutable.Map.empty[Long, TermCursor]
         val slots = alts.map(_.filter(byTid.contains)
           .map(t => shared.getOrElseUpdate(t, cursor(t))))
-        if (slots.exists(_.isEmpty)) Array.empty
+        if (slots.exists(_.isEmpty)) 0L
         else {
           val not = filter(f)
           conj(slots)(d =>
             intervalsMatch(slots.map(positionsAt(_, d)), filterPositions(not, d), gaps))
         }
+    }
+  }
+
+  /** A walk's per-match callback: the matched docId and the cursors that
+    * may sit on it (null or elsewhere-positioned entries are skipped),
+    * called while every cursor on the doc still sits there. */
+  private trait OnMatch { def apply(d: Long, on: Array[TermCursor]): Unit }
+
+  /** The scored terminal's callback: scores a matched doc over the cursors
+    * on it, in array order (ascending termId), and offers it to `top`.
+    * `combine` picks the score:
+    *  - the BM25 sum for every shape but the two below;
+    *  - `DisMax(tie)` (Lucene DisjunctionMaxQuery): the best single BM25
+    *    contribution plus `tie` times the rest — tie = 0 is the pure max,
+    *    tie = 1 the plain sum;
+    *  - `Lmd(mu, p)` (Zhai & Lafferty SIGIR'01, Lucene
+    *    LMDirichletSimilarity): Σ_t max(0, ln(1 + tf/(μ·p_t)) +
+    *    ln(μ/(dl+μ))) with p_t = cf_t/|C|; a doc whose every term clamps
+    *    to zero is dropped. An LM score has no stored per-list bound
+    *    (block maxima are BM25 impacts), hence the unpruned union. */
+  private def ranker(top: TopK, lens: Array[Int], firstDocId: Long, avgdl: Double,
+                     combine: QueryPlan.Shape): OnMatch = {
+    val disMax = combine match { case c: QueryPlan.DisMax => c; case _ => null }
+    val lmd = combine match { case c: QueryPlan.Lmd => c; case _ => null }
+    (d, on) => {
+      val dl = lens((d - firstDocId).toInt)
+      val dlTerm = if (lmd == null) 0.0 else math.log(lmd.mu / (dl + lmd.mu))
+      var sum = 0.0
+      var best = 0.0
+      var i = 0
+      while (i < on.length) {
+        val c = on(i)
+        if (c != null && !c.exhausted && c.docId == d) {
+          if (lmd == null) {
+            val s = BM25.impact(c.idf, c.tf, dl, avgdl)
+            sum += s
+            if (s > best) best = s
+          } else {
+            val s = math.log(1.0 + c.tf / (lmd.mu * lmd.p(c.termId))) + dlTerm
+            if (s > 0.0) sum += s
+          }
+        }
+        i += 1
+      }
+      if (disMax != null) top.offer(d, best + disMax.tie * (sum - best))
+      else if (lmd == null || sum > 0.0) top.offer(d, sum)
     }
   }
 
@@ -233,7 +302,13 @@ object Wand {
            avgdl: Double, k: Int,
            accept: Long => Boolean = null,
            after: Scored = null): Array[Scored] = {
-    val topk = new TopK(k, after)
+    val top = new TopK(k, after)
+    wand(terms, lens, firstDocId, avgdl, top, accept)
+    top.result()
+  }
+
+  private def wand(terms: Array[TermCursor], lens: Array[Int], firstDocId: Long,
+                   avgdl: Double, topk: TopK, accept: Long => Boolean): Unit = {
     // live cursors ordered by current docId (insertion-sorted per advance)
     var live = terms.filter(!_.exhausted).sortBy(_.docId)
     while (live.nonEmpty) {
@@ -247,7 +322,7 @@ object Wand {
         if (acc >= theta) p = i
         i += 1
       }
-      if (p < 0) return topk.result() // no prefix can reach theta
+      if (p < 0) return // no prefix can reach theta
       val pivotDoc = live(p).docId
       // extend the prefix over every cursor already on pivotDoc, so the
       // block-max refinement sums ALL lists that could score it
@@ -288,7 +363,6 @@ object Wand {
         live = advance(live, pivotDoc, upToPivotOnly = true)
       }
     }
-    topk.result()
   }
 
   /** MaxScore top-k (Turtle & Flood, IP&M 31(6) 1995; the DAAT
@@ -314,10 +388,16 @@ object Wand {
                    firstDocId: Long, avgdl: Double, k: Int,
                    accept: Long => Boolean = null,
                    after: Scored = null): Array[Scored] = {
-    val topk = new TopK(k, after)
+    val top = new TopK(k, after)
+    maxScore(terms, lens, firstDocId, avgdl, top, accept)
+    top.result()
+  }
+
+  private def maxScore(terms: Array[TermCursor], lens: Array[Int], firstDocId: Long,
+                       avgdl: Double, topk: TopK, accept: Long => Boolean): Unit = {
     val sorted = terms.filter(!_.exhausted).sortBy(_.listMax)
     val n = sorted.length
-    if (n == 0) return topk.result()
+    if (n == 0) return
     val prefix = new Array[Double](n)
     var i = 0
     var acc = 0.0
@@ -330,7 +410,7 @@ object Wand {
     while (first < n) {
       val theta = topk.theta
       while (first < n && prefix(first) <= theta) first += 1
-      if (first >= n) return topk.result()
+      if (first >= n) return
       // candidate: min docId among live essential cursors
       var cand = Long.MaxValue
       i = first
@@ -339,7 +419,7 @@ object Wand {
         if (!c.exhausted && c.docId < cand) cand = c.docId
         i += 1
       }
-      if (cand == Long.MaxValue) return topk.result()
+      if (cand == Long.MaxValue) return
       val dl = lens((cand - firstDocId).toInt)
       var nm = 0
       var partial = 0.0
@@ -400,7 +480,6 @@ object Wand {
         i += 1
       }
     }
-    topk.result()
   }
 
   private def advance(live: Array[TermCursor], target: Long,
@@ -417,8 +496,12 @@ object Wand {
   def topKAnd(terms: Array[TermCursor], lens: Array[Int], firstDocId: Long,
               avgdl: Double, k: Int,
               accept: Long => Boolean = null,
-              after: Scored = null): Array[Scored] =
-    conjunction(terms.map(Array(_)), lens, firstDocId, avgdl, k, accept, after)(_ => true)
+              after: Scored = null): Array[Scored] = {
+    val top = new TopK(k, after)
+    conjunction(terms.map(Array(_)), accept, Long.MaxValue)(_ => true)(
+      ranker(top, lens, firstDocId, avgdl, QueryPlan.And))
+    top.result()
+  }
 
   /** Exhaustive disjunctive top-k (no pruning): the union walk under the
     * BM25 sum. The safe path for multi-segment reads, where stored block
@@ -427,37 +510,13 @@ object Wand {
   def topKOrExhaustive(terms: Array[TermCursor], lens: Array[Int],
                        firstDocId: Long, avgdl: Double, k: Int,
                        accept: Long => Boolean = null,
-                       after: Scored = null): Array[Scored] =
-    unionTopK(terms.sortBy(_.termId), lens, firstDocId, avgdl, k, accept, after,
-      AnyPresent, null, null, QueryPlan.Or(QueryPlan.OrWalk.Exhaustive))
-
-  /** First `k` matching docIds in docId order, then STOP — the
-    * early-termination consumer of index-time sorting (Lucene
-    * `IndexSorting` / ES `index.sort`): over an index whose docIds were
-    * assigned in a chosen static-field order, the first k matches of a
-    * docId-ordered walk ARE the top-k by that sort, and every posting
-    * past the k-th match is never decoded. The union walk with no doc
-    * lengths and no scoring. */
-  def firstK(slots: Array[TermCursor], eval: Array[Boolean] => Boolean,
-             k: Int): Array[Long] = {
-    require(k >= 1, s"firstK needs k >= 1, got $k")
-    // grow lazily: k is an upper bound, not a size hint (callers may
-    // pass a huge cap to mean "the whole match set")
-    val out = new mutable.ArrayBuffer[Long](math.min(k, 64))
-    union(slots, eval, null, null, null, k) { d => out += d; () }
-    out.toArray
+                       after: Scored = null): Array[Scored] = {
+    val top = new TopK(k, after)
+    val or = QueryPlan.Or(QueryPlan.OrWalk.Exhaustive)
+    union(terms.sortBy(_.termId), AnyPresent, null, null, accept, Long.MaxValue)(
+      ranker(top, lens, firstDocId, avgdl, or))
+    top.result()
   }
-
-  /** Capped presence count over one bucket — the early-termination
-    * primitive behind `terminate_after` / `track_total_hits: N`: the
-    * union walk (positional atoms included) with no doc lengths and no
-    * scoring, stopped as soon as `cap` matches are seen, so per-bucket
-    * work is bounded by the cap, not by the match-set size. */
-  def countMatches(slots: Array[TermCursor],
-                   eval: Array[Boolean] => Boolean, cap: Long,
-                   defs: Array[Array[Int]] = null,
-                   wins: Array[Int] = null): Long =
-    union(slots, eval, defs, wins, null, cap)(_ => ())
 
   /** The union predicate of the disjunctive shapes: every candidate doc
     * is some slot's current doc, so it always matches. */
@@ -468,23 +527,23 @@ object Wand {
     * cursor possibly shared with another slot). A slot sits on the min
     * docId over its live cursors; every slot is driven to the running
     * target by nextGeq's block skips until all agree. An aligned doc
-    * that passes `accept` and `matches` scores BM25 over the distinct
-    * termIds on it, summed in ascending termId order — so a repeated
-    * phrase term scores once, and an `any_of` doc scores every present
-    * alternative (the BOOL contract). */
-  private def conjunction(slots: Array[Array[TermCursor]], lens: Array[Int],
-                          firstDocId: Long, avgdl: Double, k: Int,
-                          accept: Long => Boolean, after: Scored)
-                         (matches: Long => Boolean): Array[Scored] = {
-    if (slots.isEmpty || slots.exists(_.forall(_.exhausted))) return Array.empty
-    val topk = new TopK(k, after)
+    * that passes `accept` and `matches` goes to `hit` with the distinct
+    * termIds' cursors in ascending termId order — so a repeated phrase
+    * term scores once, and an `any_of` doc scores every present
+    * alternative (the BOOL contract). Stops after `limit` hits and
+    * returns their number. */
+  private def conjunction(slots: Array[Array[TermCursor]],
+                          accept: Long => Boolean, limit: Long)
+                         (matches: Long => Boolean)(hit: OnMatch): Long = {
+    if (slots.isEmpty || slots.exists(_.forall(_.exhausted))) return 0L
+    var hits = 0L
     val scoring: Array[TermCursor] = {
       val seen = mutable.Set.empty[Long]
       slots.flatten.filter(c => seen.add(c.termId)).sortBy(_.termId)
     }
     var target = slots.map(_.filterNot(_.exhausted).map(_.docId).min).max
     var done = false
-    while (!done) {
+    while (!done && hits < limit) {
       var aligned = true
       var i = 0
       while (i < slots.length && !done) {
@@ -505,21 +564,13 @@ object Wand {
       }
       if (!done && aligned) {
         if ((accept == null || accept(target)) && matches(target)) {
-          val dl = lens((target - firstDocId).toInt)
-          var score = 0.0
-          var j = 0
-          while (j < scoring.length) {
-            val c = scoring(j)
-            if (!c.exhausted && c.docId == target)
-              score += BM25.impact(c.idf, c.tf, dl, avgdl)
-            j += 1
-          }
-          topk.offer(target, score)
+          hit(target, scoring)
+          hits += 1
         }
         target += 1
       }
     }
-    topk.result()
+    hits
   }
 
   /** Document-at-a-time over the union of `slots`, indexed by slot
@@ -529,13 +580,12 @@ object Wand {
     * `defs` (slot indices; a -1 slot never matches) with `wins` (0 the
     * consecutive-position staircase of a phrase, w ≥ 1 the minimal-span
     * sweep of NEAR, w ≤ −1 the ordered sweep with window −w of BEFORE).
-    * A doc that passes `accept` and `eval` goes to `hit` while every
-    * cursor on it still sits there; the walk stops after `limit` hits
-    * and returns their number. */
+    * A doc that passes `accept` and `eval` goes to `hit` with the slots;
+    * the walk stops after `limit` hits and returns their number. */
   private def union(slots: Array[TermCursor], eval: Array[Boolean] => Boolean,
                     defs: Array[Array[Int]], wins: Array[Int],
                     accept: Long => Boolean, limit: Long)
-                   (hit: Long => Unit): Long = {
+                   (hit: OnMatch): Long = {
     val n = slots.length
     val nAtoms = if (defs == null) 0 else defs.length
     val present = new Array[Boolean](n + nAtoms)
@@ -567,7 +617,7 @@ object Wand {
           else minSpan(defn.map(posArrs)) <= win)
         j += 1
       }
-      if ((accept == null || accept(d)) && eval(present)) { hit(d); hits += 1 }
+      if ((accept == null || accept(d)) && eval(present)) { hit(d, slots); hits += 1 }
       // step the cursors on d and find the next candidate in one pass
       d = Long.MaxValue
       i = 0
@@ -579,51 +629,6 @@ object Wand {
       }
     }
     hits
-  }
-
-  /** [[union]] top-k. A matched doc scores over its present slots in slot
-    * order (ascending termId) by `combine`:
-    *  - the BM25 sum for every other shape (OR, BOOL);
-    *  - `DisMax(tie)` (Lucene DisjunctionMaxQuery): the best single BM25
-    *    contribution plus `tie` times the rest — tie = 0 is the pure max,
-    *    tie = 1 the plain sum;
-    *  - `Lmd(mu, p)` (Zhai & Lafferty SIGIR'01, Lucene
-    *    LMDirichletSimilarity): Σ_t max(0, ln(1 + tf/(μ·p_t)) +
-    *    ln(μ/(dl+μ))) with p_t = cf_t/|C|; a doc whose every term clamps
-    *    to zero is dropped. An LM score has no stored per-list bound
-    *    (block maxima are BM25 impacts), hence this unpruned walk. */
-  private def unionTopK(slots: Array[TermCursor], lens: Array[Int],
-                        firstDocId: Long, avgdl: Double, k: Int,
-                        accept: Long => Boolean, after: Scored,
-                        eval: Array[Boolean] => Boolean, defs: Array[Array[Int]],
-                        wins: Array[Int], combine: QueryPlan.Shape): Array[Scored] = {
-    val topk = new TopK(k, after)
-    val disMax = combine match { case c: QueryPlan.DisMax => c; case _ => null }
-    val lmd = combine match { case c: QueryPlan.Lmd => c; case _ => null }
-    union(slots, eval, defs, wins, accept, Long.MaxValue) { d =>
-      val dl = lens((d - firstDocId).toInt)
-      val dlTerm = if (lmd == null) 0.0 else math.log(lmd.mu / (dl + lmd.mu))
-      var sum = 0.0
-      var best = 0.0
-      var i = 0
-      while (i < slots.length) {
-        val c = slots(i)
-        if (c != null && !c.exhausted && c.docId == d) {
-          if (lmd == null) {
-            val s = BM25.impact(c.idf, c.tf, dl, avgdl)
-            sum += s
-            if (s > best) best = s
-          } else {
-            val s = math.log(1.0 + c.tf / (lmd.mu * lmd.p(c.termId))) + dlTerm
-            if (s > 0.0) sum += s
-          }
-        }
-        i += 1
-      }
-      if (disMax != null) topk.offer(d, best + disMax.tie * (sum - best))
-      else if (lmd == null || sum > 0.0) topk.offer(d, sum)
-    }
-    topk.result()
   }
 
   /** A slot's positions on the aligned doc `d`: its one cursor's, or the

@@ -75,4 +75,31 @@ class CountConstSpec extends SparkSpec {
     }
     assert(searcher.constHits("AND", "fast AND zzz", 1.0, 5).isEmpty)
   }
+
+  test("match sets, counts and first-k agree with the scored walk per kind") {
+    import spark.implicits._
+    // "together" and "tail" are in bucket 1 only: a conjunct whose list
+    // is missing from bucket 0
+    val cases = Seq(
+      "FREE" -> "fast table",
+      "OR" -> "merge OR stream",
+      "AND" -> "fast AND together",
+      "PHRASE" -> "\"fast merge\"",
+      "NEAR" -> "merge NEAR/2 sort",
+      "ONEAR" -> "fast BEFORE/3 tail",
+      "BOOL" -> "(\"fast merge\" OR alone) AND NOT table",
+      "PREFIX" -> "ta*")
+    for ((kind, q) <- cases) {
+      val want = searcher.hits(kind, q, 100).collect().map(_.docId).sorted
+      assert(want.nonEmpty, s"$kind '$q' should match on the planted corpus")
+      val got = searcher.matchDocIds(kind, q).get.as[Long].collect().sorted
+      assert(got.toSeq == want.toSeq, s"$kind '$q' match set")
+      assert(searcher.matchCount(kind, q) == want.length, s"$kind '$q' count")
+      for (k <- 1 to want.length + 1) {
+        val first = searcher.constHits(kind, q, 1.0, k)
+          .select("docId").as[Long].collect().sorted
+        assert(first.toSeq == want.take(k).toSeq, s"$kind '$q' k=$k")
+      }
+    }
+  }
 }

@@ -66,6 +66,21 @@ class PlanSpec extends SparkSpec {
       s"bucket semi-join must broadcast the tiny side:\n$cPlan")
   }
 
+  test("unscored walks read no doc lengths and keep the termId pushdown") {
+    val loaded = IndexStorage.read(spark, IndexStorage.segDir(dir, 0).toString)
+    val terms = loaded.dict.orderBy(desc("df")).limit(2).collect().map(_.term)
+    val searcher = new graft.search.Searcher(spark, loaded, residentDoclens = false)
+    val plans = Seq(
+      "matchDocIds" -> searcher.matchDocIds("FREE", terms(0)).get,
+      "earlyHits" -> searcher.earlyHits("AND", terms.mkString(" AND "), 5))
+    for ((what, df) <- plans) {
+      val plan = df.queryExecution.executedPlan.toString
+      assert(!plan.contains("CoGroup"), s"$what must not cogroup doc lengths:\n$plan")
+      assert(plan.contains("PushedFilters") && plan.contains("termId"),
+        s"$what: termId must reach the parquet scan:\n$plan")
+    }
+  }
+
   test("ANN top-k: signature predicate pushes into the bucket scan; no corpus re-hash") {
     import spark.implicits._
     val rng = new java.util.SplittableRandom(3)

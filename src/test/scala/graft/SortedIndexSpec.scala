@@ -3,16 +3,16 @@ package graft
 import graft.build.{BuildParams, SegmentBuilder}
 import graft.corpus.DatasetCorpusSource
 import graft.model.CorpusRow
-import graft.search.{Searcher, Wand}
+import graft.search.Searcher
 
 /** Index-time sorting + early termination (X165) and term-range
   * expansion (X166).
   *
   * The sorted index encodes a static signal into the build's natural
   * key, so docId order IS the signal order; `Searcher.earlyHits`
-  * (Wand.firstK per bucket) must then return exactly the brute-force
-  * top-k by the signal — and `Wand.firstK` must genuinely stop: its
-  * result is always a PREFIX of the full match set in docId order.
+  * (each bucket's unscored walk stopped at k) must then return exactly
+  * the brute-force top-k by the signal, and its result for any k is a
+  * PREFIX of the full match set in docId order.
   * `dictLookupRange` must expand exactly the vocabulary interval. */
 class SortedIndexSpec extends SparkSpec {
 
@@ -73,27 +73,13 @@ class SortedIndexSpec extends SparkSpec {
     assert(searcher.earlyHits("AND", "fast AND zzznothere", 5).count() == 0)
   }
 
-  test("firstK is a strict prefix of the full match set and stops at k") {
-    import graft.model.PostingList
+  test("earlyHits over each k is a strict prefix of the full match set") {
     import spark.implicits._
-    // pull one bucket's cursors directly
-    val entries = searcher.dictLookup(Array("fast", "merge"))
-    val tids = entries.map(_.termId).sorted
-    val pls = seg.postings
-      .filter($"termId".isin(tids.map(Long.box): _*)).as[PostingList]
-      .collect().groupBy(_.bucket)
-    val andEval: Array[Boolean] => Boolean =
-      p => { var i = 0; while (i < p.length && p(i)) i += 1; i == p.length }
-    pls.foreach { case (_, plArr) =>
-      val byTid = plArr.map(pl => pl.termId -> pl).toMap
-      def slots() = tids.map(tid => byTid.get(tid)
-        .map(pl => new Wand.TermCursor(tid, 0.0, pl, false)).orNull)
-      if (!slots().contains(null)) {
-        val full = Wand.firstK(slots(), andEval, Int.MaxValue / 2)
-        for (k <- 1 to full.length) {
-          val some = Wand.firstK(slots(), andEval, k)
-          assert(some.toSeq == full.take(k).toSeq, s"k=$k prefix property")
-        }
+    for ((kind, q) <- Seq("AND" -> "fast AND merge", "FREE" -> "slow table")) {
+      val full = searcher.earlyHits(kind, q, Int.MaxValue / 2).as[Long].collect()
+      for (k <- 1 to full.length) {
+        val some = searcher.earlyHits(kind, q, k).as[Long].collect()
+        assert(some.toSeq == full.take(k).toSeq, s"k=$k prefix property")
       }
     }
   }
