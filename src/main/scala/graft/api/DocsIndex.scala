@@ -2,12 +2,13 @@ package graft.api
 
 import scala.collection.concurrent.TrieMap
 
-import org.apache.spark.sql.{DataFrame, Dataset, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Dataset, Encoders, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.LongType
 
 import graft.build.{BuildParams, BuildReport, Segment, SegmentBuilder}
 import graft.corpus.DatasetCorpusSource
-import graft.model.CorpusRow
+import graft.model.{CorpusRow, Hit}
 import graft.search.Searcher
 
 /** Fulltext index over the driver testdata `documents` table — the bridge
@@ -90,21 +91,20 @@ object DocsIndex {
   def prunedRankedHits(spark: SparkSession, sfDir: String, kind: String,
                        text: String, k: Int): DataFrame = {
     val (_, searcher) = getPruned(spark, sfDir)
-    rank(spark, sfDir, searcher.hits(kind, text, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.hits(kind, text, _))
   }
 
   /** docId → original doc_id (the zero-padded path round-trips). */
-  def withDocId(seg: Segment): DataFrame =
-    seg.docs.select(col("docId"), col("path").cast("long").as("doc_id"))
+  def withDocId(seg: Segment): DataFrame = docmap(seg, "doc_id")
 
   /** Top-k hits re-ranked by (round(score,6) desc, doc_id) — the rounded
-    * ordering both engines can reproduce bit-identically. Fetches slack
-    * beyond k on the exact ordering so a rounding tie at the k-boundary
-    * cannot change the selected set. */
+    * ordering both engines can reproduce bit-identically. Fetches
+    * [[TieSlack]] hits beyond k on the exact ordering so a rounding tie
+    * at the k-boundary cannot change the selected set. */
   def rankedHits(spark: SparkSession, sfDir: String, kind: String,
                  text: String, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.hits(kind, text, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.hits(kind, text, _))
   }
 
   /** [[rankedHits]] through the MaxScore pruning strategy — identical
@@ -113,7 +113,7 @@ object DocsIndex {
   def maxScoreRankedHits(spark: SparkSession, sfDir: String, kind: String,
                          text: String, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.hitsMaxScore(kind, text, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.hitsMaxScore(kind, text, _))
   }
 
   /** rankedHits through the zero-hit relaxation ladder
@@ -122,7 +122,7 @@ object DocsIndex {
   def relaxedRankedHits(spark: SparkSession, sfDir: String, text: String,
                         k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.relaxedHits(text, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.relaxedHits(text, _))
   }
 
   /** Auto-correcting search (the "search instead for …" flow): run the
@@ -135,18 +135,12 @@ object DocsIndex {
   def autocorrectRankedHits(spark: SparkSession, sfDir: String, text: String,
                             k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    val asTyped = searcher.hits("FREE", text, 1)
-    if (!asTyped.isEmpty)
-      return rank(spark, sfDir, searcher.hits("FREE", text, k + 50), k)
-    val corrected = searcher.suggestPhrase(text, 1).headOption
-    corrected match {
-      case Some((phrase, _)) =>
-        rank(spark, sfDir, searcher.hits("FREE", phrase, k + 50), k)
-      case None =>
-        val spark2 = spark
-        import spark2.implicits._
-        rank(spark, sfDir, spark.emptyDataset[graft.model.Hit], k)
-    }
+    import spark.implicits._
+    val query =
+      if (!searcher.hits("FREE", text, 1).isEmpty) Some(text)
+      else searcher.suggestPhrase(text, 1).headOption.map(_._1)
+    ranked(spark, sfDir, k)(n =>
+      query.fold(spark.emptyDataset[Hit])(searcher.hits("FREE", _, n)))
   }
 
   /** Field-sorted results (the ES `sort` surface): the query's match
@@ -158,23 +152,10 @@ object DocsIndex {
     * merge), never a full sort. Tie-break doc_id asc. */
   def sortedMatches(spark: SparkSession, sfDir: String, kind: String,
                     text: String, k: Int): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("doc_id",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("dl",
-            org.apache.spark.sql.types.LongType))))
-      case Some(m) =>
-        m.join(withDocId(seg).join(
-            seg.docs.select(col("docId"), col("docLen")), Seq("docId")),
-            Seq("docId"))
-          .select(col("doc_id"), col("docLen").cast("long").as("dl"))
-          .orderBy(col("dl").desc, col("doc_id").asc)
-          .limit(k)
-    }
+    matched(spark, sfDir, kind, text, "doc_id", "docLen")
+      .select(col("doc_id"), col("docLen").cast("long").as("dl"))
+      .orderBy(col("dl").desc, col("doc_id").asc)
+      .limit(k)
   }
 
   /** Numeric histogram aggregation over a query's FULL match set (the
@@ -186,21 +167,10 @@ object DocsIndex {
   def lenHistogram(spark: SparkSession, sfDir: String, kind: String,
                    text: String, width: Int): DataFrame = {
     require(width >= 1, "histogram bin width must be positive")
-    val (seg, searcher, _) = get(spark, sfDir)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("bin",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("n_docs",
-            org.apache.spark.sql.types.LongType))))
-      case Some(m) =>
-        m.join(seg.docs.select(col("docId"), col("docLen")), Seq("docId"))
-          .select((floor(col("docLen") / width) * width).cast("long").as("bin"))
-          .groupBy(col("bin")).agg(count(lit(1)).as("n_docs"))
-          .orderBy("bin")
-    }
+    matched(spark, sfDir, kind, text, "docLen")
+      .select(lenBin(width))
+      .groupBy(col("bin")).agg(count(lit(1)).as("n_docs"))
+      .orderBy("bin")
   }
 
   /** Extended-stats aggregation over a query's FULL match set (the ES
@@ -215,37 +185,25 @@ object DocsIndex {
     * IEEE division/multiply from exact integers — no Σ-of-doubles order
     * drift; both round under the explicit floor(x·1e6+0.5)/1e6 rule
     * (the sigterms lesson: ratios of small integers DO land on exact
-    * 6-dp halves). */
+    * 6-dp halves). An empty match set (an OOV query included) is one
+    * row: n_docs 0 and every other column NULL, as SQL aggregates an
+    * empty input. */
   def lenExtendedStats(spark: SparkSession, sfDir: String, kind: String,
                        text: String): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    def rnd6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit(0L).as("n_docs"), lit(null).cast("long").as("min_dl"),
-        lit(null).cast("long").as("max_dl"), lit(0L).as("sum_dl"),
-        lit(null).cast("double").as("avg_dl"),
-        lit(null).cast("double").as("var_dl"),
-        lit(null).cast("double").as("std_dl"))
-      case Some(m) =>
-        val dl = col("docLen").cast("long")
-        val mean = col("sum_dl").cast("double") / col("n_docs")
-        val variance = col("sumsq").cast("double") / col("n_docs") -
-          (col("sum_dl").cast("double") / col("n_docs")) *
-          (col("sum_dl").cast("double") / col("n_docs"))
-        m.join(seg.docs.select(col("docId"), col("docLen")), Seq("docId"))
-          .agg(
-            count(lit(1)).as("n_docs"),
-            min(dl).as("min_dl"),
-            max(dl).as("max_dl"),
-            sum(dl).as("sum_dl"),
-            sum(dl * dl).as("sumsq"))
-          .select(col("n_docs"), col("min_dl"), col("max_dl"), col("sum_dl"),
-            rnd6(mean).as("avg_dl"),
-            rnd6(variance).as("var_dl"),
-            rnd6(sqrt(variance)).as("std_dl"))
-    }
+    val dl = col("docLen").cast("long")
+    val mean = col("sum_dl").cast("double") / col("n_docs")
+    val variance = col("sumsq").cast("double") / col("n_docs") - mean * mean
+    matched(spark, sfDir, kind, text, "docLen")
+      .agg(
+        count(lit(1)).as("n_docs"),
+        min(dl).as("min_dl"),
+        max(dl).as("max_dl"),
+        sum(dl).as("sum_dl"),
+        sum(dl * dl).as("sumsq"))
+      .select(col("n_docs"), col("min_dl"), col("max_dl"), col("sum_dl"),
+        rnd6(mean).as("avg_dl"),
+        rnd6(variance).as("var_dl"),
+        rnd6(sqrt(variance)).as("std_dl"))
   }
 
   /** Top-hits aggregation (the ES `top_hits` inside a `terms` agg —
@@ -267,8 +225,7 @@ object DocsIndex {
     val spark2 = spark
     import spark2.implicits._
     val hits = searcher.hitsExhaustive(kind, text, seg.stats.numDocs.toInt)
-    val scored = hits.join(withDocId(seg), Seq("docId"))
-      .join(seg.docs.select(col("docId"), col("lang")), Seq("docId"))
+    val scored = hits.join(docmap(seg, "doc_id", "lang"), Seq("docId"))
       .select(col("lang"), col("doc_id"), round(col("score"), 6).as("score"))
       .as[(String, Long, Double)]
     val perG = perGroup
@@ -299,31 +256,15 @@ object DocsIndex {
     * bucket-table-sized output. */
   def langBucketScript(spark: SparkSession, sfDir: String, kind: String,
                        text: String, minDocs: Long): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(Seq(
-          org.apache.spark.sql.types.StructField("lang",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("n_docs",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("len_sum",
-            org.apache.spark.sql.types.LongType),
-          org.apache.spark.sql.types.StructField("avg_len",
-            org.apache.spark.sql.types.DoubleType))))
-      case Some(m) =>
-        m.join(seg.docs.select(col("docId"), col("lang"), col("docLen")),
-            Seq("docId"))
-          .groupBy(col("lang"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(col("docLen")).cast("long").as("len_sum"))
-          .filter(col("n_docs") >= minDocs)
-          .select(col("lang"), col("n_docs"), col("len_sum"),
-            (floor(col("len_sum").cast("double") / col("n_docs").cast("double")
-              * lit(1e6) + lit(0.5)) / lit(1e6)).as("avg_len"))
-          .orderBy("lang")
-    }
+    matched(spark, sfDir, kind, text, "lang", "docLen")
+      .groupBy(col("lang"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(col("docLen")).cast("long").as("len_sum"))
+      .filter(col("n_docs") >= minDocs)
+      .select(col("lang"), col("n_docs"), col("len_sum"),
+        rnd6(col("len_sum").cast("double") / col("n_docs").cast("double"))
+          .as("avg_len"))
+      .orderBy("lang")
   }
 
   /** Top-metrics aggregation (X171 — the ES `top_metrics` agg under a
@@ -334,30 +275,20 @@ object DocsIndex {
     * (map-side partial winners, tiny final merge). */
   def topMetricsByLang(spark: SparkSession, sfDir: String, kind: String,
                        text: String): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
-    searcher.matchDocIds(kind, text) match {
-      case None => Seq.empty[(String, Long, Long)]
-        .toDF("lang", "top_doc_id", "top_doclen")
-      case Some(m) =>
-        val rows = m
-          .join(seg.docs.select(col("docId"), col("lang"), col("docLen"),
-            col("path").cast("long").as("doc_id")), Seq("docId"))
-          .select(col("lang"), col("doc_id"), col("docLen").cast("long"))
-          .as[(String, Long, Long)]
-        def best(it: Iterator[(String, Long, Long)])
-            : Iterator[(String, Long, Long)] =
-          it.toSeq.groupBy(_._1).iterator.map { case (_, xs) =>
-            xs.minBy { case (_, d, len) => (-len, d) }
-          }
-        rows
-          .mapPartitions(best)                        // partial argmax
-          .groupByKey(_._1).mapGroups((_, it) =>      // final merge
-            best(it).next())
-          .toDF("lang", "top_doc_id", "top_doclen")
-          .orderBy("lang")
-    }
+    import spark.implicits._
+    def best(it: Iterator[(String, Long, Long)])
+        : Iterator[(String, Long, Long)] =
+      it.toSeq.groupBy(_._1).iterator.map { case (_, xs) =>
+        xs.minBy { case (_, d, len) => (-len, d) }
+      }
+    matched(spark, sfDir, kind, text, "lang", "doc_id", "docLen")
+      .select(col("lang"), col("doc_id"), col("docLen").cast("long"))
+      .as[(String, Long, Long)]
+      .mapPartitions(best)                        // partial argmax
+      .groupByKey(_._1).mapGroups((_, it) =>      // final merge
+        best(it).next())
+      .toDF("lang", "top_doc_id", "top_doclen")
+      .orderBy("lang")
   }
 
   /** LM-Dirichlet ranked hits (the pluggable-similarity surface) — see
@@ -365,7 +296,7 @@ object DocsIndex {
   def lmdRankedHits(spark: SparkSession, sfDir: String, text: String,
                     mu: Double, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.lmdHits(text, mu, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.lmdHits(text, mu, _))
   }
 
   /** Boosting query (the ES `boosting` query / Lucene BoostingQuery):
@@ -383,9 +314,6 @@ object DocsIndex {
                          negBoost: Double, window: Int, k: Int): DataFrame = {
     require(negBoost >= 0.0 && negBoost < 1.0,
       s"negative boost must be in [0, 1), got $negBoost")
-    val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
     val base = rankedHits(spark, sfDir, posKind, posText, window)
       .select(col("doc_id"), col("score"))
     val ids = base.select(col("doc_id")).collect().map(_.getLong(0))
@@ -393,28 +321,17 @@ object DocsIndex {
       return spark.range(0).select(
         lit(0L).as("doc_id"), lit(0.0).as("bm25"),
         lit(0.0).as("boosted"), lit(0L).as("rank"))
-    val negIds: Set[Long] = searcher.matchDocIds(negKind, negText) match {
-      case None => Set.empty
-      case Some(m) =>
-        m.join(withDocId(seg), Seq("docId"))
-          .filter(col("doc_id").isin(ids.toSeq: _*))
-          .select(col("doc_id")).collect().map(_.getLong(0)).toSet
-    }
+    val negIds = matched(spark, sfDir, negKind, negText, "doc_id")
+      .filter(col("doc_id").isin(ids.toSeq: _*))
+      .select(col("doc_id")).collect().map(_.getLong(0))
     val negLit = typedLit(negIds.toSeq.sorted)
-    base
+    withRank(base
       .select(col("doc_id"), col("score").as("bm25"),
         round(col("score") *
           when(array_contains(negLit, col("doc_id")), lit(negBoost))
             .otherwise(lit(1.0)), 6).as("boosted"))
       .orderBy(col("boosted").desc, col("doc_id").asc)
-      .limit(k)
-      .as[(Long, Double, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, b, s) => r += 1; (d, b, s, r) }
-      }
-      .toDF("doc_id", "bm25", "boosted", "rank")
+      .limit(k))
   }
 
   /** Span-first ranked hits (Lucene SpanFirstQuery): every query term
@@ -422,7 +339,7 @@ object DocsIndex {
   def spanFirstRankedHits(spark: SparkSession, sfDir: String, text: String,
                           n: Int, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.spanFirstHits(text, n, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.spanFirstHits(text, n, _))
   }
 
   /** Span-not ranked hits (the Lucene SpanNotQuery surface): include
@@ -431,7 +348,7 @@ object DocsIndex {
   def spanNotRankedHits(spark: SparkSession, sfDir: String, incText: String,
                         excText: String, window: Int, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.spanNotHits(incText, excText, window, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.spanNotHits(incText, excText, window, _))
   }
 
   /** Intervals ranked hits (the Lucene/ES `intervals` algebra: ordered
@@ -440,7 +357,7 @@ object DocsIndex {
   def intervalsRankedHits(spark: SparkSession, sfDir: String, text: String,
                           maxGaps: Int, notText: String, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.intervalsHits(text, maxGaps, notText, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.intervalsHits(text, maxGaps, notText, _))
   }
 
   /** Intervals ranked hits wrapped in `containing` (the dual of
@@ -451,8 +368,8 @@ object DocsIndex {
                                     text: String, maxGaps: Int,
                                     containText: String, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir,
-      searcher.intervalsContainingHits(text, maxGaps, containText, k + 50), k)
+    ranked(spark, sfDir, k)(
+      searcher.intervalsContainingHits(text, maxGaps, containText, _))
   }
 
   /** Intervals ranked hits with `any_of` slot alternatives (slot syntax
@@ -461,8 +378,7 @@ object DocsIndex {
   def intervalsAnyRankedHits(spark: SparkSession, sfDir: String, text: String,
                              maxGaps: Int, notText: String, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir,
-      searcher.intervalsAnyHits(text, maxGaps, notText, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.intervalsAnyHits(text, maxGaps, notText, _))
   }
 
   /** Term vectors for one document (the ES `_termvectors` API): per
@@ -507,28 +423,10 @@ object DocsIndex {
     * inside whole-stage codegen (built-in md5/conv, no UDF). */
   def randomScoredHits(spark: SparkSession, sfDir: String, kind: String,
                        text: String, seed: Long, k: Int): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit(0L).as("doc_id"), lit(0L).as("rand"), lit(0L).as("rank"))
-      case Some(m) =>
-        val spark2 = spark
-        import spark2.implicits._
-        m.join(withDocId(seg), Seq("docId"))
-          .select(col("doc_id"),
-            conv(substring(md5(concat(lit(seed.toString), lit(":"),
-              col("doc_id").cast("string"))), 1, 15), 16, 10)
-              .cast("long").as("rand"))
-          .orderBy(col("rand").desc, col("doc_id").asc)
-          .limit(k)
-          .as[(Long, Long)]
-          .coalesce(1)
-          .mapPartitions { it =>
-            var r = 0L
-            it.map { case (d, h) => r += 1; (d, h, r) }
-          }
-          .toDF("doc_id", "rand", "rank")
-    }
+    withRank(matched(spark, sfDir, kind, text, "doc_id")
+      .select(col("doc_id"), seeded(seed).as("rand"))
+      .orderBy(col("rand").desc, col("doc_id").asc)
+      .limit(k))
   }
 
   /** Filters aggregation (the ES `filters` agg): named exact match
@@ -595,32 +493,20 @@ object DocsIndex {
   def diversifiedSample(spark: SparkSession, sfDir: String, kind: String,
                         text: String, seed: Long, perValue: Int): DataFrame = {
     require(perValue >= 1, s"perValue must be >= 1, got $perValue")
-    val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit("").as("lang"), lit(0L).as("doc_id"), lit(0L).as("rand"))
-      case Some(m) =>
-        val scored = m.join(withDocId(seg), Seq("docId"))
-          .join(seg.docs.select(col("docId"), col("lang")), Seq("docId"))
-          .select(col("lang"), col("doc_id"),
-            conv(substring(md5(concat(lit(seed.toString), lit(":"),
-              col("doc_id").cast("string"))), 1, 15), 16, 10)
-              .cast("long").as("rand"))
-          .as[(String, Long, Long)]
-        val perV = perValue
-        def top(rows: Iterator[(String, Long, Long)])
-            : Iterator[(String, Long, Long)] =
-          rows.toSeq.groupBy(_._1).iterator.flatMap { case (_, xs) =>
-            xs.sortBy { case (_, d, h) => (h, d) }.take(perV)
-          }
-        scored
-          .mapPartitions(top)                          // partial winners
-          .groupByKey(_._1).flatMapGroups((_, it) => top(it))
-          .toDF("lang", "doc_id", "rand")
-          .orderBy(col("lang"), col("rand"), col("doc_id"))
-    }
+    import spark.implicits._
+    val perV = perValue
+    def top(rows: Iterator[(String, Long, Long)])
+        : Iterator[(String, Long, Long)] =
+      rows.toSeq.groupBy(_._1).iterator.flatMap { case (_, xs) =>
+        xs.sortBy { case (_, d, h) => (h, d) }.take(perV)
+      }
+    matched(spark, sfDir, kind, text, "doc_id", "lang")
+      .select(col("lang"), col("doc_id"), seeded(seed).as("rand"))
+      .as[(String, Long, Long)]
+      .mapPartitions(top)                          // partial winners
+      .groupByKey(_._1).flatMapGroups((_, it) => top(it))
+      .toDF("lang", "doc_id", "rand")
+      .orderBy(col("lang"), col("rand"), col("doc_id"))
   }
 
   /** Composite aggregation (the ES `composite` agg): the paginated
@@ -639,28 +525,18 @@ object DocsIndex {
                    after: Option[(String, Long)], size: Int): DataFrame = {
     require(binWidth >= 1, s"binWidth must be >= 1, got $binWidth")
     require(size >= 1, s"page size must be >= 1, got $size")
-    val (seg, searcher, _) = get(spark, sfDir)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit("").as("lang"), lit(0L).as("bin"), lit(0L).as("n_docs"))
-      case Some(m) =>
-        val keyed = m
-          .join(seg.docs.select(col("docId"), col("lang"), col("docLen")),
-            Seq("docId"))
-          .select(col("lang"),
-            (floor(col("docLen") / binWidth) * binWidth).cast("long")
-              .as("bin"))
-        val paged = after match {
-          case Some((aLang, aBin)) => keyed.filter(
-            col("lang") > aLang ||
-              (col("lang") === aLang && col("bin") > aBin))
-          case None => keyed
-        }
-        paged.groupBy(col("lang"), col("bin"))
-          .agg(count(lit(1)).as("n_docs"))
-          .orderBy(col("lang"), col("bin"))
-          .limit(size)
+    val keyed = matched(spark, sfDir, kind, text, "lang", "docLen")
+      .select(col("lang"), lenBin(binWidth))
+    val paged = after match {
+      case Some((aLang, aBin)) => keyed.filter(
+        col("lang") > aLang ||
+          (col("lang") === aLang && col("bin") > aBin))
+      case None => keyed
     }
+    paged.groupBy(col("lang"), col("bin"))
+      .agg(count(lit(1)).as("n_docs"))
+      .orderBy(col("lang"), col("bin"))
+      .limit(size)
   }
 
   /** Percentiles aggregation (the ES `percentiles` agg over docLen,
@@ -677,33 +553,12 @@ object DocsIndex {
                      text: String, pcts: Seq[Int]): DataFrame = {
     require(pcts.nonEmpty && pcts.forall(p => p >= 1 && p <= 100),
       s"percentiles must be in [1, 100], got $pcts")
-    val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit(0L).as("pct"), lit(0L).as("value"))
-      case Some(m) =>
-        val hist = m.join(seg.docs.select(col("docId"), col("docLen")),
-            Seq("docId"))
-          .groupBy(col("docLen")).agg(count(lit(1)).as("cnt"))
-          .as[(Int, Long)].collect().sortBy(_._1)
-        val n = hist.map(_._2).sum
-        if (n == 0L) return spark.range(0).select(
-          lit(0L).as("pct"), lit(0L).as("value"))
-        val out = pcts.sorted.map { p =>
-          // nearest-rank: smallest dl whose cumulative count reaches
-          // ceil(p/100 * n); integer form of the ceiling avoids floats
-          val rank = (p.toLong * n + 99L) / 100L
-          var cum = 0L
-          var i = 0
-          while (i < hist.length && cum + hist(i)._2 < rank) {
-            cum += hist(i)._2; i += 1
-          }
-          (p.toLong, hist(math.min(i, hist.length - 1))._1.toLong)
-        }
-        out.toDF("pct", "value").orderBy(col("pct"))
-    }
+    import spark.implicits._
+    val (hist, n) = lenHist(spark, sfDir, kind, text)
+    if (n == 0L) return spark.range(0).select(
+      lit(0L).as("pct"), lit(0L).as("value"))
+    pcts.sorted.map(p => (p.toLong, nearestRank(hist, n, p)))
+      .toDF("pct", "value").orderBy(col("pct"))
   }
 
   /** Range aggregation (the ES `range` agg over docLen): named [lo, hi)
@@ -723,14 +578,7 @@ object DocsIndex {
       s"every range needs hi > lo, got $ranges")
     require(ranges.forall(!_._1.contains("'")),
       "range keys must not contain quotes")
-    val (seg, searcher, _) = get(spark, sfDir)
     val dl = col("docLen").cast("long")
-    val base = searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(col("id").as("docId"),
-        col("id").as("docLen"))
-      case Some(m) =>
-        m.join(seg.docs.select(col("docId"), col("docLen")), Seq("docId"))
-    }
     val aggCols = ranges.zipWithIndex.map { case ((_, lo, hi), i) =>
       val pred = hi match {
         case Some(h) => dl >= lo && dl < h
@@ -738,7 +586,8 @@ object DocsIndex {
       }
       coalesce(sum(when(pred, 1L)), lit(0L)).as(s"c$i")
     }
-    val one = base.agg(aggCols.head, aggCols.drop(1): _*)
+    val one = matched(spark, sfDir, kind, text, "docLen")
+      .agg(aggCols.head, aggCols.drop(1): _*)
     // unbounded hi encodes as Long.MaxValue in the OUTPUT row (never
     // NULL — the verify hash treats NULL as NaN, and NaN != NaN)
     val stackArgs = ranges.zipWithIndex.map { case ((key, lo, hi), i) =>
@@ -754,28 +603,19 @@ object DocsIndex {
     * integer form (both sums are exact Longs; the single division is
     * one IEEE op, floor(x·1e6+0.5)/1e6-rounded — the X63 regime). Docs
     * with weight 0 contribute nothing to either sum, matching ES's
-    * value·weight semantics. Scale: match-set-sized joins + a
-    * single-row partial+final agg. */
+    * value·weight semantics. An empty match set (an OOV query
+    * included) is one row: n_docs 0, w_sum and wavg NULL. Scale:
+    * match-set-sized joins + a single-row partial+final agg. */
   def weightedAvgChars(spark: SparkSession, sfDir: String, kind: String,
                        text: String): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    def rnd6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit(0L).as("n_docs"), lit(0L).as("w_sum"),
-        lit(null).cast("double").as("wavg"))
-      case Some(m) =>
-        val dl = col("docLen").cast("long")
-        m.join(seg.docs.select(col("docId"), col("docLen")), Seq("docId"))
-          .join(withDocId(seg), Seq("docId"))
-          .join(documents(spark, sfDir).select(col("doc_id"), col("n_chars")),
-            Seq("doc_id"))
-          .agg(count(lit(1)).as("n_docs"), sum(dl).as("w_sum"),
-            sum(col("n_chars") * dl).as("vw_sum"))
-          .select(col("n_docs"), col("w_sum"),
-            rnd6(col("vw_sum").cast("double") / col("w_sum")).as("wavg"))
-    }
+    val dl = col("docLen").cast("long")
+    matched(spark, sfDir, kind, text, "doc_id", "docLen")
+      .join(documents(spark, sfDir).select(col("doc_id"), col("n_chars")),
+        Seq("doc_id"))
+      .agg(count(lit(1)).as("n_docs"), sum(dl).as("w_sum"),
+        sum(col("n_chars") * dl).as("vw_sum"))
+      .select(col("n_docs"), col("w_sum"),
+        rnd6(col("vw_sum").cast("double") / col("w_sum")).as("wavg"))
   }
 
   /** Pipeline aggregations (ES `cumulative_sum` + `derivative` parent
@@ -822,8 +662,6 @@ object DocsIndex {
     require(window >= 1, "moving window must be positive")
     require(lag >= 1, "serial-diff lag must be positive")
     import org.apache.spark.sql.expressions.Window
-    def rnd6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val hist = lenHistogram(spark, sfDir, kind, text, width)
     val w = Window.orderBy("bin")
     val trail = w.rowsBetween(-(window - 1).toLong, Window.currentRow)
@@ -879,26 +717,14 @@ object DocsIndex {
   def lenPercentileRanks(spark: SparkSession, sfDir: String, kind: String,
                          text: String, values: Seq[Long]): DataFrame = {
     require(values.nonEmpty, "percentile_ranks needs at least one value")
-    val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit(0L).as("value"), lit(0.0).as("pct_rank"))
-      case Some(m) =>
-        val hist = m.join(seg.docs.select(col("docId"), col("docLen")),
-            Seq("docId"))
-          .groupBy(col("docLen")).agg(count(lit(1)).as("cnt"))
-          .as[(Int, Long)].collect().sortBy(_._1)
-        val n = hist.map(_._2).sum
-        if (n == 0L) return spark.range(0).select(
-          lit(0L).as("value"), lit(0.0).as("pct_rank"))
-        val out = values.sorted.map { v =>
-          val cum = hist.iterator.takeWhile(_._1 <= v).map(_._2).sum
-          (v, math.floor(100.0 * cum / n * 1e6 + 0.5) / 1e6)
-        }
-        out.toDF("value", "pct_rank").orderBy(col("value"))
-    }
+    import spark.implicits._
+    val (hist, n) = lenHist(spark, sfDir, kind, text)
+    if (n == 0L) return spark.range(0).select(
+      lit(0L).as("value"), lit(0.0).as("pct_rank"))
+    values.sorted.map { v =>
+      val cum = hist.iterator.takeWhile(_._1 <= v).map(_._2).sum
+      (v, rnd6(100.0 * cum / n))
+    }.toDF("value", "pct_rank").orderBy(col("value"))
   }
 
   /** Bucket-sort + normalize pipeline aggregations (ES `bucket_sort`
@@ -919,8 +745,6 @@ object DocsIndex {
     require(from >= 0, "bucket_sort from must be >= 0")
     require(size >= 1, "bucket_sort size must be >= 1")
     import org.apache.spark.sql.expressions.Window
-    def rnd6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val hist = lenHistogram(spark, sfDir, kind, text, width)
     val all = Window.rowsBetween(Window.unboundedPreceding,
       Window.unboundedFollowing)
@@ -948,36 +772,27 @@ object DocsIndex {
     * never corpus-sized). */
   def stringStats(spark: SparkSession, sfDir: String, kind: String,
                   text: String): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
-    def empty = spark.range(0).select(
+    import spark.implicits._
+    val vals = matched(spark, sfDir, kind, text, "repo").select(col("repo").as("s"))
+    val lens = vals.agg(count(lit(1)).as("n"),
+      min(length(col("s"))).as("minl"),
+      max(length(col("s"))).as("maxl"),
+      sum(length(col("s")).cast("long")).as("suml")).collect().head
+    val n = lens.getLong(0)
+    if (n == 0L) return spark.range(0).select(
       lit(0L).as("n_values"), lit(0L).as("min_len"), lit(0L).as("max_len"),
       lit(0.0).as("avg_len"), lit(0.0).as("entropy"))
-    searcher.matchDocIds(kind, text) match {
-      case None => empty
-      case Some(m) =>
-        val vals = m.join(seg.docs.select(col("docId"), col("repo").as("s")),
-          Seq("docId")).select(col("s"))
-        val lens = vals.agg(count(lit(1)).as("n"),
-          min(length(col("s"))).as("minl"),
-          max(length(col("s"))).as("maxl"),
-          sum(length(col("s")).cast("long")).as("suml")).collect().head
-        val n = lens.getLong(0)
-        if (n == 0L) return empty
-        val hist = vals.select(explode(split(col("s"), "")).as("ch"))
-          .groupBy("ch").agg(count(lit(1)).as("c"))
-          .as[(String, Long)].collect().sortBy(_._1)
-        val total = hist.map(_._2).sum.toDouble
-        val ln2 = math.log(2.0)
-        val ent = -hist.map { case (_, c) =>
-          val p = c / total; p * math.log(p) / ln2
-        }.sum
-        def rnd6(x: Double) = math.floor(x * 1e6 + 0.5) / 1e6
-        Seq((n, lens.getInt(1).toLong, lens.getInt(2).toLong,
-          rnd6(lens.getLong(3).toDouble / n), rnd6(ent)))
-          .toDF("n_values", "min_len", "max_len", "avg_len", "entropy")
-    }
+    val hist = vals.select(explode(split(col("s"), "")).as("ch"))
+      .groupBy("ch").agg(count(lit(1)).as("c"))
+      .as[(String, Long)].collect().sortBy(_._1)
+    val total = hist.map(_._2).sum.toDouble
+    val ln2 = math.log(2.0)
+    val ent = -hist.map { case (_, c) =>
+      val p = c / total; p * math.log(p) / ln2
+    }.sum
+    Seq((n, lens.getInt(1).toLong, lens.getInt(2).toLong,
+      rnd6(lens.getLong(3).toDouble / n), rnd6(ent)))
+      .toDF("n_values", "min_len", "max_len", "avg_len", "entropy")
   }
 
   /** Stats-bucket pipeline aggregation (ES `stats_bucket`, subsuming
@@ -992,8 +807,6 @@ object DocsIndex {
     * histogram's own partial+final agg. */
   def statsBucket(spark: SparkSession, sfDir: String, kind: String,
                   text: String, width: Int): DataFrame = {
-    def rnd6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     lenHistogram(spark, sfDir, kind, text, width)
       .agg(count(lit(1)).as("n_buckets"), min(col("n_docs")).as("min_docs"),
         max(col("n_docs")).as("max_docs"), sum(col("n_docs")).as("sum_docs"))
@@ -1013,20 +826,12 @@ object DocsIndex {
   def multiTermsAgg(spark: SparkSession, sfDir: String, kind: String,
                     text: String, width: Int, k: Int): DataFrame = {
     require(width >= 1 && k >= 1, "multi_terms needs width >= 1, k >= 1")
-    val (seg, searcher, _) = get(spark, sfDir)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit("").as("lang"), lit(0L).as("bin"), lit(0L).as("n_docs"))
-      case Some(m) =>
-        m.join(seg.docs.select(col("docId"), col("lang"), col("docLen")),
-            Seq("docId"))
-          .select(col("lang"),
-            (floor(col("docLen") / width) * width).cast("long").as("bin"))
-          .groupBy(col("lang"), col("bin"))
-          .agg(count(lit(1)).as("n_docs"))
-          .orderBy(col("n_docs").desc, col("lang").asc, col("bin").asc)
-          .limit(k)
-    }
+    matched(spark, sfDir, kind, text, "lang", "docLen")
+      .select(col("lang"), lenBin(width))
+      .groupBy(col("lang"), col("bin"))
+      .agg(count(lit(1)).as("n_docs"))
+      .orderBy(col("n_docs").desc, col("lang").asc, col("bin").asc)
+      .limit(k)
   }
 
   /** Median-absolute-deviation aggregation (the ES
@@ -1041,33 +846,15 @@ object DocsIndex {
     * histogram driver-side with zero further corpus passes. */
   def lenMad(spark: SparkSession, sfDir: String, kind: String,
              text: String): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit(0L).as("n_docs"), lit(0L).as("median"), lit(0L).as("mad"))
-      case Some(m) =>
-        val hist = m.join(seg.docs.select(col("docId"), col("docLen")),
-            Seq("docId"))
-          .groupBy(col("docLen")).agg(count(lit(1)).as("cnt"))
-          .as[(Int, Long)].collect().sortBy(_._1)
-        val n = hist.map(_._2).sum
-        if (n == 0L) return spark.range(0).select(
-          lit(0L).as("n_docs"), lit(0L).as("median"), lit(0L).as("mad"))
-        def nearestRank(h: Array[(Long, Long)], total: Long): Long = {
-          val rank = (50L * total + 99L) / 100L
-          var cum = 0L; var i = 0
-          while (i < h.length && cum + h(i)._2 < rank) { cum += h(i)._2; i += 1 }
-          h(math.min(i, h.length - 1))._1
-        }
-        val med = nearestRank(hist.map(p => (p._1.toLong, p._2)), n)
-        val devHist = hist.map { case (v, c) => (math.abs(v - med), c) }
-          .groupBy(_._1).map { case (d, xs) => (d, xs.map(_._2).sum) }
-          .toArray.sortBy(_._1)
-        val mad = nearestRank(devHist, n)
-        Seq((n, med, mad)).toDF("n_docs", "median", "mad")
-    }
+    import spark.implicits._
+    val (hist, n) = lenHist(spark, sfDir, kind, text)
+    if (n == 0L) return spark.range(0).select(
+      lit(0L).as("n_docs"), lit(0L).as("median"), lit(0L).as("mad"))
+    val med = nearestRank(hist, n, 50)
+    val devHist = hist.map { case (v, c) => (math.abs(v - med), c) }
+      .groupBy(_._1).map { case (d, xs) => (d, xs.map(_._2).sum) }
+      .toArray.sortBy(_._1)
+    Seq((n, med, nearestRank(devHist, n, 50))).toDF("n_docs", "median", "mad")
   }
 
   /** Boxplot aggregation (the ES `boxplot` agg, exact form): min, q1,
@@ -1078,37 +865,17 @@ object DocsIndex {
     * bounded-domain value-histogram agg, driver-side rank walk. */
   def lenBoxplot(spark: SparkSession, sfDir: String, kind: String,
                  text: String): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit(0L).as("n_docs"), lit(0L).as("min_dl"), lit(0L).as("q1"),
-        lit(0L).as("q2"), lit(0L).as("q3"), lit(0L).as("max_dl"),
-        lit(0L).as("iqr"))
-      case Some(m) =>
-        val hist = m.join(seg.docs.select(col("docId"), col("docLen")),
-            Seq("docId"))
-          .groupBy(col("docLen")).agg(count(lit(1)).as("cnt"))
-          .as[(Int, Long)].collect().sortBy(_._1)
-        val n = hist.map(_._2).sum
-        if (n == 0L) return spark.range(0).select(
-          lit(0L).as("n_docs"), lit(0L).as("min_dl"), lit(0L).as("q1"),
-          lit(0L).as("q2"), lit(0L).as("q3"), lit(0L).as("max_dl"),
-          lit(0L).as("iqr"))
-        def pctOf(p: Int): Long = {
-          val rank = (p.toLong * n + 99L) / 100L
-          var cum = 0L; var i = 0
-          while (i < hist.length && cum + hist(i)._2 < rank) {
-            cum += hist(i)._2; i += 1
-          }
-          hist(math.min(i, hist.length - 1))._1.toLong
-        }
-        val q1 = pctOf(25); val q2 = pctOf(50); val q3 = pctOf(75)
-        Seq((n, hist.head._1.toLong, q1, q2, q3, hist.last._1.toLong,
-          q3 - q1))
-          .toDF("n_docs", "min_dl", "q1", "q2", "q3", "max_dl", "iqr")
-    }
+    import spark.implicits._
+    val (hist, n) = lenHist(spark, sfDir, kind, text)
+    if (n == 0L) return spark.range(0).select(
+      lit(0L).as("n_docs"), lit(0L).as("min_dl"), lit(0L).as("q1"),
+      lit(0L).as("q2"), lit(0L).as("q3"), lit(0L).as("max_dl"),
+      lit(0L).as("iqr"))
+    val q1 = nearestRank(hist, n, 25)
+    val q2 = nearestRank(hist, n, 50)
+    val q3 = nearestRank(hist, n, 75)
+    Seq((n, hist.head._1, q1, q2, q3, hist.last._1, q3 - q1))
+      .toDF("n_docs", "min_dl", "q1", "q2", "q3", "max_dl", "iqr")
   }
 
   /** Two-sample Welch t-statistic (the ES `t_test` agg, `heteroscedastic`
@@ -1125,19 +892,11 @@ object DocsIndex {
     * two 1-row frames is trivial. */
   def lenTTest(spark: SparkSession, sfDir: String, kindA: String,
                textA: String, kindB: String, textB: String): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    def rnd6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     def side(kind: String, text: String, tag: String): DataFrame = {
       val dl = col("docLen").cast("long")
-      val base = searcher.matchDocIds(kind, text) match {
-        case None => spark.range(0).select(col("id").as("docId"),
-          col("id").cast("int").as("docLen"))
-        case Some(m) =>
-          m.join(seg.docs.select(col("docId"), col("docLen")), Seq("docId"))
-      }
-      base.agg(count(lit(1)).as(s"n_$tag"), sum(dl).as(s"sum_$tag"),
-        sum(dl * dl).as(s"sumsq_$tag"))
+      matched(spark, sfDir, kind, text, "docLen")
+        .agg(count(lit(1)).as(s"n_$tag"), sum(dl).as(s"sum_$tag"),
+          sum(dl * dl).as(s"sumsq_$tag"))
     }
     val a = side(kindA, textA, "a"); val b = side(kindB, textB, "b")
     def meanOf(tag: String) =
@@ -1159,71 +918,55 @@ object DocsIndex {
     * [[lenExtendedStats]]: presence-walk match set, docmap + documents
     * join touch match-set-sized data, single-row partial+final agg.
     * Determinism: all five sums are EXACT Longs; every derived moment is
-    * a fixed tree of IEEE ops over those integers, floor-rounded. */
+    * a fixed tree of IEEE ops over those integers, floor-rounded. An
+    * empty match set (an OOV query included) is one row: n_docs 0 and
+    * every moment NULL. */
   def matrixStats(spark: SparkSession, sfDir: String, kind: String,
                   text: String): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    def rnd6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(
-        lit(0L).as("n_docs"), lit(null).cast("double").as("mean_dl"),
-        lit(null).cast("double").as("mean_nc"),
-        lit(null).cast("double").as("var_dl"),
-        lit(null).cast("double").as("var_nc"),
-        lit(null).cast("double").as("cov"),
-        lit(null).cast("double").as("corr"))
-      case Some(m) =>
-        val x = col("docLen").cast("long")
-        val y = col("n_chars")
-        val n = col("n_docs").cast("double")
-        def mean(s: org.apache.spark.sql.Column) = s.cast("double") / n
-        val meanX = mean(col("sum_x")); val meanY = mean(col("sum_y"))
-        val varX = col("sxx").cast("double") / n - meanX * meanX
-        val varY = col("syy").cast("double") / n - meanY * meanY
-        val cov = col("sxy").cast("double") / n - meanX * meanY
-        m.join(seg.docs.select(col("docId"), col("docLen")), Seq("docId"))
-          .join(withDocId(seg), Seq("docId"))
-          .join(documents(spark, sfDir).select(col("doc_id"), col("n_chars")),
-            Seq("doc_id"))
-          .agg(count(lit(1)).as("n_docs"),
-            sum(x).as("sum_x"), sum(y).as("sum_y"),
-            sum(x * x).as("sxx"), sum(y * y).as("syy"),
-            sum(x * y).as("sxy"))
-          .select(col("n_docs"),
-            rnd6(meanX).as("mean_dl"), rnd6(meanY).as("mean_nc"),
-            rnd6(varX).as("var_dl"), rnd6(varY).as("var_nc"),
-            rnd6(cov).as("cov"),
-            rnd6(cov / sqrt(varX * varY)).as("corr"))
-    }
+    val x = col("docLen").cast("long")
+    val y = col("n_chars")
+    val n = col("n_docs").cast("double")
+    def mean(s: Column) = s.cast("double") / n
+    val meanX = mean(col("sum_x")); val meanY = mean(col("sum_y"))
+    val varX = col("sxx").cast("double") / n - meanX * meanX
+    val varY = col("syy").cast("double") / n - meanY * meanY
+    val cov = col("sxy").cast("double") / n - meanX * meanY
+    matched(spark, sfDir, kind, text, "doc_id", "docLen")
+      .join(documents(spark, sfDir).select(col("doc_id"), col("n_chars")),
+        Seq("doc_id"))
+      .agg(count(lit(1)).as("n_docs"),
+        sum(x).as("sum_x"), sum(y).as("sum_y"),
+        sum(x * x).as("sxx"), sum(y * y).as("syy"),
+        sum(x * y).as("sxy"))
+      .select(col("n_docs"),
+        rnd6(meanX).as("mean_dl"), rnd6(meanY).as("mean_nc"),
+        rnd6(varX).as("var_dl"), rnd6(varY).as("var_nc"),
+        rnd6(cov).as("cov"),
+        rnd6(cov / sqrt(varX * varY)).as("corr"))
   }
 
   /** Cardinality aggregation (the ES `cardinality` agg) over a query's
     * match set: exact distinct count of a docmap field (lang) — the
     * exact form IS the oracle; the approximate HLL++ scale path
     * (`approx_count_distinct`) is proven within its error bound against
-    * this exact form in SketchSpec. Match-set-sized agg, skew-free. */
+    * this exact form in SketchSpec. Match-set-sized agg, skew-free.
+    * An empty match set (an OOV query included) is one row,
+    * n_langs 0. */
   def langCardinality(spark: SparkSession, sfDir: String, kind: String,
-                      text: String): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    searcher.matchDocIds(kind, text) match {
-      case None => spark.range(0).select(lit(0L).as("n_langs"))
-      case Some(m) =>
-        m.join(seg.docs.select(col("docId"), col("lang")), Seq("docId"))
-          .agg(countDistinct(col("lang")).as("n_langs"))
-    }
-  }
+                      text: String): DataFrame =
+    matched(spark, sfDir, kind, text, "lang")
+      .agg(countDistinct(col("lang")).as("n_langs"))
 
   /** Batched multi-query rankedHits (msearch): every query of the batch
     * answered in ONE job over ONE union-pushdown postings scan
     * (Searcher.batchHits), each re-ranked by the same rounded contract
-    * as [[rankedHits]]. The ≤|batch|·(k+50)-row hit set BROADCASTS into
-    * the docmap join (the Q9 side discipline). */
+    * as [[rankedHits]]. The ≤|batch|·(k+[[TieSlack]])-row hit set
+    * BROADCASTS into the docmap join (the Q9 side discipline). */
   def msearchRankedHits(spark: SparkSession, sfDir: String,
                         queries: Seq[(Long, String, String)], k: Int): DataFrame = {
     import org.apache.spark.sql.expressions.Window
     val (seg, searcher, _) = get(spark, sfDir)
-    broadcast(searcher.batchHits(queries, k + 50).toDF())
+    broadcast(searcher.batchHits(queries, k + TieSlack).toDF())
       .join(withDocId(seg), Seq("docId"))
       .select(col("qid"), col("doc_id"), round(col("score"), 6).as("score"))
       .withColumn("rank", row_number().over(
@@ -1244,15 +987,10 @@ object DocsIndex {
     val range = seg.docs.filter(col("repo") === source)
       .agg(fmin(col("docId")), fmax(col("docId")))
       .collect().headOption.filter(!_.isNullAt(0))
-    range match {
-      case None => // unknown source: no docs in scope — empty result, not a k=0 query
-        val spark2 = spark
-        import spark2.implicits._
-        rank(spark, sfDir, spark.emptyDataset[graft.model.Hit], k)
-      case Some(r) =>
-        rank(spark, sfDir,
-          searcher.scopedHits(kind, text, k + 50, r.getLong(0), r.getLong(1) + 1), k)
-    }
+    import spark.implicits._
+    // unknown source: no docs in scope — empty result, not a k=0 query
+    ranked(spark, sfDir, k)(n => range.fold(spark.emptyDataset[Hit])(r =>
+      searcher.scopedHits(kind, text, n, r.getLong(0), r.getLong(1) + 1)))
   }
 
   /** Fielded query surface: `lang:x` / `repo:y` atoms anywhere in the
@@ -1292,32 +1030,25 @@ object DocsIndex {
       fields.get("repo").foreach { r =>
         pred = pred && col("repo") === r; tag += s"|repo:$r"
       }
-      return rank(spark, sfDir,
-        searcher.predFieldedHits(kind, rest, k + 50, tag, pred), k)
+      return ranked(spark, sfDir, k)(searcher.predFieldedHits(kind, rest, _, tag, pred))
     }
     (fields.get("repo"), fields.get("lang")) match {
       case (None, None) => rankedHits(spark, sfDir, kind, rest, k)
       case (None, Some(l)) =>
-        rank(spark, sfDir, searcher.fieldedHits(kind, rest, k + 50, "lang", l), k)
+        ranked(spark, sfDir, k)(searcher.fieldedHits(kind, rest, _, "lang", l))
       case (Some(r), langOpt) =>
         import org.apache.spark.sql.functions.{max => fmax, min => fmin}
         val range = seg.docs.filter(col("repo") === r)
           .agg(fmin(col("docId")), fmax(col("docId")))
           .collect().headOption.filter(!_.isNullAt(0))
-        range match {
-          case None =>
-            val spark2 = spark
-            import spark2.implicits._
-            rank(spark, sfDir, spark.emptyDataset[graft.model.Hit], k)
-          case Some(row) =>
-            val (lo, hi) = (row.getLong(0), row.getLong(1) + 1)
-            val hits = langOpt match {
-              case Some(l) =>
-                searcher.scopedFieldedHits(kind, rest, k + 50, lo, hi, "lang", l)
-              case None => searcher.scopedHits(kind, rest, k + 50, lo, hi)
-            }
-            rank(spark, sfDir, hits, k)
-        }
+        import spark.implicits._
+        ranked(spark, sfDir, k)(n => range.fold(spark.emptyDataset[Hit]) { row =>
+          val (lo, hi) = (row.getLong(0), row.getLong(1) + 1)
+          langOpt match {
+            case Some(l) => searcher.scopedFieldedHits(kind, rest, n, lo, hi, "lang", l)
+            case None => searcher.scopedHits(kind, rest, n, lo, hi)
+          }
+        })
     }
   }
 
@@ -1333,8 +1064,7 @@ object DocsIndex {
     val top = rankedHits(spark, sfDir, kind, text, k)
       .select(col("doc_id")).collect().map(_.getLong(0))
     // ≤k rows: doc_id (external) → docId (dense internal) via the docmap
-    val idByDocId = seg.docs
-      .select(col("docId"), col("path").cast("long").as("doc_id"))
+    val idByDocId = withDocId(seg)
       .filter(col("doc_id").isin(top.toSeq: _*))
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // the kind's own expansion rules (FUZZY/PREFIX/REGEX/BOOL-pattern
@@ -1406,8 +1136,7 @@ object DocsIndex {
     val (seg, searcher, _) = get(spark, sfDir)
     val top = rankedHits(spark, sfDir, kind, text, k)
       .select(col("doc_id")).collect().map(_.getLong(0))
-    val docRows = seg.docs
-      .select(col("docId"), col("path").cast("long").as("doc_id"), col("docLen"))
+    val docRows = docmap(seg, "doc_id", "docLen")
       .filter(col("doc_id").isin(top.toSeq: _*)).collect()
     val extById = docRows.map(r => r.getLong(0) -> r.getLong(1)).toMap
     val dlById = docRows.map(r => r.getLong(0) -> r.getInt(2)).toMap
@@ -1500,21 +1229,12 @@ object DocsIndex {
   def sortedIndexRankedHits(spark: SparkSession, sfDir: String, kind: String,
                             text: String, k: Int): DataFrame = {
     val (seg, searcher) = sortedIndex(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
-    searcher.earlyHits(kind, text, k)
+    withRank(searcher.earlyHits(kind, text, k)
       .join(seg.docs.select(col("docId"),
         col("path").cast("long").as("doc_id"),
         (lit(999999999L) - col("repo").cast("long")).as("n_chars")), Seq("docId"))
       .orderBy(col("docId").asc).limit(k)
-      .select(col("doc_id"), col("n_chars"))
-      .as[(Long, Long)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, n) => r += 1; (d, n, r) }
-      }
-      .toDF("doc_id", "n_chars", "rank")
+      .select(col("doc_id"), col("n_chars")))
   }
 
   /** Term-range query (X166 — Lucene TermRangeQuery `[lo TO hi]`):
@@ -1526,12 +1246,11 @@ object DocsIndex {
                           hi: String, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
     val entries = searcher.dictLookupRange(lo, hi)
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     if (entries.isEmpty)
       return Seq.empty[(Long, Double, Long)].toDF("doc_id", "score", "rank")
-    rank(spark, sfDir,
-      searcher.hits("OR", entries.map(_.term).mkString(" OR "), k + 50), k)
+    ranked(spark, sfDir, k)(
+      searcher.hits("OR", entries.map(_.term).mkString(" OR "), _))
   }
 
   /** The full LIVE LSM read path, end-to-end through the facade
@@ -1570,20 +1289,7 @@ object DocsIndex {
                         value: String): DataFrame = {
     val idx = lsmLive(spark, sfDir)
     val docMap = idx.liveSegments().map(withDocId).reduce(_ unionByName _)
-    val spark2 = spark
-    import spark2.implicits._
-    idx.fieldedHits(kind, text, k + 50, field, value)
-      .join(docMap, Seq("docId"))
-      .select(col("doc_id"), round(col("score"), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-      .as[(Long, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, s) => r += 1; (d, s, r) }
-      }
-      .toDF("doc_id", "score", "rank")
+    topK(docMap, idx.fieldedHits(kind, text, k + TieSlack, field, value), k)
   }
 
   /** Top-k with the tombstone fixture excluded — LIVE deletes: scores
@@ -1593,9 +1299,8 @@ object DocsIndex {
   def deletedRankedHits(spark: SparkSession, sfDir: String, kind: String,
                         text: String, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir,
-      searcher.deletedHits(kind, text, k + 50, "mod7",
-        deletedDocIds(spark, sfDir)), k)
+    ranked(spark, sfDir, k)(searcher.deletedHits(kind, text, _, "mod7",
+        deletedDocIds(spark, sfDir)))
   }
 
   /** The same tombstones COMPACTED away: the purged segment carries
@@ -1618,7 +1323,7 @@ object DocsIndex {
       p0.docs.unpersist(); p0.dict.unpersist(); p0.postings.unpersist()
       (p, new Searcher(spark, p))
     })
-    rankSeg(spark, segP, searcherP.hits(kind, text, k + 50), k)
+    rankedSeg(segP, k)(searcherP.hits(kind, text, _))
   }
 
   /** Page `skip/k .. skip/k + 1` of the rounded ranking — the SQL-parity
@@ -1632,7 +1337,7 @@ object DocsIndex {
   def pagedRankedHits(spark: SparkSession, sfDir: String, kind: String,
                       text: String, k: Int, skip: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.hits(kind, text, skip + k + 50), skip + k)
+    ranked(spark, sfDir, skip + k)(searcher.hits(kind, text, _))
       .filter(col("rank") > skip)
       .select(col("doc_id"), col("score"), (col("rank") - skip).as("rank"))
   }
@@ -1674,7 +1379,7 @@ object DocsIndex {
       c.docs.count(); c.dict.count(); c.postings.count(); c.doclens.count()
       (c, new Searcher(spark, c))
     })
-    rankSeg(spark, segC, searcherC.hits(kind, text, k + 50), k)
+    rankedSeg(segC, k)(searcherC.hits(kind, text, _))
   }
 
   /** Result collapsing: the best hit per source ("repo"), top `kRepos`
@@ -1683,20 +1388,11 @@ object DocsIndex {
   def collapsedRankedHits(spark: SparkSession, sfDir: String, kind: String,
                           text: String, kRepos: Int): DataFrame = {
     val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
     // broadcast the ≤kRepos collapsed side, never the corpus-sized docmap
-    broadcast(searcher.collapsedHits(kind, text, kRepos))
+    withRank(broadcast(searcher.collapsedHits(kind, text, kRepos))
       .join(withDocId(seg), Seq("docId"))
       .select(col("repo").as("source"), col("doc_id"), col("score"))
-      .orderBy(col("score").desc, col("source").asc)
-      .as[(String, Long, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (src, d, s) => r += 1; (src, d, s, r) }
-      }
-      .toDF("source", "doc_id", "score", "rank")
+      .orderBy(col("score").desc, col("source").asc))
   }
 
   /** Parent-child scored join (ES `has_child`): rank sources by an
@@ -1707,18 +1403,9 @@ object DocsIndex {
                          text: String, scoreMode: String, minChildren: Int,
                          kRepos: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
-    searcher.hasChildHits(kind, text, scoreMode, minChildren, kRepos)
+    withRank(searcher.hasChildHits(kind, text, scoreMode, minChildren, kRepos)
       .select(col("repo").as("source"), col("n_children"), col("score"))
-      .orderBy(col("score").desc, col("source").asc)
-      .as[(String, Long, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (src, n, s) => r += 1; (src, n, s, r) }
-      }
-      .toDF("source", "n_children", "score", "rank")
+      .orderBy(col("score").desc, col("source").asc))
   }
 
   /** Parent-child scored join, child side (ES `has_parent`, score mode
@@ -1748,32 +1435,20 @@ object DocsIndex {
     * excluding the seed itself. The seed text is ONE pushdown-pruned row
     * read; term selection is driver-side against the cached dict; the
     * ranking is the ordinary FREE WAND walk — so MLT costs exactly one
-    * extra point lookup over a normal query. Slack of k+51 covers both
-    * the excluded seed and rounding ties at the k-boundary. */
+    * extra point lookup over a normal query. One hit beyond the
+    * [[TieSlack]] covers the excluded seed. */
   def mltRankedHits(spark: SparkSession, sfDir: String, seedDocId: Long,
                     m: Int, k: Int): DataFrame = {
     val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     val seedText = documents(spark, sfDir)
       .filter(col("doc_id") === seedDocId).select(col("text"))
       .collect().headOption.map(_.getString(0)).getOrElse("")
     val sel = searcher.mltTerms(seedText, m)
     val hits =
-      if (sel.isEmpty) spark.emptyDataset[graft.model.Hit]
-      else searcher.hits("FREE", sel.mkString(" "), k + 51)
-    hits.join(withDocId(seg), Seq("docId"))
-      .filter(col("doc_id") =!= seedDocId)
-      .select(col("doc_id"), round(col("score"), 6).as("score"))
-      .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-      .as[(Long, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, s) => r += 1; (d, s, r) }
-      }
-      .toDF("doc_id", "score", "rank")
+      if (sel.isEmpty) spark.emptyDataset[Hit]
+      else searcher.hits("FREE", sel.mkString(" "), k + TieSlack + 1)
+    topK(withDocId(seg).filter(col("doc_id") =!= seedDocId), hits, k)
   }
 
   /** Hybrid lexical+vector search fused by Reciprocal Rank Fusion
@@ -1798,8 +1473,8 @@ object DocsIndex {
     * Scale posture: ALL seeds run through ONE batched job
     * (Searcher.batchHits — union-termId pushdown scan, the X38 shape),
     * so mining 10k seeds costs one scan, not 10k jobs; the exclusion
-    * join touches only the ≤|seeds|·(k+51) candidate rows (broadcast
-    * into the docmap/text joins), and duplicate detection is TEXT
+    * join touches only the ≤|seeds|·(k+[[TieSlack]]+1) candidate rows
+    * (broadcast into the docmap/text joins), and duplicate detection is TEXT
     * equality against the broadcast seed texts (the D1 exact-dup
     * criterion, evaluated candidate-side — no corpus-scale dedup run).
     * Output (seed_id, doc_id, score, rank), the rounded contract. */
@@ -1831,7 +1506,7 @@ object DocsIndex {
     val isSeedCopy = udf { (qid: Long, text: String) =>
       bcSeeds.value.get(qid).contains(text)
     }
-    broadcast(searcher.batchHits(queries, k + 51).toDF())
+    broadcast(searcher.batchHits(queries, k + TieSlack + 1).toDF())
       .join(withDocId(seg), Seq("docId"))
       .join(documents(spark, sfDir).select(col("doc_id"), col("text")),
         Seq("doc_id"))
@@ -1864,13 +1539,12 @@ object DocsIndex {
                     fbDocs: Int, fbTerms: Int, k: Int): DataFrame = {
     require(fbDocs >= 1 && fbTerms >= 0 && k >= 1, "prf params must be positive")
     val (seg, searcher, _) = get(spark, sfDir)
-    val spark2 = spark
-    import spark2.implicits._
+    import spark.implicits._
     val orig = graft.search.QueryParser.termsFor("FREE", text).distinct
-    val fbIds = rank(spark, sfDir, searcher.hits("FREE", text, fbDocs + 50),
-      fbDocs).select(col("doc_id")).collect().map(_.getLong(0))
+    val fbIds = ranked(spark, sfDir, fbDocs)(searcher.hits("FREE", text, _))
+      .select(col("doc_id")).collect().map(_.getLong(0))
     if (fbIds.isEmpty)
-      return rank(spark, sfDir, spark.emptyDataset[graft.model.Hit], k)
+      return ranked(spark, sfDir, k)(_ => spark.emptyDataset[Hit])
     val fbTexts = documents(spark, sfDir)
       .filter(col("doc_id").isin(fbIds.map(Long.box): _*))
       .select(col("text")).as[String].collect()
@@ -1883,14 +1557,12 @@ object DocsIndex {
     val n = seg.stats.numDocs
     val expansion = searcher.dictLookup(cfFb.keys.toArray.sorted)
       .map { e =>
-        val w = math.floor(cfFb(e.term) *
-          graft.model.BM25.idf(n, e.df) * 1e6 + 0.5) / 1e6
-        (w, e.term)
+        (rnd6(cfFb(e.term) * graft.model.BM25.idf(n, e.df)), e.term)
       }
       .sortBy { case (w, t) => (-w, t) }
       .take(fbTerms).map(_._2)
     val expanded = (orig ++ expansion.map(t => s"$t^0.5")).mkString(" ")
-    rank(spark, sfDir, searcher.hits("FREE", expanded, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.hits("FREE", expanded, _))
   }
 
   /** Ranking evaluation (the Elasticsearch Ranking Evaluation API /
@@ -1912,22 +1584,16 @@ object DocsIndex {
   def rankEval(spark: SparkSession, sfDir: String,
                queries: Seq[(Long, String)], k: Int): DataFrame = {
     require(queries.nonEmpty && k >= 1, "rankEval needs queries and k >= 1")
-    val (seg, searcher, _) = get(spark, sfDir)
     val ln2 = math.log(2.0)
-    def rnd6(c: org.apache.spark.sql.Column) =
-      floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
     val ranked = msearchRankedHits(spark, sfDir,
       queries.map { case (id, t) => (id, "FREE", t) }, k)
     // qrels: one (qid, doc_id) frame over the per-query AND match sets
-    val qrelDfs = queries.flatMap { case (id, t) =>
-      searcher.matchDocIds("AND", t).map(df =>
-        df.join(withDocId(seg), Seq("docId"))
-          .select(lit(id).as("qid"), col("doc_id")))
-    }
-    val rByQid: Map[Long, Long] =
-      if (qrelDfs.isEmpty) Map.empty
-      else qrelDfs.reduce(_.union(_)).groupBy(col("qid")).count()
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val rels = queries.map { case (id, t) =>
+      matched(spark, sfDir, "AND", t, "doc_id")
+        .select(lit(id).as("qid"), col("doc_id"))
+    }.reduce(_ union _)
+    val rByQid: Map[Long, Long] = rels.groupBy(col("qid")).count()
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     def idcg(r: Long): Double = {
       var s = 0.0
       var i = 1L
@@ -1940,10 +1606,6 @@ object DocsIndex {
       val r = rByQid.getOrElse(id, 0L)
       (id, r, idcg(r))
     }.toDF("qid", "n_rel", "idcg")
-    val rels =
-      if (qrelDfs.isEmpty)
-        meta.select(col("qid"), col("n_rel").as("doc_id")).limit(0)
-      else qrelDfs.reduce(_.union(_))
     // the qrel set is corpus-sized for a weak conjunction; the ranked set
     // is ≤|q|·k rows — semi-join rels down through a BROADCAST of the
     // bounded side first, so no corpus-scale shuffle reaches the mark join
@@ -1998,8 +1660,7 @@ object DocsIndex {
         .toDF("qid", "doc_id", "rank", "bm25", "n_matched", "sum_tf", "dl",
           "sum_idf_matched")
     val extIds = ranked.map(_._2).distinct.toSeq
-    val docRows = seg.docs
-      .select(col("docId"), col("path").cast("long").as("doc_id"), col("docLen"))
+    val docRows = docmap(seg, "doc_id", "docLen")
       .filter(col("doc_id").isin(extIds.map(Long.box): _*)).collect()
     val intByExt = docRows.map(r => r.getLong(1) -> r.getLong(0)).toMap
     val dlByExt = docRows.map(r => r.getLong(1) -> r.getInt(2)).toMap
@@ -2023,7 +1684,7 @@ object DocsIndex {
       val sumTf = matched.map(e =>
         tfByIntTid((internal, e.termId)).toLong).sum
       (qid, ext, rank, bm25, matched.length.toLong, sumTf,
-        dlByExt(ext).toLong, math.floor(sumIdf * 1e6 + 0.5) / 1e6)
+        dlByExt(ext).toLong, rnd6(sumIdf))
     }
     out.toSeq.toDF("qid", "doc_id", "rank", "bm25", "n_matched", "sum_tf",
         "dl", "sum_idf_matched")
@@ -2036,7 +1697,7 @@ object DocsIndex {
   def msmRankedHits(spark: SparkSession, sfDir: String, text: String,
                     minMatch: Int, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.msmHits(text, minMatch, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.msmHits(text, minMatch, _))
   }
 
   /** Match-phrase-prefix ranked surface (Searcher.phrasePrefixHits):
@@ -2045,7 +1706,7 @@ object DocsIndex {
   def phrasePrefixRankedHits(spark: SparkSession, sfDir: String,
                              text: String, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.phrasePrefixHits(text, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.phrasePrefixHits(text, _))
   }
 
   /** Constant-score surface (Searcher.constHits): the first k matching
@@ -2078,7 +1739,7 @@ object DocsIndex {
   def disMaxRankedHits(spark: SparkSession, sfDir: String, text: String,
                        tie: Double, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.disMaxHits(text, tie, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.disMaxHits(text, tie, _))
   }
 
   /** Common-terms ranked surface (Searcher.commonTermsHits): rare terms
@@ -2087,7 +1748,7 @@ object DocsIndex {
   def commonTermsRankedHits(spark: SparkSession, sfDir: String, text: String,
                             maxDfFrac: Double, k: Int): DataFrame = {
     val (_, searcher, _) = get(spark, sfDir)
-    rank(spark, sfDir, searcher.commonTermsHits(text, maxDfFrac, k + 50), k)
+    ranked(spark, sfDir, k)(searcher.commonTermsHits(text, maxDfFrac, _))
   }
 
   /** Significant-terms aggregation (the Elasticsearch `significant_terms`
@@ -2108,45 +1769,31 @@ object DocsIndex {
     * Spark rounds half-up and DuckDB half-even). */
   def significantTerms(spark: SparkSession, sfDir: String, kind: String,
                        text: String, topN: Int): DataFrame = {
-    val (seg, searcher, _) = get(spark, sfDir)
-    val emptyOut = spark.createDataFrame(
-      spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-      org.apache.spark.sql.types.StructType(Seq(
-        org.apache.spark.sql.types.StructField("term",
-          org.apache.spark.sql.types.StringType),
-        org.apache.spark.sql.types.StructField("fg_df",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("bg_df",
-          org.apache.spark.sql.types.LongType),
-        org.apache.spark.sql.types.StructField("sig",
-          org.apache.spark.sql.types.DoubleType))))
-    searcher.matchDocIds(kind, text) match {
-      case None => emptyOut
-      case Some(fg) =>
-        val fgIds = fg.join(withDocId(seg), Seq("docId")).select(col("doc_id"))
-        val fgN = fgIds.count()
-        if (fgN == 0L) return emptyOut
-        val bgN = seg.stats.numDocs
-        import spark.implicits._
-        val fgTerms = fgIds
-          .join(documents(spark, sfDir).select(col("doc_id"), col("text")),
-            Seq("doc_id"))
-          .select(col("text")).as[String]
-          .flatMap(t => graft.tokenize.Tokenizer.tokenize(t).distinct)
-          .toDF("term")
-          .groupBy(col("term")).agg(count(lit(1)).as("fg_df"))
-        fgTerms
-          .join(seg.dict.select(col("term"), col("df").as("bg_df")), Seq("term"))
-          .withColumn("fg_pct", col("fg_df") / lit(fgN.toDouble))
-          .withColumn("bg_pct", col("bg_df") / lit(bgN.toDouble))
-          .filter(col("fg_pct") > col("bg_pct"))
-          .withColumn("sig", floor((col("fg_pct") - col("bg_pct")) *
-            (col("fg_pct") / col("bg_pct")) * 1e6 + 0.5) / 1e6)
-          .select(col("term"), col("fg_df"), col("bg_df"), col("sig"))
-          .orderBy(col("sig").desc, col("term").asc)
-          .limit(topN)
-          .orderBy(col("sig").desc, col("term").asc)
-    }
+    val (seg, _, _) = get(spark, sfDir)
+    import spark.implicits._
+    val fgIds = matched(spark, sfDir, kind, text, "doc_id").select(col("doc_id"))
+    val fgN = fgIds.count()
+    if (fgN == 0L)
+      return Seq.empty[(String, Long, Long, Double)].toDF("term", "fg_df", "bg_df", "sig")
+    val bgN = seg.stats.numDocs
+    val fgTerms = fgIds
+      .join(documents(spark, sfDir).select(col("doc_id"), col("text")),
+        Seq("doc_id"))
+      .select(col("text")).as[String]
+      .flatMap(t => graft.tokenize.Tokenizer.tokenize(t).distinct)
+      .toDF("term")
+      .groupBy(col("term")).agg(count(lit(1)).as("fg_df"))
+    fgTerms
+      .join(seg.dict.select(col("term"), col("df").as("bg_df")), Seq("term"))
+      .withColumn("fg_pct", col("fg_df") / lit(fgN.toDouble))
+      .withColumn("bg_pct", col("bg_df") / lit(bgN.toDouble))
+      .filter(col("fg_pct") > col("bg_pct"))
+      .withColumn("sig", rnd6((col("fg_pct") - col("bg_pct")) *
+        (col("fg_pct") / col("bg_pct"))))
+      .select(col("term"), col("fg_df"), col("bg_df"), col("sig"))
+      .orderBy(col("sig").desc, col("term").asc)
+      .limit(topN)
+      .orderBy(col("sig").desc, col("term").asc)
   }
 
   /** MMR-diversified results (Maximal Marginal Relevance, Carbonell &
@@ -2225,17 +1872,10 @@ object DocsIndex {
     val rrf = round(
       coalesce(lit(1.0) / (lit(60) + col("ft_rank")), lit(0.0)) +
         coalesce(lit(1.0) / (lit(60) + col("ann_rank")), lit(0.0)), 6)
-    ft.join(ann, Seq("doc_id"), "full_outer")
+    withRank(ft.join(ann, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), rrf.as("rrf"))
       .orderBy(col("rrf").desc, col("doc_id").asc)
-      .limit(k)
-      .as[(Long, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, s) => r += 1; (d, s, r) }
-      }
-      .toDF("doc_id", "rrf", "rank")
+      .limit(k))
   }
 
   /** Linear hybrid retriever (the Elasticsearch `linear` retriever —
@@ -2278,17 +1918,10 @@ object DocsIndex {
     val fused = round(
       lit(wText) * coalesce(col("ft_norm"), lit(0.0)) +
         lit(wVec) * coalesce(col("ann_norm"), lit(0.0)), 6)
-    ft.join(ann, Seq("doc_id"), "full_outer")
+    withRank(ft.join(ann, Seq("doc_id"), "full_outer")
       .select(col("doc_id"), fused.as("fused"))
       .orderBy(col("fused").desc, col("doc_id").asc)
-      .limit(k)
-      .as[(Long, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, s) => r += 1; (d, s, r) }
-      }
-      .toDF("doc_id", "fused", "rank")
+      .limit(k))
   }
 
   /** Re-rank window (the Lucene/Elasticsearch rescore pattern and the
@@ -2303,26 +1936,10 @@ object DocsIndex {
     * pruning). The ≤window side is broadcast into the docmap join. */
   def rescoredRankedHits(spark: SparkSession, sfDir: String, kind: String,
                          text: String, window: Int, k: Int,
-                         lengthWeight: Double): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    val base = rankedHits(spark, sfDir, kind, text, window)
-      .select(col("doc_id"), col("score"))
-    val signal = documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
-    broadcast(base).join(signal, Seq("doc_id"))
-      .select(col("doc_id"), col("score").as("bm25"),
-        round(col("score") +
-          lit(lengthWeight) * log(lit(1.0) + col("n_chars")), 6).as("blended"))
-      .orderBy(col("blended").desc, col("doc_id").asc)
-      .limit(k)
-      .as[(Long, Double, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, b, s) => r += 1; (d, b, s, r) }
-      }
-      .toDF("doc_id", "bm25", "blended", "rank")
-  }
+                         lengthWeight: Double): DataFrame =
+    rescoreWindow(spark, sfDir, kind, text, window, k)(
+      round(col("score") +
+        lit(lengthWeight) * log(lit(1.0) + col("n_chars")), 6).as("blended"))
 
   /** Decay scoring (the Elasticsearch `function_score` decay family —
     * gauss/exp/linear(origin, offset, scale, decay) over a numeric doc
@@ -2427,25 +2044,9 @@ object DocsIndex {
                             k: Int, pivot: Double, boost: Double): DataFrame = {
     require(pivot > 0.0 && boost >= 0.0,
       s"need pivot > 0 and boost >= 0, got pivot=$pivot boost=$boost")
-    val spark2 = spark
-    import spark2.implicits._
-    val base = rankedHits(spark, sfDir, kind, text, window)
-      .select(col("doc_id"), col("score"))
-    val signal = documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
     val sat = lit(boost) * col("n_chars") / (col("n_chars") + lit(pivot))
-    val total = round(col("score") + sat, 6)
-    broadcast(base).join(signal, Seq("doc_id"))
-      .select(col("doc_id"), col("score").as("bm25"),
-        round(sat, 6).as("feature"), total.as("total"))
-      .orderBy(col("total").desc, col("doc_id").asc)
-      .limit(k)
-      .as[(Long, Double, Double, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, b, f, t) => r += 1; (d, b, f, t, r) }
-      }
-      .toDF("doc_id", "bm25", "feature", "total", "rank")
+    rescoreWindow(spark, sfDir, kind, text, window, k)(
+      round(sat, 6).as("feature"), round(col("score") + sat, 6).as("total"))
   }
 
   def decayRankedHits(spark: SparkSession, sfDir: String, kind: String,
@@ -2454,11 +2055,6 @@ object DocsIndex {
                       decayRate: Double, shape: String = "gauss"): DataFrame = {
     require(scale > 0.0 && decayRate > 0.0 && decayRate < 1.0,
       s"need scale > 0 and decayRate in (0,1), got scale=$scale decay=$decayRate")
-    val spark2 = spark
-    import spark2.implicits._
-    val base = rankedHits(spark, sfDir, kind, text, window)
-      .select(col("doc_id"), col("score"))
-    val signal = documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
     val dist = greatest(lit(0.0), abs(col("n_chars") - lit(origin)) - lit(offset))
     val mult = shape match {
       case "gauss" =>
@@ -2472,40 +2068,115 @@ object DocsIndex {
         throw new IllegalArgumentException(
           s"decay shape must be gauss|exp|linear, got '$other'")
     }
-    val decayed = round(col("score") * mult, 6)
-    broadcast(base).join(signal, Seq("doc_id"))
-      .select(col("doc_id"), col("score").as("bm25"), decayed.as("decayed"))
-      .orderBy(col("decayed").desc, col("doc_id").asc)
-      .limit(k)
-      .as[(Long, Double, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, b, s) => r += 1; (d, b, s, r) }
-      }
-      .toDF("doc_id", "bm25", "decayed", "rank")
+    rescoreWindow(spark, sfDir, kind, text, window, k)(
+      round(col("score") * mult, 6).as("decayed"))
   }
 
-  private def rank(spark: SparkSession, sfDir: String,
-                   hits: org.apache.spark.sql.Dataset[graft.model.Hit], k: Int): DataFrame = {
-    val (seg, _, _) = get(spark, sfDir)
-    rankSeg(spark, seg, hits, k)
-  }
+  /** Hits a ranked surface fetches beyond k on the exact ordering, so a
+    * rounding tie at the k-boundary cannot change the rounded top-k. */
+  private val TieSlack = 50
 
-  private def rankSeg(spark: SparkSession, seg: Segment,
-                      hits: org.apache.spark.sql.Dataset[graft.model.Hit], k: Int): DataFrame = {
-    val spark2 = spark
-    import spark2.implicits._
-    hits.join(withDocId(seg), Seq("docId"))
+  /** The rounded top-k of a walk asked for k + [[TieSlack]] hits over the
+    * sfDir index: (doc_id, score, rank) — see [[rankedHits]]. */
+  private def ranked(spark: SparkSession, sfDir: String, k: Int)(
+      walk: Int => Dataset[Hit]): DataFrame =
+    rankedSeg(get(spark, sfDir)._1, k)(walk)
+
+  /** [[ranked]] over another view of the corpus (the purged and
+    * compacted segments), whose docIds map through its own docmap. */
+  private def rankedSeg(seg: Segment, k: Int)(walk: Int => Dataset[Hit]): DataFrame =
+    topK(withDocId(seg), walk(k + TieSlack), k)
+
+  /** `hits` mapped through a docmap and cut to the rounded top-k by
+    * (round(score, 6) desc, doc_id asc), with its rank. */
+  private def topK(docMap: DataFrame, hits: Dataset[Hit], k: Int): DataFrame =
+    withRank(hits.join(docMap, Seq("docId"))
       .select(col("doc_id"), round(col("score"), 6).as("score"))
       .orderBy(col("score").desc, col("doc_id").asc)
-      .limit(k)
-      .as[(Long, Double)]
-      .coalesce(1)
-      .mapPartitions { it =>
-        var r = 0L
-        it.map { case (d, s) => r += 1; (d, s, r) }
-      }
-      .toDF("doc_id", "score", "rank")
+      .limit(k))
+
+  /** An ordered frame with a 1-based positional `rank` column appended:
+    * one Dataset pass over a single partition. No Window (an unpartitioned
+    * one gathers the rows all the same and warns) and no RDD round trip,
+    * which would cut the upstream plan, and its Exchanges, out of
+    * `executedPlan`. */
+  private def withRank(ordered: DataFrame): DataFrame =
+    ordered.coalesce(1).mapPartitions { it =>
+      var r = 0L
+      it.map { row => r += 1; Row.fromSeq(row.toSeq :+ r) }
+    }(Encoders.row(ordered.schema.add("rank", LongType, nullable = false)))
+
+  /** The rescore window (the X30 shape): the BM25 top-`window`,
+    * broadcast into the static n_chars signal, projected to
+    * (doc_id, bm25, cols…) and re-ranked by the last of `cols` desc,
+    * doc_id asc. */
+  private def rescoreWindow(spark: SparkSession, sfDir: String, kind: String,
+                            text: String, window: Int, k: Int)(
+      cols: Column*): DataFrame = {
+    val base = rankedHits(spark, sfDir, kind, text, window)
+      .select(col("doc_id"), col("score"))
+    val signal = documents(spark, sfDir).select(col("doc_id"), col("n_chars"))
+    val scored = broadcast(base).join(signal, Seq("doc_id"))
+      .select(col("doc_id") +: col("score").as("bm25") +: cols: _*)
+    withRank(scored.orderBy(col(scored.columns.last).desc, col("doc_id").asc)
+      .limit(k))
   }
+
+  /** docId → the docmap columns a surface reads; `doc_id` is the
+    * external id the zero-padded path carries. */
+  private def docmap(seg: Segment, cols: String*): DataFrame =
+    seg.docs.select(col("docId") +: cols.map {
+      case "doc_id" => col("path").cast("long").as("doc_id")
+      case c => col(c)
+    }: _*)
+
+  /** A query's match set (the kind's unscored walk: termId pushdown, no
+    * scoring, no doc lengths) joined to the docmap columns `cols`. A
+    * query with no match, an OOV one included, is the same frame without
+    * rows, so each surface reports an empty match set one way. */
+  private def matched(spark: SparkSession, sfDir: String, kind: String,
+                      text: String, cols: String*): DataFrame = {
+    val (seg, searcher, _) = get(spark, sfDir)
+    searcher.matchDocIds(kind, text).join(docmap(seg, cols: _*), Seq("docId"))
+  }
+
+  /** The match set's docLen histogram, (docLen, count) ascending, and
+    * its total n: one match-set-sized partial+final agg whose output is
+    * bounded by the distinct lengths, collected to the driver. */
+  private def lenHist(spark: SparkSession, sfDir: String, kind: String,
+                      text: String): (Array[(Long, Long)], Long) = {
+    import spark.implicits._
+    val hist = matched(spark, sfDir, kind, text, "docLen")
+      .groupBy(col("docLen").cast("long")).agg(count(lit(1)))
+      .as[(Long, Long)].collect().sortBy(_._1)
+    (hist, hist.map(_._2).sum)
+  }
+
+  /** Nearest-rank percentile of an ascending (value, count) histogram
+    * holding n values: the smallest value whose cumulative count reaches
+    * ceil(p/100 · n), the ceiling in integer form (no floats). */
+  private def nearestRank(hist: Array[(Long, Long)], n: Long, p: Int): Long = {
+    val rank = (p.toLong * n + 99L) / 100L
+    var cum = 0L
+    var i = 0
+    while (i < hist.length && cum + hist(i)._2 < rank) { cum += hist(i)._2; i += 1 }
+    hist(math.min(i, hist.length - 1))._1
+  }
+
+  /** A docLen bin of `width` tokens, as the `bin` column. */
+  private def lenBin(width: Int): Column =
+    (floor(col("docLen") / width) * width).cast("long").as("bin")
+
+  /** The md5-portable random score of `doc_id` under `seed`: the first
+    * 15 hex chars of md5("seed:doc_id") as a Long. */
+  private def seeded(seed: Long): Column =
+    conv(substring(md5(concat(lit(seed.toString), lit(":"),
+      col("doc_id").cast("string"))), 1, 15), 16, 10).cast("long")
+
+  /** The 6-dp rounding both engines reproduce: floor(x·1e6 + 0.5)/1e6.
+    * Neither engine's round(x, 6) serves: Spark's is HALF_UP, DuckDB's
+    * half-even, and ratios of small integers do land on exact 6-dp
+    * halves. */
+  private def rnd6(c: Column): Column = floor(c * lit(1e6) + lit(0.5)) / lit(1e6)
+  private def rnd6(x: Double): Double = math.floor(x * 1e6 + 0.5) / 1e6
 }

@@ -166,14 +166,14 @@ final class LsmIndex(spark: SparkSession, val indexDir: String,
     * segment's own presence walk (termId pushdown + bucket pruning —
     * never a corpus scan; per-segment pattern expansion keeps the X23
     * cross-segment df rule); already-tombstoned ids dedupe through the
-    * same delete-log append as [[delete]]. Returns newly deleted docs. */
+    * same delete-log append as [[delete]]. Returns newly deleted docs;
+    * an empty match set (an OOV query included) deletes nothing and
+    * commits no delete-log batch. */
   def deleteByQuery(kind: String, text: String): Long = {
     val (segs, _) = reader()
-    val sets = segs.flatMap { seg =>
-      new graft.search.Searcher(spark, seg).matchDocIds(kind, text)
-        .map(_.select($"docId").as[Long])
-    }
-    if (sets.isEmpty) 0L else deleteIds(sets.reduce(_ union _))
+    deleteIds(segs.map(seg =>
+        new graft.search.Searcher(spark, seg).matchDocIds(kind, text).as[Long])
+      .reduce(_ union _))
   }
 
   private def deleteIds(ids: Dataset[Long]): Long = {

@@ -931,9 +931,12 @@ final class Searcher(spark: SparkSession, segment: Segment,
 
   /** The query's full match set as (docId) rows under the kind's own
     * semantics — the FOREGROUND set for aggregations that need more than
-    * facet counts (significant terms). None = provably empty. */
-  def matchDocIds(kind: String, text: String): Option[DataFrame] =
-    lower(kind, text, 0).map(matchIds(_, Long.MaxValue).toDF("docId"))
+    * facet counts (significant terms). A query `lower` proves empty (an
+    * OOV term under AND, an unsatisfiable BOOL) is the empty frame, so
+    * callers aggregate one shape whether or not any doc matched. */
+  def matchDocIds(kind: String, text: String): DataFrame =
+    lower(kind, text, 0).fold(spark.emptyDataset[Long])(matchIds(_, Long.MaxValue))
+      .toDF("docId")
 
   /** Batched multi-query execution ("msearch" — the offline query-log
     * shape: replay an eval set, mine hard negatives for 10k training
@@ -1267,17 +1270,11 @@ final class Searcher(spark: SparkSession, segment: Segment,
     * NEAR/ONEAR with their positional checks). The doc set is the
     * unscored walk's ([[matchDocIds]]: termId pushdown, one walk per
     * bucket, no scoring, no doc lengths), then one hash aggregation
-    * against the docmap. */
+    * against the docmap; an empty match set has no facet rows. */
   def facets(kind: String, text: String, facetCol: String): DataFrame =
-    matchDocIds(kind, text) match {
-      case None =>
-        spark.emptyDataFrame
-          .withColumn(facetCol, lit("")).withColumn("n_docs", lit(0L))
-      case Some(docSet) =>
-        docSet.join(segment.docs, "docId")
-          .groupBy(col(facetCol))
-          .agg(count(lit(1)).as("n_docs"))
-    }
+    matchDocIds(kind, text).join(segment.docs, "docId")
+      .groupBy(col(facetCol))
+      .agg(count(lit(1)).as("n_docs"))
 
   /** Total matching documents — the "about N results" surface every
     * search UI shows: each touched bucket's unscored walk counts its

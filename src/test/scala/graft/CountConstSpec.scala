@@ -63,7 +63,7 @@ class CountConstSpec extends SparkSpec {
   }
 
   test("constant-score: first-k match set in docId order, boost as score") {
-    val matchIds = searcher.matchDocIds("AND", "fast AND merge").get
+    val matchIds = searcher.matchDocIds("AND", "fast AND merge")
       .collect().map(_.getLong(0)).sorted
     assert(matchIds.length == 5)
     for (k <- 1 to matchIds.length + 1) {
@@ -92,7 +92,7 @@ class CountConstSpec extends SparkSpec {
     for ((kind, q) <- cases) {
       val want = searcher.hits(kind, q, 100).collect().map(_.docId).sorted
       assert(want.nonEmpty, s"$kind '$q' should match on the planted corpus")
-      val got = searcher.matchDocIds(kind, q).get.as[Long].collect().sorted
+      val got = searcher.matchDocIds(kind, q).as[Long].collect().sorted
       assert(got.toSeq == want.toSeq, s"$kind '$q' match set")
       assert(searcher.matchCount(kind, q) == want.length, s"$kind '$q' count")
       for (k <- 1 to want.length + 1) {

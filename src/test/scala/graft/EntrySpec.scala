@@ -299,6 +299,80 @@ class EntrySpec extends SparkSpec {
     assert(variance > 0.0)
   }
 
+  test("an OOV query gives the same rows as an in-vocabulary query matching nothing") {
+    import org.apache.spark.sql.DataFrame
+    import org.apache.spark.sql.functions.col
+    import graft.api.DocsIndex
+    val sf = "/root/testdata/sf0.001"
+    val toks = DocsIndex.documents(spark, sf).select(col("text")).collect()
+      .map(r => graft.tokenize.Tokenizer.tokenize(r.getString(0)))
+    // some document holds every term of this corpus, so no AND of its
+    // terms is empty: the in-vocabulary query with no match is a
+    // two-term phrase that no document holds
+    val vocab = toks.flatten.distinct.sorted
+    val bigrams = toks.flatMap(_.sliding(2).map(_.mkString(" "))).toSet
+    val phrase = (for (a <- vocab; b <- vocab if a != b && !bigrams(s"$a $b"))
+      yield s"$a $b").head
+    val (_, searcher, _) = DocsIndex.get(spark, sf)
+    val oov = ("AND", "zzz_not_a_term fast")
+    val none = ("PHRASE", "\"" + phrase + "\"")
+    assert(searcher.dictLookup(Array("zzz")).isEmpty)
+    assert(searcher.matchCount(none._1, none._2) == 0L, phrase)
+    def rows(df: DataFrame) = df.collect().map(_.toSeq).toSeq
+    val surfaces: Seq[(String, (String, String) => DataFrame)] = Seq(
+      "sortedMatches" -> (DocsIndex.sortedMatches(spark, sf, _, _, 10)),
+      "lenHistogram" -> (DocsIndex.lenHistogram(spark, sf, _, _, 20)),
+      "lenHistogramPipeline" -> (DocsIndex.lenHistogramPipeline(spark, sf, _, _, 20)),
+      "lenHistogramMoving" -> (DocsIndex.lenHistogramMoving(spark, sf, _, _, 20, 3, 1)),
+      "lenHistogramMovingPct" ->
+        (DocsIndex.lenHistogramMovingPct(spark, sf, _, _, 20, 3, 50)),
+      "lenHistogramBucketSort" ->
+        (DocsIndex.lenHistogramBucketSort(spark, sf, _, _, 20, 0, 5)),
+      "statsBucket" -> (DocsIndex.statsBucket(spark, sf, _, _, 20)),
+      "lenExtendedStats" -> (DocsIndex.lenExtendedStats(spark, sf, _, _)),
+      "langBucketScript" -> (DocsIndex.langBucketScript(spark, sf, _, _, 1L)),
+      "topMetricsByLang" -> (DocsIndex.topMetricsByLang(spark, sf, _, _)),
+      "boostingRankedHits" -> (DocsIndex.boostingRankedHits(spark, sf,
+        "FREE", "fast", _, _, 0.5, 20, 10)),
+      "randomScoredHits" -> (DocsIndex.randomScoredHits(spark, sf, _, _, 42L, 10)),
+      "diversifiedSample" -> (DocsIndex.diversifiedSample(spark, sf, _, _, 42L, 2)),
+      "compositeAgg" -> (DocsIndex.compositeAgg(spark, sf, _, _, 20, None, 10)),
+      "lenPercentiles" -> (DocsIndex.lenPercentiles(spark, sf, _, _, Seq(50, 90))),
+      "lenRanges" -> (DocsIndex.lenRanges(spark, sf, _, _,
+        Seq(("short", 0L, Some(20L)), ("long", 20L, None)))),
+      "weightedAvgChars" -> (DocsIndex.weightedAvgChars(spark, sf, _, _)),
+      "lenPercentileRanks" ->
+        (DocsIndex.lenPercentileRanks(spark, sf, _, _, Seq(10L, 30L))),
+      "stringStats" -> (DocsIndex.stringStats(spark, sf, _, _)),
+      "multiTermsAgg" -> (DocsIndex.multiTermsAgg(spark, sf, _, _, 20, 5)),
+      "lenMad" -> (DocsIndex.lenMad(spark, sf, _, _)),
+      "lenBoxplot" -> (DocsIndex.lenBoxplot(spark, sf, _, _)),
+      "lenTTest" -> (DocsIndex.lenTTest(spark, sf, _, _, "FREE", "fast")),
+      "matrixStats" -> (DocsIndex.matrixStats(spark, sf, _, _)),
+      "langCardinality" -> (DocsIndex.langCardinality(spark, sf, _, _)),
+      "significantTerms" -> (DocsIndex.significantTerms(spark, sf, _, _, 5)),
+      "Searcher.facets" -> (searcher.facets(_, _, "lang")))
+    for ((name, f) <- surfaces) {
+      val (o, e) = (rows(f.tupled(oov)), rows(f.tupled(none)))
+      assert(o == e, s"$name: OOV $o vs no match $e")
+    }
+    // the aggregates over a whole match set keep their one row when it
+    // is empty, as their DuckDB twins do
+    for (name <- Seq("lenExtendedStats", "weightedAvgChars", "matrixStats",
+        "langCardinality")) {
+      val one = rows(surfaces.toMap.apply(name).tupled(oov))
+      assert(one.length == 1 && one.head.head == 0L, s"$name: $one")
+    }
+    // an OOV delete-by-query deletes nothing and commits no delete batch
+    val dir = java.nio.file.Files.createTempDirectory("graft-oov-lsm").toString
+    val lsm = new graft.api.LsmIndex(spark, dir, graft.build.BuildParams(
+      numPartitions = 4, bucketSize = 1L << 12, positional = true))
+    lsm.append(DocsIndex.corpus(spark, sf))
+    assert(lsm.deleteByQuery(oov._1, oov._2) == 0L)
+    assert(lsm.deleteByQuery(none._1, none._2) == 0L)
+    assert(graft.index.IndexStorage.tombstoneBatchCount(dir) == 0L)
+  }
+
   test("randomScoredHits == brute-force md5 ordering of the match set") {
     import org.apache.spark.sql.functions.col
     val sf = "/root/testdata/sf0.001"

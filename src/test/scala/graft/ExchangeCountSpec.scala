@@ -22,11 +22,29 @@ package graft
   *    a handful of stages) — the string proxy is meaningless there.
   */
 class ExchangeCountSpec extends SparkSpec {
+  import ExchangeCountSpec._
 
-  private val sf = "/root/testdata/sf0.001"
+  test("top driver rows stay within their committed shuffle budgets") {
+    val over = bounds.flatMap { case (name, max) =>
+      val n = exchanges(name)(spark)
+      if (n > max) Some(s"$name: $n exchanges > committed $max") else None
+    }
+    assert(over.isEmpty,
+      "shuffle-budget regressions:\n" + over.mkString("\n") +
+        "\nIf the new shuffle is INTENTIONAL, re-measure with " +
+        "sbt \"Test/runMain graft.tools.CountExchanges\" and update the " +
+        "committed bound WITH a justification in the commit message.")
+  }
+}
+
+/** The gated rows and the counting rule, shared with the re-measure tool
+  * (`graft.tools.CountExchanges`), so both count the same thing. */
+object ExchangeCountSpec {
+
+  val sf = "/root/testdata/sf0.001"
 
   /** (driver row, committed max non-broadcast Exchange count). */
-  private val bounds: Seq[(String, Int)] = Seq(
+  val bounds: Seq[(String, Int)] = Seq(
     "q1_agg" -> 2,
     "q3_shipping" -> 1,
     "q5_region_volume" -> 2,
@@ -51,17 +69,11 @@ class ExchangeCountSpec extends SparkSpec {
     "ft_matrixstats" -> 84,
     "ft_postings" -> 103)
 
-  test("top driver rows stay within their committed shuffle budgets") {
-    val re = "(?<!Broadcast)Exchange".r
-    val over = bounds.flatMap { case (name, max) =>
-      val df = SparkEntry.queries(name)(spark, sf)
-      val n = re.findAllIn(df.queryExecution.executedPlan.toString).length
-      if (n > max) Some(s"$name: $n exchanges > committed $max") else None
-    }
-    assert(over.isEmpty,
-      "shuffle-budget regressions:\n" + over.mkString("\n") +
-        "\nIf the new shuffle is INTENTIONAL, re-measure with " +
-        "graft.tools.CountExchanges and update the committed bound " +
-        "WITH a justification in the commit message.")
-  }
+  private val exchange = "(?<!Broadcast)Exchange".r
+
+  /** Non-broadcast `Exchange` occurrences in a driver row's executed plan
+    * at sf0.001. */
+  def exchanges(name: String)(spark: org.apache.spark.sql.SparkSession): Int =
+    exchange.findAllIn(SparkEntry.queries(name)(spark, sf)
+      .queryExecution.executedPlan.toString).length
 }

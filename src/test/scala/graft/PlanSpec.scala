@@ -71,7 +71,7 @@ class PlanSpec extends SparkSpec {
     val terms = loaded.dict.orderBy(desc("df")).limit(2).collect().map(_.term)
     val searcher = new graft.search.Searcher(spark, loaded, residentDoclens = false)
     val plans = Seq(
-      "matchDocIds" -> searcher.matchDocIds("FREE", terms(0)).get,
+      "matchDocIds" -> searcher.matchDocIds("FREE", terms(0)),
       "earlyHits" -> searcher.earlyHits("AND", terms.mkString(" AND "), 5))
     for ((what, df) <- plans) {
       val plan = df.queryExecution.executedPlan.toString

@@ -1,33 +1,17 @@
 package graft.tools
 
-/** Scratch measurement main (test scope, not shipped): prints the
-  * non-broadcast Exchange count of each candidate driver row's plan so
-  * ExchangeCountSpec can pin committed bounds. */
+import graft.{ExchangeCountSpec, SparkSpec}
+
+/** Re-measure main (test scope, not shipped) for ExchangeCountSpec: prints
+  * each gated row's non-broadcast Exchange count beside its committed
+  * bound, counted by the spec's own rule on the suites' Spark session.
+  * Run with `sbt "Test/runMain graft.tools.CountExchanges"`. */
 object CountExchanges {
   def main(args: Array[String]): Unit = {
-    val spark = org.apache.spark.sql.SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.ui.enabled", false)
-      .appName("count-exchanges").getOrCreate()
+    val spark = SparkSpec.session
     spark.sparkContext.setLogLevel("ERROR")
-    val sf = "/root/testdata/sf0.001"
-    val names = Seq(
-      "assoc_rules", "assoc_triples", "ft_pinned", "ft_matrixstats",
-      "ft_postings", "ft_prefix", "ft_phrase_prefix", "ft_phrase3",
-      "ft_prf", "dedup_keep_best", "dedup_corpus", "dedup_minhash",
-      "ft_mad", "ft_purged", "ft_multiterms", "knn_join",
-      "ft_lsm_live", "q18_top_customers", "q1_agg", "q3_shipping",
-      "q5_region_volume", "ft_bm25_topk", "ft_mmr", "dedup_semantic")
-    names.foreach { n =>
-      try {
-        val df = graft.SparkEntry.queries(n)(spark, sf)
-        val plan = df.queryExecution.executedPlan.toString
-        val ex = "(?<!Broadcast)Exchange".r.findAllIn(plan).length
-        println(s"XCOUNT $n $ex")
-      } catch {
-        case e: Throwable => println(s"XCOUNT $n ERR ${e.getClass.getSimpleName}")
-      }
+    ExchangeCountSpec.bounds.foreach { case (name, max) =>
+      println(s"XCOUNT $name ${ExchangeCountSpec.exchanges(name)(spark)} (bound $max)")
     }
     spark.stop()
   }
