@@ -1204,18 +1204,20 @@ object SparkEntry {
     // ── dedup family (training-data pipeline) ──
     "dedup_exact" -> ((s, dir) =>
       Dedup.exactDups(DocsIndex.documents(s, dir)).orderBy("text_sha")),
+    // the exact threshold join: PPJoin-style candidates from rarest-first
+    // prefix shingles, each verified by intersecting the two docs'
+    // shingle records (one candidate/verify path, no all-pairs form)
     "dedup_jaccard" -> ((s, dir) =>
       Dedup.jaccardPairs(DocsIndex.documents(s, dir), 3, 0.5)
         .select(col("doc_a"), col("doc_b"), round(col("jac"), 6).as("jac"))
         .orderBy("doc_a", "doc_b")),
-    // the SAME exact threshold join via PPJoin-style prefix filtering
-    // (candidates from rarest-first prefix tokens only, verified
-    // exactly) — shares dedup_jaccard's oracle because the output
-    // contract is identical by theorem
+    // kept as its own row under its historical name: the same call, so
+    // it shares dedup_jaccard's oracle
     "dedup_jaccard_prefix" -> ((s, dir) =>
-      Dedup.jaccardPairsPrefix(DocsIndex.documents(s, dir), 3, 0.5)
+      Dedup.jaccardPairs(DocsIndex.documents(s, dir), 3, 0.5)
         .select(col("doc_a"), col("doc_b"), round(col("jac"), 6).as("jac"))
         .orderBy("doc_a", "doc_b")),
+    // LSH candidates, verified by the same record intersection
     "dedup_minhash" -> ((s, dir) =>
       Dedup.minhashLshPairs(DocsIndex.documents(s, dir), 3, 64, 16, 0.5)
         .select(col("doc_a"), col("doc_b"), round(col("jac"), 6).as("jac"))
@@ -1223,7 +1225,8 @@ object SparkEntry {
     // asymmetric n-gram CONTAINMENT (X181 — Broder SEQUENCES'97): the
     // subset-duplication detector symmetric Jaccard misses (a doc
     // quoted whole inside a 10x larger one has J~0.1 but C=1.0);
-    // prefix filtering on the contained side only, exact verification
+    // prefix filtering on the contained side only, then the same
+    // record-intersection verification as dedup_jaccard
     "dedup_containment" -> ((s, dir) =>
       Dedup.containmentPairs(DocsIndex.documents(s, dir), 3, 0.8)
         .select(col("doc_sub"), col("doc_sup"),

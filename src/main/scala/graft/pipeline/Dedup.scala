@@ -3,37 +3,135 @@ package graft.pipeline
 import scala.util.hashing.MurmurHash3
 
 import org.apache.spark.sql.{DataFrame, Dataset}
-import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import graft.pipeline.Lineage._
 
 /** Deduplication operators over a (doc_id, text) table — the
-  * training-data-pipeline layer. Exact, n-gram-Jaccard (exact pairwise),
-  * MinHash+LSH (the 100 TB scale path), and SimHash.
+  * training-data-pipeline layer. Exact, n-gram-Jaccard and containment
+  * (exact threshold joins), MinHash+LSH (the 100 TB scale path), and
+  * SimHash.
   *
-  * Scale posture: `jaccardPairs` is the small-scale oracle (its shingle
-  * self-join is quadratic in hot shingles); at cluster scale use
-  * `minhashLshPairs`: signatures are computed in one NARROW pass
-  * (a doc's text is one row), so candidate generation's only
-  * corpus-scale shuffle is the band-bucket groupBy — pair dedup happens
-  * at the source via first-collision ownership, not a second shuffle.
-  * Both end in the same exact-Jaccard verification (a candidate-scale
-  * join against the shingle table), so LSH output ⊆ exact output with
-  * recall governed by (bands, rowsPerBand).
+  * Scale posture: the exact joins and MinHash share one candidate/verify
+  * split (PPJoin-style filter-then-verify). [[records]] builds every
+  * doc's distinct shingles in one NARROW pass (a doc's text is one row),
+  * then two key-aggregated shuffles — by shingle for its df, by doc for
+  * the rarest-first record. Candidates come from a join of PREFIX
+  * shingles only; because the order is rarest-first, prefix shingles are
+  * the ones with the shortest doc lists, so a boilerplate shingle in
+  * every doc never pairs its docs up. Verification joins each candidate
+  * pair to its two records and intersects them inside the task — one row
+  * per pair, not one per shared shingle. `minhashLshPairs` swaps the
+  * prefix join for LSH banding: signatures are narrow
+  * ([[minhashSignatures]]) and its only corpus-scale candidate shuffle
+  * is the band-bucket groupBy, so LSH output ⊆ exact output with recall
+  * governed by (bands, rowsPerBand). Every operator returns a lazy
+  * frame: no cache, no checkpoint; within one plan the reused exchanges
+  * cover the records' second use. Corpus-sized join sides carry a
+  * `merge` hint: their size estimate comes from the compressed input
+  * scan, and a broadcast relation stays on the heap until the
+  * ContextCleaner frees it.
   */
 object Dedup {
 
-  /** Word n-gram shingles, distinct per doc. Raw single-space split —
-    * pinned, shared with the DuckDB oracle SQL (SparkEntry). */
+  /** Distinct word n-grams of one text, first occurrence first. Raw
+    * single-space split — pinned, shared with the DuckDB oracle SQL
+    * (SparkEntry). */
+  private def textShingles(text: String, n: Int): Array[String] = {
+    val ws = text.split(" ")
+    if (ws.length < n) Array.empty
+    else (0 to ws.length - n).iterator.map(i => ws.slice(i, i + n).mkString(" "))
+      .distinct.toArray
+  }
+
+  /** Word n-gram shingles, distinct per doc. */
   def shingles(docs: DataFrame, n: Int = 3): Dataset[(Long, String)] = {
     val spark = docs.sparkSession
     import spark.implicits._
     docs.select($"doc_id", $"text").as[(Long, String)].flatMap { case (id, text) =>
-      val ws = text.split(" ")
-      if (ws.length < n) Iterator.empty
-      else (0 to ws.length - n).iterator
-        .map(i => (id, ws.slice(i, i + n).mkString(" ")))
+      textShingles(text, n).iterator.map(s => (id, s))
     }.distinct()
+  }
+
+  /** Every doc's record (doc_id, shingles): its distinct shingles in the
+    * global rarest-first order (df ascending, then shingle). One narrow
+    * pass emits each row's distinct shingles, the shingle aggregate
+    * collects each shingle's distinct docs (its df), and the doc
+    * aggregate sorts each doc's shingles by (df, shingle). Both drop
+    * duplicates, so two rows sharing a doc_id make one record over the
+    * union of their shingles. Docs with fewer than n words have no
+    * record. The frame stays hash-partitioned by doc_id, so joins on it
+    * shuffle only their other side. */
+  private def records(docs: DataFrame, n: Int): DataFrame = {
+    val spark = docs.sparkSession
+    import spark.implicits._
+    docs.select($"doc_id", $"text").as[(Long, String)]
+      .flatMap { case (id, text) => textShingles(text, n).iterator.map(s => (s, id)) }
+      .toDF("shingle", "doc_id")
+      .groupBy($"shingle").agg(collect_set($"doc_id").as("ids"))
+      .select(explode($"ids").as("doc_id"), size($"ids").as("df"), $"shingle")
+      .groupBy($"doc_id").agg(sort_array(collect_list(struct($"df", $"shingle"))).as("r"))
+      .select($"doc_id", $"r.shingle".as("shingles"))
+      .hint("merge")
+  }
+
+  /** A shingle's 64-bit candidate join key. Equal shingles share it, and
+    * a collision only adds a candidate that [[verify]] rejects, so keying
+    * by hash loses no pair. */
+  private def shingleKey(s: String): Long =
+    (hash32(s, 0x3c6ef372).toLong << 32) | (hash32(s, 0x1b873593) & 0xffffffffL)
+
+  /** Each record's shingles as (key, doc_id, sz), the first `take(sz)` of
+    * them in rarest-first order. */
+  private def keyed(recs: DataFrame)(take: Int => Int): DataFrame = {
+    import recs.sparkSession.implicits._
+    recs.as[(Long, Array[String])].flatMap { case (id, sh) =>
+      sh.iterator.take(take(sh.length)).map(x => (shingleKey(x), id, sh.length))
+    }.toDF("key", "doc_id", "sz").hint("merge")
+  }
+
+  /** How many of a doc's first shingles under the rarest-first order a
+    * qualifying pair must share one of: |s| − c + 1 of its |s| shingles,
+    * where c is the least overlap the verification can accept. That
+    * verification tests `i / |s| >= tau` (or a Jaccard ratio it bounds)
+    * in Double, so c is found by that same test rather than by
+    * `ceil(|s|·tau)`, which rounds up past an accepted overlap: at
+    * tau = 0.55 and |s| = 100, `100 * 0.55` is 55.00000000000001 and the
+    * ceiling is 56, yet 55 / 100 >= 0.55 holds. */
+  private def prefixLength(s: Int, tau: Double): Int = {
+    val c = math.ceil(s * tau).toInt
+    val need = if ((c - 1).toDouble / s >= tau) c - 1 else c
+    s - need + 1
+  }
+
+  /** |x ∩ y| of two docs' distinct shingles. */
+  private def overlap(xs: Array[String], ys: Array[String]): Int = {
+    val (small, large) = if (xs.length <= ys.length) (xs, ys) else (ys, xs)
+    val set = new java.util.HashSet[String](small.length * 2)
+    small.foreach(set.add)
+    large.count(set.contains)
+  }
+
+  private val jaccard: (Int, Int, Int) => Double = (i, na, nb) => i.toDouble / (na + nb - i)
+
+  /** Exact verification of candidate pairs (x, y), which may repeat:
+    * each distinct pair joins both docs' records and intersects them in
+    * the task. Keeps the pairs whose `score(i, |x|, |y|)` reaches tau, as
+    * (x, y, score) under `names`. The distinct runs on the x-partitioning
+    * the first join needs, so it adds no shuffle. */
+  private def verify(pairs: DataFrame, recs: DataFrame, tau: Double,
+                     names: (String, String, String))
+                    (score: (Int, Int, Int) => Double): DataFrame = {
+    val spark = pairs.sparkSession
+    import spark.implicits._
+    pairs.toDF("x", "y").repartition($"x").dropDuplicates("x", "y")
+      .join(recs.toDF("x", "xs"), "x")
+      .join(recs.toDF("y", "ys"), "y")
+      .select("x", "y", "xs", "ys")
+      .as[(Long, Long, Array[String], Array[String])]
+      .flatMap { case (x, y, xs, ys) =>
+        val v = score(overlap(xs, ys), xs.length, ys.length)
+        if (v >= tau) Iterator.single((x, y, v)) else Iterator.empty
+      }
+      .toDF(names._1, names._2, names._3)
   }
 
   /** Exact duplicate groups by content hash (hash-groupBy; the only
@@ -44,76 +142,25 @@ object Dedup {
       .filter(col("cnt") > 1)
       .select(col("text_sha"), col("cnt"), col("ids"))
 
-  /** Exact pairwise n-gram Jaccard ≥ tau. Output (doc_a < doc_b, jac). */
+  /** Exact pairwise n-gram Jaccard ≥ tau, by PREFIX FILTERING (Chaudhuri,
+    * Ganti & Kaushik ICDE'06; Xiao et al. WWW'08 PPJoin). J(a,b) ≥ τ
+    * forces overlap ≥ τ·max(|a|,|b|) (from i ≥ τ(na+nb−i) and i ≤ min),
+    * so under ANY global order a qualifying pair shares a shingle inside
+    * EACH side's [[prefixLength]] first shingles, and min/max ≥ τ. The
+    * candidates are the prefix ⋈ prefix pairs that pass that size
+    * filter; [[verify]] computes `i/(na+nb−i)` exactly.
+    * Output (doc_a < doc_b, jac). */
   def jaccardPairs(docs: DataFrame, n: Int = 3, tau: Double = 0.5): DataFrame = {
-    val spark = docs.sparkSession
-    import spark.implicits._
-    val sh = shingles(docs, n).toDF("doc_id", "shingle").cache()
-    val sz = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val inter = sh.as("a").join(sh.as("b"), "shingle")
-      .filter($"a.doc_id" < $"b.doc_id")
-      .groupBy($"a.doc_id".as("doc_a"), $"b.doc_id".as("doc_b"))
-      .agg(count(lit(1)).as("i"))
-    val out = inter
-      .join(sz.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-      .join(sz.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-      .withColumn("jac", $"i" / ($"na" + $"nb" - $"i"))
-      .filter($"jac" >= tau)
-      .select($"doc_a", $"doc_b", $"jac")
-      // snapshot the pair-sized result, release the cached shingle
-      // table now (no reliance on CacheManager LRU). Without a checkpoint
-      // dir this is a localCheckpoint, whose blocks the ContextCleaner
-      // frees when the frame is dropped; with one it is a reliable
-      // checkpoint, whose files stay in that dir after the frame is gone
-      .cutLineage()
-    sh.unpersist()
-    out
-  }
-
-  /** Exact Jaccard ≥ tau via PREFIX FILTERING (Chaudhuri, Ganti &
-    * Kaushik ICDE'06; Xiao et al. WWW'08 PPJoin) — the SCALE path for
-    * the exact threshold join next to [[jaccardPairs]]' every-shared-
-    * shingle inverted join: J(a,b) ≥ τ forces overlap ≥ ⌈τ·max(|a|,|b|)⌉
-    * (from i ≥ τ(na+nb−i) and i ≤ min), so under ANY global token
-    * order a qualifying pair must share a token inside EACH side's
-    * first |s| − ⌈τ·|s|⌉ + 1 tokens. Candidates therefore come from a
-    * self-join of PREFIX tokens only — and because the global order is
-    * rarest-first (df asc), prefix tokens are precisely the tokens
-    * with the SHORTEST posting lists: the quadratic-in-df blowup of
-    * the naive join concentrates on exactly the tokens the prefix
-    * excludes. Exact verification then runs on the candidate set only.
-    *
-    * Output contract identical to [[jaccardPairs]] (doc_a < doc_b,
-    * jac ≥ tau) — equality is asserted in DedupSpec/PipelineSpec and
-    * the driver query shares the quadratic form's DuckDB oracle
-    * verbatim. */
-  def jaccardPairsPrefix(docs: DataFrame, n: Int = 3,
-                         tau: Double = 0.5): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau in (0,1], got $tau")
     val spark = docs.sparkSession
     import spark.implicits._
-    val sh = shingles(docs, n).toDF("doc_id", "shingle").cache()
-    val prefix = prefixShingles(sh, tau)
-    val cand = prefix.as("x").join(prefix.as("y"), "shingle")
-      .filter($"x.doc_id" < $"y.doc_id")
-      .select($"x.doc_id".as("doc_a"), $"y.doc_id".as("doc_b"))
-      .distinct()
-    val a = sh.toDF("doc_a", "shingle")
-    val b = sh.toDF("doc_b", "shingle")
-    val inter = cand.join(a, "doc_a").join(b, Seq("doc_b", "shingle"))
-      .groupBy($"doc_a", $"doc_b").agg(count(lit(1)).as("i"))
-    val sz = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val out = inter
-      .join(sz.withColumnRenamed("doc_id", "doc_a").withColumnRenamed("n", "na"), "doc_a")
-      .join(sz.withColumnRenamed("doc_id", "doc_b").withColumnRenamed("n", "nb"), "doc_b")
-      .withColumn("jac", $"i" / ($"na" + $"nb" - $"i"))
-      .filter($"jac" >= tau)
-      .select($"doc_a", $"doc_b", $"jac")
-      // snapshot + release the cached shingle table (see jaccardPairs
-      // for where the snapshot lives and what frees it)
-      .cutLineage()
-    sh.unpersist()
-    out
+    val recs = records(docs, n)
+    val pre = keyed(recs)(prefixLength(_, tau))
+    val cand = pre.as("x").join(pre.as("y"), "key")
+      .filter($"x.doc_id" < $"y.doc_id" &&
+        least($"x.sz", $"y.sz") / greatest($"x.sz", $"y.sz") >= tau)
+      .select($"x.doc_id", $"y.doc_id")
+    verify(cand, recs, tau, ("doc_a", "doc_b", "jac"))(jaccard)
   }
 
   /** Asymmetric n-gram CONTAINMENT pairs (X181 — Broder's containment
@@ -125,63 +172,27 @@ object Dedup {
     * the nested-scrape / quoted-README shape a training-data dedup
     * pass needs to catch.
     *
-    * Scale path: prefix filtering on the CONTAINED side only —
-    * i ≥ ⌈τ·|S_sub|⌉ forces a shared shingle inside sub's first
-    * |S_sub| − ⌈τ·|S_sub|⌉ + 1 shingles under the global rarest-first
-    * (df asc) order, so candidates come from sub-PREFIX ⋈ sup-ALL.
-    * The containing side carries no size bound (that is what makes
-    * containment asymmetric), but the join stays shallow for the
-    * PPJoin reason: prefix shingles are by construction the RAREST,
-    * so Σ over prefix tokens of df is small. Exact verification runs
-    * on candidates only; output contract mirrors [[jaccardPairs]]
-    * (raw-ratio threshold, caller rounds). */
+    * Prefix filtering on the CONTAINED side only: C ≥ τ forces a shared
+    * shingle inside sub's [[prefixLength]] first shingles, so candidates
+    * come from sub-PREFIX ⋈ sup-ALL. The containing side carries no size
+    * bound (that is what makes containment asymmetric), but the join
+    * stays shallow for the PPJoin reason: prefix shingles are by
+    * construction the RAREST, so Σ over prefix shingles of df is small.
+    * [[verify]] computes `i/nsub` exactly; output contract mirrors
+    * [[jaccardPairs]] (raw-ratio threshold, caller rounds). */
   def containmentPairs(docs: DataFrame, n: Int = 3,
                        tau: Double = 0.8): DataFrame = {
     require(tau > 0.0 && tau <= 1.0, s"tau in (0,1], got $tau")
     val spark = docs.sparkSession
     import spark.implicits._
-    val sh = shingles(docs, n).toDF("doc_id", "shingle").cache()
-    val prefix = prefixShingles(sh, tau).withColumnRenamed("doc_id", "doc_sub")
-    val cand = prefix.join(sh.toDF("doc_sup", "shingle"), "shingle")
+    val recs = records(docs, n)
+    val sub = keyed(recs)(prefixLength(_, tau)).select($"key", $"doc_id".as("doc_sub"))
+    val sup = keyed(recs)(identity).select($"key", $"doc_id".as("doc_sup"))
+    val cand = sub.join(sup, "key")
       .filter($"doc_sub" =!= $"doc_sup")
-      .select($"doc_sub", $"doc_sup").distinct()
-    val a = sh.toDF("doc_sub", "shingle")
-    val b = sh.toDF("doc_sup", "shingle")
-    val inter = cand.join(a, "doc_sub").join(b, Seq("doc_sup", "shingle"))
-      .groupBy($"doc_sub", $"doc_sup").agg(count(lit(1)).as("i"))
-    val sz = sh.groupBy($"doc_id").agg(count(lit(1)).as("n"))
-    val out = inter
-      .join(sz.toDF("doc_sub", "nsub"), "doc_sub")
-      .withColumn("containment", $"i" / $"nsub")
-      .filter($"containment" >= tau)
-      .select($"doc_sub", $"doc_sup", $"containment")
-      // snapshot + release the cached shingle table (see jaccardPairs
-      // for where the snapshot lives and what frees it)
-      .cutLineage()
-    sh.unpersist()
-    out
-  }
-
-  /** Each doc's prefix shingles under the global rarest-first (df asc,
-    * then shingle) order: the first |s| − c + 1 of its |s| shingles, where
-    * c is the least overlap the callers' verification can accept. That
-    * verification tests `i / |s| >= tau` (or a Jaccard ratio it bounds)
-    * in Double, so c is found by that same test rather than by
-    * `ceil(|s|·tau)`, which rounds up past an accepted overlap: at
-    * tau = 0.55 and |s| = 100, `100 * 0.55` is 55.00000000000001 and the
-    * ceiling is 56, yet 55 / 100 >= 0.55 holds. */
-  private def prefixShingles(sh: DataFrame, tau: Double): DataFrame = {
-    val dfT = sh.groupBy(col("shingle")).agg(count(lit(1)).as("df"))
-    val wDoc = Window.partitionBy(col("doc_id"))
-    val sz = col("sz")
-    val c = ceil(sz * tau)
-    val need = when((c - 1) / sz >= tau, c - 1).otherwise(c)
-    sh.join(dfT, "shingle")
-      .withColumn("rn", row_number().over(
-        wDoc.orderBy(col("df").asc, col("shingle").asc)))
-      .withColumn("sz", count(lit(1)).over(wDoc))
-      .filter(col("rn") <= sz - need + 1)
-      .select(col("doc_id"), col("shingle"))
+      .select($"doc_sub", $"doc_sup")
+    verify(cand, recs, tau, ("doc_sub", "doc_sup", "containment"))(
+      (i, nsub, _) => i.toDouble / nsub)
   }
 
   @inline private def hash32(s: String, seed: Int): Int =
@@ -197,28 +208,20 @@ object Dedup {
       : Dataset[(Long, Array[Int])] = {
     val spark = docs.sparkSession
     import spark.implicits._
-    docs.select($"doc_id", $"text").as[(Long, String)].mapPartitions { it =>
-      it.flatMap { case (id, text) =>
-        val ws = text.split(" ")
-        if (ws.length < n) Iterator.empty
-        else {
-          val sig = Array.fill(numHashes)(Int.MaxValue)
-          val seen = new scala.collection.mutable.HashSet[String]
-          var i = 0
-          while (i <= ws.length - n) {
-            val s = ws.slice(i, i + n).mkString(" ")
-            if (seen.add(s)) {
-              var p = 0
-              while (p < numHashes) {
-                val h = hash32(s, p * 0x9e3779b9 + 1)
-                if (h < sig(p)) sig(p) = h
-                p += 1
-              }
-            }
-            i += 1
+    docs.select($"doc_id", $"text").as[(Long, String)].flatMap { case (id, text) =>
+      val sh = textShingles(text, n)
+      if (sh.isEmpty) Iterator.empty
+      else {
+        val sig = Array.fill(numHashes)(Int.MaxValue)
+        sh.foreach { s =>
+          var p = 0
+          while (p < numHashes) {
+            val h = hash32(s, p * 0x9e3779b9 + 1)
+            if (h < sig(p)) sig(p) = h
+            p += 1
           }
-          Iterator.single((id, sig))
         }
+        Iterator.single((id, sig))
       }
     }
   }
@@ -278,35 +281,18 @@ object Dedup {
       } yield (rs(i)._1, rs(j)._1)
     }.toDF("doc_a", "doc_b")
   }
-
   /** MinHash + LSH banding near-dup pairs, exact-Jaccard verified.
     * bands × rowsPerBand must equal numHashes. Candidate generation is
     * one narrow signature pass + one band-bucket shuffle
-    * ([[minhashCandidates]]); the shingle table is materialized ONLY for
-    * the exact-Jaccard verification join, which genuinely needs it. */
+    * ([[minhashCandidates]]); the shingle records are built ONLY for the
+    * exact-Jaccard [[verify]], the same one [[jaccardPairs]] ends in. */
   def minhashLshPairs(docs: DataFrame, n: Int = 3, numHashes: Int = 64,
                       bands: Int = 16, tau: Double = 0.5,
                       bucketCap: Int = 10000,
                       dropped: Option[org.apache.spark.util.LongAccumulator] = None)
       : DataFrame = {
     val candidates = minhashCandidates(docs, n, numHashes, bands, bucketCap, dropped)
-    verifyJaccard(candidates, shingles(docs, n).toDF("doc_id", "shingle"), tau)
-  }
-
-  /** Exact-Jaccard verification of candidate pairs (LSH post-filter). */
-  private def verifyJaccard(pairs: DataFrame, sh: DataFrame, tau: Double): DataFrame = {
-    val sz = sh.groupBy(col("doc_id")).agg(count(lit(1)).as("n"))
-    val shA = sh.toDF("doc_a", "sh")
-    val shB = sh.toDF("doc_b", "sh")
-    pairs
-      .join(shA, Seq("doc_a"))
-      .join(shB, Seq("doc_b", "sh")) // equi-join on (doc_b, shingle) ⇒ intersection rows
-      .groupBy(col("doc_a"), col("doc_b")).agg(count(lit(1)).as("i"))
-      .join(sz.toDF("doc_a", "na"), "doc_a")
-      .join(sz.toDF("doc_b", "nb"), "doc_b")
-      .withColumn("jac", col("i") / (col("na") + col("nb") - col("i")))
-      .filter(col("jac") >= tau)
-      .select(col("doc_a"), col("doc_b"), col("jac"))
+    verify(candidates, records(docs, n), tau, ("doc_a", "doc_b", "jac"))(jaccard)
   }
 
   /** 64-bit SimHash over tf-weighted word hashes. */

@@ -14,9 +14,9 @@ package graft
   * values; lower is always fine (`<=`).
   *
   * Excluded by design, with reasons:
-  *  - iterative drivers (graph_*, dedup_jaccard, dedup_clusters …):
-  *    they return localCheckpoint snapshots, so the final plan is a
-  *    LogicalRDD scan — string counts see zero of the real work;
+  *  - iterative drivers (graph_*, dedup_clusters …): they return
+  *    localCheckpoint snapshots, so the final plan is a LogicalRDD
+  *    scan — string counts see zero of the real work;
   *  - ft_purged: the purged-segment cache prints the whole purge
   *    cogroup lineage (~8k Exchange strings for a plan that executes
   *    a handful of stages) — the string proxy is meaningless there.
@@ -51,9 +51,12 @@ object ExchangeCountSpec {
     "q18_top_customers" -> 1,
     "assoc_rules" -> 11,
     "assoc_triples" -> 15,
-    "dedup_minhash" -> 9,
-    "dedup_keep_best" -> 6,
-    "dedup_corpus" -> 4,
+    "dedup_jaccard" -> 13,
+    "dedup_jaccard_prefix" -> 13,
+    "dedup_minhash" -> 8,
+    "dedup_containment" -> 13,
+    "dedup_keep_best" -> 4,
+    "dedup_corpus" -> 2,
     "dedup_semantic" -> 3,
     "knn_join" -> 4,
     "ft_lsm_live" -> 2,

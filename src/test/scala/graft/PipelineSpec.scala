@@ -48,19 +48,13 @@ class PipelineSpec extends SparkSpec {
     assert(groups.head.getSeq[Long](groups.head.fieldIndex("ids")).toSeq == Seq(0L, 200L))
   }
 
-  test("prefix-filtered jaccard join == the quadratic form at several " +
-    "taus; prefix candidates prune vs all-pairs") {
+  test("jaccard and containment joins == the brute-force reference at " +
+    "several taus; prefix candidates prune vs all-pairs") {
     import spark.implicits._
-    val withFixture = docs.union(thresholdFixture)
-    for (tau <- Seq(0.3, 0.5, 0.55, 0.8)) {
-      val full = Dedup.jaccardPairs(withFixture, 3, tau)
-        .as[(Long, Long, Double)].collect().toSet
-      val pref = Dedup.jaccardPairsPrefix(withFixture, 3, tau)
-        .as[(Long, Long, Double)].collect().toSet
-      assert(pref == full, s"tau=$tau")
-    }
+    assert(DedupReference.mismatches(docs.union(thresholdFixture),
+      Seq(0.3, 0.5, 0.55, 0.8)).isEmpty)
     // J(A, B) = 55/100 sits exactly on tau = 0.55
-    assert(Dedup.jaccardPairsPrefix(thresholdFixture, 3, 0.55)
+    assert(Dedup.jaccardPairs(thresholdFixture, 3, 0.55)
       .as[(Long, Long, Double)].collect().map(p => (p._1, p._2)).toSeq ==
       Seq((300L, 301L)))
     // pruning sanity: for a corpus of distinct docs sharing one common
@@ -69,7 +63,7 @@ class PipelineSpec extends SparkSpec {
     val many = (1L to 40L).map(i =>
       (i, s"common shared shingle unique$i word$i tail$i distinct$i"))
       .toDF("doc_id", "text")
-    val pairs = Dedup.jaccardPairsPrefix(many, 3, 0.8)
+    val pairs = Dedup.jaccardPairs(many, 3, 0.8)
     assert(pairs.count() == 0L) // no pair is actually >= 0.8
   }
 
@@ -316,53 +310,29 @@ class PipelineSpec extends SparkSpec {
     val other = (500 to 540).map(i => s"y$i").mkString(" ")
     val local = Seq((1L, small), (2L, big), (3L, other)).toDF("doc_id", "text")
     val tau = 0.8
-    val got = graft.pipeline.Dedup.containmentPairs(local, 3, tau)
+    val got = Dedup.containmentPairs(local, 3, tau)
       .as[(Long, Long, Double)].collect().toSeq.sortBy(p => (p._1, p._2))
-    // brute force
-    def sh(t: String): Set[String] = {
-      val ws = t.split(" ")
-      if (ws.length < 3) Set.empty
-      else (0 to ws.length - 3).map(i => ws.slice(i, i + 3).mkString(" ")).toSet
-    }
-    val all = Map(1L -> sh(small), 2L -> sh(big), 3L -> sh(other))
-    val want = (for {
-      (a, sa) <- all.toSeq; (b, sb) <- all.toSeq
-      if a != b && sa.nonEmpty
-      c = (sa & sb).size.toDouble / sa.size
-      if c >= tau
-    } yield (a, b, c)).sortBy(p => (p._1, p._2))
+    val want = DedupReference.containmentPairs(DedupReference.shingleSets(local), tau)
+      .toSeq.sortBy(p => (p._1, p._2))
     assert(got == want)
     assert(got.map(p => (p._1, p._2)) == Seq((1L, 2L)),
       s"exactly the planted subset pair: $got")
     // jaccard at the same threshold must NOT flag it (the asymmetry is
     // the point of the operator)
-    val j = graft.pipeline.Dedup.jaccardPairs(local, 3, tau).count()
+    val j = Dedup.jaccardPairs(local, 3, tau).count()
     assert(j == 0L)
     // the threshold fixture: C(A→B) = 55/100 sits exactly on tau = 0.55
-    val fixTexts = thresholdFixture.as[(Long, String)].collect().toMap
-    val fix = fixTexts.map { case (id, t) => id -> sh(t) }
-    val fixWant = (for {
-      (a, sa) <- fix.toSeq; (b, sb) <- fix.toSeq
-      if a != b && sa.nonEmpty
-      c = (sa & sb).size.toDouble / sa.size
-      if c >= 0.55
-    } yield (a, b, c)).sortBy(p => (p._1, p._2))
-    val fixGot = graft.pipeline.Dedup.containmentPairs(thresholdFixture, 3, 0.55)
-      .as[(Long, Long, Double)].collect().toSeq.sortBy(p => (p._1, p._2))
+    val fixWant = DedupReference.containmentPairs(
+      DedupReference.shingleSets(thresholdFixture), 0.55)
+    val fixGot = Dedup.containmentPairs(thresholdFixture, 3, 0.55)
+      .as[(Long, Long, Double)].collect().toSet
     assert(fixGot == fixWant)
-    assert(fixWant.map(p => (p._1, p._2)) == Seq((300L, 301L), (301L, 300L)))
+    assert(fixWant.map(p => (p._1, p._2)) == Set((300L, 301L), (301L, 300L)))
     // corpus-scale sanity: prefix-filtered == exhaustive on sf0.001
     val docs = graft.api.DocsIndex.documents(spark, "/root/testdata/sf0.001")
-    val fast = graft.pipeline.Dedup.containmentPairs(docs, 3, 0.8)
+    val fast = Dedup.containmentPairs(docs, 3, 0.8)
       .as[(Long, Long, Double)].collect().toSet
-    val shAll = graft.pipeline.Dedup.shingles(docs, 3).collect()
-      .groupBy(_._1).map { case (id, xs) => (id, xs.map(_._2).toSet) }
-    val slow = (for {
-      (a, sa) <- shAll.toSeq; (b, sb) <- shAll.toSeq
-      if a != b && sa.nonEmpty
-      c = (sa & sb).size.toDouble / sa.size
-      if c >= 0.8
-    } yield (a, b, c)).toSet
+    val slow = DedupReference.containmentPairs(DedupReference.shingleSets(docs), 0.8)
     assert(fast == slow, s"prefix path diverges: ${fast.size} vs ${slow.size}")
   }
 
